@@ -100,8 +100,8 @@ def broadcast_if_small(n_rows: int, ceiling: int):
     personalized-pagerank seed marker; only pagerank's inner
     `_pagerank_loop` keeps an inline ternary, because it receives the
     decision as a bool across a function boundary, not a count): returns
-    ``F.broadcast`` when the measured ``n_rows`` fits under ``ceiling``,
-    else the identity — so loop tables hidden behind
+    ``F.broadcast`` when the measured ``n_rows`` is at or under
+    ``ceiling``, else the identity — so loop tables hidden behind
     localCheckpoint/persist barriers (whose size statistics the planner
     cannot see, guide §3.1) are broadcast exactly while they fit and
     keep the scale-safe shuffle shape above the ceiling.  Callers pass

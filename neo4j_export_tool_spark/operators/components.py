@@ -14,7 +14,9 @@ classic iterative-DataFrame failure at scale).
 Complexity: O(diameter) rounds, each a self-join shuffle on the vertex id.
 For web-scale alias graphs the diameter is small (entity clusters are
 near-cliques); ``max_iterations`` bounds the pathological chain case and is
-surfaced in the result so callers can tell fixpoint from cutoff.
+surfaced in the result so callers can tell fixpoint from cutoff.  A graph
+small enough for one loop partition skips the rounds: one in-memory
+union-find pass over the whole edge list is already the fixpoint.
 """
 
 from __future__ import annotations
@@ -31,6 +33,12 @@ class CCResult:
     iterations: int
     converged: bool
     round_timings: dict | None = None  # BatchPerformanceTracker.metrics()
+    # the size-adaptive path decision and the count that drove it:
+    # "empty" (no edges), "one_partition" (one union-find pass over the
+    # coalesced graph) or "label_propagation" (the shuffle loop)
+    path: str = "label_propagation"
+    n_edges: int = 0  # symmetric distinct edge count (post-contraction)
+    loop_partitions: int | None = None  # None: size adaptation disabled
 
 
 def _observation_result(obs: Observation, timeout_s: float = 60.0) -> dict:
@@ -278,7 +286,14 @@ def connected_components(
     """Min-label propagation over an undirected edge list.
 
     ``edges``: two columns of the same orderable type.  Vertices appearing
-    only as isolated endpoints keep their own id as component.
+    only as isolated endpoints keep their own id as component; a null
+    endpoint is not a vertex.
+
+    The call is eager: it persists and counts the symmetric edge list
+    (the count sizes the loop) and runs every round before it returns;
+    with ``use_local_checkpoint=True`` each round is one eager
+    localCheckpoint, so the result reads from a barrier, not from the
+    edge lineage.
 
     ``use_local_checkpoint=True`` truncates lineage EVERY round with an
     eager localCheckpoint — without it the logical plan doubles per round
@@ -292,6 +307,17 @@ def connected_components(
     ``clamp(edge_count / rows_per_loop_partition, 1, current)`` and restores
     it afterwards (measured 3× on a 5k-vertex graph at local[32]); at real
     scale the count keeps the session setting.
+
+    One-partition finish: when that rule gives ONE loop partition, the
+    label-propagation rounds are skipped.  The union-find kernel of
+    ``local_star_contract`` runs once over ``sym.coalesce(1)``; one
+    partition's stars are the final min-label components, and the loop
+    would have run on that one partition anyway, so the per-task memory
+    bound is the same.  The map is materialized by the loop's barrier
+    (eager localCheckpoint, or persist + count when
+    ``use_local_checkpoint=False``) and counts as one round.
+    ``CCResult.path`` / ``n_edges`` / ``loop_partitions`` record the
+    decision and the count that drove it.
 
     Per-round wall times feed a ``BatchPerformanceTracker`` (reference
     ``Export/Types.fs:140-216``) — ``round_timings["performance_trend"]``
@@ -307,7 +333,7 @@ def connected_components(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct()
+    ).filter(F.col("a").isNotNull()).distinct()
     sym = sym.persist()
     n_edges = sym.count()  # materializes the persist; sizes the loop
     if n_edges == 0:
@@ -325,6 +351,7 @@ def connected_components(
             iterations=0,
             converged=True,
             round_timings=None,
+            path="empty",
         )
 
     spark = edges.sparkSession
@@ -345,6 +372,28 @@ def connected_components(
         else None
     )
     tracker = BatchPerformanceTracker(strategy="label_propagation", sample_every=1)
+
+    if loop_parts == 1:
+        _t0 = _time.perf_counter()
+        comps = local_star_contract(sym.coalesce(1), "a", "b").toDF(
+            "id", "component"
+        )
+        if use_local_checkpoint:
+            comps = comps.localCheckpoint(eager=True)
+        else:
+            comps = comps.persist()
+            comps.count()
+        sym.unpersist()
+        tracker.record_batch((_time.perf_counter() - _t0) * 1000.0)
+        return CCResult(
+            components=comps,
+            iterations=1,
+            converged=True,
+            round_timings=tracker.metrics(),
+            path="one_partition",
+            n_edges=n_edges,
+            loop_partitions=loop_parts,
+        )
 
     labels = (
         sym.select(F.col("a").alias("id"))
@@ -456,4 +505,6 @@ def connected_components(
         iterations=iterations,
         converged=converged,
         round_timings=tracker.metrics(),
+        n_edges=n_edges,
+        loop_partitions=loop_parts,
     )

@@ -18,9 +18,12 @@ templates, canonicalization threshold), so a resumed run with different
 input or pipeline config invalidates the affected stages instead of
 silently reusing them.
 
-Metrics per stage: row count, wall seconds, per-partition row counts —
-written into the ledger entry (the Spark analog of the reference's per-label
-stats + batch-timing trackers, ``Export/Types.fs:140-216``).
+Metrics per stage: row count, wall seconds, and the rows of each written
+part file — read from the parquet footers, so they cost no Spark job — written
+into the ledger entry (the Spark analog of the reference's per-label stats +
+batch-timing trackers, ``Export/Types.fs:140-216``).  Like the rest of the
+ledger, this assumes the work dir is on a local (or locally mounted)
+filesystem.
 """
 
 from __future__ import annotations
@@ -94,14 +97,19 @@ class StageLedger:
             pass
 
 
-def _partition_counts(df: DataFrame) -> list[int]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .orderBy("pid")
-        .collect()
+def _part_file_rows(out: str) -> list[int]:
+    """Rows per written parquet part file, in path order, from the footers
+    (no Spark job).  Walks subdirectories, so ``partitionBy`` output is
+    covered too."""
+    import pyarrow.parquet as pq
+
+    files = sorted(
+        os.path.join(d, name)
+        for d, _, names in os.walk(out)
+        for name in names
+        if name.endswith(".parquet") and not name.startswith(("_", "."))
     )
-    return [r["count"] for r in rows]
+    return [pq.read_metadata(f).num_rows for f in files]
 
 
 @dataclass
@@ -176,11 +184,15 @@ class PagesPipeline:
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(out)
-        materialized = self.spark.read.parquet(out)
+        # the known schema skips inference (a job); partitionBy moves the
+        # partition column last, so that layout is still inferred
+        reader = self.spark.read if partition_by else self.spark.read.schema(df.schema)
+        materialized = reader.parquet(out)
+        partition_rows = _part_file_rows(out)
         metrics = {
-            "rows": materialized.count(),
+            "rows": sum(partition_rows),
             "seconds": round(time.perf_counter() - t0, 3),
-            "partition_rows": _partition_counts(materialized),
+            "partition_rows": partition_rows,
         }
         self.ledger.mark_done(stage, fingerprint, metrics)
         self.result.stages_run.append(stage)

@@ -14,6 +14,7 @@ from __future__ import annotations
 import random
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -135,3 +136,63 @@ def test_cc_random_graphs_match_oracle(spark):
         got = {r["id"]: r["component"] for r in res.components.collect()}
         assert res.converged
         assert got == expected, f"seed={seed}"
+
+
+def _ids(edges, id_type):
+    if id_type == "long":
+        return edges
+    # unpadded strings: lexicographic order differs from numeric order
+    return [tuple(None if x is None else str(x) for x in e) for e in edges]
+
+
+@pytest.mark.parametrize("use_local_checkpoint", [True, False])
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_one_partition_finish_equals_loop(spark, id_type, use_local_checkpoint):
+    """Tier equivalence for the CC path choice: the one-partition union-find
+    finish (the default on a small graph) and the label-propagation loop
+    (forced with rows_per_loop_partition=1) return identical component
+    maps, both converged, on random graphs with half-null edges."""
+    for seed, pre_contract in ((5, True), (11, False)):
+        rng = random.Random(seed)
+        n = 60
+        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(90)]
+        # half-null edges: the non-null endpoint is an isolated vertex
+        edges += [(rng.randrange(n, n + 10), None) for _ in range(4)]
+        edges += [(None, rng.randrange(n + 10, n + 20)) for _ in range(4)]
+        edges.append((None, None))
+        rows = _ids(edges, id_type)
+        expected = _uf_components(
+            [e for e in rows if None not in e]
+            + [(x, x) for e in rows if e.count(None) == 1 for x in e if x is not None]
+        )
+        df = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}").repartition(3)
+        got = {}
+        for rows_per_part, path in ((500_000, "one_partition"), (1, "label_propagation")):
+            res = connected_components(
+                df,
+                use_local_checkpoint=use_local_checkpoint,
+                # a reliable checkpoint every round keeps the persist-mode
+                # loop's plans short (interval 3 takes ~8× longer here)
+                checkpoint_interval=1,
+                rows_per_loop_partition=rows_per_part,
+                pre_contract=pre_contract,
+            )
+            assert res.converged, (path, seed)
+            assert res.path == path
+            assert (res.loop_partitions == 1) == (path == "one_partition")
+            assert res.round_timings["strategy"] == "label_propagation"
+            assert res.round_timings["total_batches"] == res.iterations
+            got[path] = sorted(
+                (r["id"], r["component"]) for r in res.components.collect()
+            )
+        assert got["one_partition"] == got["label_propagation"], (seed, pre_contract)
+        assert dict(got["one_partition"]) == expected, (seed, pre_contract)
+
+
+def test_null_endpoints_and_empty_graph(spark):
+    df = spark.createDataFrame([(1, None), (None, None)], "src long, dst long")
+    res = connected_components(df, pre_contract=False).components
+    # the half-null edge's endpoint is a vertex; a null is not
+    assert [tuple(r) for r in res.collect()] == [(1, 1)]
+    empty = connected_components(spark.createDataFrame([], "src long, dst long"))
+    assert (empty.path, empty.n_edges, empty.components.count()) == ("empty", 0, 0)

@@ -178,6 +178,48 @@ def test_changed_config_invalidates_dependent_stages(spark, work_dir, first_run)
         assert stage in res.stages_run, stage
 
 
+def test_ledger_metrics_match_written_stages(spark, tmp_path):
+    """The ledger's footer-read metrics equal what Spark reads back, the
+    stage DataFrame read with the known schema equals the inferred one, and
+    a resumed run still skips every stage."""
+
+    class Recording(PagesPipeline):
+        def _run_stage(self, stage, fingerprint, compute, partition_by=None):
+            df = super()._run_stage(stage, fingerprint, compute, partition_by)
+            returned[stage] = df
+            return df
+
+    returned = {}
+    pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
+    fp = f"synth:{N_DOCS}:{SEED}"
+    work = str(tmp_path)
+    res = Recording(spark, work, GAZETTEER, RELATION_TEMPLATES, SURFACES).run(pages, fp)
+    ledger = StageLedger(work)
+    assert set(returned) == set(res.stages_run) - {"export"}
+    for stage, df in returned.items():
+        m = res.metrics[stage]
+        inferred = spark.read.parquet(ledger.output_path(stage))
+        assert m["rows"] == inferred.count(), stage
+        assert sum(m["partition_rows"]) == m["rows"], stage
+        assert df.schema == inferred.schema, stage
+        assert ledger.read(stage)["metrics"] == m
+    again = PagesPipeline(spark, work, GAZETTEER, RELATION_TEMPLATES, SURFACES).run(
+        pages, fp
+    )
+    assert again.stages_run == []
+    assert again.stages_skipped == res.stages_run
+
+
+def test_partitioned_stage_counts_every_part_file(spark, tmp_path):
+    pipe = PagesPipeline(spark, str(tmp_path), GAZETTEER, RELATION_TEMPLATES, SURFACES)
+    src = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("k"))
+    out = pipe._run_stage("part", "fp", lambda: src.repartition(2), partition_by="k")
+    m = pipe.result.metrics["part"]
+    assert m["rows"] == out.count() == 100
+    assert len(m["partition_rows"]) >= 3  # one file or more per k value
+    assert sorted(out.columns) == ["id", "k"]
+
+
 def test_pipeline_performance_trend(first_run):
     perf = first_run.performance
     assert perf is not None
