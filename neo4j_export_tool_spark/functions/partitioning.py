@@ -17,7 +17,7 @@ Probing safety: partition counts come from ``df.rdd``, and under AQE that
 MATERIALIZES every query stage of an exchange-bearing plan — real Spark
 jobs at plan-construction time whose results the caller's later action
 cannot reuse (no cross-query shuffle reuse).  So by default ``fan_out``
-first inspects the ANALYZED plan (a string walk, no jobs): if any
+first walks the ANALYZED plan's node classes (no jobs): if any
 shuffle-introducing operator is present (join/aggregate/window/sort/
 repartition/distinct), the input's heavy stages already run at the
 session's shuffle parallelism, fan-out could only add cost, and the
@@ -36,13 +36,15 @@ contract (integer/hash-exact folds), so results are unchanged either way.
 
 from __future__ import annotations
 
+from collections import deque
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# analyzed-plan node names that imply a shuffle (or a full repartition)
-# somewhere in the input: such plans execute at the session's shuffle
-# parallelism already, and probing them via .rdd would eagerly run their
-# stages under AQE
+# analyzed-plan node class names containing any of these imply a shuffle
+# (or a full repartition) somewhere in the input: such plans execute at the
+# session's shuffle parallelism already, and probing them via .rdd would
+# eagerly run their stages under AQE
 _WIDE_PLAN_MARKERS = (
     "Join",
     "Aggregate",
@@ -59,12 +61,29 @@ _WIDE_PLAN_MARKERS = (
 )
 
 
+def _plan_node_names(plan):
+    """Class names of ``plan`` and every node under it, subquery plans
+    included, breadth first (wide nodes tend to sit near the root, and the
+    caller stops at the first one)."""
+    queue = deque([plan])
+    while queue:
+        node = queue.popleft()
+        yield node.nodeName()
+        for seq in (node.children(), node.innerChildren()):
+            queue.extend(seq.apply(i) for i in range(seq.size()))
+
+
 def _plan_is_narrow(df: DataFrame) -> bool:
+    """No shuffle-introducing node anywhere in the analyzed plan.  Matches
+    node class names only, so column names, literals and file paths in the
+    plan text cannot flip the decision."""
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
+        plan = df._jdf.queryExecution().analyzed()
+        return not any(
+            m in name for name in _plan_node_names(plan) for m in _WIDE_PLAN_MARKERS
+        )
     except Exception:
         return False
-    return not any(m in plan for m in _WIDE_PLAN_MARKERS)
 
 
 def fan_out(

@@ -294,6 +294,8 @@ class PagesPipeline:
             "seconds": round(time.perf_counter() - t0, 3),
             "partition_rows": [res.node_count, res.rel_count],
             "file": res.path,
+            "sort_path": res.sort_path,
+            "line_bytes": res.line_bytes,
         }
         self.ledger.mark_done(stage, fp, metrics)
         self.result.stages_run.append(stage)

@@ -15,14 +15,27 @@ Record schemas (reference ``Core/RecordTypes.fs:29-60``):
 
 Where the reference reserves a padded metadata placeholder and seeks back
 (``Workflow/Workflow.fs:100-152``, ``Workflow/MetadataWriter.fs:32-224``),
-Spark lets us compute the global counters first (they're cheap aggregates)
-and write the metadata line once, up front — no seek, no padding needed,
+the sink serializes once and knows every counter before it writes:
+
+1. Both serializers feed one line table ``(sec, line, labels)``, persisted
+   ``MEMORY_AND_DISK`` so a lost executor's blocks recompute from lineage.
+2. One aggregation over that table — the job that materializes it — gives
+   the node/relationship counts, the per-label record/byte stats (reference
+   A2, ``Export/Core.fs:277-313``; multi-label nodes split bytes evenly
+   across labels, unlabeled nodes count under ``_unlabeled``), the
+   ``_invalid_label`` tally and the exact line bytes.
+3. The write reads the cached table.  A sorted export whose line bytes fit
+   one AQE advisory partition (``spark.sql.adaptive.
+   advisoryPartitionSizeInBytes``) is sorted in one task; a larger one is
+   range-sorted, so its part files in name order are globally ordered.
+   Either way the lines come out in the same order, byte for byte.
+
+The metadata line is then written once, up front — no seek, no padding,
 same bytes-on-disk contract.
 
 Two write modes:
 - ``single_file=True`` — exact reference layout in one file; executors write
-  each section in parallel (range-partitioned text, so part files in name
-  order ARE globally sorted) and the driver bulk-concatenates the file
+  the sections' part files and the driver bulk-concatenates the file
   streams — constant driver memory, no per-row Py4J traffic.
 - ``single_file=False`` — the 100 TB path: per-section line files written by
   executors (``df.write.text``) + a ``_metadata.json``; assembly into one
@@ -35,9 +48,6 @@ when the properties arrive as contract-final ``properties_json`` bytes (see
 head strings contain hazard characters (divergent control-char escapes) and
 typed struct-properties inputs (real datetimes/bytes needing the §1.3
 contract) run through the Arrow-vectorized ``mapInPandas`` lane instead.
-Per-label record/byte stats are a DataFrame aggregation (reference A2
-per-label stats, ``Export/Core.fs:277-313``; multi-label nodes split bytes
-evenly across labels, unlabeled nodes count under ``_unlabeled``).
 """
 
 from __future__ import annotations
@@ -49,9 +59,11 @@ import time
 import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass, field
+from fractions import Fraction
 from typing import Any
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -138,7 +150,7 @@ def _serialize_nodes(nodes: DataFrame, export_id: str, hashed_ids: bool) -> Data
     from neo4j_export_tool_spark.functions.partitioning import fan_out
 
     # probe_rdd: the inputs are persisted by export_jsonl, so the probe's
-    # materialization lands in the cache and is reused by the write job
+    # materialization lands in the cache and is reused by the stats job
     nodes = fan_out(nodes, key="element_id", probe_rdd=True)
     if "properties_json" in nodes.columns:
         labels = _validated_labels_col()
@@ -318,39 +330,42 @@ def _normalized_labels(labels_col: Column) -> Column:
     ).otherwise(labels_col)
 
 
-def _node_shares_from(labels_col: Column, bytes_col: Column, df: DataFrame) -> DataFrame:
-    """(kind='node', label, bytes_share): one row per (record, label);
-    multi-label bytes split evenly (A2)."""
-    normalized = df.select(
-        _normalized_labels(labels_col).alias("labels"),
-        bytes_col.cast("double").alias("line_bytes"),
+def _line_table(node_lines: DataFrame, rel_lines: DataFrame) -> DataFrame:
+    """(sec, line, labels): both sections' serialized lines in one table,
+    ``sec`` 0 for nodes and 1 for relationships (the section order), and
+    ``labels`` the record's stats labels — a node's validated labels
+    normalized by `_normalized_labels`, a relationship's single type."""
+    return node_lines.select(
+        F.lit(0).alias("sec"),
+        "line",
+        _normalized_labels(F.col("labels")).alias("labels"),
+    ).unionByName(
+        rel_lines.select(
+            F.lit(1).alias("sec"), "line", F.array(F.col("label")).alias("labels")
+        )
     )
-    return normalized.select(
-        F.lit("node").alias("kind"),
+
+
+def _label_shares(table: DataFrame) -> DataFrame:
+    """(kind, label, n_labels, line_bytes): one row per (record, label).
+    Bytes are UTF-8 on-disk bytes (octet_length + newline), not chars."""
+    return table.select(
+        F.when(F.col("sec") == 0, F.lit("node"))
+        .otherwise(F.lit("relationship"))
+        .alias("kind"),
         F.explode("labels").alias("label"),
-        (F.col("line_bytes") / F.size("labels")).alias("bytes_share"),
-    )
-
-
-def _node_label_shares(serialized):
-    """Bytes are UTF-8 on-disk bytes (octet_length + newline), not chars."""
-    return _node_shares_from(
-        F.col("labels"), F.octet_length("line") + 1, serialized
-    )
-
-
-def _rel_label_shares(serialized):
-    return serialized.select(
-        F.lit("relationship").alias("kind"),
-        F.col("label"),
-        (F.octet_length("line") + 1).cast("double").alias("bytes_share"),
+        F.size("labels").alias("n_labels"),
+        (F.octet_length("line") + 1).alias("line_bytes"),
     )
 
 
 def _shares_agg(shares: DataFrame) -> DataFrame:
-    return shares.groupBy("kind", "label").agg(
-        F.count(F.lit(1)).alias("record_count"),
-        F.sum("bytes_share").alias("bytes_written"),
+    """Grouped by label count too, so every sum stays an exact integer:
+    a record with ``n`` labels adds its bytes to each of its ``n`` label
+    groups, and the driver divides by ``n`` with exact fractions."""
+    return shares.groupBy("kind", "label", "n_labels").agg(
+        F.count(F.lit(1)).alias("label_rows"),
+        F.sum("line_bytes").alias("label_bytes"),
     )
 
 
@@ -373,123 +388,68 @@ def _split_stats_rows(rows) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]
     return node_stats, rel_stats
 
 
-def _stats_from_shares(
-    shares: DataFrame,
-) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
-    """(kind, label, bytes_share) rows → per-section stats lists."""
-    return _split_stats_rows(_shares_agg(shares).collect())
+@dataclass
+class _TableStats:
+    node_stats: list[dict[str, Any]]
+    rel_stats: list[dict[str, Any]]
+    node_count: int
+    rel_count: int
+    invalid_labels: int
+    line_bytes: int
 
 
-def _section_stats(
-    node_lines: DataFrame, rel_lines: DataFrame
-) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
-    """Per-label record/byte stats for both sections in ONE Spark job
-    (reference A2 per-label stats, ``Export/Core.fs:277-313``)."""
-    return _stats_from_shares(
-        _node_label_shares(node_lines).unionByName(_rel_label_shares(rel_lines))
-    )
-
-
-def _stats_from_written(
-    spark, paths: list[str]
-) -> tuple[list[dict[str, Any]], list[dict[str, Any]], dict[str, int]]:
-    """Per-label stats + per-kind record counts + invalid-label tally,
-    computed by reading BACK the written line files in ONE Spark job — a
-    cheap JVM scan (get_json_object) instead of caching every serialized
-    line just to aggregate it.  Counts the bytes actually on disk, and is
-    immune to re-evaluation (no observed metrics on sorted writes).
-    Share/normalize semantics come from the same helpers the in-memory
-    stats use (`_node_shares_from`, `_shares_agg`)."""
-    raw = spark.read.text(paths)
-    # ONE Jackson parse per line (a 3-field subset schema skips the big
-    # properties payload), ONE file scan, ONE aggregation job: every
-    # record explodes to one row per effective label (nodes: validated/
-    # normalized label array; relationships: their single label), and a
-    # ROLLUP over (kind, label) yields both the per-label stats and the
-    # per-kind record/invalid counts in the same pass.  The per-kind
-    # record count is `sum(pos == 0)` (first label only — count(*) at
-    # that level would count labels, not records); `grouping(label)`
-    # tells a rollup subtotal apart from a genuinely NULL label.  This
-    # replaces the previous persist + two-branch union (round-2 had
-    # measured the readback at 40% of export time; r7 removes the cache
-    # materialization and the second aggregation pass over it).
-    parsed = raw.select(
-        F.from_json(
-            "value", "type string, labels array<string>, label string"
-        ).alias("j"),
-        (F.octet_length("value") + 1).alias("line_bytes"),
-    )
-    expl = parsed.select(
-        F.col("j.type").alias("kind"),
-        F.posexplode(
-            F.when(
-                F.col("j.type") == "node",
-                _normalized_labels(F.col("j.labels")),
-            ).otherwise(F.array(F.col("j.label")))
-        ).alias("pos", "label"),
-        F.col("line_bytes"),
-        F.size(
-            F.when(
-                F.col("j.type") == "node",
-                _normalized_labels(F.col("j.labels")),
-            ).otherwise(F.array(F.col("j.label")))
-        ).alias("n_labels"),
-    )
-    rolled = (
-        expl.rollup("kind", "label")
-        .agg(
-            F.count(F.lit(1)).alias("label_rows"),
-            F.sum((F.col("pos") == 0).cast("long")).alias("record_rows"),
-            F.sum(
-                (
-                    (F.col("kind") == "node")
-                    & (F.col("label") == "_invalid_label")
-                ).cast("long")
-            ).alias("invalid"),
-            F.sum(
-                F.col("line_bytes").cast("double") / F.col("n_labels")
-            ).alias("bytes_written"),
-            F.grouping("label").alias("_glabel"),
-            F.grouping("kind").alias("_gkind"),
-        )
-        .where(F.col("_gkind") == 0)
-    )
-    rows = rolled.collect()
+def _table_stats(table: DataFrame) -> _TableStats:
+    """Per-label record/byte stats (reference A2, ``Export/Core.fs:277-313``:
+    multi-label nodes split bytes evenly across labels), per-kind record
+    and byte totals and the invalid-label tally, from ONE aggregation job
+    over the line table.  The driver folds the few grouped rows with exact
+    fractions, so the totals do not depend on summation order."""
+    per_label: dict[tuple[str, Any], list] = {}
+    records = {"node": Fraction(0), "relationship": Fraction(0)}
+    total_bytes = Fraction(0)
+    invalid = 0
+    for r in _shares_agg(_label_shares(table)).collect():
+        kind, label, n = r["kind"], r["label"], r["n_labels"]
+        share = Fraction(r["label_bytes"], n)
+        acc = per_label.setdefault((kind, label), [0, Fraction(0)])
+        acc[0] += r["label_rows"]
+        acc[1] += share
+        records[kind] += Fraction(r["label_rows"], n)
+        total_bytes += share
+        if kind == "node" and label == "_invalid_label":
+            invalid += r["label_rows"]
     node_stats, rel_stats = _split_stats_rows(
         [
-            {
-                "kind": r["kind"],
-                "label": r["label"],
-                "record_count": r["label_rows"],
-                "bytes_written": r["bytes_written"],
-            }
-            for r in rows
-            if r["_glabel"] == 0
+            {"kind": k, "label": lbl, "record_count": c, "bytes_written": b}
+            for (k, lbl), (c, b) in per_label.items()
         ]
     )
-    meta = {"node_count": 0, "rel_count": 0, "invalid_labels": 0}
-    for r in rows:
-        if r["_glabel"] == 1:  # rollup subtotal = the per-kind row
-            if r["kind"] == "node":
-                meta["node_count"] = r["record_rows"]
-                meta["invalid_labels"] = r["invalid"] or 0
-            elif r["kind"] == "relationship":
-                meta["rel_count"] = r["record_rows"]
-    return node_stats, rel_stats, meta
-
-
-def _label_stats_nodes(serialized: DataFrame) -> list[dict[str, Any]]:
-    """Node-only per-label stats (kept for direct callers/tests)."""
-    empty = serialized.sparkSession.createDataFrame([], "line string, label string")
-    return _section_stats(serialized, empty)[0]
-
-
-def _label_stats_rels(serialized: DataFrame) -> list[dict[str, Any]]:
-    """Rel-only per-label stats (kept for direct callers/tests)."""
-    empty = serialized.sparkSession.createDataFrame(
-        [], "line string, labels array<string>"
+    return _TableStats(
+        node_stats=node_stats,
+        rel_stats=rel_stats,
+        node_count=int(records["node"]),
+        rel_count=int(records["relationship"]),
+        invalid_labels=invalid,
+        line_bytes=int(total_bytes),
     )
-    return _section_stats(empty, serialized)[1]
+
+
+def _advisory_partition_bytes(spark) -> int:
+    """The session's AQE advisory partition size, resolved the way AQE
+    resolves it (byte-string syntax, fallback key included)."""
+    sql_conf = spark.sparkContext._jvm.org.apache.spark.sql.internal.SQLConf
+    return spark._jsparkSession.sessionState().conf().getConf(
+        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+
+
+def _sorted_by(df: DataFrame, one_partition: bool, *cols: str) -> DataFrame:
+    """Globally sorted by ``cols``: one partition sorted in place when the
+    lines fit one partition (one job, no sampling, no shuffle), else a
+    range sort whose part files in name order are globally ordered."""
+    if one_partition:
+        return df.coalesce(1).sortWithinPartitions(*cols)
+    return df.orderBy(*cols)
 
 
 # ---------------------------------------------------------------------------
@@ -617,6 +577,10 @@ class ExportResult:
     error_count: int = 0
     warning_count: int = 0
     files: list[str] = field(default_factory=list)
+    # how the lines were ordered: "one_partition" (the export's line bytes
+    # fit one AQE advisory partition), "range" (range sort) or "unsorted"
+    sort_path: str = "unsorted"
+    line_bytes: int = 0  # serialized node + relationship bytes, newlines included
 
 
 # ---------------------------------------------------------------------------
@@ -664,26 +628,20 @@ def export_jsonl(
         raise ValueError(f"unsupported compression: {compression!r}")
     use_zstd_codec = False
     if compression == "zstd":
-        from neo4j_export_tool_spark.sources.zstd_codec import (
-            codec_loadable,
-            register_read_codecs,
-        )
+        from neo4j_export_tool_spark.sources.zstd_codec import codec_loadable
 
         use_zstd_codec = codec_loadable(nodes.sparkSession)
-        if use_zstd_codec:
-            # the stats job below reads the written .zst parts back
-            register_read_codecs(nodes.sparkSession)
     t0 = time.perf_counter()
     export_id = export_id or str(uuid.uuid4())
     started = time.gmtime()
     timestamp_utc = time.strftime("%Y-%m-%dT%H:%M:%SZ", started)
 
     # The serializers split each table into a JVM fast lane and a Python
-    # hazard lane (two branches of a union), and a sorted write adds a
-    # range-sampling pass; persist the projected inputs so the upstream plan
-    # (e.g. pandas-UDF mention detection) materializes once, not once per
-    # evaluation.  Callers that already persisted their inputs keep their
-    # cache — re-persisting a projection would materialize a second copy.
+    # hazard lane (two branches of a union); persist the projected inputs
+    # so the upstream plan (e.g. pandas-UDF mention detection) materializes
+    # once, not once per branch.  Callers that already persisted their
+    # inputs keep their cache — re-persisting a projection would
+    # materialize a second copy.
     def _is_cached(df: DataFrame) -> bool:
         try:
             lvl = df.storageLevel
@@ -708,49 +666,63 @@ def export_jsonl(
         edges = edges.select(*edge_cols, edge_props).persist()
         we_persisted.append(edges)
 
-    node_lines = _serialize_nodes(nodes, export_id, hashed_ids)
-    rel_lines = _serialize_rels(edges, export_id, hashed_ids)
-
+    # Serialize-once flow: both serializers feed ONE line table, persisted
+    # MEMORY_AND_DISK (a lost executor's blocks recompute from lineage).
+    # The stats aggregation is the job that materializes it; the write
+    # (and, for a range sort, its sampling pass) then reads the cache, so
+    # no serializer lane runs twice and nothing written is parsed back.
+    # The reference computes the same statistics while streaming, then
+    # seeks back into a padded metadata line (Workflow/MetadataWriter.fs:
+    # 32-224); here the metadata line is composed before the data lands.
+    table = None
     try:
-        # Write-first flow: the executor text write is the ONLY job that
-        # evaluates serialization; record counts, per-label stats, and the
-        # invalid-label tally all come from one cheap JVM readback scan of
-        # the written files.  The reference computes the same statistics
-        # while streaming, then seeks back into the padded metadata line
-        # (Workflow/MetadataWriter.fs:32-224) — here the metadata line is
-        # simply composed after the data lands.
-        node_out = node_lines.select("line")
-        rel_out = rel_lines.select("line")
+        table = _line_table(
+            _serialize_nodes(nodes, export_id, hashed_ids),
+            _serialize_rels(edges, export_id, hashed_ids),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        stats = _table_stats(table)
+        for df in we_persisted:
+            df.unpersist()
+        we_persisted.clear()
+        node_count, rel_count = stats.node_count, stats.rel_count
+        node_stats, rel_stats = stats.node_stats, stats.rel_stats
+        labels = [s["label"] for s in node_stats]
+        rel_types = [s["label"] for s in rel_stats]
 
         spark = nodes.sparkSession
         os.makedirs(out_dir, exist_ok=True)
+        # Spark's own size rule for one post-shuffle partition decides the
+        # sort: an export that fits one advisory partition is sorted in
+        # one task instead of range-sampled and shuffled
+        if not sort_lines:
+            sort_path = "unsorted"
+        elif stats.line_bytes <= _advisory_partition_bytes(spark):
+            sort_path = "one_partition"
+        else:
+            sort_path = "range"
+        one_partition = sort_path == "one_partition"
+        if compression == "gzip":
+            _wopt = {"compression": "gzip"}
+        elif use_zstd_codec:
+            # executor-parallel zstd: parts land as ready .zst frames
+            from neo4j_export_tool_spark.sources.zstd_codec import CODEC_CLASS
+
+            _wopt = {"compression": CODEC_CLASS}
+        else:
+            # zstd without the codec: plain parts, compressed after the
+            # write by a driver-side pool of JVM streams
+            _wopt = {}
 
         if single_file:
             import glob as _glob
 
-            # NB: no leading "_"/"." in the scratch dir name — Spark's file
-            # index treats those as hidden and the readback would see nothing
             sections_dir = os.path.join(out_dir, f"tmp-sections-{export_id[:8]}")
-            all_lines = node_out.select(
-                F.lit(0).alias("sec"), "line"
-            ).unionByName(rel_out.select(F.lit(1).alias("sec"), "line"))
-            if compression == "gzip":
-                _wopt = {"compression": "gzip"}
-            elif use_zstd_codec:
-                # executor-parallel zstd: parts land as ready .zst frames
-                from neo4j_export_tool_spark.sources.zstd_codec import CODEC_CLASS
-
-                _wopt = {"compression": CODEC_CLASS}
-            else:
-                # fallback zstd: plain parts, compressed by a driver-side
-                # JVM-stream pool after the stats readback
-                _wopt = {}
+            all_lines = table.select("sec", "line")
             if sort_lines:
-                # ONE write job: orderBy(sec, line) range-partitions, so
-                # part files in name order ARE globally ordered
-                all_lines.orderBy("sec", "line").select("line").write.mode(
-                    "overwrite"
-                ).options(**_wopt).text(sections_dir)
+                # ONE write job; part files in name order ARE globally ordered
+                _sorted_by(all_lines, one_partition, "sec", "line").select(
+                    "line"
+                ).write.mode("overwrite").options(**_wopt).text(sections_dir)
                 part_files = sorted(
                     _glob.glob(os.path.join(sections_dir, "part-*"))
                 )
@@ -767,37 +739,29 @@ def export_jsonl(
                 ) + sorted(
                     _glob.glob(os.path.join(sections_dir, "sec=1", "part-*"))
                 )
-            written_paths = [sections_dir]
         else:
             # scale path: executor-written line files per section
             nodes_dir = os.path.join(out_dir, "nodes")
             rels_dir = os.path.join(out_dir, "relationships")
-            if compression == "gzip":
-                _wopt = {"compression": "gzip"}
-            elif compression == "zstd" and use_zstd_codec:
-                from neo4j_export_tool_spark.sources.zstd_codec import CODEC_CLASS
-
-                _wopt = {"compression": CODEC_CLASS}
-            else:
-                _wopt = {}
             if sort_lines:
-                # per-section global order needs one range-sort per section
-                node_out.orderBy("line").write.mode("overwrite").options(
-                    **_wopt
-                ).text(nodes_dir)
-                rel_out.orderBy("line").write.mode("overwrite").options(
-                    **_wopt
-                ).text(rels_dir)
+                # per-section global order: one sorted write per section
+                for sec, dest in ((0, nodes_dir), (1, rels_dir)):
+                    _sorted_by(
+                        table.filter(F.col("sec") == sec).select("line"),
+                        one_partition,
+                        "line",
+                    ).write.mode("overwrite").options(**_wopt).text(dest)
             else:
                 # unsorted: both sections land in ONE partitionBy write job,
                 # then the partition dirs move to their contract names
                 import shutil
 
                 scratch = os.path.join(out_dir, f"tmp-write-{export_id[:8]}")
-                node_out.select(
-                    F.lit("nodes").alias("section"), "line"
-                ).unionByName(
-                    rel_out.select(F.lit("relationships").alias("section"), "line")
+                table.select(
+                    F.when(F.col("sec") == 0, F.lit("nodes"))
+                    .otherwise(F.lit("relationships"))
+                    .alias("section"),
+                    "line",
                 ).write.partitionBy("section").mode("overwrite").options(
                     **_wopt
                 ).text(scratch)
@@ -809,15 +773,6 @@ def export_jsonl(
                     else:
                         os.makedirs(dest, exist_ok=True)  # empty section
                 shutil.rmtree(scratch, ignore_errors=True)
-            written_paths = [nodes_dir, rels_dir]
-
-        node_stats, rel_stats, readback = _stats_from_written(
-            spark, written_paths
-        )
-        node_count = readback["node_count"]
-        rel_count = readback["rel_count"]
-        labels = [s["label"] for s in node_stats]
-        rel_types = [s["label"] for s in rel_stats]
 
         err_records = [
             {"type": "error", **e} for e in (errors or [])
@@ -829,7 +784,7 @@ def export_jsonl(
         # tracks a warning per invalid label, summarized here like the A6
         # warning dedup — one record with a count; the >100-labels cap is
         # silent in the reference, Seq.truncate, and silent here too)
-        n_invalid = readback["invalid_labels"]
+        n_invalid = stats.invalid_labels
         if n_invalid:
             warn_records.append({
                 "type": "warning",
@@ -926,9 +881,9 @@ def export_jsonl(
             files = [final_path]
         else:
             if compression == "zstd" and not use_zstd_codec:
-                # fallback lane: the plain parts (already stats-scanned)
-                # become one .zst frame each via the driver's JVM-stream
-                # pool — same on-disk format the codec path writes
+                # fallback lane: the plain parts become one .zst frame each
+                # via the driver's JVM-stream pool — same on-disk format
+                # the codec path writes
                 import glob as _glob
 
                 from neo4j_export_tool_spark.sources.zstd_codec import (
@@ -958,10 +913,14 @@ def export_jsonl(
             error_count=len(err_records),
             warning_count=len(warn_records),
             files=files,
+            sort_path=sort_path,
+            line_bytes=stats.line_bytes,
         )
     finally:
         for df in we_persisted:
             df.unpersist()
+        if table is not None:
+            table.unpersist()
 
 
 def with_properties_json(edges: DataFrame) -> DataFrame:

@@ -148,6 +148,20 @@ def test_export_stage_writes_reference_format(work_dir, first_run):
     ]["relCount"] == entry["rows"]
 
 
+def test_export_ledger_records_sort_decision(work_dir, first_run):
+    """The export stage's ledger entry carries the sink's sort path and the
+    line bytes that decided it; the file's metadata line does not."""
+    with open(f"{work_dir}/_ledger/export.json", encoding="utf-8") as f:
+        entry = json.load(f)["metrics"]
+    with open(entry["file"], "rb") as f:
+        meta_line = f.readline()
+        body = f.read()
+    # a few hundred pages fit one advisory partition (64 MB by default)
+    assert entry["sort_path"] == "one_partition"
+    assert entry["line_bytes"] == len(body) > 0  # no warning/error tail here
+    assert b"sort_path" not in meta_line and b"line_bytes" not in meta_line
+
+
 def test_ledger_metrics_on_disk(work_dir, first_run):
     with open(f"{work_dir}/_ledger/extract.json", encoding="utf-8") as f:
         entry = json.load(f)

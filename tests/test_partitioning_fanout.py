@@ -91,6 +91,31 @@ def test_fan_out_narrow_filter_projection_still_probes(spark):
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
+def test_plan_text_does_not_flip_narrowness(spark, tmp_path):
+    # column names and a file path that spell wide-operator names are plan
+    # TEXT, not plan nodes: the scan stays narrow and is still fanned out
+    path = str(tmp_path / "JoinSortAggregate_Window.parquet")
+    spark.range(0, 200, 1, 1).select(
+        F.col("id").alias("Join_key"), (F.col("id") % 7).alias("SortOrder")
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path).select(
+        "Join_key", (F.col("SortOrder") + 1).alias("Distinct_Repartition")
+    )
+    assert _plan_is_narrow(df)
+    out = fan_out(df, key="Join_key")
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    # a real join or sort over the same scan is still wide
+    assert not _plan_is_narrow(df.orderBy("Join_key"))
+    assert not _plan_is_narrow(df.join(df, "Join_key"))
+    # ... also when it only appears inside a subquery expression
+    df.createOrReplaceTempView("join_sort_scan")
+    sub = spark.sql(
+        "SELECT Join_key FROM join_sort_scan "
+        "WHERE Join_key > (SELECT avg(Join_key) FROM join_sort_scan)"
+    )
+    assert not _plan_is_narrow(sub)
+
+
 # ---------------------------------------------------------------------------
 # mention matcher fast path
 # ---------------------------------------------------------------------------
