@@ -54,7 +54,6 @@ def neighborhood_function(
     h: int = 4,
     p: int = 8,
     salt: str = "anf",
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, hop, ball_size) for hop in [0, h]: the estimated number
     of distinct nodes within ``hop`` hops of ``node`` (itself
@@ -67,6 +66,14 @@ def neighborhood_function(
     sorted folds (bit-stable).  Averaging ``ball_size`` over nodes per
     hop gives the neighborhood function; the smallest hop whose mean
     ball covers ~90% of the final mean is the effective diameter.
+
+    Eagerness: with ``h >= 1`` the call runs the edge count that picks
+    the per-hop broadcast tier (it materializes the edge checkpoint hop
+    1 reads).  Under adaptive query execution (the session default)
+    each lazy ``localCheckpoint`` also runs the shuffle stages below it
+    when it is created, so every hop's merge runs at call time, and even
+    ``h == 0`` runs the edge deduplication's shuffle.  With AQE off,
+    ``h == 0`` starts no job.
     """
     if h < 0:
         raise ValueError("h must be >= 0")
@@ -80,31 +87,12 @@ def neighborhood_function(
         )
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    def _mat(df):
-        # The no-checkpoint fallback MUST still materialize: each hop's
-        # register table is consumed three times (propagation join, union,
-        # estimate), so pure lineage — random_walks' posture, whose frames
-        # are referenced once — would recompute ~3^h subtrees.  persist()
-        # frames cannot be unpersisted from inside this lazy function
-        # (r6 advice item), but they are bounded at h+2 per call and the
-        # ContextCleaner releases them once the returned plan drops its
-        # references — a transient cost, not a session-lifetime leak.
-        return (
-            df.localCheckpoint(eager=False)
-            if use_local_checkpoint
-            else df.persist()
-        )
-
-    e = _mat(e)
     _be = lambda df: df
     if h >= 1:
-        # the tier count runs in BOTH materialization modes (persist's
-        # post-materialization statistics are not something the planner
-        # is guaranteed to exploit for the per-hop join), so the
-        # function is eager whenever the hop loop will run: the count
-        # materializes e — the job hop 1 would otherwise trigger.
-        # h == 0 skips it and stays lazy.
+        # the tier count materializes e — the job hop 1 would otherwise
+        # trigger; h == 0 skips it
         _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -114,11 +102,9 @@ def neighborhood_function(
     # seed: every node's sketch contains exactly itself (the shared
     # sketches.py register math, applied to the node id)
     bucket, rho = register_cols(F.col("node"), p, salt)
-    regs = _mat(
-        nodes.select(
-            "node", bucket.alias("bucket"), rho.alias("max_rho")
-        )
-    )
+    regs = nodes.select(
+        "node", bucket.alias("bucket"), rho.alias("max_rho")
+    ).localCheckpoint(eager=False)
 
     def _estimates(r: DataFrame, hop: int) -> DataFrame:
         agg = r.groupBy("node").agg(
@@ -141,10 +127,11 @@ def neighborhood_function(
             regs.join(_be(e), regs["node"] == e["dst"])
             .select(F.col("src").alias("node"), "bucket", "max_rho")
         )
-        regs = _mat(
+        regs = (
             regs.unionByName(pushed)
             .groupBy("node", "bucket")
             .agg(F.max("max_rho").alias("max_rho"))
+            .localCheckpoint(eager=False)
         )
         per_hop.append(_estimates(regs, hop))
     out = per_hop[0]

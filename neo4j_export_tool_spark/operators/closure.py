@@ -17,7 +17,7 @@ join against ``known`` — no re-derivation of old facts, the semi-naive
 property.  BFS order guarantees the first discovery of a pair is at its
 min distance, so no min-aggregation is needed.
 
-Scale shape: the edge table is persisted once; per round the frontier
+Scale shape: the edge table is checkpointed once; per round the frontier
 (new pairs only) joins it on one key.  For ontology/hierarchy graphs —
 the intended input — the closure is |V|·depth-ish and every join is
 AQE-broadcastable.  For general dense graphs the closure is inherently
@@ -43,7 +43,6 @@ def transitive_closure(
     dst_col: str,
     max_hops: int = 32,
     max_pairs: int | None = None,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """All reachable (src, dst, hops) pairs, hops = minimum path length.
 
@@ -58,16 +57,9 @@ def transitive_closure(
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    # use_local_checkpoint=False keeps pure lineage (edge scan recomputed
-    # per round) — debugging/small-graph mode; persist() would leak cached
-    # blocks past this lazy function's lifetime.
-    if use_local_checkpoint:
-        e = e.localCheckpoint(eager=False)
-
-    frontier = e.withColumn("hops", F.lit(1))
-    if use_local_checkpoint:
-        frontier = frontier.localCheckpoint(eager=False)
+    frontier = e.withColumn("hops", F.lit(1)).localCheckpoint(eager=False)
     known = frontier
     for _ in range(max_hops):
         if frontier.isEmpty():
@@ -81,16 +73,13 @@ def transitive_closure(
         frontier = stepped.join(
             known.select("src", "dst"), ["src", "dst"], "left_anti"
         )
-        if use_local_checkpoint:
-            # checkpoint BEFORE branching: frontier feeds the next
-            # round's expansion AND the known union (AND the max_pairs
-            # count below), so without a barrier the step join + anti
-            # evaluated twice or three times per round (the walks pick
-            # discipline)
-            frontier = frontier.localCheckpoint(eager=False)
-        known = known.unionByName(frontier)
-        if use_local_checkpoint:
-            known = known.localCheckpoint(eager=False)
+        # checkpoint BEFORE branching: frontier feeds the next
+        # round's expansion AND the known union (AND the max_pairs
+        # count below), so without a barrier the step join + anti
+        # evaluated twice or three times per round (the walks pick
+        # discipline)
+        frontier = frontier.localCheckpoint(eager=False)
+        known = known.unionByName(frontier).localCheckpoint(eager=False)
         if max_pairs is not None and known.count() > max_pairs:
             raise RuntimeError(
                 f"transitive closure exceeded max_pairs={max_pairs}; "
@@ -136,7 +125,6 @@ def bfs_distances(
     seeds,
     seed_col: str | None = None,
     max_hops: int = 10,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, dist) — minimum hop count from the seed SET to every node
     reachable within ``max_hops`` (bounded-radius multi-source BFS;
@@ -172,9 +160,8 @@ def bfs_distances(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if use_local_checkpoint:
-        e = e.localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -185,9 +172,8 @@ def bfs_distances(
         .distinct()
         .join(nodes, "node", "left_semi")
         .withColumn("dist", F.lit(0).cast("long"))
+        .localCheckpoint(eager=False)
     )
-    if use_local_checkpoint:
-        frontier = frontier.localCheckpoint(eager=False)
     known = frontier
     for _ in range(max_hops):
         if frontier.isEmpty():
@@ -204,12 +190,9 @@ def bfs_distances(
         frontier = stepped.join(
             known.select("node"), "node", "left_anti"
         )
-        if use_local_checkpoint:
-            # checkpoint BEFORE branching: frontier feeds the next
-            # round AND the known union — one evaluation per hop
-            # (the walks pick discipline)
-            frontier = frontier.localCheckpoint(eager=False)
-        known = known.unionByName(frontier)
-        if use_local_checkpoint:
-            known = known.localCheckpoint(eager=False)
+        # checkpoint BEFORE branching: frontier feeds the next
+        # round AND the known union — one evaluation per hop
+        # (the walks pick discipline)
+        frontier = frontier.localCheckpoint(eager=False)
+        known = known.unionByName(frontier).localCheckpoint(eager=False)
     return known

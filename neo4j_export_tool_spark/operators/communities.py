@@ -43,7 +43,6 @@ def label_propagation(
     a_col: str,
     b_col: str,
     n_iters: int = 5,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, community) after ``n_iters`` synchronous LPA rounds on the
     undirected simple graph.  Edges are canonicalized (least, greatest)
@@ -63,7 +62,7 @@ def label_propagation(
     )
     sym = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    ).localCheckpoint(eager=False)
     # Broadcast the per-round (node, label) table when the symmetrized
     # edge table is small (labels ≤ distinct sources ≤ |sym|): behind
     # the localCheckpoint boundary the planner has no size statistics
@@ -72,10 +71,8 @@ def label_propagation(
     # first round would pay for anyway; results are identical (the
     # vote fold is a min, partitioning-independent).
     _bl = lambda df: df
-    if use_local_checkpoint:
-        sym = sym.localCheckpoint(eager=False)
-        if n_iters >= 1:  # n_iters == 0: the loop never runs
-            _bl = broadcast_if_small(sym.count(), _BROADCAST_SYM_EDGES_MAX)
+    if n_iters >= 1:  # n_iters == 0: the loop never runs
+        _bl = broadcast_if_small(sym.count(), _BROADCAST_SYM_EDGES_MAX)
 
     labels = (
         sym.select(F.col("a").alias("node"))
@@ -83,8 +80,7 @@ def label_propagation(
         .select("node", F.col("node").alias("community"))
     )
     for _ in range(n_iters):
-        if use_local_checkpoint:
-            labels = labels.localCheckpoint(eager=False)
+        labels = labels.localCheckpoint(eager=False)
         neigh = sym.join(
             _bl(labels.withColumnRenamed("node", "b")), "b"
         ).select(F.col("a").alias("node"), "community")

@@ -6,10 +6,12 @@ GraphFrames dependency — plain DataFrame min-label propagation:
 
     comp(v) ← min(comp(v), min over neighbors u of comp(u))
 
-iterated to fixpoint.  Convergence is detected with a changed-label count;
-lineage is cut with ``checkpoint()`` every ``checkpoint_interval`` rounds
+iterated to fixpoint.  Every round ends in one eager ``localCheckpoint``
+that also carries the changed-label count, so lineage is cut each round
 (without it the plan doubles per iteration and the driver OOMs planning, the
-classic iterative-DataFrame failure at scale).
+classic iterative-DataFrame failure at scale).  localCheckpoint blocks live
+on the executor that wrote them; executor-loss tolerance is ROADMAP
+direction 3 (one reliable barrier mode with a chaos test).
 
 Complexity: O(diameter) rounds, each a self-join shuffle on the vertex id.
 For web-scale alias graphs the diameter is small (entity clusters are
@@ -25,6 +27,13 @@ import dataclasses
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+# Pointer-doubling hops per label-propagation round.  Each hop is one more
+# self-join shuffle per round but compounds the path compression (2 hops ≈ 4×
+# chain-depth reduction per round): on local/driver-overhead-bound graphs
+# the fewer rounds win; at cluster scale the trade is a wash.
+POINTER_DOUBLE_HOPS = 2
 
 
 @dataclasses.dataclass
@@ -138,64 +147,14 @@ def _unionfind_star(u, v, iso=None):
     return keys, mins.loc[parent].to_numpy()
 
 
-def make_contract_kernel(src: str, dst: str):
-    """Pandas-iterator adapter over the numpy union-find core, exposed at
-    module level so pure-pandas tests (and hypothesis sweeps) can drive it
-    without a SparkSession.  The Spark path uses the Arrow twin below
-    (``make_contract_kernel_arrow``), which never materializes a nullable
-    int column as float64."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    def _normalize(s: pd.Series) -> pd.Series:
-        # Arrow→pandas renders a nullable numeric column as float64 with
-        # NaN; converting to nullable Int64 keeps ids integral end-to-end
-        # (exact below 2^53; raises on non-integral floats instead of
-        # silently truncating — round-3 advice item)
-        if s.dtype.kind == "f":
-            return s.astype("Int64")
-        return s
-
-    def contract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        us, vs, iso = [], [], []
-        for pdf in batches:
-            a, b = _normalize(pdf[src]), _normalize(pdf[dst])
-            an, bn = a.isna().to_numpy(), b.isna().to_numpy()
-            both = ~an & ~bn
-            int_like = a.dtype.kind in "iu" or str(a.dtype) == "Int64"
-            tgt = np.int64 if int_like else None
-            us.append(a[both].to_numpy(dtype=tgt))
-            vs.append(b[both].to_numpy(dtype=tgt))
-            # a half-null edge still contributes its non-null endpoint as an
-            # isolated vertex (matching the join path's labels)
-            if (~an & bn).any():
-                iso.append(a[~an & bn].to_numpy(dtype=tgt))
-            if (an & ~bn).any():
-                iso.append(b[an & ~bn].to_numpy(dtype=tgt))
-        if not us and not iso:
-            return
-        res = _unionfind_star(
-            np.concatenate(us) if us else np.array([], dtype=np.int64),
-            np.concatenate(vs) if vs else np.array([], dtype=np.int64),
-            np.concatenate(iso) if iso else None,
-        )
-        if res is None:
-            return
-        keys, roots = res
-        yield pd.DataFrame({src: keys, dst: roots})
-
-    return contract
-
-
 def make_contract_kernel_arrow(src: str, dst: str):
     """Arrow-batch union-find contraction kernel (``mapInArrow``).
 
-    Unlike the pandas adapter, nullable int64 columns never pass through
-    float64 — null masks are applied on the Arrow arrays and the no-null
-    remainder converts to exact int64 numpy — so vertex ids above 2^53
-    survive bit-exact (round-3 advice item)."""
+    Nullable int64 columns never pass through float64 — null masks are
+    applied on the Arrow arrays and the no-null remainder converts to exact
+    int64 numpy — so vertex ids above 2^53 survive bit-exact.  Module-level
+    so tests can drive it on ``pa.record_batch`` partitions without a
+    SparkSession."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -277,10 +236,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    checkpoint_interval: int = 3,
-    use_local_checkpoint: bool = True,
     rows_per_loop_partition: int | None = 500_000,
-    pointer_double_hops: int = 2,
     pre_contract: bool = True,
 ) -> CCResult:
     """Min-label propagation over an undirected edge list.
@@ -290,16 +246,13 @@ def connected_components(
     endpoint is not a vertex.
 
     The call is eager: it persists and counts the symmetric edge list
-    (the count sizes the loop) and runs every round before it returns;
-    with ``use_local_checkpoint=True`` each round is one eager
-    localCheckpoint, so the result reads from a barrier, not from the
-    edge lineage.
-
-    ``use_local_checkpoint=True`` truncates lineage EVERY round with an
-    eager localCheckpoint — without it the logical plan doubles per round
-    and driver-side planning dominates wall time long before data does.
-    Set False on clusters that need executor-loss tolerance: then a reliable
-    ``checkpoint()`` runs every ``checkpoint_interval`` rounds instead.
+    (the count sizes the loop) and runs every round before it returns.
+    Each round is one eager localCheckpoint, which truncates lineage (without
+    it the logical plan doubles per round and driver-side planning dominates
+    wall time long before data does) and carries the round's changed-label
+    count, so the result reads from a barrier, not from the edge lineage.
+    localCheckpoint blocks die with their executor; executor-loss tolerance
+    is ROADMAP direction 3, not an option of this operator.
 
     Loop parallelism is size-adaptive: each round is 3 shuffles, so a small
     graph on many shuffle partitions pays ~rounds×3×partitions empty-task
@@ -314,8 +267,7 @@ def connected_components(
     partition's stars are the final min-label components, and the loop
     would have run on that one partition anyway, so the per-task memory
     bound is the same.  The map is materialized by the loop's barrier
-    (eager localCheckpoint, or persist + count when
-    ``use_local_checkpoint=False``) and counts as one round.
+    (one eager localCheckpoint) and counts as one round.
     ``CCResult.path`` / ``n_edges`` / ``loop_partitions`` record the
     decision and the count that drove it.
 
@@ -375,14 +327,11 @@ def connected_components(
 
     if loop_parts == 1:
         _t0 = _time.perf_counter()
-        comps = local_star_contract(sym.coalesce(1), "a", "b").toDF(
-            "id", "component"
+        comps = (
+            local_star_contract(sym.coalesce(1), "a", "b")
+            .toDF("id", "component")
+            .localCheckpoint(eager=True)
         )
-        if use_local_checkpoint:
-            comps = comps.localCheckpoint(eager=True)
-        else:
-            comps = comps.persist()
-            comps.count()
         sym.unpersist()
         tracker.record_batch((_time.perf_counter() - _t0) * 1000.0)
         return CCResult(
@@ -430,12 +379,8 @@ def connected_components(
             )
             # pointer doubling (path compression): follow component → its
             # component, shrinking chain depth geometrically → O(log n)
-            # rounds on chains instead of O(diameter).  Each extra hop is one
-            # more self-join shuffle per round but compounds the compression
-            # (2 hops ≈ 4× depth reduction per round) — on local/driver-
-            # overhead-bound graphs the fewer rounds win; at cluster scale
-            # the trade is a wash and the default stays modest.
-            for _hop in range(pointer_double_hops):
+            # rounds on chains instead of O(diameter)
+            for _hop in range(POINTER_DOUBLE_HOPS):
                 comp_map = new_labels.select(
                     F.col("id").alias("cid"), F.col("component").alias("ccomp")
                 )
@@ -454,38 +399,22 @@ def connected_components(
                         ).alias("_changed"),
                     )
                 )
-            if use_local_checkpoint:
-                # convergence count rides the SAME job as the checkpoint
-                # materialization (observe → eager localCheckpoint): one job
-                # per round, and the changed-count is free EVERY round, so
-                # the loop stops at the earliest possible round — no
-                # throttling needed (round-2 verdict item #3)
-                obs = Observation(f"cc_changed_r{i}")
-                observed = new_labels.observe(
-                    obs, F.sum(F.col("_changed").cast("long")).alias("changed")
-                )
-                new_labels = observed.localCheckpoint(eager=True)
-                try:
-                    changed = int(_observation_result(obs)["changed"] or 0)
-                except Exception:
-                    # CollectMetrics can be optimized away on a degenerate
-                    # (empty) plan, or (bounded-wait timeout) the metrics
-                    # event never arrived — fall back to an explicit count
-                    changed = new_labels.filter(F.col("_changed")).count()
-            else:
-                if checkpoint_interval and (i + 1) % checkpoint_interval == 0:
-                    new_labels = new_labels.checkpoint(eager=True)
-                else:
-                    new_labels = new_labels.persist()
-                # reliable-checkpoint path: counts are separate jobs, so keep
-                # the throttle (rounds 1-2 always change on a non-trivial
-                # graph; pointer doubling converges in O(log n) rounds)
-                check = (i + 1) >= 3 and (i + 1) % 2 == 1 or (
-                    i + 1
-                ) == max_iterations
-                changed = (
-                    new_labels.filter(F.col("_changed")).count() if check else -1
-                )
+            # convergence count rides the SAME job as the checkpoint
+            # materialization (observe → eager localCheckpoint): one job per
+            # round, and the changed-count is free EVERY round, so the loop
+            # stops at the earliest possible round
+            obs = Observation(f"cc_changed_r{i}")
+            observed = new_labels.observe(
+                obs, F.sum(F.col("_changed").cast("long")).alias("changed")
+            )
+            new_labels = observed.localCheckpoint(eager=True)
+            try:
+                changed = int(_observation_result(obs)["changed"] or 0)
+            except Exception:
+                # CollectMetrics can be optimized away on a degenerate
+                # (empty) plan, or (bounded-wait timeout) the metrics
+                # event never arrived — fall back to an explicit count
+                changed = new_labels.filter(F.col("_changed")).count()
             # unpersist the handle that was actually cached (a derived plan like
             # .drop() is a different DataFrame and its unpersist is a no-op)
             cached.unpersist()

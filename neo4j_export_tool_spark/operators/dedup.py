@@ -78,8 +78,7 @@ def _shingle_sets(
 
 
 def _verify_candidate_pairs(
-    candidates: DataFrame, sets: DataFrame, threshold_pct: int,
-    use_local_checkpoint: bool = True,
+    candidates: DataFrame, sets: DataFrame, threshold_pct: int
 ) -> DataFrame:
     """Exact-Jaccard verify of a candidate-pair table against the shingle
     sets: (doc_a, doc_b, shared, n_a, n_b) at the integer threshold.
@@ -111,20 +110,11 @@ def _verify_candidate_pairs(
         # once in the project) — at 3×10⁵ candidates that tripled the
         # verify stage.  The materialized rows are five scalars per pair.
     )
-    scored = _materialize(scored, use_local_checkpoint)
+    scored = scored.localCheckpoint(eager=False)
     return scored.filter(
         100 * F.col("shared")
         >= threshold_pct * (F.col("n_a") + F.col("n_b") - F.col("shared"))
     ).select("doc_a", "doc_b", "shared", "n_a", "n_b")
-
-
-
-def _materialize(df: DataFrame, use_local_checkpoint: bool) -> DataFrame:
-    """Materialize a subplan reused across join branches.  localCheckpoint
-    is fastest but its blocks die with an executor; ``False`` falls back to
-    a recomputable persist for spot/dynamic-allocation clusters (same knob
-    as `connected_components(use_local_checkpoint=...)`)."""
-    return df.localCheckpoint(eager=False) if use_local_checkpoint else df.persist()
 
 
 def jaccard_pairs(
@@ -135,7 +125,6 @@ def jaccard_pairs(
     shingle_n: int = 3,
     max_shingle_df: int | None = None,
     max_shingle_df_frac: float | None = None,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """Exact n-gram-shingle Jaccard pairs: (doc_a, doc_b, shared, n_a, n_b)
     with 100*shared >= threshold_pct*(n_a+n_b-shared).  Integer-exact.
@@ -169,9 +158,7 @@ def jaccard_pairs(
         # N = input corpus count (docstring contract), not the set-table
         # count, which silently excludes docs shorter than shingle_n
         max_shingle_df = max(2, int(max_shingle_df_frac * df.count()))
-    sets = _materialize(
-        _shingle_sets(df, text_col, id_col, shingle_n), use_local_checkpoint
-    )
+    sets = _shingle_sets(df, text_col, id_col, shingle_n).localCheckpoint(eager=False)
     sizes = sets.select("doc", F.size("shingles").alias("n"))
     posting = sets.select("doc", F.explode("shingles").alias("shingle"))
     if max_shingle_df is not None:
@@ -243,7 +230,6 @@ def minhash_lsh_pairs(
     k: int = 64,
     bands: int = 32,
     seed: int = 1,
-    use_local_checkpoint: bool = True,
     max_bucket_size: int | None = None,
     max_bucket_frac: float | None = None,
 ) -> DataFrame:
@@ -268,7 +254,6 @@ def minhash_lsh_pairs(
     sets = _shingle_sets(df, text_col, id_col, shingle_n)
     return minhash_lsh_pairs_from_sets(
         sets, threshold_pct=threshold_pct, k=k, bands=bands, seed=seed,
-        use_local_checkpoint=use_local_checkpoint,
         max_bucket_size=max_bucket_size, max_bucket_frac=max_bucket_frac,
     )
 
@@ -279,7 +264,6 @@ def minhash_lsh_pairs_from_sets(
     k: int = 64,
     bands: int = 32,
     seed: int = 1,
-    use_local_checkpoint: bool = True,
     max_bucket_size: int | None = None,
     max_bucket_frac: float | None = None,
 ) -> DataFrame:
@@ -342,7 +326,7 @@ def minhash_lsh_pairs_from_sets(
         )
     # the shingle-set plan feeds the signature kernel AND both verify
     # joins; materialize it once (blocks freed when the plan is GC'd)
-    sets = _materialize(sets, use_local_checkpoint)
+    sets = sets.localCheckpoint(eager=False)
     if max_bucket_frac is not None:
         max_bucket_size = max(2, int(max_bucket_frac * sets.count()))
 
@@ -387,7 +371,7 @@ def minhash_lsh_pairs_from_sets(
     ).mapInPandas(band_keys, schema=f"doc {id_type}, band int, key string")
     # the band table self-joins: materialize so the signature kernel runs
     # once, not once per join side
-    banded = _materialize(banded, use_local_checkpoint)
+    banded = banded.localCheckpoint(eager=False)
 
     if max_bucket_size is not None:
         # drop hot buckets BEFORE the self-join — the m² pair blowup never
@@ -415,9 +399,7 @@ def minhash_lsh_pairs_from_sets(
     )
 
     # exact verification on the candidate set only (pair side = build side)
-    return _verify_candidate_pairs(
-        candidates, sets, threshold_pct, use_local_checkpoint
-    )
+    return _verify_candidate_pairs(candidates, sets, threshold_pct)
 
 
 def simhash_fingerprints(
@@ -503,7 +485,6 @@ def embedding_neardup_pairs(
     dim: int | None = None,
     strategy: str = "blocked",
     rows_per_block: int = 4096,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """Exact cosine near-dup pairs over ALL vector pairs.
 
@@ -566,9 +547,10 @@ def embedding_neardup_pairs(
 
     # materialize once: feeds both join sides (and the pack groupBy is the
     # expensive part); blocks free when the plan is GC'd
-    blocks = _materialize(
-        base.groupBy("blk").applyInPandas(pack, schema=pack_schema),
-        use_local_checkpoint,
+    blocks = (
+        base.groupBy("blk")
+        .applyInPandas(pack, schema=pack_schema)
+        .localCheckpoint(eager=False)
     )
     a = blocks.select(
         F.col("blk").alias("blk_a"), F.col("ids").alias("ids_a"),
@@ -737,7 +719,6 @@ def jaccard_pairs_prefix(
     id_col: str,
     threshold_pct: int = 60,
     shingle_n: int = 3,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard pairs via PPJoin-style prefix filtering — the
     100 TB exact path that needs NO recall-trading cap.
@@ -764,9 +745,7 @@ def jaccard_pairs_prefix(
     """
     from pyspark.sql import Window
 
-    sets = _materialize(
-        _shingle_sets(df, text_col, id_col, shingle_n), use_local_checkpoint
-    )
+    sets = _shingle_sets(df, text_col, id_col, shingle_n).localCheckpoint(eager=False)
     sizes = sets.select("doc", F.size("shingles").alias("n"))
     posting = sets.select("doc", F.explode("shingles").alias("shingle"))
     dfc = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
@@ -774,7 +753,7 @@ def jaccard_pairs_prefix(
     # materialize it, or the whole build (posting explode, df agg+join,
     # per-doc rank window) is evaluated once per side (measured: the r7
     # plan audit showed the entire subtree duplicated, ~2× the lane)
-    prefix = _materialize(
+    prefix = (
         posting.join(dfc, "shingle")
         .join(sizes, "doc")
         .withColumn(
@@ -789,8 +768,8 @@ def jaccard_pairs_prefix(
             - F.expr(f"(({threshold_pct} * n) + 99) div 100")
             + F.lit(1)
         )
-        .select("doc", "shingle", "n", "rk"),
-        use_local_checkpoint,
+        .select("doc", "shingle", "n", "rk")
+        .localCheckpoint(eager=False)
     )
     a = prefix.alias("a")
     b = prefix.alias("b")
@@ -833,6 +812,4 @@ def jaccard_pairs_prefix(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    return _verify_candidate_pairs(
-        candidates, sets, threshold_pct, use_local_checkpoint
-    )
+    return _verify_candidate_pairs(candidates, sets, threshold_pct)

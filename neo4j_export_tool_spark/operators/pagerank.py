@@ -14,7 +14,7 @@ floor resolution (1 part in ``base``).
 Iteration k:  rank'(v) = teleport + Σ_{u→v} (rank(u)·damping_pct) div
 (100·outdeg(u)),  with teleport = (100-damping_pct)·base div (100·n).
 
-Scale shape: one persisted (src, outdeg) edge table; each round is a
+Scale shape: one checkpointed (src, outdeg) edge table; each round is a
 broadcast-or-shuffle join of the rank table (node-sized) to edges plus
 one keyed int sum — the textbook DataFrame PR loop.  Lineage is cut per
 round with localCheckpoint (same discipline as connected components,
@@ -35,7 +35,6 @@ def _prepared_graph(
     edges: DataFrame,
     src_col: str,
     dst_col: str,
-    use_local_checkpoint: bool,
     weight_col: str | None = None,
 ):
     """(e_aug, nodes) — the edge table augmented with the per-source
@@ -55,13 +54,7 @@ def _prepared_graph(
     else:
         norm = e.groupBy("src").agg(F.sum("w").alias("wsum"))
     e_deg = e.join(norm, "src")
-    if use_local_checkpoint:
-        e_deg = e_deg.localCheckpoint(eager=False)
-        nodes = nodes.localCheckpoint(eager=False)
-    else:
-        e_deg = e_deg.persist()
-        nodes = nodes.persist()
-    return e_deg, nodes
+    return e_deg.localCheckpoint(eager=False), nodes.localCheckpoint(eager=False)
 
 
 # Node ceiling under which the per-round rank table is broadcast instead
@@ -82,7 +75,6 @@ def _pagerank_loop(
     n_iters: int,
     damping_pct: int,
     new_rank,
-    use_local_checkpoint: bool,
     contrib_sql: str | None = None,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
@@ -109,9 +101,9 @@ def _pagerank_loop(
             .groupBy("node")
             .agg(F.sum("c").alias("inbound"))
         )
-        ranks = new_rank(nodes.join(_b(contribs), "node", "left"))
-        if use_local_checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
+        ranks = new_rank(
+            nodes.join(_b(contribs), "node", "left")
+        ).localCheckpoint(eager=False)
     return ranks
 
 
@@ -122,7 +114,6 @@ def _finish_uniform(
     n_iters: int,
     damping_pct: int,
     base: int,
-    use_local_checkpoint: bool,
     contrib_sql: str | None = None,
 ) -> DataFrame:
     """Shared tail of the uniform-teleport variants: empty-graph guard,
@@ -148,7 +139,6 @@ def _finish_uniform(
                 F.lit(teleport) + F.coalesce(F.col("inbound"), F.lit(0))
             ).cast("long").alias("rank_int"),
         ),
-        use_local_checkpoint,
         contrib_sql=contrib_sql,
         broadcast_ranks=n <= _BROADCAST_RANKS_MAX_NODES,
     )
@@ -162,7 +152,6 @@ def weighted_pagerank_int(
     n_iters: int = 5,
     damping_pct: int = 85,
     base: int = 10**12,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, rank_int) — exact-integer PageRank where each out-edge
     receives mass proportional to its INTEGER weight (a KG's edge
@@ -204,12 +193,9 @@ def weighted_pagerank_int(
         F.col(dst_col).alias("_wd"),
         F.when(chk.isNull(), w_long).alias("w"),
     )
-    e_w, nodes = _prepared_graph(
-        checked, "_ws", "_wd", use_local_checkpoint, weight_col="w"
-    )
+    e_w, nodes = _prepared_graph(checked, "_ws", "_wd", weight_col="w")
     return _finish_uniform(
         e_w, nodes, edges, n_iters, damping_pct, base,
-        use_local_checkpoint,
         contrib_sql="((rank_int * {d}) div 100) * w div wsum",
     )
 
@@ -221,15 +207,12 @@ def pagerank_int(
     n_iters: int = 5,
     damping_pct: int = 85,
     base: int = 10**12,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, rank_int) after ``n_iters`` exact-integer PR rounds."""
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
-    e_deg, nodes = _prepared_graph(edges, src_col, dst_col, use_local_checkpoint)
-    return _finish_uniform(
-        e_deg, nodes, edges, n_iters, damping_pct, base, use_local_checkpoint
-    )
+    e_deg, nodes = _prepared_graph(edges, src_col, dst_col)
+    return _finish_uniform(e_deg, nodes, edges, n_iters, damping_pct, base)
 
 
 def personalized_pagerank_int(
@@ -241,7 +224,6 @@ def personalized_pagerank_int(
     n_iters: int = 5,
     damping_pct: int = 85,
     base: int = 10**12,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, rank_int) after ``n_iters`` exact-integer PERSONALIZED
     PageRank rounds: all teleport mass returns to the seed set instead
@@ -272,17 +254,13 @@ def personalized_pagerank_int(
         seed_col = "node"
     if seed_col is None:
         seed_col = seeds.columns[0]
-    e_deg, nodes = _prepared_graph(edges, src_col, dst_col, use_local_checkpoint)
+    e_deg, nodes = _prepared_graph(edges, src_col, dst_col)
     marker = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .join(nodes, "node", "left_semi")
         .select("node", F.lit(1).alias("_seed"))
-    )
-    marker = (
-        marker.localCheckpoint(eager=False)
-        if use_local_checkpoint
-        else marker.persist()
+        .localCheckpoint(eager=False)
     )
 
     s = marker.count()
@@ -318,7 +296,6 @@ def personalized_pagerank_int(
                 + F.coalesce(F.col("inbound"), F.lit(0))
             ).cast("long").alias("rank_int"),
         ),
-        use_local_checkpoint,
         broadcast_ranks=bcast,
     )
 

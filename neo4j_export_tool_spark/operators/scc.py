@@ -58,7 +58,6 @@ def strongly_connected_components(
     dst_col: str,
     max_outer_rounds: int = 32,
     max_label_rounds: int = 64,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, scc_id) — scc_id is the minimum node id of the component.
 
@@ -71,8 +70,12 @@ def strongly_connected_components(
     cyclic).  Self-loops are irrelevant to the grouping (a node is
     always in its own SCC).  Raises RuntimeError if a fixpoint is still
     moving at its ceiling.
+
+    The call is eager on every input: each outer round's node count
+    (which sets the broadcast tier) and the fixpoints' ``isEmpty``
+    checks are Spark jobs that run before it returns.
     """
-    e_all = (
+    e = (
         edges.select(
             F.col(src_col).cast("string").alias("src"),
             F.col(dst_col).cast("string").alias("dst"),
@@ -80,37 +83,24 @@ def strongly_connected_components(
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    nodes_all = (
+    nodes = (
         edges.select(F.col(src_col).cast("string").alias("node"))
         .unionByName(edges.select(F.col(dst_col).cast("string").alias("node")))
         .where(F.col("node").isNotNull())
         .distinct()
+        .localCheckpoint(eager=False)
     )
-
-    def _ckpt(df):
-        return df.localCheckpoint(eager=False) if use_local_checkpoint else df
-
-    e_all = _ckpt(e_all)
-    nodes = _ckpt(nodes_all)
-    e = e_all
     spark = edges.sparkSession
     assigned = spark.createDataFrame([], "node string, scc_id string")
 
     for _ in range(max_outer_rounds):
-        if use_local_checkpoint:
-            # count (not isEmpty): on the materialized checkpoint both
-            # are one cheap job, and the measured node count decides the
-            # broadcast tier for this outer round
-            n_nodes = nodes.count()
-            _bn = broadcast_if_small(n_nodes, _BROADCAST_NODES_MAX)
-        else:
-            # pure-lineage debug mode: isEmpty short-circuits after one
-            # row where a count would recompute the whole surviving
-            # subgraph; no checkpoint boundary means the planner sees
-            # sizes itself, so no forced tier either
-            n_nodes = 0 if nodes.isEmpty() else 1
-            _bn = lambda df: df
+        # count (not isEmpty): on the materialized checkpoint both are
+        # one cheap job, and the measured node count decides the
+        # broadcast tier for this outer round
+        n_nodes = nodes.count()
+        _bn = broadcast_if_small(n_nodes, _BROADCAST_NODES_MAX)
         if n_nodes == 0:
             return assigned
         # 0. TRIM: a node with no in-edge or no out-edge in the
@@ -126,26 +116,24 @@ def strongly_connected_components(
                 .unionByName(nodes.join(_bn(dsts), "node", "left_anti"))
                 .distinct()
             )
-            trivial = _ckpt(trivial)
+            trivial = trivial.localCheckpoint(eager=False)
             if trivial.isEmpty():
                 break
-            assigned = _ckpt(
-                assigned.unionByName(
-                    trivial.select("node", F.col("node").alias("scc_id"))
-                )
+            assigned = assigned.unionByName(
+                trivial.select("node", F.col("node").alias("scc_id"))
+            ).localCheckpoint(eager=False)
+            nodes = nodes.join(_bn(trivial), "node", "left_anti").localCheckpoint(
+                eager=False
             )
-            nodes = _ckpt(nodes.join(_bn(trivial), "node", "left_anti"))
-            e = _ckpt(
-                e.join(
-                    _bn(trivial.select(F.col("node").alias("src"))),
-                    "src",
-                    "left_anti",
-                ).join(
-                    _bn(trivial.select(F.col("node").alias("dst"))),
-                    "dst",
-                    "left_anti",
-                )
-            )
+            e = e.join(
+                _bn(trivial.select(F.col("node").alias("src"))),
+                "src",
+                "left_anti",
+            ).join(
+                _bn(trivial.select(F.col("node").alias("dst"))),
+                "dst",
+                "left_anti",
+            ).localCheckpoint(eager=False)
         # (trim ceiling exhausting is not an error — coloring below
         # handles whatever remains)
         if nodes.isEmpty():
@@ -153,7 +141,7 @@ def strongly_connected_components(
         # 1. forward min-label fixpoint: color(v) = min id reaching v
         colors = nodes.select("node", F.col("node").alias("color"))
         for _r in range(max_label_rounds):
-            colors = _ckpt(colors)
+            colors = colors.localCheckpoint(eager=False)
             pushed = (
                 e.join(
                     _bn(colors.select(
@@ -177,7 +165,7 @@ def strongly_connected_components(
             # checkpoint BEFORE the moved-check: the isEmpty action
             # materializes nxt so the next round reads it instead of
             # re-running this round's join (closure.py discipline)
-            nxt = _ckpt(nxt)
+            nxt = nxt.localCheckpoint(eager=False)
             moved = nxt.where(F.col("_moved")).isEmpty()
             colors = nxt.select("node", "color")
             if moved:
@@ -188,7 +176,7 @@ def strongly_connected_components(
                 f"max_label_rounds={max_label_rounds}; raise the ceiling "
                 "(long-diameter graph)"
             )
-        colors = _ckpt(colors)
+        colors = colors.localCheckpoint(eager=False)
 
         # 2. backward sweep from roots within each color
         e_col = (
@@ -205,12 +193,10 @@ def strongly_connected_components(
             .where(F.col("_cs") == F.col("_cd"))
             .select("src", "dst", F.col("_cs").alias("color"))
         )
-        e_col = _ckpt(e_col)
-        member = _ckpt(
-            colors.where(F.col("node") == F.col("color")).select(
-                "node", "color"
-            )
-        )
+        e_col = e_col.localCheckpoint(eager=False)
+        member = colors.where(F.col("node") == F.col("color")).select(
+            "node", "color"
+        ).localCheckpoint(eager=False)
         frontier = member
         for _r in range(max_label_rounds):
             if frontier.isEmpty():
@@ -225,10 +211,10 @@ def strongly_connected_components(
             # round's expansion and the member union, so without a
             # barrier the step join evaluated twice per round (the
             # walks pick discipline)
-            frontier = _ckpt(
-                stepped.join(_bn(member.select("node")), "node", "left_anti")
-            )
-            member = _ckpt(member.unionByName(frontier))
+            frontier = stepped.join(
+                _bn(member.select("node")), "node", "left_anti"
+            ).localCheckpoint(eager=False)
+            member = member.unionByName(frontier).localCheckpoint(eager=False)
         else:
             raise RuntimeError(
                 f"SCC backward sweep still moving after "
@@ -236,20 +222,18 @@ def strongly_connected_components(
             )
 
         found = member.select("node", F.col("color").alias("scc_id"))
-        assigned = _ckpt(assigned.unionByName(found))
+        assigned = assigned.unionByName(found).localCheckpoint(eager=False)
         # 3. remove assigned nodes; keep only edges between survivors
-        nodes = _ckpt(
-            nodes.join(_bn(found.select("node")), "node", "left_anti")
-        )
-        e = _ckpt(
-            e.join(
-                _bn(found.select(F.col("node").alias("src"))),
-                "src", "left_anti",
-            ).join(
-                _bn(found.select(F.col("node").alias("dst"))),
-                "dst", "left_anti",
-            )
-        )
+        nodes = nodes.join(
+            _bn(found.select("node")), "node", "left_anti"
+        ).localCheckpoint(eager=False)
+        e = e.join(
+            _bn(found.select(F.col("node").alias("src"))),
+            "src", "left_anti",
+        ).join(
+            _bn(found.select(F.col("node").alias("dst"))),
+            "dst", "left_anti",
+        ).localCheckpoint(eager=False)
     if not nodes.isEmpty():
         raise RuntimeError(
             f"SCC still has unassigned nodes after "

@@ -143,7 +143,6 @@ def ktruss(
     b_col: str,
     k: int,
     max_rounds: int = 64,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(u, v) — the canonical edges of the maximal k-truss: the largest
     subgraph in which EVERY edge sits on at least ``k - 2`` triangles
@@ -164,17 +163,9 @@ def ktruss(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    def _mat(df):
-        # without a lineage cut each round's plan embeds the previous
-        # round ~6x (degree agg + wedge self-join + semi-join) — the
-        # persist fallback mirrors _prepared_graph's discipline
-        return (
-            df.localCheckpoint(eager=False)
-            if use_local_checkpoint
-            else df.persist()
-        )
-
-    und = _mat(_canonical_undirected(edges, a_col, b_col))
+    # without a lineage cut each round's plan embeds the previous round
+    # ~6x (degree agg + wedge self-join + semi-join)
+    und = _canonical_undirected(edges, a_col, b_col).localCheckpoint(eager=False)
     if k <= 2:
         return und
     need = k - 2
@@ -206,20 +197,12 @@ def ktruss(
             .groupBy("u", "v")
             .agg(F.count(F.lit(1)).alias("support"))
         )
-        keep = _mat(
-            und.join(
-                credits.where(F.col("support") >= need).select("u", "v"),
-                ["u", "v"],
-                "left_semi",
-            )
-        )
+        keep = und.join(
+            credits.where(F.col("support") >= need).select("u", "v"),
+            ["u", "v"],
+            "left_semi",
+        ).localCheckpoint(eager=False)
         n_keep = keep.count()
-        # the previous round's frame is no longer referenced once `keep`
-        # is materialized by the count above — in the persist fallback it
-        # would otherwise leak one cached frame per peel round (r6 advice
-        # item; localCheckpoint blocks free with the plan objects)
-        if not use_local_checkpoint:
-            und.unpersist()
         # n_keep == 0 is also a fixpoint: an empty set cannot shrink —
         # returning here avoids a spurious ceiling raise (and one empty
         # enumeration round) when the peel empties on the last round

@@ -109,7 +109,6 @@ def random_walks(
     walks_per_node: int = 2,
     salt: str = "walk",
     max_neighbors_per_node: int | None = None,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(walk_id, start, path) — ``walks_per_node`` walks from every node
     with at least one outgoing edge, each following ``walk_len - 1``
@@ -126,6 +125,15 @@ def random_walks(
     (`_BROADCAST_EDGES_MAX_ROWS`), the per-step joins broadcast it (and
     the walk-sized pick table) instead of shuffling — same rows, decided
     from a measured count.
+
+    Eagerness: with ``walk_len > 1`` the call runs the edge and walk
+    counts that pick the broadcast tiers (they materialize the
+    checkpoints step 1 reads).  Under adaptive query execution (the
+    session default) each lazy ``localCheckpoint`` also runs the shuffle
+    stages below it when it is created, so every step's join and
+    aggregation runs at call time, and even ``walk_len == 1`` runs the
+    edge deduplication's shuffle.  With AQE off, ``walk_len == 1``
+    starts no job.
     """
     if walk_len < 1:
         raise ValueError("walk_len must be >= 1")
@@ -141,21 +149,11 @@ def random_walks(
     )
     if max_neighbors_per_node is not None:
         e = cap_neighbors(e, "src", "dst", max_neighbors_per_node, salt)
-    # use_local_checkpoint=False keeps pure lineage (the edge scan is
-    # recomputed per round) — debugging/small-graph mode.  A persist()
-    # here would leak cached blocks for the session: the returned
-    # DataFrame is lazy in that mode, so there is no point at which this
-    # function could safely unpersist.  In the default checkpoint mode
-    # the function is EAGER whenever the loop will run (walk_len > 1):
-    # the count below (which decides the broadcast tier) materializes
-    # the checkpoint at call time — the same job the first step would
-    # otherwise trigger.  walk_len == 1 skips the count and stays lazy.
     _be = _bp = lambda df: df
-    if use_local_checkpoint:
-        e = e.localCheckpoint(eager=False)
-        if walk_len > 1:  # walk_len == 1: the loop never runs
-            # materializes the checkpoint; decides the edge-side tier
-            _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
+    e = e.localCheckpoint(eager=False)
+    if walk_len > 1:  # walk_len == 1: the loop never runs
+        # materializes the checkpoint; decides the edge-side tier
+        _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
 
     active = (
         e.select("src")
@@ -171,16 +169,15 @@ def random_walks(
             F.array("start").alias("path"),
         )
     )
-    if use_local_checkpoint:
-        # round 1 consumes the initial frontier in both branches
-        active = active.localCheckpoint(eager=False)
-        if walk_len > 1:
-            # the pick/retire side is WALK-sized; count it exactly
-            # (walks only retire, so every later frame is ≤ this) —
-            # the count materializes the frontier round 1 reads twice
-            _bp = broadcast_if_small(
-                active.count(), _BROADCAST_EDGES_MAX_ROWS
-            )
+    # round 1 consumes the initial frontier in both branches
+    active = active.localCheckpoint(eager=False)
+    if walk_len > 1:
+        # the pick/retire side is WALK-sized; count it exactly
+        # (walks only retire, so every later frame is ≤ this) —
+        # the count materializes the frontier round 1 reads twice
+        _bp = broadcast_if_small(
+            active.count(), _BROADCAST_EDGES_MAX_ROWS
+        )
     done = active.limit(0)
 
     for step in range(1, walk_len):
@@ -202,18 +199,14 @@ def random_walks(
             F.col("_next").alias("cur"),
             F.concat("path", F.array("_next")).alias("path"),
         )
-        if use_local_checkpoint:
-            # nxt feeds BOTH the retire anti-join and the next round:
-            # checkpoint it where computed, so the candidate join +
-            # argmin agg evaluate once per step and each step stores
-            # exactly one walk-sized frame (the dedup.py _materialize
-            # discipline)
-            nxt = nxt.localCheckpoint(eager=False)
+        # nxt feeds BOTH the retire anti-join and the next round:
+        # checkpoint it where computed, so the candidate join +
+        # argmin agg evaluate once per step and each step stores
+        # exactly one walk-sized frame
+        nxt = nxt.localCheckpoint(eager=False)
         done = done.unionByName(
             active.join(_bp(nxt.select("walk_id")), "walk_id", "left_anti")
-        )
-        if use_local_checkpoint:
-            done = done.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         active = nxt
     return done.unionByName(active).select("walk_id", "start", "path")
 
@@ -229,7 +222,6 @@ def node2vec_walks(
     w_far: int = 1,
     salt: str = "n2v",
     max_neighbors_per_node: int | None = None,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(walk_id, start, path) — node2vec-biased second-order walks with
     integer class weights.
@@ -255,10 +247,18 @@ def node2vec_walks(
     table fits (`_BROADCAST_EDGES_MAX_ROWS`), the two equi-joins
     broadcast it instead of shuffling the walk table — same rows,
     decided from a measured count the checkpoint materialization pays
-    for anyway (skipped, staying lazy, when walk_len == 1 means the
-    loop never runs).  Dead ends retire into
-    the result.  Weights must be positive ints; totals stay far inside
-    int64 (max degree × max weight).
+    for anyway.  Dead ends retire into the result.  Weights must be
+    positive ints; totals stay far inside int64 (max degree × max
+    weight).
+
+    Eagerness: with ``walk_len > 1`` the call runs the edge and walk
+    counts that pick the broadcast tiers (they materialize the
+    checkpoints step 1 reads).  Under adaptive query execution (the
+    session default) each lazy ``localCheckpoint`` also runs the shuffle
+    stages below it when it is created, so every step's join and
+    aggregation runs at call time, and even ``walk_len == 1`` runs the
+    edge deduplication's shuffle.  With AQE off, ``walk_len == 1``
+    starts no job.
 
     Reference: the walk corpus feeds the same embedding-training surface
     as ``random_walks``; see module docstring for the determinism
@@ -287,11 +287,10 @@ def node2vec_walks(
         # the walk lives entirely on the pruned graph)
         e = cap_neighbors(e, "src", "dst", max_neighbors_per_node, salt)
     _be = _bp = lambda df: df
-    if use_local_checkpoint:
-        e = e.localCheckpoint(eager=False)
-        if walk_len > 1:  # walk_len == 1: the loop never runs
-            # materializes the checkpoint; decides the edge-side tier
-            _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
+    e = e.localCheckpoint(eager=False)
+    if walk_len > 1:  # walk_len == 1: the loop never runs
+        # materializes the checkpoint; decides the edge-side tier
+        _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
     e_near = e.select(
         F.col("src").alias("_psrc"), F.col("dst").alias("_pdst"),
         F.lit(1).alias("_near"),
@@ -312,15 +311,14 @@ def node2vec_walks(
             F.array("start").alias("path"),
         )
     )
-    if use_local_checkpoint:
-        # round 1 consumes the initial frontier in both branches
-        active = active.localCheckpoint(eager=False)
-        if walk_len > 1:
-            # the pick/retire side is WALK-sized; count it exactly
-            # (walks only retire, so every later frame is ≤ this)
-            _bp = broadcast_if_small(
-                active.count(), _BROADCAST_EDGES_MAX_ROWS
-            )
+    # round 1 consumes the initial frontier in both branches
+    active = active.localCheckpoint(eager=False)
+    if walk_len > 1:
+        # the pick/retire side is WALK-sized; count it exactly
+        # (walks only retire, so every later frame is ≤ this)
+        _bp = broadcast_if_small(
+            active.count(), _BROADCAST_EDGES_MAX_ROWS
+        )
     done = active.limit(0)
 
     from pyspark.sql import Window
@@ -369,19 +367,15 @@ def node2vec_walks(
             F.col("dst").alias("cur"),
             F.concat("path", F.array("dst")).alias("path"),
         )
-        if use_local_checkpoint:
-            # nxt feeds BOTH the retire anti-join and the next round:
-            # checkpoint the NARROW projection where computed (the
-            # ladder scaffolding _w/_cum/_r/dst is dropped first), so
-            # the candidate joins + windows evaluate once per step and
-            # each step stores exactly one walk-sized frame (the
-            # dedup.py _materialize discipline)
-            nxt = nxt.localCheckpoint(eager=False)
+        # nxt feeds BOTH the retire anti-join and the next round:
+        # checkpoint the NARROW projection where computed (the
+        # ladder scaffolding _w/_cum/_r/dst is dropped first), so
+        # the candidate joins + windows evaluate once per step and
+        # each step stores exactly one walk-sized frame
+        nxt = nxt.localCheckpoint(eager=False)
         done = done.unionByName(
             active.join(_bp(nxt.select("walk_id")), "walk_id", "left_anti")
-        )
-        if use_local_checkpoint:
-            done = done.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         active = nxt
     return done.unionByName(active).select("walk_id", "start", "path")
 

@@ -135,23 +135,6 @@ def test_partitioning_independent_bit_equal(spark):
     assert a == b  # exact ==, float bits included
 
 
-def test_persist_path_bit_identical(spark):
-    edges = [(f"n{i}", f"n{(i * 3 + 2) % 11}") for i in range(11)]
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "s string, d string")
-    a = {
-        (r.node, r.hop): r.ball_size
-        for r in neighborhood_function(df, "s", "d", h=2, p=6).collect()
-    }
-    b = {
-        (r.node, r.hop): r.ball_size
-        for r in neighborhood_function(
-            df, "s", "d", h=2, p=6, use_local_checkpoint=False
-        ).collect()
-    }
-    assert a == b  # exact ==, float bits included
-
-
 def test_validation(spark):
     df = spark.createDataFrame([("a", "b")], "s string, d string")
     with pytest.raises(ValueError):

@@ -83,7 +83,7 @@ def test_connected_components_long_chain_checkpointing(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "src long, dst long"
     )
-    res = connected_components(edges, max_iterations=50, checkpoint_interval=3)
+    res = connected_components(edges, max_iterations=50)
     comp = {r["id"]: r["component"] for r in res.components.collect()}
     assert res.converged
     assert set(comp.values()) == {0}

@@ -1,10 +1,11 @@
 """Correctness evidence for the partition-local union-find contraction.
 
 Two layers:
-- hypothesis sweep of the pure-pandas kernel (no Spark): for ANY edge list
-  split into ANY partitioning, the union of the emitted star edges must
-  have exactly the same connected components as the input graph, and each
-  partition's stars must point at that partition's min member per class.
+- hypothesis sweep of the Arrow kernel on ``pa.record_batch`` partitions
+  (no Spark): for ANY edge list split into ANY partitioning, empty
+  partitions included, the union of the emitted star edges must have
+  exactly the same connected components as the input graph, and a single
+  partition's stars must already be the final min-member components.
 - randomized Spark cross-check: `connected_components` over random graphs
   at random partition counts equals a driver-side union-find oracle.
 """
@@ -13,14 +14,14 @@ from __future__ import annotations
 
 import random
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from neo4j_export_tool_spark.operators.components import (
     connected_components,
-    make_contract_kernel,
+    make_contract_kernel_arrow,
 )
 
 
@@ -47,6 +48,27 @@ def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {x: mins[find(x)] for x in parent}
 
 
+def _batch(edges: list[tuple[int, int]]) -> pa.RecordBatch:
+    """One partition as the Arrow batch ``mapInArrow`` hands the kernel."""
+    return pa.record_batch(
+        [
+            pa.array([u for u, _ in edges], type=pa.int64()),
+            pa.array([v for _, v in edges], type=pa.int64()),
+        ],
+        names=["src", "dst"],
+    )
+
+
+def _stars(*batches: pa.RecordBatch) -> list[tuple[int, int]]:
+    """Run the kernel over one partition made of ``batches``."""
+    out = list(make_contract_kernel_arrow("src", "dst")(iter(batches)))
+    return [
+        e
+        for b in out
+        for e in zip(b.column(0).to_pylist(), b.column(1).to_pylist())
+    ]
+
+
 edges_strategy = st.lists(
     st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=0, max_size=60
 )
@@ -60,14 +82,10 @@ def test_contraction_preserves_connectivity(edges, n_parts, seed):
     for e in edges:
         parts[rng.randrange(n_parts)].append(e)
 
-    kernel = make_contract_kernel("src", "dst")
     stars: list[tuple[int, int]] = []
-    for part in parts:
-        pdf = pd.DataFrame(part, columns=["src", "dst"]) if part else pd.DataFrame(
-            {"src": [], "dst": []}
-        )
-        for out in kernel(iter([pdf])):
-            stars.extend(zip(out["src"], out["dst"]))
+    for part in parts + [[]]:  # plus one partition that is always empty
+        stars.extend(_stars(_batch(part)))
+    assert _stars(_batch([])) == []  # an empty partition emits nothing
 
     # same vertex set, same components, ≤ V star edges per partition
     assert _uf_components(stars) == _uf_components(edges)
@@ -77,27 +95,18 @@ def test_contraction_preserves_connectivity(edges, n_parts, seed):
 @given(edges=edges_strategy)
 @settings(max_examples=100, deadline=None)
 def test_single_partition_contraction_is_final(edges):
-    """One partition sees everything → its stars ARE the final components."""
-    kernel = make_contract_kernel("src", "dst")
-    pdf = pd.DataFrame(edges, columns=["src", "dst"]) if edges else pd.DataFrame(
-        {"src": [], "dst": []}
-    )
-    stars = {}
-    for out in kernel(iter([pdf])):
-        stars.update(zip(out["src"], out["dst"]))
-    assert stars == _uf_components(edges)
+    """One partition sees everything → its stars ARE the final components,
+    also when it arrives as several Arrow batches, some of them empty."""
+    assert dict(_stars(_batch(edges))) == _uf_components(edges)
+    half = len(edges) // 2
+    split = _stars(_batch([]), _batch(edges[:half]), _batch([]), _batch(edges[half:]))
+    assert dict(split) == _uf_components(edges)
 
 
 def test_arrow_kernel_preserves_huge_ids_with_nulls():
     """The mapInArrow kernel's reason to exist (round-3 advice): nullable
     int64 edge columns must NOT round-trip through float64 — vertex ids
     above 2^53 stay bit-exact even when the column contains nulls."""
-    import pyarrow as pa
-
-    from neo4j_export_tool_spark.operators.components import (
-        make_contract_kernel_arrow,
-    )
-
     big = 2**53  # float64 loses odd integers from here up
     a, b, c = big + 1, big + 3, big + 5
     batch = pa.record_batch(
@@ -145,9 +154,8 @@ def _ids(edges, id_type):
     return [tuple(None if x is None else str(x) for x in e) for e in edges]
 
 
-@pytest.mark.parametrize("use_local_checkpoint", [True, False])
 @pytest.mark.parametrize("id_type", ["long", "string"])
-def test_one_partition_finish_equals_loop(spark, id_type, use_local_checkpoint):
+def test_one_partition_finish_equals_loop(spark, id_type):
     """Tier equivalence for the CC path choice: the one-partition union-find
     finish (the default on a small graph) and the label-propagation loop
     (forced with rows_per_loop_partition=1) return identical component
@@ -170,10 +178,6 @@ def test_one_partition_finish_equals_loop(spark, id_type, use_local_checkpoint):
         for rows_per_part, path in ((500_000, "one_partition"), (1, "label_propagation")):
             res = connected_components(
                 df,
-                use_local_checkpoint=use_local_checkpoint,
-                # a reliable checkpoint every round keeps the persist-mode
-                # loop's plans short (interval 3 takes ~8× longer here)
-                checkpoint_interval=1,
                 rows_per_loop_partition=rows_per_part,
                 pre_contract=pre_contract,
             )

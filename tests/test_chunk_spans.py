@@ -155,14 +155,6 @@ def test_pagerank_int_semantics(spark):
         for x in pagerank_int(edges, "src", "dst", n_iters=5).collect()
     }
     assert got == r
-    # persist fallback path is bit-identical
-    got2 = {
-        x["node"]: x["rank_int"]
-        for x in pagerank_int(
-            edges, "src", "dst", n_iters=5, use_local_checkpoint=False
-        ).collect()
-    }
-    assert got2 == got
     assert sum(got.values()) <= base  # floors + dangling only lose mass
 
     # star: hub receives all leaf mass

@@ -86,15 +86,12 @@ def test_seed_forms_equivalent_and_outside_seeds_ignored(spark):
     assert by_list == by_df  # 'ghost' is outside the universe → |S| = 1
 
 
-def test_partitioning_and_persist_path_bit_identical(spark):
+def test_partitioning_bit_identical(spark):
     edges = [(f"n{i}", f"n{(i * 3 + 2) % 11}") for i in range(11)]
     edges = [(a, b) for a, b in edges if a != b]
     a = _spark_ppr(spark, edges, ["n1", "n4"], n_parts=1, n_iters=5)
     b = _spark_ppr(spark, edges, ["n1", "n4"], n_parts=7, n_iters=5)
-    c = _spark_ppr(
-        spark, edges, ["n1", "n4"], n_iters=5, use_local_checkpoint=False
-    )
-    assert a == b == c
+    assert a == b
 
 
 def test_integer_node_ids(spark):
