@@ -239,7 +239,7 @@ def _q12_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q13_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram-shingle Jaccard near-dup pairs (integer-exact threshold)
     with stop-shingle pruning ON (max_shingle_df=20) — the scale knob that
-    bounds the posting self-join; the oracle prunes identically."""
+    bounds per-shingle pair enumeration; the oracle prunes identically."""
     from neo4j_export_tool_spark.operators.dedup import jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")
@@ -260,16 +260,16 @@ def _q14_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q55_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PPJoin-style prefix-filtered EXACT Jaccard (round-5,
-    `operators/dedup.py::jaccard_pairs_prefix`): candidates only from
-    each set's rare-first prefix (positional prefix principle — any
-    pair at the threshold must collide inside the prefixes), exact
+    """PPJoin-style prefix-filtered EXACT Jaccard: `jaccard_pairs` with
+    no df cap (`operators/dedup.py`) takes candidates only from each
+    set's rare-first prefix (positional prefix principle — any pair at
+    the threshold must collide inside the prefixes), then an exact
     array_intersect verify.  Output provably equals the unpruned exact
     join, so it shares q14's oracle."""
-    from neo4j_export_tool_spark.operators.dedup import jaccard_pairs_prefix
+    from neo4j_export_tool_spark.operators.dedup import jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return jaccard_pairs_prefix(
+    return jaccard_pairs(
         docs, "text", "doc_id", threshold_pct=60, shingle_n=3
     ).localCheckpoint(eager=False).orderBy("doc_a", "doc_b")
 

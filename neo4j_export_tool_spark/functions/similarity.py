@@ -1,4 +1,5 @@
-"""Similarity primitives: shingles, MinHash, SimHash, cosine — column builders.
+"""Similarity primitives: shingles, MinHash shingle hashing and
+parameters, SimHash, cosine — column builders.
 
 All JVM-side (higher-order functions / codegen), no Python in the hot path.
 Float policy: every dot/norm is computed in DOUBLE with sequential
@@ -53,37 +54,10 @@ def shingle_hash_col(shingle: Column) -> Column:
 
 
 def hashed_shingles_col(shingles: Column) -> Column:
-    """Pre-hash a shingle set once (md5 → 31-bit ints).  Materialize this as
-    its own column before building MinHash signatures: Catalyst does not
-    CSE higher-order-function subtrees, so inlining it would recompute the
-    md5 k times (once per signature slot)."""
+    """Pre-hash a shingle set once (md5 → 31-bit ints): the JVM-side input
+    of the MinHash signature kernel in
+    `operators.dedup.minhash_lsh_pairs_from_sets`."""
     return F.transform(shingles, lambda s: shingle_hash_col(s) % F.lit(MERSENNE_PRIME))
-
-
-def minhash_signature_col(
-    shingles: Column, k: int, seed: int = 1, pre_hashed: bool = False
-) -> Column:
-    """k-permutation MinHash signature as array<bigint>.
-
-    h_i(x) = (a_i * h(x) + b_i) mod p  with p = 2^31-1 (classic Broder
-    construction); a_i/b_i derived deterministically from ``seed``.
-    Empty shingle sets yield p (sentinel max) in every slot.
-    """
-    h = shingles if pre_hashed else hashed_shingles_col(shingles)
-
-    sig = []
-    rnd = _lcg(seed)
-    for _ in range(k):
-        a = next(rnd) % (MERSENNE_PRIME - 1) + 1
-        b = next(rnd) % MERSENNE_PRIME
-        hashed = F.transform(
-            h,
-            lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_PRIME),
-        )
-        sig.append(
-            F.coalesce(F.array_min(hashed), F.lit(MERSENNE_PRIME)).cast("long")
-        )
-    return F.array(*sig)
 
 
 def _lcg(seed: int):
@@ -97,30 +71,6 @@ def _lcg(seed: int):
             yield state
 
     return gen()
-
-
-def band_hash_cols(signature: Column, bands: int, rows: int) -> Column:
-    """LSH banding: array of (band_idx, band_key) structs.
-
-    band_key = md5 of the ':'-joined signature slice — stable across engines.
-    """
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.slice(signature, i * rows + 1, rows),
-                            lambda x: x.cast("string"),
-                        ),
-                        ":",
-                    )
-                ).alias("key"),
-            )
-            for i in range(bands)
-        ]
-    )
 
 
 def simhash_col(toks: Column, bits: int = 32) -> Column:

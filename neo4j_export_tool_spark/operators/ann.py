@@ -97,25 +97,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def hyperplane_signature(
-    df: DataFrame, vec_col: str, n_planes: int, dim: int, seed: int = 7
-) -> DataFrame:
-    """Add a ``bucket`` column: sign-pattern int over random hyperplanes.
-
-    Column-expression form (kept for single-table callers/tests); the
-    multi-table LSH uses `_signature_table` — a single numpy-GEMM
-    mapInPandas — because n_tables×n_planes dot expressions make Catalyst
-    optimization time, not data compute, the dominant cost."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = F.lit(0)
-    v = as_double_array(F.col(vec_col))
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(x) for x in p])
-        d = dot_col(v, plane)
-        bucket = bucket + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return df.withColumn("bucket", bucket)
-
-
 def _signature_table(
     sig: DataFrame, n_planes: int, n_tables: int, dim: int, seed: int = 7
 ) -> DataFrame:
@@ -124,10 +105,11 @@ def _signature_table(
 
     Bucket assignment only partitions the candidate space — every emitted
     pair is re-verified with the exact JVM cosine — so the GEMM's sign
-    evaluation needs no bit-parity with the column-expression form.  The
-    win: the 4×8 unrolled dot expressions made Catalyst optimization time
-    (seconds per query, constant at any scale) dominate a trivial compute;
-    the GEMM is microseconds per batch and scales linearly."""
+    evaluation needs no bit-parity with any expression form.  Why not one
+    dot expression per plane: n_tables×n_planes unrolled dot expressions
+    make Catalyst optimization time (seconds per query, constant at any
+    scale) dominate a trivial compute; the GEMM is microseconds per batch
+    and scales linearly."""
     from collections.abc import Iterator
 
     import numpy as np

@@ -3,24 +3,31 @@
 Five tiers, all DataFrame-native:
 
 - ``exact_dedup``       — sha256(content) hash-groupBy.
-- ``jaccard_pairs``     — exact word-shingle set-similarity join (the verify
-                          kernel; quadratic in the worst case, use on blocked
-                          candidates or small partitions).
+- ``jaccard_pairs``     — the one exact word-shingle Jaccard join.  No cap:
+                          PPJoin-style prefix filter → exact verify.  With
+                          a ``max_shingle_df`` cap: stop-shingle prune →
+                          bounded-df pair enumeration (pruned semantics).
 - ``minhash_lsh_pairs`` — MinHash signatures → LSH band explode → bucket
                           equi-join → exact-Jaccard verification.  The 100 TB
                           path: candidate generation touches only docs that
-                          share a band bucket.
+                          share a band bucket.  ``minhash_lsh_pairs_from_sets``
+                          is the same path over a precomputed shingle-set
+                          table (char shingles in canonicalization).
 - ``simhash_fingerprints`` / ``simhash_pairs`` — 32-bit SimHash + banded
                           Hamming-distance candidate join.
-- ``embedding_neardup_pairs`` — cosine near-duplicates over an embedding
-                          column (brute force; the ANN module provides the
-                          bucketed scale path).
+- ``embedding_neardup_pairs`` — exact cosine near-duplicates over an
+                          embedding column (blocked GEMM filter + exact
+                          re-verify; the ANN module provides the bucketed
+                          scale path).
+
+``duplicated_ngram_spans`` adds substring-level (word n-gram span) dedup.
 
 Thresholds are evaluated in INTEGER arithmetic (``100*shared >=
 t*(na+nb-shared)``) so results are bit-stable across engines.
 
-Scale notes: the shingle self-join shuffles on shingle hash — frequent
-shingles create skew, so ``jaccard_pairs`` drops shingles with document
+Scale notes: shingle postings shuffle on shingle hash — frequent shingles
+create skew.  The exact prefix join keeps hot shingles out of almost every
+prefix (rare-first order); the capped form drops shingles with document
 frequency above ``max_shingle_df`` (stop-shingle pruning, standard in the
 distributed set-similarity-join literature — see PAPERS.md: "Set Similarity
 Joins on MapReduce: An Experimental Survey", VLDB 2018, and "Scalable and
@@ -31,7 +38,7 @@ candidate pairs while carrying almost no signal).  LSH bands shuffle on
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.similarity import (
@@ -129,13 +136,29 @@ def jaccard_pairs(
     """Exact n-gram-shingle Jaccard pairs: (doc_a, doc_b, shared, n_a, n_b)
     with 100*shared >= threshold_pct*(n_a+n_b-shared).  Integer-exact.
 
-    ``max_shingle_df`` prunes stop-shingles (posting rows whose shingle
-    appears in more than that many docs) via a left-semi join BEFORE the
-    posting self-join — the self-join is O(Σ df²) per shingle, so one hot
-    boilerplate shingle ("click here to subscribe") otherwise turns the
-    kernel into a quadratic skew bomb at web scale.  Pruning only shrinks
-    ``shared`` counts (sizes stay exact), so surviving pairs are a subset.
+    The cap picks the algorithm: with no cap the output is the EXACT
+    join, computed by the prefix filter; with a cap the PRUNED semantics
+    run on the bounded-df enumeration.
 
+    **No cap — PPJoin-style prefix filtering**, the 100 TB exact path
+    that needs no recall-trading cap.  Positional prefix principle
+    (Chaudhuri et al. SSJoin / Xiao et al. PPJoin, see PAPERS.md
+    set-similarity-join survey): order every shingle set by one GLOBAL
+    total order and keep only each set's first ``|A| - ceil(t·|A|) + 1``
+    shingles; any pair with Jaccard ≥ t must collide inside those
+    prefixes, so generating candidates from prefix postings alone loses
+    nothing.  We order by (document frequency asc, shingle asc) —
+    rare-first, the order that makes hot boilerplate shingles land in the
+    prefix of almost no document — and verify candidates exactly with
+    ``array_intersect`` over the full sets (the MinHash verify kernel).
+    Prefix length uses exact integer ceil: ``n - (t·n + 99) div 100 + 1``.
+
+    **Cap set — stop-shingle pruning.**  ``max_shingle_df`` drops posting
+    rows whose shingle appears in more than that many docs via a
+    left-semi join, then enumerates each surviving shingle's doc pairs
+    from its (bounded) sorted doc list.  Pruning only shrinks ``shared``
+    counts (sizes stay exact), so surviving pairs are a SUBSET of the
+    exact join: boilerplate-only pairs are dropped by design.
     ``max_shingle_df_frac`` is the SCALE-SAFE form: the cap as a fraction
     of the corpus document count (resolved as ``max(2, floor(frac·N))``,
     N = one count over the INPUT ``df`` — including docs too short to
@@ -144,8 +167,15 @@ def jaccard_pairs(
     of documents" is the boilerplate definition that survives a 100×
     scale-up.  Mutually exclusive with ``max_shingle_df``.
 
+    Why the capped form is not the prefix join over a df-filtered
+    posting table (unpruned set sizes): that variant gives the same
+    q13/q55 output, but the q13 gate (cap 20, sf0.1) ran slower through
+    it — 3.48 → 4.38 s median over 6 interleaved runs on a 4-core host,
+    ``local[4]`` — while the bounded-df enumeration needs neither the
+    rank window nor the verify joins.
+
     The shingle-set plan is localCheckpoint'd: sizes, the df counts, and
-    BOTH sides of the self-join reuse one materialization instead of
+    both candidate sides reuse one materialization instead of
     re-tokenizing the corpus per branch (~5 evaluations otherwise); the
     blocks free themselves when the plan is garbage-collected.
     """
@@ -170,7 +200,7 @@ def jaccard_pairs(
         )
         # with df bounded, pair generation per shingle is ≤ df(df-1)/2 —
         # group the (sorted) doc list per shingle and emit i<j pairs with
-        # one HOF explode instead of the posting self-join: one fewer
+        # one HOF explode instead of a posting self-join: one fewer
         # exchange and no sort-merge of shingle strings.  ONLY safe under
         # pruning: an unbounded collect_list on a hot shingle is exactly
         # the skew bomb the prune exists to kill.
@@ -198,27 +228,81 @@ def jaccard_pairs(
         shared = pairs.groupBy("doc_a", "doc_b").agg(
             F.count(F.lit(1)).alias("shared")
         )
-    else:
-        a = posting.alias("a")
-        b = posting.alias("b")
-        shared = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.doc") < F.col("b.doc")),
+        out = (
+            shared.join(sizes.withColumnsRenamed({"doc": "doc_a", "n": "n_a"}), "doc_a")
+            .join(sizes.withColumnsRenamed({"doc": "doc_b", "n": "n_b"}), "doc_b")
+            .filter(
+                100 * F.col("shared")
+                >= threshold_pct * (F.col("n_a") + F.col("n_b") - F.col("shared"))
             )
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("shared"))
         )
-    out = (
-        shared.join(sizes.withColumnsRenamed({"doc": "doc_a", "n": "n_a"}), "doc_a")
-        .join(sizes.withColumnsRenamed({"doc": "doc_b", "n": "n_b"}), "doc_b")
+        return out.select("doc_a", "doc_b", "shared", "n_a", "n_b")
+
+    dfc = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    # the prefix table feeds BOTH sides of the candidate self-join —
+    # materialize it, or the whole build (posting explode, df agg+join,
+    # per-doc rank window) is evaluated once per side (measured: the r7
+    # plan audit showed the entire subtree duplicated, ~2× the lane)
+    prefix = (
+        posting.join(dfc, "shingle")
+        .join(sizes, "doc")
+        .withColumn(
+            "rk",
+            F.row_number().over(
+                Window.partitionBy("doc").orderBy("df", "shingle")
+            ),
+        )
         .filter(
-            100 * F.col("shared")
-            >= threshold_pct * (F.col("n_a") + F.col("n_b") - F.col("shared"))
+            F.col("rk")
+            <= F.col("n")
+            - F.expr(f"(({threshold_pct} * n) + 99) div 100")
+            + F.lit(1)
         )
+        .select("doc", "shingle", "n", "rk")
+        .localCheckpoint(eager=False)
     )
-    return out.select("doc_a", "doc_b", "shared", "n_a", "n_b")
+    a = prefix.alias("a")
+    b = prefix.alias("b")
+    # Length + positional filters (the rest of the PPJoin toolkit), both
+    # provably recall-free at the threshold t = threshold_pct/100:
+    # J ≥ t forces shared ≥ t·max(n_a, n_b) (since shared ≤ min side),
+    # so 100·min(n_a,n_b) ≥ t·max(n_a,n_b) — the LENGTH filter.  And for
+    # the globally-smallest common shingle w of a true pair (which must
+    # sit inside BOTH prefixes — if it were past A's prefix, A's whole
+    # prefix would be non-shared and shared ≤ ⌈t·n_a⌉−1 < t·n_a, a
+    # contradiction), no common shingle precedes w, so
+    # shared ≤ 1 + min(n_a−rk_a, n_b−rk_b) at w's collision — the
+    # POSITIONAL filter.  Filtering EVERY collision with these bounds
+    # keeps the w-collision of every true pair, so candidates remain a
+    # superset of the answer; measured: they cut the candidate volume
+    # ~3× on the driver corpus before the expensive exact verify.
+    candidates = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc") < F.col("b.doc"))
+            # length filter: 100·min ≥ t·max
+            & (
+                100 * F.least(F.col("a.n"), F.col("b.n"))
+                >= threshold_pct * F.greatest(F.col("a.n"), F.col("b.n"))
+            )
+            # positional filter: ubound ≥ ceil(t(n_a+n_b)/(100+t))
+            & (
+                (100 + threshold_pct)
+                * (
+                    F.least(
+                        F.col("a.n") - F.col("a.rk"),
+                        F.col("b.n") - F.col("b.rk"),
+                    )
+                    + 1
+                )
+                >= threshold_pct * (F.col("a.n") + F.col("b.n"))
+            ),
+        )
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .distinct()
+    )
+    return _verify_candidate_pairs(candidates, sets, threshold_pct)
 
 
 def minhash_lsh_pairs(
@@ -239,6 +323,14 @@ def minhash_lsh_pairs(
     probability (1-0.36)^32 ≈ 6e-7 — effectively recall 1, so the verified
     output equals `jaccard_pairs` at the same threshold while candidate
     generation stays near-linear.
+
+    ``max_bucket_size`` caps hot band buckets (see
+    `minhash_lsh_pairs_from_sets`).  ``max_bucket_frac`` is its SCALE-SAFE
+    form: the cap as a fraction of the corpus document count
+    (``max(2, floor(frac·N))``, N = one count over the INPUT ``df``) — an
+    absolute bucket cap is always wrong at 10^12 docs, a "no bucket may
+    hold >0.1% of the corpus" rule is not.  Mutually exclusive with
+    ``max_bucket_size``.
     """
     if max_bucket_frac is not None:
         # resolve the fraction against the INPUT corpus count here, where
@@ -250,11 +342,10 @@ def minhash_lsh_pairs(
                 "(fraction of corpus), not both"
             )
         max_bucket_size = max(2, int(max_bucket_frac * df.count()))
-        max_bucket_frac = None
     sets = _shingle_sets(df, text_col, id_col, shingle_n)
     return minhash_lsh_pairs_from_sets(
         sets, threshold_pct=threshold_pct, k=k, bands=bands, seed=seed,
-        max_bucket_size=max_bucket_size, max_bucket_frac=max_bucket_frac,
+        max_bucket_size=max_bucket_size,
     )
 
 
@@ -265,23 +356,24 @@ def minhash_lsh_pairs_from_sets(
     bands: int = 32,
     seed: int = 1,
     max_bucket_size: int | None = None,
-    max_bucket_frac: float | None = None,
 ) -> DataFrame:
     """MinHash-LSH over a precomputed (doc, shingles array<string>) table —
     the generic entry used for both document near-dup (word shingles) and
     surface-form canonicalization (char shingles).
 
     Signature stage: shingles are md5-hashed JVM-side (one array
-    expression, `hashed_shingles_col`), then the k minima and band keys
-    are computed in ONE Arrow-batched numpy kernel — SHUFFLE-FREE (the
-    previous explode → 64-min-agg groupBy both shuffled the posting list
-    AND carried a plan so large that Catalyst compile time dominated
-    small inputs; measured seconds per query regardless of data size).
-    The kernel's integer math — min((h·a + b) mod p) over int64, products
-    < 2⁶² — and its md5-of-":"-joined-decimal band keys are bit-identical
-    to the old expression form, so candidate generation (and therefore
-    the verified output) is unchanged.  At 10^12 docs the signature stage
-    is now a linear map; only the band-bucket join shuffles.
+    expression, `hashed_shingles_col`: 60-bit md5 prefix mod p), then the
+    k minima and band keys are computed in ONE Arrow-batched numpy kernel
+    — SHUFFLE-FREE (an explode → 64-min-agg groupBy both shuffles the
+    posting list AND carries a plan so large that Catalyst compile time
+    dominates small inputs).  Slot i of the signature is
+    ``min over the set of (h·a_i + b_i) mod p`` with p = 2³¹−1 and
+    (a_i, b_i) drawn from the seeded `_lcg` stream (classic Broder
+    construction; int64 products stay < 2⁶²).  Band j's key is the md5
+    hex digest of its ``rows`` minima written as decimals joined by
+    ":" — plain integer and md5 math, reproducible in any engine.  Docs
+    with an empty set get no band rows.  At 10^12 docs the signature
+    stage is a linear map; only the band-bucket join shuffles.
 
     ``max_bucket_size`` (default off — the driver gate runs exact): the
     scale knob for hot band buckets, the q13 ``max_shingle_df`` analog.
@@ -295,16 +387,8 @@ def minhash_lsh_pairs_from_sets(
     still surface through any of the other ``bands-1`` bands, so the
     recall loss is bounded by the probability that EVERY band of a pair
     lands hot — small unless the corpus is pathologically self-similar.
-
-    ``max_bucket_frac`` is the SCALE-SAFE form: the cap as a fraction of
-    the corpus document count (``max(2, floor(frac·N))``; callers that
-    enter through `minhash_lsh_pairs` resolve N from the input corpus
-    count, while this generic sets-table entry — which never sees the
-    input df — resolves N from the set-table row count, i.e. docs with a
-    non-empty shingle set) — an absolute bucket
-    cap is always wrong at 10^12 docs, a "no bucket may hold >0.1% of
-    the corpus" rule is not.  Mutually exclusive with
-    ``max_bucket_size``."""
+    The fractional form lives on `minhash_lsh_pairs`, which sees the
+    input corpus count."""
     from neo4j_export_tool_spark.functions.similarity import (
         MERSENNE_PRIME,
         _lcg,
@@ -319,16 +403,9 @@ def minhash_lsh_pairs_from_sets(
         b = next(rnd) % MERSENNE_PRIME
         params.append((a, b))
 
-    if max_bucket_size is not None and max_bucket_frac is not None:
-        raise ValueError(
-            "pass max_bucket_size (absolute) or max_bucket_frac "
-            "(fraction of corpus), not both"
-        )
     # the shingle-set plan feeds the signature kernel AND both verify
     # joins; materialize it once (blocks freed when the plan is GC'd)
     sets = sets.localCheckpoint(eager=False)
-    if max_bucket_frac is not None:
-        max_bucket_size = max(2, int(max_bucket_frac * sets.count()))
 
     import hashlib
     from collections.abc import Iterator
@@ -483,28 +560,24 @@ def embedding_neardup_pairs(
     id_col: str,
     min_cosine: float = 0.95,
     dim: int | None = None,
-    strategy: str = "blocked",
     rows_per_block: int = 4096,
 ) -> DataFrame:
-    """Exact cosine near-dup pairs over ALL vector pairs.
+    """Exact cosine near-dup pairs over ALL vector pairs:
+    (id_a, id_b, cosine) with id_a < id_b and cosine ≥ ``min_cosine``.
 
-    ``strategy="blocked"`` (default): block-matrix filter-then-verify.
-    Vectors pack into row blocks; every unordered block pair is one task
-    running an Arrow-batched numpy GEMM (BLAS — orders of magnitude faster
-    than per-pair expressions) as a PREFILTER with an epsilon-widened
-    threshold, then the few surviving candidates recompute the cosine with
-    sequential left-associated double accumulation — bit-identical to the
-    codegen/DuckDB formula, so the output is EXACT, not approximate.
-    Still O(n²) flops by definition of the exact baseline (the scale path
-    is `operators.ann.hyperplane_lsh_pairs`), but the quadratic part runs
-    at GEMM speed and distributes as B(B+1)/2 independent block tasks.
-
-    ``strategy="codegen"``: the all-pairs join with a fixed-dim unrolled
-    dot (kept for cross-checking; same bits, ~50× slower).
+    Block-matrix filter-then-verify.  Vectors pack into row blocks; every
+    unordered block pair is one task running an Arrow-batched numpy GEMM
+    (BLAS — orders of magnitude faster than per-pair expressions) as a
+    PREFILTER with an epsilon-widened threshold, then the few surviving
+    candidates recompute the cosine with sequential left-associated
+    double accumulation over the first ``dim`` components — bit-identical
+    to DuckDB's ``list_dot_product`` formula, so the output is EXACT, not
+    approximate.  Null vectors and vectors shorter than ``dim`` have no
+    cosine and pair with nothing.  Still O(n²) flops by definition of the
+    exact baseline (the scale path is `operators.ann.hyperplane_lsh_pairs`),
+    but the quadratic part runs at GEMM speed and distributes as B(B+1)/2
+    independent block tasks.
     """
-    if strategy == "codegen":
-        return _embedding_neardup_pairs_codegen(df, vec_col, id_col, min_cosine, dim)
-
     import math
 
     import numpy as np
@@ -517,11 +590,10 @@ def embedding_neardup_pairs(
     base = df.select(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
         F.col(id_col).alias("id"),
-        # match the codegen path's semantics exactly: null vectors and
-        # vectors shorter than the inferred dim produce null terms there
-        # (→ null cosine → filtered); longer vectors are read only up to
-        # dim.  Filter + slice reproduces that: drop short/null, truncate
-        # long.
+        # the cosine reads exactly dim components: a null vector or one
+        # shorter than dim has a null term (→ null cosine → no pair);
+        # longer vectors are read only up to dim.  Filter + slice: drop
+        # short/null, truncate long.
         F.slice(F.col(vec_col).cast("array<double>"), 1, dim).alias("v"),
     ).filter(F.col(vec_col).isNotNull() & (F.size(vec_col) >= dim))
 
@@ -568,7 +640,7 @@ def embedding_neardup_pairs(
 
     def _exact_cos(va: np.ndarray, vb: np.ndarray) -> float:
         # sequential left-associated double ops — bit-identical to the
-        # unrolled codegen expression AND DuckDB list_dot_product
+        # unrolled `dot_col(..., dim)` expression AND DuckDB list_dot_product
         dot = va[0] * vb[0]
         na = va[0] * va[0]
         nb = vb[0] * vb[0]
@@ -614,41 +686,6 @@ def embedding_neardup_pairs(
 
     return pairs.mapInPandas(
         gemm_verify, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
-    )
-
-
-def _embedding_neardup_pairs_codegen(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    min_cosine: float = 0.95,
-    dim: int | None = None,
-) -> DataFrame:
-    """All-pairs join with fixed-dim unrolled dots (the pre-GEMM exact
-    baseline; norms precomputed per vector before the pair join)."""
-    from neo4j_export_tool_spark.functions.similarity import dot_col, norm_sq_col
-
-    dim = dim or _infer_dim(df, vec_col)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        norm_sq_col(F.col(vec_col), dim).alias("nsq"),
-    )
-    a = base.select(
-        F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("nsq").alias("nsq_a")
-    )
-    b = base.select(
-        F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("nsq").alias("nsq_b")
-    )
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            dot_col(F.col("v_a"), F.col("v_b"), dim)
-            / F.sqrt(F.col("nsq_a") * F.col("nsq_b")),
-        )
-        .filter(F.col("cosine") >= min_cosine)
-        .select("id_a", "id_b", "cosine")
     )
 
 
@@ -711,105 +748,3 @@ def duplicated_ngram_spans(
         hot = hot.filter(F.col("n_docs") <= max_gram_df)
     out = grams.join(hot.select("gram"), "gram", "left_semi")
     return out.select("doc", "pos", "gram")
-
-
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold_pct: int = 60,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """EXACT Jaccard pairs via PPJoin-style prefix filtering — the
-    100 TB exact path that needs NO recall-trading cap.
-
-    Positional prefix principle (Chaudhuri et al. SSJoin / Xiao et al.
-    PPJoin, see PAPERS.md set-similarity-join survey): order every
-    shingle set by one GLOBAL total order and keep only each set's
-    first ``|A| - ceil(t·|A|) + 1`` shingles; any pair with Jaccard ≥ t
-    must collide inside those prefixes, so generating candidates from
-    prefix postings alone loses nothing.  We order by (document
-    frequency asc, shingle asc) — rare-first, the order that makes hot
-    boilerplate shingles land in the prefix of almost no document — and
-    verify candidates exactly with ``array_intersect`` over the full
-    sets (the q14 verify kernel), so the output EQUALS the unpruned
-    ``jaccard_pairs`` bit-for-bit (pytest-pinned; gate q55 runs the
-    same unpruned DuckDB oracle as q14).
-
-    vs the ``max_shingle_df`` cap: the cap is subset/prune (boilerplate-
-    only pairs are dropped BY DESIGN); the prefix filter is exact.  It
-    pays two more linear shuffles (df join + per-doc rank window); at
-    web scale the candidate cut (prefix is ~(1-t/(1+t)) of each set,
-    hot shingles excluded from almost all prefixes) dwarfs that cost.
-    Prefix length uses exact integer ceil: ``n - (t·n + 99) div 100 + 1``.
-    """
-    from pyspark.sql import Window
-
-    sets = _shingle_sets(df, text_col, id_col, shingle_n).localCheckpoint(eager=False)
-    sizes = sets.select("doc", F.size("shingles").alias("n"))
-    posting = sets.select("doc", F.explode("shingles").alias("shingle"))
-    dfc = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # the prefix table feeds BOTH sides of the candidate self-join —
-    # materialize it, or the whole build (posting explode, df agg+join,
-    # per-doc rank window) is evaluated once per side (measured: the r7
-    # plan audit showed the entire subtree duplicated, ~2× the lane)
-    prefix = (
-        posting.join(dfc, "shingle")
-        .join(sizes, "doc")
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("doc").orderBy("df", "shingle")
-            ),
-        )
-        .filter(
-            F.col("rk")
-            <= F.col("n")
-            - F.expr(f"(({threshold_pct} * n) + 99) div 100")
-            + F.lit(1)
-        )
-        .select("doc", "shingle", "n", "rk")
-        .localCheckpoint(eager=False)
-    )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
-    # Length + positional filters (the rest of the PPJoin toolkit), both
-    # provably recall-free at the threshold t = threshold_pct/100:
-    # J ≥ t forces shared ≥ t·max(n_a, n_b) (since shared ≤ min side),
-    # so 100·min(n_a,n_b) ≥ t·max(n_a,n_b) — the LENGTH filter.  And for
-    # the globally-smallest common shingle w of a true pair (which must
-    # sit inside BOTH prefixes — if it were past A's prefix, A's whole
-    # prefix would be non-shared and shared ≤ ⌈t·n_a⌉−1 < t·n_a, a
-    # contradiction), no common shingle precedes w, so
-    # shared ≤ 1 + min(n_a−rk_a, n_b−rk_b) at w's collision — the
-    # POSITIONAL filter.  Filtering EVERY collision with these bounds
-    # keeps the w-collision of every true pair, so candidates remain a
-    # superset of the answer; measured: they cut the candidate volume
-    # ~3× on the driver corpus before the expensive exact verify.
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc") < F.col("b.doc"))
-            # length filter: 100·min ≥ t·max
-            & (
-                100 * F.least(F.col("a.n"), F.col("b.n"))
-                >= threshold_pct * F.greatest(F.col("a.n"), F.col("b.n"))
-            )
-            # positional filter: ubound ≥ ceil(t(n_a+n_b)/(100+t))
-            & (
-                (100 + threshold_pct)
-                * (
-                    F.least(
-                        F.col("a.n") - F.col("a.rk"),
-                        F.col("b.n") - F.col("b.rk"),
-                    )
-                    + 1
-                )
-                >= threshold_pct * (F.col("a.n") + F.col("b.n"))
-            ),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    return _verify_candidate_pairs(candidates, sets, threshold_pct)

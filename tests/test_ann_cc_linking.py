@@ -273,17 +273,30 @@ def test_ann_empty_and_null_inputs(spark):
     assert idf and all(v > 0 for v in idf.values())
 
 
+def hyperplane_signature(df, vec_col, n_planes, dim, seed=7):
+    """Independent twin of `ann._signature_table` for one table: adds a
+    ``bucket`` column, the sign-pattern int over the same random
+    hyperplanes, built from per-plane JVM dot-product expressions."""
+    from neo4j_export_tool_spark.functions.similarity import (
+        as_double_array,
+        dot_col,
+    )
+    from neo4j_export_tool_spark.operators.ann import _hyperplanes
+
+    bucket = F.lit(0)
+    v = as_double_array(F.col(vec_col))
+    for i, p in enumerate(_hyperplanes(dim, n_planes, seed)):
+        d = dot_col(v, F.array(*[F.lit(x) for x in p]))
+        bucket = bucket + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
+    return df.withColumn("bucket", bucket)
+
+
 def test_hyperplane_signature_matches_gemm_table(spark):
-    """The column-expression signature (single-table API) and the numpy-GEMM
-    table used by hyperplane_lsh_pairs must agree on bucket assignment for
+    """The column-expression signature twin and the numpy-GEMM table used
+    by hyperplane_lsh_pairs must agree on bucket assignment for
     well-separated vectors (they may only differ when a dot product sits
     within an ulp of zero, which this deterministic data avoids)."""
-    from pyspark.sql import functions as F
-
-    from neo4j_export_tool_spark.operators.ann import (
-        _signature_table,
-        hyperplane_signature,
-    )
+    from neo4j_export_tool_spark.operators.ann import _signature_table
 
     vecs = [
         (i, [float(((i * 7 + j * 13) % 17) - 8) for j in range(8)])

@@ -6,6 +6,8 @@ swapped), so recall targets are known.
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +25,92 @@ from neo4j_export_tool_spark.sources.synth import pages_spark_df
 @pytest.fixture(scope="module")
 def pages(spark):
     return pages_spark_df(spark, 250, seed=5, partitions=4).persist()
+
+
+def boilerplate_docs(spark):
+    """30 docs sharing only a boilerplate phrase (Jaccard ≈ 0.8 between any
+    two) plus one true near-dup pair (100, 101) with a long shared body."""
+    boiler = "click here to subscribe to our newsletter today and save"
+    rows = [(i, f"topic{i} " + boiler) for i in range(30)]
+    body = " ".join(f"w{j}" for j in range(40))
+    rows += [(100, body + " ending one"), (101, body + " ending two")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def small_vocab_docs(spark):
+    """60 random docs over a 2-word vocabulary (at most 8 distinct
+    3-shingles): pair similarities spread over [0, 1], so many pairs sit
+    just above a threshold (the borderline cases a prefix or positional
+    off-by-one would lose)."""
+    import random
+
+    rng = random.Random(11)
+    rows = [
+        (i, " ".join(rng.choice("ab") for _ in range(rng.randint(3, 12))))
+        for i in range(60)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def jaccard_corpora(spark, pages):
+    """(corpus, id column) pairs the exact-Jaccard pins run on."""
+    return (
+        (pages, "url"),
+        (boilerplate_docs(spark), "doc_id"),
+        (small_vocab_docs(spark), "doc_id"),
+    )
+
+
+def python_jaccard_pairs(rows, threshold_pct, n=3):
+    """Independent twin of `jaccard_pairs` without a cap: distinct word
+    n-gram shingles of ``text.split(" ")``, every doc pair, integer
+    threshold ``100*shared >= t*(n_a+n_b-shared)``."""
+    sets = {}
+    for doc, text in rows:
+        if text is None:
+            continue
+        toks = text.split(" ")
+        sh = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+        if sh:
+            sets[doc] = sh
+    out = []
+    for a, b in combinations(sorted(sets), 2):
+        shared = len(sets[a] & sets[b])
+        n_a, n_b = len(sets[a]), len(sets[b])
+        if shared and 100 * shared >= threshold_pct * (n_a + n_b - shared):
+            out.append((a, b, shared, n_a, n_b))
+    return out
+
+
+def embedding_neardup_pairs_codegen(df, vec_col, id_col, min_cosine, dim=None):
+    """Independent twin of `embedding_neardup_pairs`: the all-pairs join
+    with fixed-dim unrolled JVM dots (norms precomputed per vector before
+    the pair join)."""
+    from neo4j_export_tool_spark.functions.similarity import dot_col, norm_sq_col
+    from neo4j_export_tool_spark.operators.dedup import _infer_dim
+
+    dim = dim or _infer_dim(df, vec_col)
+    base = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        norm_sq_col(F.col(vec_col), dim).alias("nsq"),
+    )
+    a = base.select(
+        F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("nsq").alias("nsq_a")
+    )
+    b = base.select(
+        F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("nsq").alias("nsq_b")
+    )
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn(
+            "cosine",
+            dot_col(F.col("v_a"), F.col("v_b"), dim)
+            / F.sqrt(F.col("nsq_a") * F.col("nsq_b")),
+        )
+        .filter(F.col("cosine") >= min_cosine)
+        .select("id_a", "id_b", "cosine")
+    )
 
 
 def test_exact_dedup_groups(spark):
@@ -121,18 +209,9 @@ def test_embedding_neardup(spark, sf_dir):
 def test_stop_shingle_pruning_kills_boilerplate_pairs(spark):
     """Hot-shingle skew: docs sharing ONLY a boilerplate phrase pair up
     without pruning but not with it; genuinely near-duplicate docs survive
-    either way.  The pruning is a left-semi join ahead of the posting
-    self-join (the O(df²) skew bomb at web scale)."""
-    from neo4j_export_tool_spark.operators.dedup import jaccard_pairs
-
-    boiler = "click here to subscribe to our newsletter today and save"
-    # one unique token + dominant boilerplate → Jaccard ≈ 0.8 between any two
-    uniq = [f"topic{i} " + boiler for i in range(30)]
-    # two true near-dups: long shared body, tiny difference
-    body = " ".join(f"w{j}" for j in range(40))
-    rows = [(i, t) for i, t in enumerate(uniq)]
-    rows += [(100, body + " ending one"), (101, body + " ending two")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    either way.  The pruning is a left-semi join ahead of the per-shingle
+    pair enumeration (the O(df²) skew bomb at web scale)."""
+    docs = boilerplate_docs(spark)
 
     unpruned = jaccard_pairs(docs, "text", "doc_id", threshold_pct=60)
     pruned = jaccard_pairs(docs, "text", "doc_id", threshold_pct=60,
@@ -144,7 +223,7 @@ def test_stop_shingle_pruning_kills_boilerplate_pairs(spark):
     boiler_pairs_pr = {p for p in pr if p[0] < 100 and p[1] < 100}
     assert boiler_pairs_up, "test corpus should pair on boilerplate unpruned"
     assert not boiler_pairs_pr, "pruning must kill boilerplate-only pairs"
-    # plan: pruning is a semi-join before the self-join
+    # plan: pruning is a semi-join before the pair enumeration
     from tests.test_plan_quality import plan_of
 
     assert "LeftSemi" in plan_of(pruned)
@@ -152,11 +231,9 @@ def test_stop_shingle_pruning_kills_boilerplate_pairs(spark):
 
 def test_blocked_gemm_equals_codegen_bitexact(spark):
     """The GEMM filter-then-verify path must reproduce the codegen all-pairs
-    join EXACTLY — ids and cosine doubles bit-for-bit — including across
-    multiple blocks."""
+    join twin EXACTLY — ids and cosine doubles bit-for-bit — including
+    across multiple blocks."""
     import random
-
-    from neo4j_export_tool_spark.operators.dedup import embedding_neardup_pairs
 
     rng = random.Random(7)
     rows = []
@@ -173,8 +250,8 @@ def test_blocked_gemm_equals_codegen_bitexact(spark):
     # rows_per_block=50 → 5 blocks → exercises within- AND cross-block paths
     gemm = as_set(embedding_neardup_pairs(
         df, "embedding", "vec_id", min_cosine=0.5, rows_per_block=50))
-    exact = as_set(embedding_neardup_pairs(
-        df, "embedding", "vec_id", min_cosine=0.5, strategy="codegen"))
+    exact = as_set(embedding_neardup_pairs_codegen(
+        df, "embedding", "vec_id", min_cosine=0.5))
     assert gemm == exact
     assert len(gemm) >= 40  # planted pairs actually present
 
@@ -188,12 +265,7 @@ def test_fractional_caps_match_absolute_at_same_n(spark, pages):
 
     # --- jaccard: frac chosen so floor(frac·N) == 10 on the boilerplate
     # corpus from the stop-shingle test
-    boiler = "click here to subscribe to our newsletter today and save"
-    uniq = [f"topic{i} " + boiler for i in range(30)]
-    body = " ".join(f"w{j}" for j in range(40))
-    rows = [(i, t) for i, t in enumerate(uniq)]
-    rows += [(100, body + " ending one"), (101, body + " ending two")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = boilerplate_docs(spark)
     n_docs = 32
     absolute = jaccard_pairs(
         docs, "text", "doc_id", threshold_pct=60, max_shingle_df=10
@@ -236,34 +308,36 @@ def test_fractional_caps_match_absolute_at_same_n(spark, pages):
                           max_bucket_frac=0.1).collect()
 
 
-def test_prefix_jaccard_equals_unpruned_exact(spark, pages):
-    """PPJoin prefix filtering is EXACT: output equals the unpruned
-    posting-self-join jaccard bit-for-bit, including on the boilerplate
-    corpus where the df cap (by design) drops pairs."""
-    from neo4j_export_tool_spark.operators.dedup import jaccard_pairs_prefix
+def test_jaccard_pairs_equals_python_twin(spark, pages):
+    """Uncapped `jaccard_pairs` (the prefix-filtered join) is EXACT: row for
+    row equal to a pure-Python all-pairs twin, on the pages corpus, on the
+    boilerplate corpus where the df cap (by design) drops pairs, and on a
+    small-vocabulary corpus full of borderline pairs."""
+    for df, id_col in jaccard_corpora(spark, pages):
+        rows = [tuple(r) for r in df.select(id_col, "text").collect()]
+        for t in (60, 90):
+            got = sorted(
+                map(tuple, jaccard_pairs(df, "text", id_col, threshold_pct=t).collect())
+            )
+            assert got == python_jaccard_pairs(rows, t), (id_col, t)
+            if t == 60:
+                assert got
+    # exact, not a prune: boilerplate-only pairs are kept
+    up = jaccard_pairs(boilerplate_docs(spark), "text", "doc_id").collect()
+    assert any(r["doc_a"] < 100 and r["doc_b"] < 100 for r in up)
 
-    unpruned = sorted(
-        map(tuple, jaccard_pairs(pages, "text", "url", threshold_pct=60).collect())
-    )
-    prefix = sorted(
-        map(tuple,
-            jaccard_pairs_prefix(pages, "text", "url", threshold_pct=60).collect())
-    )
-    assert prefix == unpruned and prefix
 
-    boiler = "click here to subscribe to our newsletter today and save"
-    uniq = [f"topic{i} " + boiler for i in range(30)]
-    body = " ".join(f"w{j}" for j in range(40))
-    rows = [(i, t) for i, t in enumerate(uniq)]
-    rows += [(100, body + " ending one"), (101, body + " ending two")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    up = sorted(map(tuple, jaccard_pairs(docs, "text", "doc_id").collect()))
-    pf = sorted(map(tuple, jaccard_pairs_prefix(docs, "text", "doc_id").collect()))
-    # prefix filtering keeps the boilerplate-only pairs the df cap drops —
-    # it is exact, not a prune
-    assert pf == up
-    assert any(a < 100 and b < 100 for a, b, *_ in pf)
-    # stricter threshold still exact
-    up9 = sorted(map(tuple, jaccard_pairs(docs, "text", "doc_id", threshold_pct=90).collect()))
-    pf9 = sorted(map(tuple, jaccard_pairs_prefix(docs, "text", "doc_id", threshold_pct=90).collect()))
-    assert pf9 == up9
+def test_generous_cap_equals_uncapped_jaccard(spark, pages):
+    """The one pin between the two algorithms behind `jaccard_pairs`: a
+    ``max_shingle_df`` at or above the document count removes nothing, so
+    the bounded-df enumeration must equal the prefix join row for row."""
+    for df, id_col in jaccard_corpora(spark, pages):
+        n = df.count()
+        for t in (60, 90):
+            capped = sorted(map(tuple, jaccard_pairs(
+                df, "text", id_col, threshold_pct=t, max_shingle_df=n).collect()))
+            uncapped = sorted(map(tuple, jaccard_pairs(
+                df, "text", id_col, threshold_pct=t).collect()))
+            assert capped == uncapped, (id_col, t)
+            if t == 60:
+                assert capped
