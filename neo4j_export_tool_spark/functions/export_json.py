@@ -141,9 +141,7 @@ def make_typed_bag_udf(dtype: T.StructType):
     Null handling matches the JSON-string lane (nulls dropped, like
     to_json).  Arrow→pandas COERCES integer columns containing nulls to
     float64, so integral fields are restored from the schema: NaN → drop
-    (it was a null), finite → int (values beyond 2⁵³ would lose precision
-    in that coercion — bags mixing temporals with >2⁵³ longs should use
-    the typed-struct sink lane).  A null DoubleType value arrives as NaN,
+    (it was a null), finite → int.  A null DoubleType value arrives as NaN,
     indistinguishable from a genuine NaN — encoded as the contract's
     "NaN" string (contract-leaning resolution)."""
     integral = {
@@ -210,9 +208,7 @@ def export_props_json_col(df: DataFrame, struct_col: str = "properties") -> Colu
     datetimes/bytes, so the contract's temporal formats apply); remaining
     non-simple bags (fractional/nested) re-canonicalize through the
     JSON-string UDF (normalizes Jackson float formatting, applies
-    truncation markers).  Nulls are dropped in every lane (the union-lane
-    convention, like ``to_json``) — the sink's typed-struct input lane is
-    the one that preserves ``"k":null``.
+    truncation markers).  Nulls are dropped in every lane, like ``to_json``.
     """
     dtype = df.schema[struct_col].dataType
     if isinstance(dtype, T.StructType):

@@ -31,11 +31,11 @@ from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.partitioning import broadcast_if_small
 
-# Symmetrized-edge ceiling for broadcasting the per-round label table
-# (see the block comment in `label_propagation`; a label row is two
-# short strings, so 500k rows ≈ the session's 64 MB auto-broadcast
-# threshold — `operators/pagerank.py::_BROADCAST_RANKS_MAX_NODES`).
-_BROADCAST_SYM_EDGES_MAX = 500_000
+# Node ceiling for broadcasting the per-round (node, label) table (see the
+# block comment in `label_propagation`; a label row is two short strings,
+# so 500k rows ≈ the session's 64 MB auto-broadcast threshold —
+# `operators/pagerank.py::_BROADCAST_RANKS_MAX_NODES`).
+_BROADCAST_LABELS_MAX_NODES = 500_000
 
 
 def label_propagation(
@@ -63,24 +63,23 @@ def label_propagation(
     sym = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=False)
-    # Broadcast the per-round (node, label) table when the symmetrized
-    # edge table is small (labels ≤ distinct sources ≤ |sym|): behind
-    # the localCheckpoint boundary the planner has no size statistics
-    # and shuffle-joins even tiny graphs (guide §3.1; the pagerank /
-    # walks convention).  The count materializes the checkpoint the
-    # first round would pay for anyway; results are identical (the
-    # vote fold is a min, partitioning-independent).
-    _bl = lambda df: df
-    if n_iters >= 1:  # n_iters == 0: the loop never runs
-        _bl = broadcast_if_small(sym.count(), _BROADCAST_SYM_EDGES_MAX)
-
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("community"))
     )
-    for _ in range(n_iters):
+    # Broadcast the per-round (node, label) table when it is small: behind
+    # the localCheckpoint boundary the planner has no size statistics and
+    # shuffle-joins even tiny graphs (guide §3.1; the pagerank / walks
+    # convention).  The tier is decided from the label table's own row
+    # count (one per node), which the first round's checkpoint pays for
+    # anyway; results are identical (the vote fold is a min,
+    # partitioning-independent).
+    _bl = lambda df: df
+    for i in range(n_iters):
         labels = labels.localCheckpoint(eager=False)
+        if i == 0:
+            _bl = broadcast_if_small(labels.count(), _BROADCAST_LABELS_MAX_NODES)
         neigh = sym.join(
             _bl(labels.withColumnRenamed("node", "b")), "b"
         ).select(F.col("a").alias("node"), "community")

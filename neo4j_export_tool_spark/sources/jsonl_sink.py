@@ -41,18 +41,20 @@ Two write modes:
   executors (``df.write.text``) + a ``_metadata.json``; assembly into one
   file is a concat any object store can do server-side.
 
-Record serialization is JVM-side whole-stage codegen for the common case:
-when the properties arrive as contract-final ``properties_json`` bytes (see
-``functions.export_json``), the full record line is assembled with
-``to_json(struct(...))`` + concat — no Python in the hot path.  Rows whose
-head strings contain hazard characters (divergent control-char escapes) and
-typed struct-properties inputs (real datetimes/bytes needing the §1.3
-contract) run through the Arrow-vectorized ``mapInPandas`` lane instead.
+Record assembly has one path.  Every properties column is contract-final
+JSON before serialization: ``properties_json`` inputs carry it already (see
+``functions.export_json``), and a typed ``properties`` struct is encoded by
+`export_props_json_col` in the sink's input projection — a null property is
+omitted, as ``to_json`` and the content hash omit it.  One line writer then
+builds node and relationship lines from an ordered head-field list:
+``to_json(struct(head))`` + the properties splice, whole-stage codegen, for
+every row except those whose head strings hold hazard characters (divergent
+control-char escapes, truncation lengths); only those run through Python,
+in one coalesced ``mapInPandas``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import time
@@ -69,46 +71,24 @@ from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark import FORMAT_VERSION, PRODUCER_NAME, __version__
 from neo4j_export_tool_spark.functions.encoding import (
+    MAX_LABEL_LENGTH,
     MAX_LABELS_PER_NODE,
     dumps,
-    encode_properties,
-    validate_label,
 )
-from neo4j_export_tool_spark.functions.export_json import string_hazard
+from neo4j_export_tool_spark.functions.export_json import (
+    export_props_json_col,
+    string_hazard,
+)
 
 
 # ---------------------------------------------------------------------------
-# record serialization (JVM fast path + Arrow-vectorized fallback)
+# record serialization (JVM line assembly + Python hazard-row writer)
 # ---------------------------------------------------------------------------
-
-def _props_from_row(row: Any) -> dict[str, Any]:
-    """Decode one properties cell: either a pre-serialized JSON string
-    (heterogeneous union path) or an Arrow-decoded struct dict (TYPED path —
-    keeps real datetimes/bytes/NaN so the §1.3 encoding contract applies to
-    the actual values, not their to_json stringification)."""
-    if row is None:
-        return {}
-    if isinstance(row, str):
-        return json.loads(row) if row else {}
-    if isinstance(row, dict):
-        return {k: v for k, v in row.items() if k != "_empty"}
-    # pyspark Row / namedtuple-ish
-    return {k: v for k, v in row.asDict(recursive=True).items() if k != "_empty"}
-
-
-def _validated_labels_py(labels: Any) -> list[str] | None:
-    """Python twin of `_validated_labels_col`: reference label validation
-    (``GraphElements.fs:146-153``) + MaxLabelsPerNode cap
-    (``Core/Constants.fs:191``)."""
-    if labels is None:
-        return None
-    return [validate_label(x) for x in list(labels)[:MAX_LABELS_PER_NODE]]
-
 
 def _validated_labels_col() -> Column:
-    """null / over-long labels → ``_invalid_label``; cap at 100 labels."""
-    from neo4j_export_tool_spark.functions.encoding import MAX_LABEL_LENGTH
-
+    """null / over-long labels → ``_invalid_label`` (reference
+    ``GraphElements.fs:146-153``); cap at 100 labels (``MaxLabelsPerNode``,
+    ``Core/Constants.fs:191``)."""
     checked = F.transform(
         F.col("labels"),
         lambda x: F.when(
@@ -132,14 +112,62 @@ def _splice_props(head: Column, props_json: Column) -> Column:
     )
 
 
-def _serialize_nodes(nodes: DataFrame, export_id: str, hashed_ids: bool) -> DataFrame:
-    """nodes(element_id, labels, properties_json | properties, content_hash)
-    → (line, labels).
+def _record_lines(
+    df: DataFrame,
+    head: list[tuple[str, Column]],
+    hazard_cols: list[Column],
+    key: str,
+    key_type: str,
+) -> DataFrame:
+    """(line, ``key``): one record line per row of ``df``, whose
+    ``properties_json`` holds contract-final bytes.
 
-    ``properties_json`` inputs carry contract-final bytes (see
-    ``functions.export_json``), so the whole record line assembles JVM-side;
-    only rows whose head strings contain hazard characters fall back to the
-    Python writer.  Typed ``properties`` struct inputs keep the Arrow lane.
+    ``head`` is the record's ordered ``(field, Column)`` list before
+    ``properties``; ``key`` names the head field carried out beside the
+    line (the stats labels).  Rows whose ``hazard_cols`` need the
+    contract's Python JSON writer (`string_hazard`) are written by one
+    ``mapInPandas`` over the same head columns; every other row is
+    assembled JVM-side with ``to_json`` + `_splice_props`.
+    """
+    names = [name for name, _ in head]
+    head_cols = [c.alias(name) for name, c in head]
+    hazard = string_hazard(hazard_cols)
+    head_json = F.to_json(F.struct(*head_cols), {"ignoreNullFields": "false"})
+    fast = df.filter(~hazard).select(
+        _splice_props(head_json, F.col("properties_json")).alias("line"),
+        dict(head)[key].alias(key),
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            lines, keys = [], []
+            cols = [pdf[n] for n in names] + [pdf["properties_json"]]
+            for *values, props in zip(*cols):
+                # Arrow hands arrays over as numpy arrays
+                rec = {
+                    n: v.tolist() if hasattr(v, "tolist") else v
+                    for n, v in zip(names, values)
+                }
+                head_js = dumps(rec)
+                lines.append(head_js[:-1] + ',"properties":' + (props or "{}") + "}")
+                keys.append(rec[key])
+            yield pd.DataFrame({"line": lines, key: keys})
+
+    # hazard rows are pathological (control chars in IDs/labels) — a
+    # handful at most, so collapse the Python branch to a few partitions
+    # instead of paying an empty Arrow task per input partition
+    slow = (
+        df.filter(hazard)
+        .select(*head_cols, "properties_json")
+        .coalesce(8)
+        .mapInPandas(run, schema=f"line string, {key} {key_type}")
+    )
+    return fast.unionByName(slow)
+
+
+def _serialize_nodes(nodes: DataFrame, export_id: str, hashed_ids: bool) -> DataFrame:
+    """nodes(element_id, labels, properties_json, content_hash)
+    → (line, labels), the labels validated by `_validated_labels_col`.
 
     The input is fanned out first (guide §2.5): AQE coalesces the tiny
     upstream aggregates of a local-sized graph to ONE partition, which
@@ -152,174 +180,34 @@ def _serialize_nodes(nodes: DataFrame, export_id: str, hashed_ids: bool) -> Data
     # probe_rdd: the inputs are persisted by export_jsonl, so the probe's
     # materialization lands in the cache and is reused by the stats job
     nodes = fan_out(nodes, key="element_id", probe_rdd=True)
-    if "properties_json" in nodes.columns:
-        labels = _validated_labels_col()
-        head_fields = [
-            F.lit("node").alias("type"),
-            F.col("element_id").alias("element_id"),
-        ]
-        if hashed_ids:
-            head_fields.append(F.col("content_hash").alias("NET_node_content_hash"))
-        head_fields += [
-            F.lit(export_id).alias("export_id"),
-            labels.alias("labels"),
-        ]
-        head = F.to_json(F.struct(*head_fields), {"ignoreNullFields": "false"})
-        line = _splice_props(head, F.col("properties_json"))
-        hazard_cols = [F.col("element_id"), F.array_join(labels, "")]
-        if hashed_ids:
-            hazard_cols.append(F.col("content_hash"))
-        hazard = string_hazard(hazard_cols)
-        fast = nodes.filter(~hazard).select(
-            line.alias("line"), labels.alias("labels")
-        )
-
-        def run_heads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                lines, out_labels = [], []
-                for eid, lbls, props, chash in zip(
-                    pdf["element_id"], pdf["labels"],
-                    pdf["properties_json"], pdf["content_hash"],
-                ):
-                    vl = _validated_labels_py(lbls)
-                    rec: dict[str, Any] = {"type": "node", "element_id": eid}
-                    if hashed_ids:
-                        rec["NET_node_content_hash"] = chash
-                    rec["export_id"] = export_id
-                    rec["labels"] = vl
-                    head_js = dumps(rec)
-                    lines.append(
-                        head_js[:-1] + ',"properties":' + (props or "{}") + "}"
-                    )
-                    out_labels.append(vl)
-                yield pd.DataFrame({"line": lines, "labels": out_labels})
-
-        # hazard rows are pathological (control chars in IDs/labels) — a
-        # handful at most, so collapse the Python branch to a few partitions
-        # instead of paying an empty Arrow task per input partition
-        slow = nodes.filter(hazard).coalesce(8).mapInPandas(
-            run_heads, schema="line string, labels array<string>"
-        )
-        return fast.unionByName(slow)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines, out_labels = [], []
-            for eid, lbls, props, chash in zip(
-                pdf["element_id"], pdf["labels"], pdf["properties"], pdf["content_hash"]
-            ):
-                vl = _validated_labels_py(lbls)
-                rec: dict[str, Any] = {"type": "node", "element_id": eid}
-                if hashed_ids:
-                    rec["NET_node_content_hash"] = chash
-                rec["export_id"] = export_id
-                rec["labels"] = vl
-                rec["properties"] = encode_properties(_props_from_row(props))
-                lines.append(dumps(rec))
-                out_labels.append(vl)
-            yield pd.DataFrame({"line": lines, "labels": out_labels})
-
-    return nodes.select(
-        "element_id", "labels", "properties", "content_hash"
-    ).mapInPandas(run, schema="line string, labels array<string>")
+    labels = _validated_labels_col()
+    head = [("type", F.lit("node")), ("element_id", F.col("element_id"))]
+    if hashed_ids:
+        head.append(("NET_node_content_hash", F.col("content_hash")))
+    head += [("export_id", F.lit(export_id)), ("labels", labels)]
+    hazard_cols = [F.col("element_id"), F.array_join(labels, "")]
+    if hashed_ids:
+        hazard_cols.append(F.col("content_hash"))
+    return _record_lines(nodes, head, hazard_cols, "labels", "array<string>")
 
 
 def _serialize_rels(edges: DataFrame, export_id: str, hashed_ids: bool) -> DataFrame:
     """edges(element_id, label, start/end ids, start/end hashes,
-    properties_json | properties) → (line, label).  Fanned out like
-    `_serialize_nodes` (AQE-coalesced local inputs serialize one-core)."""
+    properties_json) → (line, label).  Fanned out like `_serialize_nodes`
+    (AQE-coalesced local inputs serialize one-core)."""
     from neo4j_export_tool_spark.functions.partitioning import fan_out
 
     edges = fan_out(edges, key="element_id", probe_rdd=True)
-    if "properties_json" in edges.columns:
-        head_fields = [
-            F.lit("relationship").alias("type"),
-            F.col("element_id").alias("element_id"),
-        ]
-        if hashed_ids:
-            head_fields.append(F.col("element_id").alias("NET_rel_identity_hash"))
-        head_fields += [
-            F.lit(export_id).alias("export_id"),
-            F.col("label").alias("label"),
-            F.col("start_element_id").alias("start_element_id"),
-            F.col("end_element_id").alias("end_element_id"),
-        ]
-        if hashed_ids:
-            head_fields += [
-                F.col("start_node_content_hash").alias("start_node_content_hash"),
-                F.col("end_node_content_hash").alias("end_node_content_hash"),
-            ]
-        head = F.to_json(F.struct(*head_fields), {"ignoreNullFields": "false"})
-        line = _splice_props(head, F.col("properties_json"))
-        hazard_cols = [
-            F.col("element_id"),
-            F.col("label"),
-            F.col("start_element_id"),
-            F.col("end_element_id"),
-        ]
-        if hashed_ids:
-            hazard_cols += [
-                F.col("start_node_content_hash"),
-                F.col("end_node_content_hash"),
-            ]
-        hazard = string_hazard(hazard_cols)
-        fast = edges.filter(~hazard).select(line.alias("line"), "label")
-
-        def run_heads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                lines = []
-                for row in pdf.itertuples(index=False):
-                    rec: dict[str, Any] = {
-                        "type": "relationship",
-                        "element_id": row.element_id,
-                    }
-                    if hashed_ids:
-                        rec["NET_rel_identity_hash"] = row.element_id
-                    rec["export_id"] = export_id
-                    rec["label"] = row.label
-                    rec["start_element_id"] = row.start_element_id
-                    rec["end_element_id"] = row.end_element_id
-                    if hashed_ids:
-                        rec["start_node_content_hash"] = row.start_node_content_hash
-                        rec["end_node_content_hash"] = row.end_node_content_hash
-                    head_js = dumps(rec)
-                    lines.append(
-                        head_js[:-1]
-                        + ',"properties":'
-                        + (row.properties_json or "{}")
-                        + "}"
-                    )
-                yield pd.DataFrame({"line": lines, "label": pdf["label"]})
-
-        slow = edges.filter(hazard).coalesce(8).mapInPandas(
-            run_heads, schema="line string, label string"
-        )
-        return fast.unionByName(slow)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = []
-            for row in pdf.itertuples(index=False):
-                rec: dict[str, Any] = {
-                    "type": "relationship",
-                    "element_id": row.element_id,
-                }
-                if hashed_ids:
-                    rec["NET_rel_identity_hash"] = row.element_id
-                rec["export_id"] = export_id
-                rec["label"] = row.label
-                rec["start_element_id"] = row.start_element_id
-                rec["end_element_id"] = row.end_element_id
-                if hashed_ids:
-                    rec["start_node_content_hash"] = row.start_node_content_hash
-                    rec["end_node_content_hash"] = row.end_node_content_hash
-                rec["properties"] = encode_properties(
-                    _props_from_row(row.properties)
-                )
-                lines.append(dumps(rec))
-            yield pd.DataFrame({"line": lines, "label": pdf["label"]})
-
-    return edges.mapInPandas(run, schema="line string, label string")
+    tail = ["label", "start_element_id", "end_element_id"]
+    if hashed_ids:
+        tail += ["start_node_content_hash", "end_node_content_hash"]
+    head = [("type", F.lit("relationship")), ("element_id", F.col("element_id"))]
+    if hashed_ids:
+        head.append(("NET_rel_identity_hash", F.col("element_id")))
+    head.append(("export_id", F.lit(export_id)))
+    head += [(name, F.col(name)) for name in tail]
+    hazard_cols = [F.col(name) for name in ["element_id", *tail]]
+    return _record_lines(edges, head, hazard_cols, "label", "string")
 
 
 def _normalized_labels(labels_col: Column) -> Column:
@@ -603,8 +491,10 @@ def export_jsonl(
     """Export nodes/edges DataFrames to the reference JSONL format.
 
     ``nodes``: (element_id, labels, properties_json, content_hash) — the
-    `nodes_union` projection.  ``edges``: the `attach_node_hashes` output
-    with ``properties_json`` (use `with_properties_json`).
+    `nodes_union` projection.  ``edges``: the `attach_node_hashes` output.
+    Either may carry a typed ``properties`` struct instead of
+    ``properties_json``; the sink encodes it with `export_props_json_col`
+    and writes the same bytes.
 
     ``hashed_ids=False`` omits every hash field (reference
     ``N4JET_ENABLE_HASHED_IDS=false``, ``GraphElements.fs:140-141,179-197``).
@@ -636,12 +526,12 @@ def export_jsonl(
     started = time.gmtime()
     timestamp_utc = time.strftime("%Y-%m-%dT%H:%M:%SZ", started)
 
-    # The serializers split each table into a JVM fast lane and a Python
+    # The serializers split each table into a JVM lane and a Python
     # hazard lane (two branches of a union); persist the projected inputs
-    # so the upstream plan (e.g. pandas-UDF mention detection) materializes
-    # once, not once per branch.  Callers that already persisted their
-    # inputs keep their cache — re-persisting a projection would
-    # materialize a second copy.
+    # so the upstream plan (e.g. pandas-UDF mention detection, or the
+    # typed-bag encoder below) materializes once, not once per branch.
+    # Callers that already persisted contract-final inputs keep their
+    # cache — re-persisting a projection would materialize a second copy.
     def _is_cached(df: DataFrame) -> bool:
         try:
             lvl = df.storageLevel
@@ -649,22 +539,26 @@ def export_jsonl(
         except Exception:
             return False
 
-    node_props = (
-        "properties_json" if "properties_json" in nodes.columns else "properties"
-    )
-    edge_props = (
-        "properties_json" if "properties_json" in edges.columns else "properties"
-    )
+    we_persisted: list[DataFrame] = []
+
+    def _sink_input(df: DataFrame, cols: list[str]) -> DataFrame:
+        """``cols`` + contract-final ``properties_json``; a typed
+        ``properties`` struct is encoded here (`export_props_json_col`)."""
+        if "properties_json" in df.columns:
+            if _is_cached(df):
+                return df
+            props = F.col("properties_json")
+        else:
+            props = export_props_json_col(df)
+        out = df.select(*cols, props.alias("properties_json")).persist()
+        we_persisted.append(out)
+        return out
+
     edge_cols = ["element_id", "label", "start_element_id", "end_element_id"]
     if hashed_ids:
         edge_cols += ["start_node_content_hash", "end_node_content_hash"]
-    we_persisted: list[DataFrame] = []
-    if not _is_cached(nodes):
-        nodes = nodes.select("element_id", "labels", node_props, "content_hash").persist()
-        we_persisted.append(nodes)
-    if not _is_cached(edges):
-        edges = edges.select(*edge_cols, edge_props).persist()
-        we_persisted.append(edges)
+    nodes = _sink_input(nodes, ["element_id", "labels", "content_hash"])
+    edges = _sink_input(edges, edge_cols)
 
     # Serialize-once flow: both serializers feed ONE line table, persisted
     # MEMORY_AND_DISK (a lost executor's blocks recompute from lineage).
@@ -925,10 +819,7 @@ def export_jsonl(
 
 def with_properties_json(edges: DataFrame) -> DataFrame:
     """Edge projection for the sink: struct properties → contract-final JSON
-    bytes (JVM fast path for simple bags; §1.3 UDF otherwise), enabling the
-    sink's all-JVM record assembly."""
-    from neo4j_export_tool_spark.functions.export_json import export_props_json_col
-
+    bytes (`export_props_json_col`), the form `export_jsonl` serializes."""
     return edges.select(
         "element_id",
         "label",

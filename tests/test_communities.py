@@ -103,6 +103,6 @@ def test_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
     base = sorted(_spark_lpa(spark, edges, 3).items())
-    monkeypatch.setattr(C, "_BROADCAST_SYM_EDGES_MAX", -1)
+    monkeypatch.setattr(C, "_BROADCAST_LABELS_MAX_NODES", -1)
     forced = sorted(_spark_lpa(spark, edges, 3).items())
     assert base == forced

@@ -97,25 +97,46 @@ def test_hazard_in_head_strings_routes_python(spark):
 
 
 def test_label_validation_and_cap(spark):
+    """Each label case runs through both lanes: a plain element_id takes
+    the JVM lane, the same id with a control char the Python hazard
+    writer.  The two records must agree on everything but the id."""
     long_label = "L" * 1001
     many = [f"l{i:03d}" for i in range(120)]
-    df = spark.createDataFrame([(1,)], "k long")
+    cases = {"big": [None, long_label, *many], "null": None, "empty": []}
+    df = spark.createDataFrame(
+        [
+            (case + tail, labels)
+            for case, labels in cases.items()
+            for tail in ("", "\x0b")
+        ],
+        "eid string, labels array<string>",
+    )
     nodes = nodes_union(
         nodes_from(
             df,
-            labels=F.array(
-                F.lit(None).cast("string"), F.lit(long_label), *[F.lit(x) for x in many]
-            ),
-            element_id=F.lit("n1"),
-            props={"k": F.col("k")},
+            labels=F.col("labels"),
+            element_id=F.col("eid"),
+            props={"k": F.lit(1)},
         )
     )
-    [row] = _serialize_nodes(nodes, "EXP", hashed_ids=True).collect()
-    rec = json.loads(row["line"])
+    rows = _serialize_nodes(nodes, "EXP", hashed_ids=True).collect()
+    recs = {}
+    for row in rows:
+        rec = json.loads(row["line"])
+        assert row["labels"] == rec["labels"]
+        recs[rec.pop("element_id")] = rec
+    assert len(recs) == 6
+    for case in cases:
+        hazard_row = next(r["line"] for r in rows if f'"{case}\\u000b"' in r["line"])
+        assert "\\u000B" not in hazard_row  # the Python writer's escape
+        assert recs[case] == recs[case + "\x0b"], case
     # cap is silent (reference Seq.truncate, GraphElements.fs:146-148)
-    assert len(rec["labels"]) == MAX_LABELS_PER_NODE
-    assert rec["labels"][0] == "_invalid_label"  # null label
-    assert rec["labels"][1] == "_invalid_label"  # over-long label
+    assert len(recs["big"]["labels"]) == MAX_LABELS_PER_NODE
+    assert recs["big"]["labels"][0] == "_invalid_label"  # null label
+    assert recs["big"]["labels"][1] == "_invalid_label"  # over-long label
+    assert recs["big"]["labels"][2:] == many[: MAX_LABELS_PER_NODE - 2]
+    assert recs["null"]["labels"] is None
+    assert recs["empty"]["labels"] == []
 
 
 def test_rel_lines_byte_exact_vs_python(spark):
@@ -335,3 +356,101 @@ def test_fuzz_byte_parity_over_exotic_strings(spark):
         eid = f"f:{i}"
         expected = _py_node_line(eid, ["F"], {"text": s, "num": i}, hashes[eid], "EXP")
         assert got[eid] == expected, f"fuzz {i}: {s!r}"
+
+
+def _export_body(nodes, edges, out_dir):
+    """(metadata without its clock fields, record lines) of one export
+    with a fixed export_id."""
+    from neo4j_export_tool_spark.sources.jsonl_sink import export_jsonl
+
+    res = export_jsonl(nodes, edges, str(out_dir), db_name="p", export_id="EXP")
+    with open(res.path, encoding="utf-8") as f:
+        meta, *body = f.read().splitlines()
+    meta = json.loads(meta)
+    del meta["export_metadata"]["export_timestamp_utc"]
+    del meta["export_manifest"]["total_export_duration_seconds"]
+    return meta, body
+
+
+def test_typed_edges_export_same_bytes_as_properties_json(spark, tmp_path):
+    """The documents graph's MENTIONS edges arrive with a typed
+    ``properties`` struct; the sink must write the bytes that the
+    ``with_properties_json`` projection of the same edges writes."""
+    from conftest import SF_CORRECT
+
+    from neo4j_export_tool_spark.plans.flagship import documents_kg
+    from neo4j_export_tool_spark.sources.jsonl_sink import with_properties_json
+
+    nodes, hashed = documents_kg(spark, SF_CORRECT)
+    assert "properties" in hashed.columns and "properties_json" not in hashed.columns
+    typed = _export_body(nodes, hashed, tmp_path / "typed")
+    contract = _export_body(nodes, with_properties_json(hashed), tmp_path / "json")
+    assert typed[1] and typed == contract
+
+
+def test_wide_typed_bag_exports_same_bytes_as_properties_json(spark, tmp_path):
+    """A node class and a relationship type whose typed bag spans the §1.3
+    contract's special cases export byte-identically through both input
+    forms; a null property is omitted and a long above 2⁵³ stays exact
+    beside a null in the same column."""
+    import base64
+    import datetime as dt
+
+    from neo4j_export_tool_spark.operators.graph import edges_from
+    from neo4j_export_tool_spark.sources.jsonl_sink import with_properties_json
+
+    big = 2**53 + 1
+    row = (
+        float("nan"), float("inf"), float("-inf"), -0.0, b"\x00\xff",
+        dt.datetime(2024, 2, 29, 12, 30, 45, 123456), dt.date(2024, 2, 29),
+        [1, 2, 3], {"k": 1}, "a\x01b\x1fc", 1e-7, 1e21, None,
+    )
+    df = spark.createDataFrame(
+        [("a", *row, big), ("b", *row, None)],
+        "id string, nan double, pinf double, ninf double, negz double, "
+        "blob binary, ts timestamp_ntz, d date, nums array<int>, "
+        "m map<string,int>, ctrl string, tiny double, huge double, "
+        "missing string, big long",
+    )
+    bag = {c: F.col(c) for c in df.columns[1:]}
+    nodes = nodes_from(df, labels=["Wide"], element_id=F.col("id"), props=bag)
+    edges = edges_from(
+        df, rel_type="WIDE", start_element_id=F.col("id"),
+        end_element_id=F.col("id"), props=bag,
+    ).withColumns(
+        {
+            "start_node_content_hash": F.lit("0" * 64),
+            "end_node_content_hash": F.lit("1" * 64),
+        }
+    )
+    edge_cols = [
+        "element_id", "label", "start_element_id", "end_element_id",
+        "start_node_content_hash", "end_node_content_hash",
+    ]
+    typed = _export_body(
+        nodes.select("element_id", "labels", "properties", "content_hash"),
+        edges.select(*edge_cols, "properties"),
+        tmp_path / "typed",
+    )
+    contract = _export_body(
+        nodes_union(nodes), with_properties_json(edges), tmp_path / "json"
+    )
+    assert typed == contract
+    props = {}
+    for rec in map(json.loads, typed[1]):
+        eid = rec["element_id"] if rec["type"] == "node" else rec["start_element_id"]
+        props[rec["type"], eid] = rec["properties"]
+    assert len(props) == 4
+    for kind in ("node", "relationship"):
+        a, b = props[kind, "a"], props[kind, "b"]
+        assert a["big"] == big and "big" not in b
+        assert "missing" not in a
+        assert a["nan"] == "NaN" and a["pinf"] == "Infinity"
+        assert a["ninf"] == "-Infinity"
+        assert a["blob"] == base64.b64encode(b"\x00\xff").decode()
+        assert a["ts"] == "2024-02-29T12:30:45.123456000"
+        assert a["nums"] == [1, 2, 3] and a["m"] == {"k": 1}
+        assert a["ctrl"] == "a\x01b\x1fc"
+    for line in typed[1]:
+        assert '"negz":-0.0' in line and '"tiny":1e-07' in line
+        assert '"huge":1e+21' in line
