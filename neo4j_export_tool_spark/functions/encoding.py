@@ -332,14 +332,6 @@ def ensure_unique_keys(keys: Sequence[str]) -> list[str]:
     return out
 
 
-def validate_label(label: str | None) -> str:
-    """null or over-long labels → ``_invalid_label`` (reference
-    ``Export/Utils.fs:78-88``)."""
-    if label is None or len(label) > MAX_LABEL_LENGTH:
-        return "_invalid_label"
-    return label
-
-
 def _encode_bag(props: Mapping[str, Any] | None, value_depth: int) -> dict[str, Any]:
     """Property-bag body shared by records, nested elements, and paths —
     mirrors reference ``serializeProperties`` (Collections.fs:104-128):

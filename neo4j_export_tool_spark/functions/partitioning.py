@@ -113,19 +113,23 @@ def fan_out(
     return df.repartition(target)
 
 
-def broadcast_if_small(n_rows: int, ceiling: int):
-    """The size-adaptive broadcast tier shared by the count-driven
-    decision sites (walks / SCC / LPA / ANF / negative sampling /
-    personalized-pagerank seed marker; only pagerank's inner
-    `_pagerank_loop` keeps an inline ternary, because it receives the
-    decision as a bool across a function boundary, not a count): returns
-    ``F.broadcast`` when the measured ``n_rows`` is at or under
-    ``ceiling``, else the identity — so loop tables hidden behind
-    localCheckpoint/persist barriers (whose size statistics the planner
-    cannot see, guide §3.1) are broadcast exactly while they fit and
-    keep the scale-safe shuffle shape above the ceiling.  Callers pass
-    a count they already took (or that materializes a barrier the loop
-    pays for anyway); the choice is physical only — results must be
-    partitioning-independent, which each caller pins with a
-    tier-equivalence test."""
-    return F.broadcast if n_rows <= ceiling else (lambda df: df)
+# Row ceiling of the size-adaptive broadcast tier (guide §3.1: broadcast
+# the side that fits).  A loop-table row is a node id or two plus an int
+# or two (≤~128 B framed), so 500k rows ≈ the session's 64 MB
+# auto-broadcast threshold.
+_BROADCAST_MAX_ROWS = 500_000
+
+
+def broadcast_if_small(n_rows: int):
+    """The one size-adaptive broadcast tier of the count-driven decision
+    sites (walks / SCC / LPA / ANF / PageRank / negative sampling):
+    returns ``F.broadcast`` when the measured ``n_rows`` is at or under
+    ``_BROADCAST_MAX_ROWS``, else the identity.  Loop tables behind
+    localCheckpoint barriers carry no size statistics, so without it the
+    planner sort-merge-joins even a 500-row graph (2 exchanges per
+    round); above the ceiling — a real web-scale graph — they keep the
+    scale-safe shuffle shape.  Callers pass a count they already took
+    (or that materializes a barrier the loop pays for anyway); the
+    choice is physical only — results must be partitioning-independent,
+    which each caller pins with a tier-equivalence test."""
+    return F.broadcast if n_rows <= _BROADCAST_MAX_ROWS else (lambda df: df)

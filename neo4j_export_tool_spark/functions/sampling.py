@@ -166,7 +166,7 @@ def negative_samples(
     # falls back to two sort-merge shuffles of the corpus-sized triple
     # table even against a 23-entry pool.  Above the ceiling (a 10⁸–10⁹
     # entity vocabulary) the shuffle-join shape is kept unchanged.
-    _b = broadcast_if_small(n, 500_000)
+    _b = broadcast_if_small(n)
     joined = cand_side.join(_b(cand_tbl), "_idx").join(_b(bump_tbl), "_bidx")
     neg = F.when(
         F.col("_cand") == F.col("obj"), F.col("_bump")

@@ -36,17 +36,6 @@ from neo4j_export_tool_spark.operators.sketches import (
     register_cols,
 )
 
-# Edge ceiling under which the per-hop propagation join broadcasts the
-# edge table instead of shuffling the (larger) register table to meet it
-# (guide §3.1; the pagerank/walks convention).  Behind the
-# materialization barrier the planner has no size statistics and
-# sort-merge-joins even tiny graphs.  The count that decides it
-# materializes the edge frame the first hop would pay for anyway;
-# results are identical (register max-merge is partitioning-independent,
-# pinned by the python register twin in tests/test_anf.py).
-_BROADCAST_EDGES_MAX_ROWS = 500_000
-
-
 def neighborhood_function(
     edges: DataFrame,
     src_col: str,
@@ -91,9 +80,12 @@ def neighborhood_function(
     )
     _be = lambda df: df
     if h >= 1:
-        # the tier count materializes e — the job hop 1 would otherwise
-        # trigger; h == 0 skips it
-        _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
+        # broadcast the edge table instead of shuffling the (larger)
+        # register table to meet it; the tier count materializes e — the
+        # job hop 1 would otherwise trigger; h == 0 skips it.  Results are
+        # identical (register max-merge is partitioning-independent,
+        # pinned by the python register twin in tests/test_anf.py)
+        _be = broadcast_if_small(e.count())
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))

@@ -22,9 +22,12 @@ Scale shape: the edge table is checkpointed once; per round the frontier
 the intended input — the closure is |V|·depth-ish and every join is
 AQE-broadcastable.  For general dense graphs the closure is inherently
 O(V^2); ``max_hops`` and ``max_pairs`` are the explicit cost ceilings
-(raise, don't truncate silently).  Lineage is cut per round with
-localCheckpoint, the same discipline as connected components and
-integer PageRank.
+(raise, don't truncate silently).
+
+``_frontier_loop`` is the one semi-naive loop behind `transitive_closure`,
+`bfs_distances` and the backward sweep of
+`operators/scc.py::strongly_connected_components`: step, left-anti join
+against ``known``, lineage cut, union into ``known``.
 
 Determinism: output is a SET of (src, dst, hops) integer-exact rows —
 independent of partitioning and shuffle order; a DuckDB recursive CTE
@@ -33,8 +36,49 @@ reproduces it bit-for-bit (tests/test_closure.py).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _frontier_loop(
+    frontier: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    keys: list[str],
+    max_rounds: int,
+    *,
+    ceiling: str | None = None,
+    bcast: Callable[[DataFrame], DataFrame] = lambda df: df,
+    on_round: Callable[[DataFrame], None] | None = None,
+) -> DataFrame:
+    """Semi-naive fixpoint from a checkpointed ``frontier``, which also
+    seeds ``known``; returns ``known``.
+
+    Each round expands the frontier with ``step`` and keeps only rows
+    whose ``keys`` are not yet in ``known`` (left-anti join; ``bcast``
+    wraps the ``known`` side).  The new frontier is checkpointed BEFORE
+    it branches into the next round and the ``known`` union (and
+    ``on_round``, which sees the new ``known``), so each round's step
+    and anti join run once.  The loop stops on an empty frontier.  Out
+    of rounds, it checks the last frontier: still non-empty raises
+    RuntimeError(``ceiling``); with ``ceiling=None`` the round count is
+    a radius and the loop returns what it reached."""
+    known = frontier
+    for _ in range(max_rounds):
+        if frontier.isEmpty():
+            return known
+        frontier = (
+            step(frontier)
+            .join(bcast(known.select(*keys)), keys, "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        known = known.unionByName(frontier).localCheckpoint(eager=False)
+        if on_round is not None:
+            on_round(known)
+    if ceiling is not None and not frontier.isEmpty():
+        raise RuntimeError(ceiling)
+    return known
 
 
 def transitive_closure(
@@ -60,38 +104,33 @@ def transitive_closure(
         .localCheckpoint(eager=False)
     )
     frontier = e.withColumn("hops", F.lit(1)).localCheckpoint(eager=False)
-    known = frontier
-    for _ in range(max_hops):
-        if frontier.isEmpty():
-            break
-        stepped = (
-            frontier.select(F.col("src"), F.col("dst").alias("mid"), "hops")
+
+    def step(f: DataFrame) -> DataFrame:
+        return (
+            f.select(F.col("src"), F.col("dst").alias("mid"), "hops")
             .join(e.select(F.col("src").alias("mid"), "dst"), "mid")
             .select("src", "dst", (F.col("hops") + F.lit(1)).alias("hops"))
             .distinct()
         )
-        frontier = stepped.join(
-            known.select("src", "dst"), ["src", "dst"], "left_anti"
-        )
-        # checkpoint BEFORE branching: frontier feeds the next
-        # round's expansion AND the known union (AND the max_pairs
-        # count below), so without a barrier the step join + anti
-        # evaluated twice or three times per round (the walks pick
-        # discipline)
-        frontier = frontier.localCheckpoint(eager=False)
-        known = known.unionByName(frontier).localCheckpoint(eager=False)
+
+    def check_pairs(known: DataFrame) -> None:
         if max_pairs is not None and known.count() > max_pairs:
             raise RuntimeError(
                 f"transitive closure exceeded max_pairs={max_pairs}; "
                 "raise the ceiling or restrict the relation"
             )
-    else:
-        if not frontier.isEmpty():
-            raise RuntimeError(
-                f"closure still growing after max_hops={max_hops}; "
-                "raise the ceiling (cycle-heavy or deep graph)"
-            )
-    return known
+
+    return _frontier_loop(
+        frontier,
+        step,
+        ["src", "dst"],
+        max_hops,
+        ceiling=(
+            f"closure still growing after max_hops={max_hops}; "
+            "raise the ceiling (cycle-heavy or deep graph)"
+        ),
+        on_round=check_pairs,
+    )
 
 
 def ancestor_stats(closure: DataFrame) -> DataFrame:
@@ -174,12 +213,10 @@ def bfs_distances(
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint(eager=False)
     )
-    known = frontier
-    for _ in range(max_hops):
-        if frontier.isEmpty():
-            break
-        stepped = (
-            frontier.select(F.col("node").alias("src"), "dist")
+
+    def step(f: DataFrame) -> DataFrame:
+        return (
+            f.select(F.col("node").alias("src"), "dist")
             .join(e, "src")
             .select(
                 F.col("dst").alias("node"),
@@ -187,12 +224,5 @@ def bfs_distances(
             )
             .distinct()
         )
-        frontier = stepped.join(
-            known.select("node"), "node", "left_anti"
-        )
-        # checkpoint BEFORE branching: frontier feeds the next
-        # round AND the known union — one evaluation per hop
-        # (the walks pick discipline)
-        frontier = frontier.localCheckpoint(eager=False)
-        known = known.unionByName(frontier).localCheckpoint(eager=False)
-    return known
+
+    return _frontier_loop(frontier, step, ["node"], max_hops)

@@ -31,13 +31,6 @@ from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.partitioning import broadcast_if_small
 
-# Node ceiling for broadcasting the per-round (node, label) table (see the
-# block comment in `label_propagation`; a label row is two short strings,
-# so 500k rows ≈ the session's 64 MB auto-broadcast threshold —
-# `operators/pagerank.py::_BROADCAST_RANKS_MAX_NODES`).
-_BROADCAST_LABELS_MAX_NODES = 500_000
-
-
 def label_propagation(
     edges: DataFrame,
     a_col: str,
@@ -79,7 +72,7 @@ def label_propagation(
     for i in range(n_iters):
         labels = labels.localCheckpoint(eager=False)
         if i == 0:
-            _bl = broadcast_if_small(labels.count(), _BROADCAST_LABELS_MAX_NODES)
+            _bl = broadcast_if_small(labels.count())
         neigh = sym.join(
             _bl(labels.withColumnRenamed("node", "b")), "b"
         ).select(F.col("a").alias("node"), "community")

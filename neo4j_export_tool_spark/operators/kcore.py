@@ -5,15 +5,15 @@ cohesion filter is the k-core: the maximal subgraph where every node keeps
 degree ≥ k — the classic noise filter before community detection or
 embedding training on a KG (long-tail concepts peel away, hubs stay).
 
-Algorithm: exact fixpoint peeling.  Each round computes degrees (one keyed
+Algorithm: exact fixpoint peeling on the peel loop that `ktruss` shares
+(`operators/triangles.py::_peel`).  Each round computes degrees (one keyed
 agg), drops nodes below k, and semi-joins the edge set down — all
 equi-joins, no corpus windows.  Rounds repeat until no node peels; the
 round count is the peel depth of the graph (small for power-law graphs —
 each round removes every currently-under-k node at once, not one node at
-a time).  Lineage is cut per round with ``localCheckpoint`` exactly like
-`operators/components.py` / `operators/pagerank.py`, so deep peels do not
-accrete plans.  Per-round driver work is one ``count()`` (the fixpoint
-test) — no edge or node data is collected.
+a time).  Lineage is cut per round, so deep peels do not accrete plans.
+Per-round driver work is one ``count()`` (the fixpoint test) — no edge
+or node data is collected.
 
 ``core_numbers`` (the full decomposition) peels k = 1, 2, … until the
 core empties, seeding each k's peel from the (k-1)-core's edges (the
@@ -30,44 +30,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _canonical(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
-    # shared with the edge peel: one canonicalization for both
-    # cohesive-subgraph operators (k-core nodes, k-truss edges)
-    from neo4j_export_tool_spark.operators.triangles import (
-        _canonical_undirected,
-    )
-
-    return _canonical_undirected(edges, a_col, b_col)
+from neo4j_export_tool_spark.operators.triangles import (
+    _canonical_undirected,
+    _degrees,
+    _peel,
+)
 
 
-def _degrees(und: DataFrame) -> DataFrame:
-    return (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+def _k_peel(und: DataFrame, k: int, max_rounds: int) -> DataFrame:
+    """The k-core's edges (possibly empty) of a checkpointed canonical
+    edge set: each round keeps the edges whose endpoints both have
+    degree >= k."""
 
-
-def _peel(und: DataFrame, k: int, max_rounds: int) -> DataFrame:
-    """Peel an already-canonical edge set to its k-core's edges (possibly
-    empty).  Input must be checkpointed/canonical; output is checkpointed."""
-    n_edges = und.count()
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            return und
+    def survivors(und: DataFrame) -> DataFrame:
         keep = _degrees(und).where(F.col("deg") >= k).select("node")
-        pruned = (
-            und.join(keep.withColumnRenamed("node", "u"), "u", "leftsemi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "leftsemi")
-            .localCheckpoint(eager=False)
-        )
-        n_pruned = pruned.count()
-        if n_pruned == n_edges:
-            return und  # fixpoint: all degrees >= k
-        und, n_edges = pruned, n_pruned
-    raise RuntimeError(f"k_core did not converge in {max_rounds} rounds")
+        return und.join(
+            keep.withColumnRenamed("node", "u"), "u", "leftsemi"
+        ).join(keep.withColumnRenamed("node", "v"), "v", "leftsemi")
+
+    return _peel(
+        und, survivors, max_rounds, f"k_core did not converge in {max_rounds} rounds"
+    )
 
 
 def k_core(
@@ -76,8 +59,8 @@ def k_core(
     """(node) — members of the k-core of the undirected simple graph."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    und = _canonical(edges, a_col, b_col).localCheckpoint(eager=False)
-    core = _peel(und, k, max_rounds)
+    und = _canonical_undirected(edges, a_col, b_col).localCheckpoint(eager=False)
+    core = _k_peel(und, k, max_rounds)
     return _degrees(core).select("node")
 
 
@@ -91,13 +74,13 @@ def core_numbers(
     and the cap is the caller's explicit trade, mirroring the candidate
     caps in `operators/dedup.py`.
     """
-    cur = _canonical(edges, a_col, b_col).localCheckpoint(eager=False)
+    cur = _canonical_undirected(edges, a_col, b_col).localCheckpoint(eager=False)
     result = _degrees(cur).select("node", F.lit(0).alias("core"))
     for k in range(1, max_core + 1):
         # k-core(k) is a subgraph of k-core(k-1): peel each k from the
         # PREVIOUS core's edges, never restarting from the full edge set
         # (and never re-canonicalizing already-canonical edges)
-        cur = _peel(cur, k, max_rounds=1000)
+        cur = _k_peel(cur, k, max_rounds=1000)
         members = _degrees(cur).select("node")
         if members.isEmpty():
             return result

@@ -57,17 +57,6 @@ def _prepared_graph(
     return e_deg.localCheckpoint(eager=False), nodes.localCheckpoint(eager=False)
 
 
-# Node ceiling under which the per-round rank table is broadcast instead
-# of shuffle-joined (guide §3.1: broadcast the side that fits).  A rank
-# row is a node id + one int64 (~≤128 B framed), so 500k nodes ≈ the
-# session's 64 MB auto-broadcast threshold.  The planner cannot make this
-# call itself: the per-round tables sit behind localCheckpoint boundaries
-# whose size statistics are unknown, so it falls back to sort-merge joins
-# (2 exchanges per round) even on a 500-node graph.  Above the ceiling —
-# any real web-scale graph — the loop keeps the shuffle-join shape.
-_BROADCAST_RANKS_MAX_NODES = 500_000
-
-
 def _pagerank_loop(
     e_deg: DataFrame,
     nodes: DataFrame,
@@ -76,24 +65,24 @@ def _pagerank_loop(
     damping_pct: int,
     new_rank,
     contrib_sql: str | None = None,
-    broadcast_ranks: bool = False,
+    *,
+    bcast,
 ) -> DataFrame:
     """The shared PR recurrence: per round one rank⋈edges join + one
     int64 inbound sum, then ``new_rank(nodes ⟕ contribs)`` rebuilds the
     (node, rank_int) table (uniform teleport for PR, seed-targeted for
     PPR); lineage cut per round.  ``contrib_sql`` overrides the
     per-edge transfer expression (weighted variant); ``{d}`` is
-    substituted with damping_pct.  ``broadcast_ranks`` (decided by the
-    callers from the measured node count) replaces both per-round
-    shuffle joins with broadcasts of the node-sized tables — results are
-    identical (int64 sums are order-independent)."""
+    substituted with damping_pct.  ``bcast`` (the callers'
+    `broadcast_if_small` tier for the measured node count) wraps the
+    node-sized side of both per-round joins — results are identical
+    either way (int64 sums are order-independent)."""
     contrib_sql = (contrib_sql or "rank_int * {d} div (100 * outdeg)").format(
         d=damping_pct
     )
-    _b = F.broadcast if broadcast_ranks else (lambda df: df)
     for _ in range(n_iters):
         contribs = (
-            e_deg.join(_b(ranks), e_deg.src == ranks.node)
+            e_deg.join(bcast(ranks), e_deg.src == ranks.node)
             .select(
                 F.col("dst").alias("node"),
                 F.expr(contrib_sql).alias("c"),
@@ -102,7 +91,7 @@ def _pagerank_loop(
             .agg(F.sum("c").alias("inbound"))
         )
         ranks = new_rank(
-            nodes.join(_b(contribs), "node", "left")
+            nodes.join(bcast(contribs), "node", "left")
         ).localCheckpoint(eager=False)
     return ranks
 
@@ -140,7 +129,7 @@ def _finish_uniform(
             ).cast("long").alias("rank_int"),
         ),
         contrib_sql=contrib_sql,
-        broadcast_ranks=n <= _BROADCAST_RANKS_MAX_NODES,
+        bcast=broadcast_if_small(n),
     )
 
 
@@ -271,11 +260,9 @@ def personalized_pagerank_int(
         )
     teleport = (100 - damping_pct) * base // (100 * s)
 
-    n = nodes.count()
-    bcast = n <= _BROADCAST_RANKS_MAX_NODES
     # the seed marker is |S|-sized (≤ nodes); behind a checkpoint its
-    # stats are unknown, so broadcast it explicitly under the same ceiling
-    _bm = broadcast_if_small(n, _BROADCAST_RANKS_MAX_NODES)
+    # stats are unknown, so broadcast it explicitly on the rank tier
+    _bm = broadcast_if_small(nodes.count())
     ranks = nodes.join(_bm(marker), "node", "left").select(
         "node",
         F.when(F.col("_seed") == 1, F.lit(base // s))
@@ -296,7 +283,7 @@ def personalized_pagerank_int(
                 + F.coalesce(F.col("inbound"), F.lit(0))
             ).cast("long").alias("rank_int"),
         ),
-        broadcast_ranks=bcast,
+        bcast=_bm,
     )
 
 

@@ -21,11 +21,17 @@ independent, no salt needed.  An isolated or acyclic node emits a
 singleton SCC (scc_id = its own id).
 
 Scale shape: every step is an equi-join + keyed min-agg fixpoint with
-localCheckpoint lineage cuts (the CC/PageRank discipline).  Forward
-rounds are bounded by the color diameter, outer rounds by the SCC
-condensation's chain structure; both carry RAISING ceilings
-(`max_label_rounds`, `max_outer_rounds`) — the closure convention:
-explicit cost ceilings, never silent truncation.  Worst case (one long
+localCheckpoint lineage cuts; the backward sweep runs on the semi-naive
+frontier loop that closure and BFS share
+(`operators/closure.py::_frontier_loop`).  Forward rounds are bounded
+by the color diameter, outer rounds by the SCC condensation's chain
+structure; both carry RAISING ceilings (`max_label_rounds`,
+`max_outer_rounds`) — explicit cost ceilings, never silent truncation.
+Per outer round, the measured node count sets the `broadcast_if_small`
+tier of every node-sized loop table (colors, inbound mins, trim and
+removal sets, the backward frontier): behind localCheckpoint barriers
+the planner has no size statistics and would sort-merge-join even a
+500-node graph.  Worst case (one long
 path) is O(diameter) rounds — the known cost of label-propagation SCC;
 for that shape raise the ceilings deliberately.
 
@@ -38,18 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.partitioning import broadcast_if_small
-
-# Node ceiling under which the per-round node-sized tables (colors,
-# inbound mins, trim/removal sets, the backward frontier) are broadcast
-# instead of shuffle-joined (guide §3.1; the pagerank convention —
-# `operators/pagerank.py::_BROADCAST_RANKS_MAX_NODES`).  Every such
-# table sits behind a localCheckpoint boundary with no size statistics,
-# so the planner sort-merge-joins even a 500-node graph, paying 2
-# exchanges per fixpoint round.  The count that decides it replaces the
-# `isEmpty` action each outer round already paid.  Above the ceiling the
-# loop keeps the shuffle-join shape.  Results are identical either way:
-# every pick is a `min`, independent of partitioning.
-_BROADCAST_NODES_MAX = 500_000
+from neo4j_export_tool_spark.operators.closure import _frontier_loop
 
 
 def strongly_connected_components(
@@ -100,7 +95,7 @@ def strongly_connected_components(
         # one cheap job, and the measured node count decides the
         # broadcast tier for this outer round
         n_nodes = nodes.count()
-        _bn = broadcast_if_small(n_nodes, _BROADCAST_NODES_MAX)
+        _bn = broadcast_if_small(n_nodes)
         if n_nodes == 0:
             return assigned
         # 0. TRIM: a node with no in-edge or no out-edge in the
@@ -164,7 +159,7 @@ def strongly_connected_components(
             )
             # checkpoint BEFORE the moved-check: the isEmpty action
             # materializes nxt so the next round reads it instead of
-            # re-running this round's join (closure.py discipline)
+            # re-running this round's join (the _frontier_loop rule)
             nxt = nxt.localCheckpoint(eager=False)
             moved = nxt.where(F.col("_moved")).isEmpty()
             colors = nxt.select("node", "color")
@@ -194,32 +189,25 @@ def strongly_connected_components(
             .select("src", "dst", F.col("_cs").alias("color"))
         )
         e_col = e_col.localCheckpoint(eager=False)
-        member = colors.where(F.col("node") == F.col("color")).select(
+        roots = colors.where(F.col("node") == F.col("color")).select(
             "node", "color"
         ).localCheckpoint(eager=False)
-        frontier = member
-        for _r in range(max_label_rounds):
-            if frontier.isEmpty():
-                break
-            stepped = (
-                _bn(frontier.select(F.col("node").alias("dst"), "color"))
+        member = _frontier_loop(
+            roots,
+            lambda f: (
+                _bn(f.select(F.col("node").alias("dst"), "color"))
                 .join(e_col, ["dst", "color"])
                 .select(F.col("src").alias("node"), "color")
                 .distinct()
-            )
-            # checkpoint BEFORE branching: frontier feeds both the next
-            # round's expansion and the member union, so without a
-            # barrier the step join evaluated twice per round (the
-            # walks pick discipline)
-            frontier = stepped.join(
-                _bn(member.select("node")), "node", "left_anti"
-            ).localCheckpoint(eager=False)
-            member = member.unionByName(frontier).localCheckpoint(eager=False)
-        else:
-            raise RuntimeError(
+            ),
+            ["node"],
+            max_label_rounds,
+            ceiling=(
                 f"SCC backward sweep still moving after "
                 f"max_label_rounds={max_label_rounds}; raise the ceiling"
-            )
+            ),
+            bcast=_bn,
+        )
 
         found = member.select("node", F.col("color").alias("scc_id"))
         assigned = assigned.unionByName(found).localCheckpoint(eager=False)

@@ -33,6 +33,8 @@ replays the same canonical-triple definition in DuckDB bit-for-bit
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -79,15 +81,47 @@ def _canonical_undirected(edges: DataFrame, a_col: str, b_col: str) -> DataFrame
     ).distinct()
 
 
-def _enumerate_triangles(und: DataFrame) -> DataFrame:
-    """(x, lo, hi) — each triangle of the canonical edge set exactly once,
-    via degree-ordered orientation + wedge join (Suri-Vassilvitskii)."""
-    deg = (
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, deg) of a canonical edge set."""
+    return (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
+
+
+def _peel(
+    und: DataFrame,
+    survivors: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    ceiling: str,
+) -> DataFrame:
+    """Fixpoint peel of a checkpointed canonical edge set, shared by
+    `operators/kcore.py` (node peel) and `ktruss` (edge peel): each
+    round keeps ``survivors(und)``, checkpointed and counted, until a
+    round drops nothing.  An emptied table is also a fixpoint (an empty
+    set cannot shrink), so a peel that empties on its last round returns
+    instead of raising.  Per-round driver work is one ``count()``; no
+    edge data is collected.  Still shrinking after ``max_rounds`` raises
+    RuntimeError(``ceiling``) — explicit cost ceiling, never silent
+    truncation."""
+    n_prev = und.count()
+    for _ in range(max_rounds):
+        if n_prev == 0:
+            return und
+        keep = survivors(und).localCheckpoint(eager=False)
+        n_keep = keep.count()
+        if n_keep in (n_prev, 0):
+            return keep
+        und, n_prev = keep, n_keep
+    raise RuntimeError(ceiling)
+
+
+def _enumerate_triangles(und: DataFrame) -> DataFrame:
+    """(x, lo, hi) — each triangle of the canonical edge set exactly once,
+    via degree-ordered orientation + wedge join (Suri-Vassilvitskii)."""
+    deg = _degrees(und)
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
     ranked = und.join(du, "u").join(dv, "v")
@@ -150,16 +184,17 @@ def ktruss(
     and the standard cohesive-community filter one notch stronger than
     k-core.
 
-    Fixpoint peel: per round enumerate the surviving triangles
-    (`_enumerate_triangles` — the degree-ordered wedge join, each
-    triangle once), credit each triangle's three canonical edges, drop
-    edges with support < k - 2, repeat until stable.  Rounds cost one
-    triangle enumeration each (the same cost law as `triangle_counts`);
-    ``max_rounds`` is a RAISING ceiling (closure convention) — a
-    pathological peel cascade needs a deliberate raise, never silent
-    truncation.  ``k <= 2`` returns every edge (every edge is trivially
-    a 2-truss member).  Deterministic: supports are exact counts, the
-    peel is a pure function of the graph.
+    Fixpoint peel (`_peel`, shared with k-core): per round enumerate
+    the surviving triangles (`_enumerate_triangles` — the
+    degree-ordered wedge join, each triangle once), credit each
+    triangle's three canonical edges, drop edges with support < k - 2,
+    repeat until stable.  Rounds cost one triangle enumeration each
+    (the same cost law as `triangle_counts`); ``max_rounds`` is a
+    RAISING ceiling — a pathological peel cascade needs a deliberate
+    raise, never silent truncation.  ``k <= 2`` returns every edge
+    (every edge is trivially a 2-truss member).  Deterministic:
+    supports are exact counts, the peel is a pure function of the
+    graph.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -169,10 +204,8 @@ def ktruss(
     if k <= 2:
         return und
     need = k - 2
-    n_prev = und.count()
-    for _ in range(max_rounds):
-        if n_prev == 0:
-            return und
+
+    def supported(und: DataFrame) -> DataFrame:
         tris = _enumerate_triangles(und)
         credits = (
             tris.select(
@@ -197,19 +230,16 @@ def ktruss(
             .groupBy("u", "v")
             .agg(F.count(F.lit(1)).alias("support"))
         )
-        keep = und.join(
+        return und.join(
             credits.where(F.col("support") >= need).select("u", "v"),
             ["u", "v"],
             "left_semi",
-        ).localCheckpoint(eager=False)
-        n_keep = keep.count()
-        # n_keep == 0 is also a fixpoint: an empty set cannot shrink —
-        # returning here avoids a spurious ceiling raise (and one empty
-        # enumeration round) when the peel empties on the last round
-        if n_keep in (n_prev, 0):
-            return keep
-        und, n_prev = keep, n_keep
-    raise RuntimeError(
+        )
+
+    return _peel(
+        und,
+        supported,
+        max_rounds,
         f"k-truss peel still shrinking after max_rounds={max_rounds}; "
-        "raise the ceiling (deep peel cascade)"
+        "raise the ceiling (deep peel cascade)",
     )

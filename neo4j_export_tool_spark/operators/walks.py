@@ -14,8 +14,8 @@ Per step the plan is: active walks ⋈ edges on the current node (one
 equi-join), a per-walk ``min(struct(hash, dst))`` argmin (one keyed
 agg; the struct makes ties impossible — the hash includes the
 neighbor), and a 1:1 join back.  Dead-end walks retire into the result
-as-is.  walk_len rounds of linear joins, lineage cut per round with
-localCheckpoint — the CC/PageRank discipline.  Walk count =
+as-is.  walk_len rounds of linear joins on the walk loop that both walk
+operators share (`_walk_loop`), lineage cut per step.  Walk count =
 |nodes| × walks_per_node rows; nothing is ever driver-side.
 
 Determinism is pinned by an independent python replay of the identical
@@ -43,27 +43,13 @@ whole-stage codegen on each walk row, never via a self-join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.partitioning import broadcast_if_small
 from neo4j_export_tool_spark.functions.similarity import shingle_hash_col
-
-# Edge ceiling under which the per-step walk joins broadcast the capped
-# edge table (and the walk-sized pick table) instead of shuffle-joining
-# (guide §3.1: broadcast the side that fits).  An edge row is two short
-# node strings (~≤128 B framed), so 500k edges ≈ the session's 64 MB
-# auto-broadcast threshold — the pagerank convention
-# (`operators/pagerank.py::_BROADCAST_RANKS_MAX_NODES`).  The planner
-# cannot make this call itself: the edge table sits behind a
-# localCheckpoint boundary with no size statistics, so every step
-# sort-merge-joins even a 500-row graph (2 exchanges per step).  Above
-# the ceiling — a real web-scale graph — the loop keeps the shuffle-join
-# shape.  The count that decides it materializes the checkpoint the
-# first step would materialize anyway.  Results are identical either
-# way: every pick is a pure hash function of (graph, salt), independent
-# of partitioning (pinned by the python replays in tests/test_walks.py).
-_BROADCAST_EDGES_MAX_ROWS = 500_000
 
 
 def cap_neighbors(
@@ -83,8 +69,6 @@ def cap_neighbors(
     """
     if k < 1:
         raise ValueError("max_neighbors_per_node must be >= 1")
-    from pyspark.sql import Window
-
     h = shingle_hash_col(
         F.concat(
             F.lit(salt + ":cap:"),
@@ -99,6 +83,92 @@ def cap_neighbors(
         .where(F.col("_capr") <= k)
         .drop("_capr")
     )
+
+
+def _walk_loop(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    walk_len: int,
+    walks_per_node: int,
+    salt: str,
+    max_neighbors_per_node: int | None,
+    step: Callable,
+    second_order: bool = False,
+) -> DataFrame:
+    """The walk loop shared by `random_walks` and `node2vec_walks`:
+    validation, edge prep and cap, the broadcast tiers, frontier init,
+    then per step ``step(active, e, be, bp, t)`` → the walks that moved
+    (``be`` / ``bp`` wrap the edge-sized / walk-sized join sides), and
+    the retire/checkpoint of the rest.  ``second_order`` carries the
+    previous node in a ``prev`` column (null before the first hop).
+
+    Tiers: when the (capped) edge table fits (`broadcast_if_small`),
+    the per-step joins broadcast it, and the walk-sized pick/retire
+    tables likewise — the planner cannot decide this itself, since the
+    tables sit behind localCheckpoint barriers with no size statistics.
+    The counts that decide it materialize the checkpoints step 1 reads;
+    results are identical either way (every pick is a pure hash
+    function of (graph, salt), pinned by the python replays in
+    tests/test_walks.py).  Walk count = |nodes| × walks_per_node rows;
+    nothing is ever driver-side."""
+    if walk_len < 1:
+        raise ValueError("walk_len must be >= 1")
+    if walks_per_node < 1:
+        raise ValueError("walks_per_node must be >= 1")
+    e = (
+        edges.select(
+            F.col(src_col).cast("string").alias("src"),
+            F.col(dst_col).cast("string").alias("dst"),
+        )
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+    )
+    if max_neighbors_per_node is not None:
+        # bounds BOTH the candidate expansion and node2vec's distance-1
+        # membership probe (the walk lives entirely on the pruned graph)
+        e = cap_neighbors(e, "src", "dst", max_neighbors_per_node, salt)
+    _be = _bp = lambda df: df
+    e = e.localCheckpoint(eager=False)
+    if walk_len > 1:  # walk_len == 1: the loop never runs
+        # materializes the checkpoint; decides the edge-side tier
+        _be = broadcast_if_small(e.count())
+    prev = [F.lit(None).cast("string").alias("prev")] if second_order else []
+    active = (
+        e.select("src")
+        .distinct()
+        .select(
+            F.col("src").alias("start"),
+            F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("_i"),
+        )
+        .select(
+            F.concat("start", F.lit("#"), F.col("_i")).alias("walk_id"),
+            "start",
+            *prev,
+            F.col("start").alias("cur"),
+            F.array("start").alias("path"),
+        )
+    )
+    # round 1 consumes the initial frontier in both branches
+    active = active.localCheckpoint(eager=False)
+    if walk_len > 1:
+        # the pick/retire side is WALK-sized; count it exactly
+        # (walks only retire, so every later frame is ≤ this) —
+        # the count materializes the frontier round 1 reads twice
+        _bp = broadcast_if_small(active.count())
+    done = active.limit(0)
+
+    for t in range(1, walk_len):
+        # nxt feeds BOTH the retire anti-join and the next round:
+        # checkpoint it where computed, so the candidate join + pick
+        # evaluate once per step and each step stores exactly one
+        # walk-sized frame
+        nxt = step(active, e, _be, _bp, t).localCheckpoint(eager=False)
+        done = done.unionByName(
+            active.join(_bp(nxt.select("walk_id")), "walk_id", "left_anti")
+        ).localCheckpoint(eager=False)
+        active = nxt
+    return done.unionByName(active).select("walk_id", "start", "path")
 
 
 def random_walks(
@@ -122,8 +192,8 @@ def random_walks(
     per-step candidate expansion is otherwise |N(hub)|·walks (see
     `cap_neighbors`); the walk is then a pure function of
     (capped graph, salt).  When the edge table fits
-    (`_BROADCAST_EDGES_MAX_ROWS`), the per-step joins broadcast it (and
-    the walk-sized pick table) instead of shuffling — same rows, decided
+    (`broadcast_if_small`), the per-step joins broadcast it (and the
+    walk-sized pick table) instead of shuffling — same rows, decided
     from a measured count.
 
     Eagerness: with ``walk_len > 1`` the call runs the edge and walk
@@ -135,80 +205,31 @@ def random_walks(
     edge deduplication's shuffle.  With AQE off, ``walk_len == 1``
     starts no job.
     """
-    if walk_len < 1:
-        raise ValueError("walk_len must be >= 1")
-    if walks_per_node < 1:
-        raise ValueError("walks_per_node must be >= 1")
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("src"),
-            F.col(dst_col).cast("string").alias("dst"),
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    if max_neighbors_per_node is not None:
-        e = cap_neighbors(e, "src", "dst", max_neighbors_per_node, salt)
-    _be = _bp = lambda df: df
-    e = e.localCheckpoint(eager=False)
-    if walk_len > 1:  # walk_len == 1: the loop never runs
-        # materializes the checkpoint; decides the edge-side tier
-        _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
 
-    active = (
-        e.select("src")
-        .distinct()
-        .select(
-            F.col("src").alias("start"),
-            F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("_i"),
-        )
-        .select(
-            F.concat("start", F.lit("#"), F.col("_i")).alias("walk_id"),
-            "start",
-            F.col("start").alias("cur"),
-            F.array("start").alias("path"),
-        )
-    )
-    # round 1 consumes the initial frontier in both branches
-    active = active.localCheckpoint(eager=False)
-    if walk_len > 1:
-        # the pick/retire side is WALK-sized; count it exactly
-        # (walks only retire, so every later frame is ≤ this) —
-        # the count materializes the frontier round 1 reads twice
-        _bp = broadcast_if_small(
-            active.count(), _BROADCAST_EDGES_MAX_ROWS
-        )
-    done = active.limit(0)
-
-    for step in range(1, walk_len):
+    def step(active, e, _be, _bp, t):
         cand = active.join(_be(e), active["cur"] == e["src"])
         h = shingle_hash_col(
             F.concat(
                 F.lit(salt + ":"),
                 F.col("walk_id"),
-                F.lit(f":{step}:"),
+                F.lit(f":{t}:"),
                 F.col("dst"),
             )
         )
         pick = cand.groupBy("walk_id").agg(
             F.min(F.struct(h.alias("h"), F.col("dst").alias("d"))).alias("_m")
         ).select("walk_id", F.col("_m.d").alias("_next"))
-        nxt = active.join(_bp(pick), "walk_id").select(
+        return active.join(_bp(pick), "walk_id").select(
             "walk_id",
             "start",
             F.col("_next").alias("cur"),
             F.concat("path", F.array("_next")).alias("path"),
         )
-        # nxt feeds BOTH the retire anti-join and the next round:
-        # checkpoint it where computed, so the candidate join +
-        # argmin agg evaluate once per step and each step stores
-        # exactly one walk-sized frame
-        nxt = nxt.localCheckpoint(eager=False)
-        done = done.unionByName(
-            active.join(_bp(nxt.select("walk_id")), "walk_id", "left_anti")
-        ).localCheckpoint(eager=False)
-        active = nxt
-    return done.unionByName(active).select("walk_id", "start", "path")
+
+    return _walk_loop(
+        edges, src_col, dst_col, walk_len, walks_per_node, salt,
+        max_neighbors_per_node, step,
+    )
 
 
 def node2vec_walks(
@@ -243,87 +264,34 @@ def node2vec_walks(
     expansion), one equi-join against the edge list on ``(prev, dst)``
     (the distance-1 membership probe), and one window over ``walk_id``
     (cumulative + total weight — same partitioning, one Exchange);
-    lineage cut per round with localCheckpoint.  When the capped edge
-    table fits (`_BROADCAST_EDGES_MAX_ROWS`), the two equi-joins
-    broadcast it instead of shuffling the walk table — same rows,
-    decided from a measured count the checkpoint materialization pays
-    for anyway.  Dead ends retire into the result.  Weights must be
-    positive ints; totals stay far inside int64 (max degree × max
-    weight).
+    lineage cut per step.  When the capped edge table fits
+    (`broadcast_if_small`), the two equi-joins broadcast it instead of
+    shuffling the walk table — same rows, decided from a measured count
+    the checkpoint materialization pays for anyway.  Dead ends retire
+    into the result.  Weights must be positive ints; totals stay far
+    inside int64 (max degree × max weight).
 
-    Eagerness: with ``walk_len > 1`` the call runs the edge and walk
-    counts that pick the broadcast tiers (they materialize the
-    checkpoints step 1 reads).  Under adaptive query execution (the
-    session default) each lazy ``localCheckpoint`` also runs the shuffle
-    stages below it when it is created, so every step's join and
-    aggregation runs at call time, and even ``walk_len == 1`` runs the
-    edge deduplication's shuffle.  With AQE off, ``walk_len == 1``
-    starts no job.
+    Eagerness: as `random_walks` (both run `_walk_loop`).
 
     Reference: the walk corpus feeds the same embedding-training surface
     as ``random_walks``; see module docstring for the determinism
     convention shared with ``negative_samples``.
     """
-    if walk_len < 1:
-        raise ValueError("walk_len must be >= 1")
-    if walks_per_node < 1:
-        raise ValueError("walks_per_node must be >= 1")
     for w in (w_return, w_near, w_far):
         # floats would silently truncate in int() and change the walk
         # distribution relative to any replay — reject, don't coerce
         if not isinstance(w, int) or w < 1:
             raise ValueError("class weights must be positive integers")
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("src"),
-            F.col(dst_col).cast("string").alias("dst"),
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    if max_neighbors_per_node is not None:
-        # bounds BOTH the candidate expansion and the distance-1
-        # membership probe to the capped graph (consistent semantics:
-        # the walk lives entirely on the pruned graph)
-        e = cap_neighbors(e, "src", "dst", max_neighbors_per_node, salt)
-    _be = _bp = lambda df: df
-    e = e.localCheckpoint(eager=False)
-    if walk_len > 1:  # walk_len == 1: the loop never runs
-        # materializes the checkpoint; decides the edge-side tier
-        _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
-    e_near = e.select(
-        F.col("src").alias("_psrc"), F.col("dst").alias("_pdst"),
-        F.lit(1).alias("_near"),
+    by_walk = Window.partitionBy("walk_id")
+    ladder = by_walk.orderBy("dst").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
 
-    active = (
-        e.select("src")
-        .distinct()
-        .select(
-            F.col("src").alias("start"),
-            F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("_i"),
+    def step(active, e, _be, _bp, t):
+        e_near = e.select(
+            F.col("src").alias("_psrc"), F.col("dst").alias("_pdst"),
+            F.lit(1).alias("_near"),
         )
-        .select(
-            F.concat("start", F.lit("#"), F.col("_i")).alias("walk_id"),
-            "start",
-            F.lit(None).cast("string").alias("prev"),
-            F.col("start").alias("cur"),
-            F.array("start").alias("path"),
-        )
-    )
-    # round 1 consumes the initial frontier in both branches
-    active = active.localCheckpoint(eager=False)
-    if walk_len > 1:
-        # the pick/retire side is WALK-sized; count it exactly
-        # (walks only retire, so every later frame is ≤ this)
-        _bp = broadcast_if_small(
-            active.count(), _BROADCAST_EDGES_MAX_ROWS
-        )
-    done = active.limit(0)
-
-    from pyspark.sql import Window
-
-    for step in range(1, walk_len):
         cand = (
             active.join(_be(e), active["cur"] == e["src"])
             .join(
@@ -342,13 +310,9 @@ def node2vec_walks(
                 .alias("_w"),
             )
         )
-        by_walk = Window.partitionBy("walk_id")
-        ladder = by_walk.orderBy("dst").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
         draw = (
             shingle_hash_col(
-                F.concat(F.lit(salt + ":"), F.col("walk_id"), F.lit(f":{step}"))
+                F.concat(F.lit(salt + ":"), F.col("walk_id"), F.lit(f":{t}"))
             )
             % F.sum("_w").over(by_walk)
         )
@@ -360,24 +324,20 @@ def node2vec_walks(
                 & (F.col("_r") < F.col("_cum"))
             )
         )
-        nxt = pick.select(
+        # the NARROW projection is what the loop checkpoints: the
+        # ladder scaffolding _w/_cum/_r/dst is dropped first
+        return pick.select(
             "walk_id",
             "start",
             F.col("cur").alias("prev"),
             F.col("dst").alias("cur"),
             F.concat("path", F.array("dst")).alias("path"),
         )
-        # nxt feeds BOTH the retire anti-join and the next round:
-        # checkpoint the NARROW projection where computed (the
-        # ladder scaffolding _w/_cum/_r/dst is dropped first), so
-        # the candidate joins + windows evaluate once per step and
-        # each step stores exactly one walk-sized frame
-        nxt = nxt.localCheckpoint(eager=False)
-        done = done.unionByName(
-            active.join(_bp(nxt.select("walk_id")), "walk_id", "left_anti")
-        ).localCheckpoint(eager=False)
-        active = nxt
-    return done.unionByName(active).select("walk_id", "start", "path")
+
+    return _walk_loop(
+        edges, src_col, dst_col, walk_len, walks_per_node, salt,
+        max_neighbors_per_node, step, second_order=True,
+    )
 
 
 def skipgram_pairs(

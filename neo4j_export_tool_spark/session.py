@@ -129,8 +129,10 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
-    # iterative operators (connected components) need a checkpoint dir;
-    # default to a session-scoped temp dir unless the caller set one
+    # no operator here calls the reliable ``checkpoint()`` (every loop
+    # cuts lineage with ``localCheckpoint``); the dir is set so a
+    # caller's own ``DataFrame.checkpoint()`` works out of the box.
+    # Default to a session-scoped temp dir unless the caller set one
     if spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir(
             tempfile.mkdtemp(prefix="spark-graft-ckpt-")

@@ -83,6 +83,8 @@ def _materialize_zst(spark: SparkSession, path: str) -> str:
     import shutil
     import tempfile
 
+    from neo4j_export_tool_spark.sources.zstd_codec import decompress_file_jvm
+
     key = os.path.abspath(path)
     st = os.stat(path)
     stamp = (st.st_mtime, st.st_size)
@@ -103,23 +105,7 @@ def _materialize_zst(spark: SparkSession, path: str) -> str:
         atexit.register(_cleanup_zst_scratch)
     _ZST_SCRATCH_DIRS.append(scratch)
     out = os.path.join(scratch, os.path.basename(path)[: -len(".zst")])
-    jvm = spark.sparkContext._jvm
-    fis = jvm.java.io.FileInputStream(path)
-    try:
-        zis = jvm.com.github.luben.zstd.ZstdInputStream(fis)
-    except Exception:
-        fis.close()  # constructor failure must not leak the JVM handle
-        raise
-    try:
-        jvm.java.nio.file.Files.copy(
-            zis,
-            jvm.java.io.File(out).toPath(),
-            spark.sparkContext._gateway.new_array(
-                jvm.java.nio.file.CopyOption, 0
-            ),
-        )
-    finally:
-        zis.close()
+    decompress_file_jvm(spark, path, out)
     _ZST_SCRATCH_CACHE[key] = (stamp, out)
     return out
 

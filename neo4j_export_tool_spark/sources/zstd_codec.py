@@ -195,7 +195,7 @@ def decompress_file_jvm(spark, src: str, dst: str) -> None:
     try:
         zis = jvm.com.github.luben.zstd.ZstdInputStream(fis)
     except Exception:
-        fis.close()
+        fis.close()  # constructor failure must not leak the JVM handle
         raise
     try:
         jvm.java.nio.file.Files.copy(

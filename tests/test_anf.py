@@ -150,7 +150,7 @@ def test_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
     is a physical choice only: forcing the shuffle tier must reproduce
     every (node, hop) estimate bit-for-bit (the estimate fold is a
     sorted, order-independent reduction)."""
-    import neo4j_export_tool_spark.operators.anf as A
+    import neo4j_export_tool_spark.functions.partitioning as P
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
     df = spark.createDataFrame(edges, "s string, d string")
@@ -158,7 +158,7 @@ def test_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
         (r.node, r.hop, r.ball_size)
         for r in neighborhood_function(df, "s", "d", h=3, p=8).collect()
     )
-    monkeypatch.setattr(A, "_BROADCAST_EDGES_MAX_ROWS", -1)
+    monkeypatch.setattr(P, "_BROADCAST_MAX_ROWS", -1)
     forced = sorted(
         (r.node, r.hop, r.ball_size)
         for r in neighborhood_function(df, "s", "d", h=3, p=8).collect()

@@ -3,7 +3,9 @@
 Calling ``random_walks`` / ``node2vec_walks`` with ``walk_len > 1`` or
 ``neighborhood_function`` with ``h >= 1`` runs the counts that pick their
 broadcast tiers; ``strongly_connected_components`` runs its per-round
-counts and fixpoint checks on every input.  ``walk_len == 1`` and
+counts and fixpoint checks on every input, and so do the frontier loops
+(``transitive_closure``, ``bfs_distances``) and the peel loops
+(``k_core``, ``core_numbers``, ``ktruss``).  ``walk_len == 1`` and
 ``h == 0`` run no action: with adaptive query execution off they start no
 job at all, and with it on (the session default) they start only the
 shuffle stages that AQE runs under each lazy ``localCheckpoint`` when it is
@@ -18,7 +20,13 @@ import itertools
 import pytest
 
 from neo4j_export_tool_spark.operators.anf import neighborhood_function
+from neo4j_export_tool_spark.operators.closure import (
+    bfs_distances,
+    transitive_closure,
+)
+from neo4j_export_tool_spark.operators.kcore import core_numbers, k_core
 from neo4j_export_tool_spark.operators.scc import strongly_connected_components
+from neo4j_export_tool_spark.operators.triangles import ktruss
 from neo4j_export_tool_spark.operators.walks import node2vec_walks, random_walks
 
 _group_ids = itertools.count()
@@ -41,6 +49,11 @@ _CALLS = {
         None,
         lambda e: strongly_connected_components(e, "s", "d"),
     ),
+    "transitive_closure": (None, lambda e: transitive_closure(e, "s", "d")),
+    "bfs_distances": (None, lambda e: bfs_distances(e, "s", "d", ["a"])),
+    "k_core": (None, lambda e: k_core(e, "s", "d", 2)),
+    "core_numbers": (None, lambda e: core_numbers(e, "s", "d")),
+    "ktruss": (None, lambda e: ktruss(e, "s", "d", 3)),
 }
 
 

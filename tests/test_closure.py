@@ -53,6 +53,12 @@ def test_max_hops_ceiling_raises(spark):
         _pairs(spark, chain, max_hops=3)
     # exactly deep enough is fine
     assert len(_pairs(spark, chain, max_hops=6)) == 6 * 7 // 2
+    # the 2-cycle's round-2 frontier is empty: the closure finishes on
+    # its last round at max_hops=2, and is still growing at max_hops=1
+    two_cycle = [("a", "b"), ("b", "a")]
+    assert len(_pairs(spark, two_cycle, max_hops=2)) == 4
+    with pytest.raises(RuntimeError, match="max_hops"):
+        _pairs(spark, two_cycle, max_hops=1)
 
 
 def test_max_pairs_ceiling_raises(spark):

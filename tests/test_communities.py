@@ -99,10 +99,10 @@ def test_validation(spark):
 def test_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
     """The size-adaptive label-table broadcast is a physical choice
     only: forcing the shuffle tier must reproduce the labels exactly."""
-    import neo4j_export_tool_spark.operators.communities as C
+    import neo4j_export_tool_spark.functions.partitioning as P
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
     base = sorted(_spark_lpa(spark, edges, 3).items())
-    monkeypatch.setattr(C, "_BROADCAST_LABELS_MAX_NODES", -1)
+    monkeypatch.setattr(P, "_BROADCAST_MAX_ROWS", -1)
     forced = sorted(_spark_lpa(spark, edges, 3).items())
     assert base == forced

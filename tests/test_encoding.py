@@ -23,7 +23,6 @@ from neo4j_export_tool_spark.functions.encoding import (
     encode_value,
     ensure_unique_keys,
     truncate_with_ellipsis,
-    validate_label,
 )
 
 
@@ -144,12 +143,6 @@ def test_property_bag_cap():
     props = {f"k{i:05d}": i for i in range(MAX_COLLECTION_ITEMS + 3)}
     out = encode_properties(props)
     assert out["_truncated"] == f"too_many_properties: {MAX_COLLECTION_ITEMS + 3} total"
-
-
-def test_label_validation():
-    assert validate_label(None) == "_invalid_label"
-    assert validate_label("x" * 1001) == "_invalid_label"
-    assert validate_label("Person") == "Person"
 
 
 def test_truncate_with_ellipsis():

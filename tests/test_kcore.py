@@ -49,6 +49,13 @@ def test_cascading_peel(spark):
     assert _members(spark, edges, 4) == set()
 
 
+def test_peel_emptied_on_last_round_is_a_fixpoint(spark):
+    # path a-b-c at k=2: round 1 keeps only b, so no edge survives; an
+    # empty edge set cannot shrink, so one round is enough
+    df = spark.createDataFrame([("a", "b"), ("b", "c")], "a string, b string")
+    assert k_core(df, "a", "b", 2, max_rounds=1).collect() == []
+
+
 def test_dirty_input_and_validation(spark):
     edges = [("a", "b"), ("b", "a"), ("a", "a"), ("b", "c"), ("a", "c")]
     assert _members(spark, edges, 2) == {"a", "b", "c"}

@@ -161,20 +161,22 @@ def test_punctuated_surface_selects_the_automaton():
     assert [s for _, _, s in find("use c++ to join")] == ["c++", "join"]
 
 
-def test_broadcast_if_small_boundary():
+def test_broadcast_if_small_boundary(monkeypatch):
     """<= ceiling broadcasts; ceiling + 1 (and any larger count) returns
     the identity — the documented tier boundary, pinned exactly."""
     from pyspark.sql import functions as F
 
+    import neo4j_export_tool_spark.functions.partitioning as P
     from neo4j_export_tool_spark.functions.partitioning import (
         broadcast_if_small,
     )
 
-    assert broadcast_if_small(0, 10) is F.broadcast
-    assert broadcast_if_small(10, 10) is F.broadcast
-    ident = broadcast_if_small(11, 10)
+    assert broadcast_if_small(500_000) is F.broadcast
+    assert broadcast_if_small(500_001) is not F.broadcast
+    monkeypatch.setattr(P, "_BROADCAST_MAX_ROWS", 10)
+    assert broadcast_if_small(0) is F.broadcast
+    assert broadcast_if_small(10) is F.broadcast
+    ident = broadcast_if_small(11)
     assert ident is not F.broadcast
     sentinel = object()
     assert ident(sentinel) is sentinel
-    assert broadcast_if_small(500_000, 500_000) is F.broadcast
-    assert broadcast_if_small(500_001, 500_000) is not F.broadcast

@@ -119,6 +119,14 @@ def test_label_ceiling_raises(spark):
         _spark_scc(spark, chain, max_label_rounds=3)
 
 
+def test_backward_sweep_finishing_on_last_round(spark):
+    # the 3-cycle's backward sweep reaches c, b, then nothing new in
+    # exactly 3 rounds: an empty last frontier has converged
+    cycle = [("a", "b"), ("b", "c"), ("c", "a")]
+    got = _spark_scc(spark, cycle, max_label_rounds=3)
+    assert got == {"a": "a", "b": "a", "c": "a"}
+
+
 def test_deep_dag_handled_by_trim(spark):
     # a pure 40-node path has no cycles; before the trim step this
     # needed 40 outer rounds (one root SCC each) and raised the ceiling
@@ -141,7 +149,7 @@ def test_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
     """The size-adaptive broadcast of the node-sized loop tables is a
     physical choice only: forcing the shuffle tier must reproduce the
     broadcast tier's assignment exactly."""
-    import neo4j_export_tool_spark.operators.scc as S
+    import neo4j_export_tool_spark.functions.partitioning as P
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
              ("e", "d"), ("f", "a"), ("g", "h")]
@@ -150,7 +158,7 @@ def test_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
         (r.node, r.scc_id)
         for r in strongly_connected_components(df, "s", "d").collect()
     )
-    monkeypatch.setattr(S, "_BROADCAST_NODES_MAX", -1)
+    monkeypatch.setattr(P, "_BROADCAST_MAX_ROWS", -1)
     forced = sorted(
         (r.node, r.scc_id)
         for r in strongly_connected_components(df, "s", "d").collect()

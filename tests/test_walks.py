@@ -377,7 +377,7 @@ def test_random_walks_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
     """The size-adaptive broadcast is a physical choice only: forcing
     the shuffle tier (ceiling below any graph) must reproduce the
     broadcast tier's walks bit-for-bit."""
-    import neo4j_export_tool_spark.operators.walks as W
+    import neo4j_export_tool_spark.functions.partitioning as P
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
              ("e", "a"), ("f", "c")]
@@ -386,7 +386,7 @@ def test_random_walks_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
         (r.walk_id, r.start, list(r.path))
         for r in random_walks(df, "s", "d", walk_len=5, walks_per_node=2).collect()
     )
-    monkeypatch.setattr(W, "_BROADCAST_EDGES_MAX_ROWS", -1)
+    monkeypatch.setattr(P, "_BROADCAST_MAX_ROWS", -1)
     forced = sorted(
         (r.walk_id, r.start, list(r.path))
         for r in random_walks(df, "s", "d", walk_len=5, walks_per_node=2).collect()
@@ -395,7 +395,7 @@ def test_random_walks_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
 
 
 def test_node2vec_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
-    import neo4j_export_tool_spark.operators.walks as W
+    import neo4j_export_tool_spark.functions.partitioning as P
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
              ("e", "a"), ("f", "c")]
@@ -405,7 +405,7 @@ def test_node2vec_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
         (r.walk_id, r.start, list(r.path))
         for r in node2vec_walks(df, "s", "d", **kw).collect()
     )
-    monkeypatch.setattr(W, "_BROADCAST_EDGES_MAX_ROWS", -1)
+    monkeypatch.setattr(P, "_BROADCAST_MAX_ROWS", -1)
     forced = sorted(
         (r.walk_id, r.start, list(r.path))
         for r in node2vec_walks(df, "s", "d", **kw).collect()
