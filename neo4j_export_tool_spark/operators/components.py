@@ -237,13 +237,16 @@ def connected_components(
     dst: str = "dst",
     max_iterations: int = 20,
     rows_per_loop_partition: int | None = 500_000,
-    pre_contract: bool = True,
 ) -> CCResult:
     """Min-label propagation over an undirected edge list.
 
     ``edges``: two columns of the same orderable type.  Vertices appearing
     only as isolated endpoints keep their own id as component; a null
     endpoint is not a vertex.
+
+    The edges are first contracted to stars, partition by partition
+    (``local_star_contract``), so the loop shuffles at most one edge per
+    vertex and partition instead of every input edge.
 
     The call is eager: it persists and counts the symmetric edge list
     (the count sizes the loop) and runs every round before it returns.
@@ -279,8 +282,7 @@ def connected_components(
 
     from neo4j_export_tool_spark.plans.perf import BatchPerformanceTracker
 
-    if pre_contract:
-        edges = local_star_contract(edges, src, dst)
+    edges = local_star_contract(edges, src, dst)
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).unionByName(

@@ -16,8 +16,9 @@ Per-round driver work is one ``count()`` (the fixpoint test) — no edge
 or node data is collected.
 
 ``core_numbers`` (the full decomposition) peels k = 1, 2, … until the
-core empties, seeding each k's peel from the (k-1)-core's edges (the
-k-core is a subgraph of the (k-1)-core, so nothing is ever re-peeled);
+core empties, seeding each k's peel from the (k-1)-core's edges and
+their count (the k-core is a subgraph of the (k-1)-core, so nothing is
+ever re-peeled or re-counted);
 cost is Σ_k incremental-peel-depth(k) rounds.  Exact and
 partition-independent (integer degrees, equi-joins), but at 10⁹-node
 scale prefer filtering at a single operating k via ``k_core`` — the
@@ -37,10 +38,13 @@ from neo4j_export_tool_spark.operators.triangles import (
 )
 
 
-def _k_peel(und: DataFrame, k: int, max_rounds: int) -> DataFrame:
+def _k_peel(
+    und: DataFrame, k: int, max_rounds: int, n_rows: int | None = None
+) -> tuple[DataFrame, int]:
     """The k-core's edges (possibly empty) of a checkpointed canonical
-    edge set: each round keeps the edges whose endpoints both have
-    degree >= k."""
+    edge set, and their count: each round keeps the edges whose
+    endpoints both have degree >= k.  ``n_rows``: ``und``'s count, if
+    known."""
 
     def survivors(und: DataFrame) -> DataFrame:
         keep = _degrees(und).where(F.col("deg") >= k).select("node")
@@ -48,9 +52,8 @@ def _k_peel(und: DataFrame, k: int, max_rounds: int) -> DataFrame:
             keep.withColumnRenamed("node", "u"), "u", "leftsemi"
         ).join(keep.withColumnRenamed("node", "v"), "v", "leftsemi")
 
-    return _peel(
-        und, survivors, max_rounds, f"k_core did not converge in {max_rounds} rounds"
-    )
+    ceiling = f"k_core did not converge in {max_rounds} rounds"
+    return _peel(und, survivors, max_rounds, ceiling, n_rows)
 
 
 def k_core(
@@ -60,7 +63,7 @@ def k_core(
     if k < 1:
         raise ValueError("k must be >= 1")
     und = _canonical_undirected(edges, a_col, b_col).localCheckpoint(eager=False)
-    core = _k_peel(und, k, max_rounds)
+    core, _ = _k_peel(und, k, max_rounds)
     return _degrees(core).select("node")
 
 
@@ -76,14 +79,17 @@ def core_numbers(
     """
     cur = _canonical_undirected(edges, a_col, b_col).localCheckpoint(eager=False)
     result = _degrees(cur).select("node", F.lit(0).alias("core"))
+    n_cur = None
     for k in range(1, max_core + 1):
         # k-core(k) is a subgraph of k-core(k-1): peel each k from the
         # PREVIOUS core's edges, never restarting from the full edge set
-        # (and never re-canonicalizing already-canonical edges)
-        cur = _k_peel(cur, k, max_rounds=1000)
-        members = _degrees(cur).select("node")
-        if members.isEmpty():
+        # (and never re-canonicalizing already-canonical edges); the
+        # previous peel's count seeds this one, and no edges means no
+        # members
+        cur, n_cur = _k_peel(cur, k, max_rounds=1000, n_rows=n_cur)
+        if n_cur == 0:
             return result
+        members = _degrees(cur).select("node")
         result = (
             result.join(
                 members.select(F.col("node"), F.lit(1).alias("_in")),

@@ -57,14 +57,6 @@ def _block_key(col):
     return F.lower(F.regexp_extract(col, r"[A-Za-z0-9]+", 0))
 
 
-def trigram_cosine(a: str, b: str) -> float:
-    """Character-trigram cosine (binary weights)."""
-    ta, tb = _trigrams(a), _trigrams(b)
-    if not ta or not tb:
-        return 0.0
-    return len(ta & tb) / math.sqrt(len(ta) * len(tb))
-
-
 def _sorted_trigram_sum(trigrams, idf: Mapping[str, float], default: float) -> float:
     """Sum of squared IDF weights in SORTED trigram order — Python set
     iteration order is hash-seed-dependent (varies across executor
@@ -141,10 +133,11 @@ def tfidf_trigram_cosine(a: str, b: str, idf: Mapping[str, float]) -> float:
 def _score_pairs_batch(
     surfaces: np.ndarray,
     names: np.ndarray,
-    idf: Mapping[str, float] | None,
+    idf: Mapping[str, float],
 ) -> np.ndarray:
-    """Vectorized trigram-cosine scoring of one Arrow batch of candidate
-    pairs (round-3 stretch item: the last per-row Python in a join path).
+    """Vectorized IDF-weighted trigram-cosine scoring of one Arrow batch of
+    candidate pairs (round-3 stretch item: the last per-row Python in a
+    join path).
 
     Python-level string work happens once per DISTINCT string in the batch
     (trigram extraction — the distinct-then-rejoin trick applied within
@@ -176,13 +169,7 @@ def _score_pairs_batch(
     vocab = sorted({t for ts in tri_sets for t in ts})
     vsize = max(len(vocab), 1)
     code_of = {t: i for i, t in enumerate(vocab)}
-    if idf is not None:
-        default = 1.0
-        w2 = np.array(
-            [idf.get(t, default) ** 2 for t in vocab], dtype=np.float64
-        )
-    else:
-        w2 = np.ones(len(vocab), dtype=np.float64)
+    w2 = np.array([idf.get(t, 1.0) ** 2 for t in vocab], dtype=np.float64)
     # per distinct string: ascending code array (== sorted trigram order)
     codes = [
         np.array([code_of[t] for t in ts], dtype=np.int64) for ts in tri_sets
@@ -247,13 +234,8 @@ def _score_pairs_batch(
         num[pk[seg_starts]] = sums
 
     with np.errstate(invalid="ignore", divide="ignore"):
-        if idf is not None:
-            # scalar twin: num / (sqrt(na2) * sqrt(nb2))
-            denom = np.sqrt(norm2[s_idx]) * np.sqrt(norm2[n_idx])
-        else:
-            # scalar twin: len(∩) / sqrt(len(a) * len(b)) — product inside
-            # the sqrt, so match that association exactly
-            denom = np.sqrt(norm2[s_idx] * norm2[n_idx])
+        # scalar twin: num / (sqrt(na2) * sqrt(nb2))
+        denom = np.sqrt(norm2[s_idx]) * np.sqrt(norm2[n_idx])
         out = np.where(
             valid & (denom > 0.0), num / np.where(denom == 0, 1, denom), 0.0
         )
@@ -267,16 +249,15 @@ def link_mentions(
     kb_id_col: str = "kb_id",
     kb_name_col: str = "name",
     min_score: float = 0.5,
-    use_idf: bool = True,
 ) -> DataFrame:
     """Attach (kb_id, link_score) to each mention row.
 
     ``kb``: (kb_id, name[, aliases...]).  Candidates share a blocking key
     with the surface; ties broken by kb_id for determinism.  Scoring is
-    IDF-weighted trigram cosine by default (``use_idf=False`` falls back to
-    binary weights); the IDF table is computed distributed
-    (`kb_trigram_idf`) and only the trigram-vocabulary-sized map ships in
-    the scorer closure — KB rows never collect to the driver.
+    IDF-weighted trigram cosine (`tfidf_trigram_cosine`); the IDF table is
+    computed distributed (`kb_trigram_idf`) and only the
+    trigram-vocabulary-sized map ships in the scorer closure — KB rows
+    never collect to the driver.
     """
     distinct_surfaces = mentions.select(F.col(surface_col).alias("surface")).distinct()
     kb_cand = kb.select(
@@ -289,7 +270,7 @@ def link_mentions(
     cands = distinct_surfaces.withColumn("block", _block_key(F.col("surface"))).join(
         kb_cand, "block"
     )
-    idf = kb_trigram_idf(kb, kb_name_col) if use_idf else None
+    idf = kb_trigram_idf(kb, kb_name_col)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

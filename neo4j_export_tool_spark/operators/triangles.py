@@ -96,24 +96,27 @@ def _peel(
     survivors: Callable[[DataFrame], DataFrame],
     max_rounds: int,
     ceiling: str,
-) -> DataFrame:
+    n_rows: int | None = None,
+) -> tuple[DataFrame, int]:
     """Fixpoint peel of a checkpointed canonical edge set, shared by
     `operators/kcore.py` (node peel) and `ktruss` (edge peel): each
     round keeps ``survivors(und)``, checkpointed and counted, until a
     round drops nothing.  An emptied table is also a fixpoint (an empty
     set cannot shrink), so a peel that empties on its last round returns
     instead of raising.  Per-round driver work is one ``count()``; no
-    edge data is collected.  Still shrinking after ``max_rounds`` raises
+    edge data is collected.  Returns the peeled table and its row count;
+    ``n_rows``, when the caller already knows ``und``'s count, saves the
+    opening one.  Still shrinking after ``max_rounds`` raises
     RuntimeError(``ceiling``) — explicit cost ceiling, never silent
     truncation."""
-    n_prev = und.count()
+    n_prev = und.count() if n_rows is None else n_rows
     for _ in range(max_rounds):
         if n_prev == 0:
-            return und
+            return und, 0
         keep = survivors(und).localCheckpoint(eager=False)
         n_keep = keep.count()
         if n_keep in (n_prev, 0):
-            return keep
+            return keep, n_keep
         und, n_prev = keep, n_keep
     raise RuntimeError(ceiling)
 
@@ -236,10 +239,11 @@ def ktruss(
             "left_semi",
         )
 
-    return _peel(
+    truss, _ = _peel(
         und,
         supported,
         max_rounds,
         f"k-truss peel still shrinking after max_rounds={max_rounds}; "
         "raise the ceiling (deep peel cascade)",
     )
+    return truss

@@ -3,20 +3,23 @@
 The north-star dataflow (SURVEY.md §3 'Spark lifecycle equivalent'):
 
     pages ─extract──► text ─mentions──► mentions ─link──► linked
+                         │                 └─LSH+CC──► canonical map
                          └─triples──► triples ──────────────┤
-    surfaces ─LSH+CC──► canonical map ──────────────────────┤
                                                             ▼
                 nodes / edges (+content hashes, J1 join) ──► parquet + JSONL
 
-Every stage is (parquet in) → (parquet out + metrics); a completed stage is
-recorded in the ledger (``_ledger/<stage>.json`` next to the stage output)
-and skipped on re-run — the checkpoint/resume capability the reference lists
-as future work (``docs/Improvements.md:158``) and the north rule requires.
-Stage outputs are content-addressed by an input fingerprint PLUS digests of
-the configs the stage's upstream closure consumes (gazetteer, relation
-templates, canonicalization threshold), so a resumed run with different
-input or pipeline config invalidates the affected stages instead of
-silently reusing them.
+Every stage is (parquet in) → (parquet out + metrics), the export writing
+its JSONL file in place of parquet; a completed stage is recorded in the
+ledger (``_ledger/<stage>.json`` next to the stage output) and skipped on
+re-run — the checkpoint/resume capability the reference lists as future
+work (``docs/Improvements.md:158``) and the north rule requires.
+Each stage is declared once (``PagesPipeline._stages``): its input stages,
+the digests of the configs it reads itself (gazetteer, relation templates,
+canonicalization threshold) and a compute over exactly those inputs.  Its
+fingerprint hashes its own digests with its inputs' fingerprints, rooted at
+the run's input fingerprint, so the upstream closure follows from the
+wiring: a resumed run with different input or pipeline config invalidates
+the affected stages instead of silently reusing them.
 
 Metrics per stage: row count, wall seconds, and the rows of each written
 part file — read from the parquet footers, so they cost no Spark job — written
@@ -28,6 +31,7 @@ filesystem.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -52,6 +56,7 @@ from neo4j_export_tool_spark.operators.mentions import (
     detect_mentions,
     extract_triples,
 )
+from neo4j_export_tool_spark.sources.jsonl_sink import export_jsonl
 
 
 # ---------------------------------------------------------------------------
@@ -98,18 +103,15 @@ class StageLedger:
 
 
 def _part_file_rows(out: str) -> list[int]:
-    """Rows per written parquet part file, in path order, from the footers
-    (no Spark job).  Walks subdirectories, so ``partitionBy`` output is
-    covered too."""
+    """Rows per written parquet part file, in name order, from the footers
+    (no Spark job)."""
     import pyarrow.parquet as pq
 
     files = sorted(
-        os.path.join(d, name)
-        for d, _, names in os.walk(out)
-        for name in names
+        name for name in os.listdir(out)
         if name.endswith(".parquet") and not name.startswith(("_", "."))
     )
-    return [pq.read_metadata(f).num_rows for f in files]
+    return [pq.read_metadata(os.path.join(out, name)).num_rows for name in files]
 
 
 @dataclass
@@ -123,6 +125,26 @@ class PipelineResult:
     performance: dict[str, Any] | None = None
 
 
+def _digest(obj: Any) -> str:
+    return hashlib.sha256(
+        json.dumps(obj, sort_keys=True, default=str).encode()
+    ).hexdigest()[:16]
+
+
+@dataclass(frozen=True)
+class _Stage:
+    """One stage: the stages it reads (``pages`` is the run's input), the
+    digests of the configs it reads itself, and a compute that receives
+    exactly those inputs, in order.  The compute returns a DataFrame,
+    which the runner writes as parquet, or (the export) the sink's result
+    for the file it wrote itself."""
+
+    name: str
+    inputs: tuple[str, ...]
+    digests: tuple[str, ...]
+    compute: Callable[..., Any]
+
+
 class PagesPipeline:
     """Configurable KG pipeline over a pages table
     (url, warc_ts, html, text, lang)."""
@@ -134,134 +156,130 @@ class PagesPipeline:
         gazetteer: dict[str, tuple[str, str]],
         relation_templates: list[tuple[str, str, str, str]],
         surfaces_by_label: dict[str, list[str]],
-        resume: bool = True,
     ):
         self.spark = spark
         self.work_dir = work_dir
         self.gazetteer = gazetteer
         self.templates = relation_templates
         self.surfaces_by_label = surfaces_by_label
-        self.resume = resume
         self.ledger = StageLedger(work_dir)
-        self.result = PipelineResult(work_dir)
-        # config digests folded into stage fingerprints: a resumed run with
-        # a changed gazetteer/templates/thresholds must invalidate the
-        # stages that consumed them, not silently reuse stale parquet
-        import hashlib
 
-        def digest(obj: Any) -> str:
-            return hashlib.sha256(
-                json.dumps(obj, sort_keys=True, default=str).encode()
-            ).hexdigest()[:16]
-
-        self._gaz_digest = digest(sorted(self.gazetteer.items()))
-        self._tpl_digest = digest(
+    def _stages(self) -> list[_Stage]:
+        """The dataflow in run order.  Computes look operators up by name
+        when they run, so a patched module attribute is the one called."""
+        gaz = _digest(sorted(self.gazetteer.items()))
+        tpl = _digest(
             [sorted(map(list, self.templates)),
              {k: sorted(v) for k, v in self.surfaces_by_label.items()}]
         )
-
-    def _stage_fp(self, base_fp: str, *digests: str) -> str:
-        """Input fingerprint + the digests of every config the stage (or its
-        upstream closure) consumes."""
-        return "+".join([base_fp, *digests])
+        canon_threshold = 40
+        return [
+            _Stage(
+                "extract", ("pages",), (),
+                lambda pages: pages.select(
+                    "url", "warc_ts", "lang", extract_text_udf(F.col("html")).alias("text")
+                ),
+            ),
+            _Stage(
+                "mentions", ("extract",), (gaz,),
+                lambda text: detect_mentions(text, self.gazetteer),
+            ),
+            _Stage(
+                "triples", ("extract",), (tpl,),
+                lambda text: extract_triples(
+                    text, build_relation_patterns(self.templates, self.surfaces_by_label)
+                ),
+            ),
+            # a leaf: the canonical map is written for the ledger and its
+            # readers; no stage consumes it yet
+            _Stage(
+                "canonicalize", ("mentions",), (f"threshold={canon_threshold}",),
+                lambda mentions: canonicalize_surfaces(
+                    mentions.select("surface"), threshold_pct=canon_threshold
+                ),
+            ),
+            _Stage(
+                "link", ("mentions",), (gaz,),
+                lambda mentions: link_mentions(
+                    mentions, kb_from_gazetteer(self.spark, self.gazetteer)
+                ).select(
+                    "url", "surface", "label", "canonical", "start", "end",
+                    "kb_id", "linked_name", "link_score",
+                ),
+            ),
+            _Stage(
+                "nodes", ("link",), (),
+                lambda linked: nodes_union(self._entity_nodes(linked)),
+            ),
+            _Stage("edges", ("triples", "link", "nodes"), (), self._build_edges),
+            _Stage(
+                "export", ("nodes", "edges"), (),
+                lambda nodes, edges: export_jsonl(
+                    nodes, edges, self.ledger.output_path("export"), db_name="pages_kg"
+                ),
+            ),
+        ]
 
     # -- stage runner -------------------------------------------------------
 
     def _run_stage(
-        self,
-        stage: str,
-        fingerprint: str,
-        compute: Callable[[], DataFrame],
-        partition_by: str | None = None,
-    ) -> DataFrame:
-        out = self.ledger.output_path(stage)
-        if self.resume and self.ledger.is_done(stage, fingerprint):
-            self.result.stages_skipped.append(stage)
-            return self.spark.read.parquet(out)
+        self, stage: _Stage, fingerprint: str, load: Callable[[str], DataFrame]
+    ) -> DataFrame | None:
+        """Skip the stage if the ledger has it at ``fingerprint``; otherwise
+        compute it over its loaded inputs, write it, record its metrics and
+        mark it done.  Returns a DataFrame over the written parquet, or None
+        (skipped, or the export)."""
+        out = self.ledger.output_path(stage.name)
+        if self.ledger.is_done(stage.name, fingerprint):
+            self.result.stages_skipped.append(stage.name)
+            return None
+        inputs = [load(name) for name in stage.inputs]
         t0 = time.perf_counter()
-        df = compute()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(out)
-        # the known schema skips inference (a job); partitionBy moves the
-        # partition column last, so that layout is still inferred
-        reader = self.spark.read if partition_by else self.spark.read.schema(df.schema)
-        materialized = reader.parquet(out)
-        partition_rows = _part_file_rows(out)
+        produced = stage.compute(*inputs)
+        if isinstance(produced, DataFrame):
+            produced.write.mode("overwrite").parquet(out)
+            # the known schema skips inference (a job)
+            materialized = self.spark.read.schema(produced.schema).parquet(out)
+            partition_rows, extra = _part_file_rows(out), {}
+        else:
+            # the sink wrote its own file; add a _SUCCESS marker for the ledger
+            open(os.path.join(out, "_SUCCESS"), "w").close()
+            materialized = None
+            partition_rows = [produced.node_count, produced.rel_count]
+            extra = {
+                "file": produced.path,
+                "sort_path": produced.sort_path,
+                "line_bytes": produced.line_bytes,
+            }
         metrics = {
             "rows": sum(partition_rows),
             "seconds": round(time.perf_counter() - t0, 3),
             "partition_rows": partition_rows,
+            **extra,
         }
-        self.ledger.mark_done(stage, fingerprint, metrics)
-        self.result.stages_run.append(stage)
-        self.result.metrics[stage] = metrics
+        self.ledger.mark_done(stage.name, fingerprint, metrics)
+        self.result.stages_run.append(stage.name)
+        self.result.metrics[stage.name] = metrics
         return materialized
-
-    # -- stages ---------------------------------------------------------------
 
     def run(self, pages: DataFrame, fingerprint: str) -> PipelineResult:
         """Run all stages. ``fingerprint``: identifies the input snapshot
         (e.g. corpus size + seed, or an Iceberg snapshot id)."""
-        fp = fingerprint
-        gaz, tpl = self._gaz_digest, self._tpl_digest
-        canon_threshold = 40
+        self.result = PipelineResult(self.work_dir)
+        fingerprints = {"pages": fingerprint}
+        outputs = {"pages": pages}
 
-        extracted = self._run_stage(
-            "extract",
-            self._stage_fp(fp),
-            lambda: pages.select(
-                "url",
-                "warc_ts",
-                "lang",
-                extract_text_udf(F.col("html")).alias("text"),
-            ),
-        )
+        def load(name: str) -> DataFrame:
+            if name not in outputs:  # skipped: read what an earlier run wrote
+                outputs[name] = self.spark.read.parquet(self.ledger.output_path(name))
+            return outputs[name]
 
-        mentions = self._run_stage(
-            "mentions",
-            self._stage_fp(fp, gaz),
-            lambda: detect_mentions(extracted, self.gazetteer),
-        )
-
-        triples = self._run_stage(
-            "triples",
-            self._stage_fp(fp, tpl),
-            lambda: extract_triples(
-                extracted,
-                build_relation_patterns(self.templates, self.surfaces_by_label),
-            ),
-        )
-
-        canonical_map = self._run_stage(
-            "canonicalize",
-            self._stage_fp(fp, gaz, f"threshold={canon_threshold}"),
-            lambda: canonicalize_surfaces(
-                mentions.select("surface"), threshold_pct=canon_threshold
-            ),
-        )
-
-        linked = self._run_stage(
-            "link",
-            self._stage_fp(fp, gaz),
-            lambda: link_mentions(
-                mentions, kb_from_gazetteer(self.spark, self.gazetteer)
-            ).select(
-                "url", "surface", "label", "canonical", "start", "end",
-                "kb_id", "linked_name", "link_score",
-            ),
-        )
-
-        nodes = self._run_stage(
-            "nodes", self._stage_fp(fp, gaz), lambda: self._build_nodes(linked)
-        )
-        edges = self._run_stage(
-            "edges",
-            self._stage_fp(fp, gaz, tpl),
-            lambda: self._build_edges(triples, linked, nodes),
-        )
-        self._export_stage(nodes, edges, self._stage_fp(fp, gaz, tpl))
+        for stage in self._stages():
+            fp = _digest([stage.digests, [fingerprints[i] for i in stage.inputs]])
+            fingerprints[stage.name] = fp
+            materialized = self._run_stage(stage, fp, load)
+            if materialized is not None:
+                outputs[stage.name] = materialized
 
         # classify the run's stage-timing trend (constant/linear/exponential,
         # reference Export/Types.fs:179-208); stages are this engine's
@@ -275,31 +293,6 @@ class PagesPipeline:
             )
         self.result.performance = tracker.metrics()
         return self.result
-
-    def _export_stage(self, nodes: DataFrame, edges: DataFrame, fp: str) -> None:
-        """JSONL export as a ledger stage (reference-format file)."""
-        from neo4j_export_tool_spark.sources.jsonl_sink import export_jsonl
-
-        stage = "export"
-        out = self.ledger.output_path(stage)
-        if self.resume and self.ledger.is_done(stage, fp):
-            self.result.stages_skipped.append(stage)
-            return
-        t0 = time.perf_counter()
-        res = export_jsonl(nodes, edges, out, db_name="pages_kg")
-        # the sink writes its own file; add a _SUCCESS marker for the ledger
-        open(os.path.join(out, "_SUCCESS"), "w").close()
-        metrics = {
-            "rows": res.node_count + res.rel_count,
-            "seconds": round(time.perf_counter() - t0, 3),
-            "partition_rows": [res.node_count, res.rel_count],
-            "file": res.path,
-            "sort_path": res.sort_path,
-            "line_bytes": res.line_bytes,
-        }
-        self.ledger.mark_done(stage, fp, metrics)
-        self.result.stages_run.append(stage)
-        self.result.metrics[stage] = metrics
 
     # -- graph materialization ------------------------------------------------
 
@@ -318,9 +311,6 @@ class PagesPipeline:
             element_id=F.concat(F.lit("entity:"), F.col("ent_label"), F.lit(":"), F.col("name")),
             props={"name": F.col("name")},
         )
-
-    def _build_nodes(self, linked: DataFrame) -> DataFrame:
-        return nodes_union(self._entity_nodes(linked))
 
     def _build_edges(
         self, triples: DataFrame, linked: DataFrame, nodes: DataFrame

@@ -249,6 +249,7 @@ def generate_pages(
     return pages, oracle
 
 
+# the pages table: the WARC source and the page stream produce it too
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 

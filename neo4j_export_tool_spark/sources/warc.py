@@ -30,11 +30,7 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-# the input_hint pages shape: text/lang are null here — filled downstream
-# by extraction (byte-deterministic) and language ID
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+from neo4j_export_tool_spark.sources.synth import PAGES_DDL
 
 
 def _split_records(raw: bytes) -> Iterator[bytes]:
@@ -117,7 +113,9 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
                 }
             )
 
-    return files.mapInPandas(run, schema=PAGES_SCHEMA)
+    # the pages table shape: text/lang are null here — filled downstream
+    # by extraction (byte-deterministic) and language ID
+    return files.mapInPandas(run, schema=PAGES_DDL)
 
 
 def write_warc(records: list[tuple[str, datetime, bytes]], compress: bool = False) -> bytes:

@@ -17,9 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PAGES_DDL = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+from neo4j_export_tool_spark.sources.synth import PAGES_DDL
 
 
 def stream_pages(spark: SparkSession, source_dir: str) -> DataFrame:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -93,10 +95,14 @@ def test_idf_weighting_prefers_distinctive_trigrams(spark):
     """IDF weighting must rank the distinctive-name match above a
     boilerplate-suffix match where binary weights would tie or flip."""
     from neo4j_export_tool_spark.operators.linking import (
+        _trigrams,
         build_idf,
         tfidf_trigram_cosine,
-        trigram_cosine,
     )
+
+    def binary_cosine(a, b):
+        ta, tb = _trigrams(a), _trigrams(b)
+        return len(ta & tb) / math.sqrt(len(ta) * len(tb))
 
     kb_names = [f"Acme Inc", "Bolt Inc", "Crux Inc", "Dyno Inc", "Acme Labs"]
     idf = build_idf(kb_names)
@@ -106,8 +112,8 @@ def test_idf_weighting_prefers_distinctive_trigrams(spark):
     s_boiler = tfidf_trigram_cosine(surface, "Bolt Inc", idf)
     assert s_match > s_boiler
     # idf widens the margin relative to binary weighting
-    b_match = trigram_cosine(surface, "Acme Inc")
-    b_boiler = trigram_cosine(surface, "Bolt Inc")
+    b_match = binary_cosine(surface, "Acme Inc")
+    b_boiler = binary_cosine(surface, "Bolt Inc")
     assert (s_match - s_boiler) > (b_match - b_boiler) * 0.9
     # determinism
     assert s_match == tfidf_trigram_cosine(surface, "Acme Inc", idf)
@@ -209,9 +215,9 @@ def test_link_score_deterministic_across_hash_seeds():
 
 def test_vectorized_batch_scorer_bit_exact():
     """The numpy batch scorer (round-4: last per-row Python in a join path
-    removed) must equal the scalar twins BIT-exactly — same canonical
-    reduceat fold over sorted trigram weights — for idf and binary modes,
-    including null/empty inputs."""
+    removed) must equal the scalar twin BIT-exactly — same canonical
+    reduceat fold over sorted trigram weights — including null/empty
+    inputs."""
     import random
 
     import numpy as np
@@ -220,7 +226,6 @@ def test_vectorized_batch_scorer_bit_exact():
         _score_pairs_batch,
         build_idf,
         tfidf_trigram_cosine,
-        trigram_cosine,
     )
 
     rng = random.Random(7)
@@ -234,18 +239,14 @@ def test_vectorized_batch_scorer_bit_exact():
     pairs += [(None, "Acme Inc"), ("Acme Inc", None), (None, None)]
     s = np.array([p[0] for p in pairs], dtype=object)
     n = np.array([p[1] for p in pairs], dtype=object)
-    for use_idf in (True, False):
-        got = _score_pairs_batch(s, n, idf if use_idf else None)
-        exp = np.array([
-            0.0
-            if a is None or b is None
-            else (tfidf_trigram_cosine(a, b, idf) if use_idf else trigram_cosine(a, b))
-            for a, b in pairs
-        ])
-        assert (got == exp).all(), (
-            f"idf={use_idf}: first mismatch at "
-            f"{np.flatnonzero(got != exp)[:3]}"
-        )
+    got = _score_pairs_batch(s, n, idf)
+    exp = np.array([
+        0.0 if a is None or b is None else tfidf_trigram_cosine(a, b, idf)
+        for a, b in pairs
+    ])
+    assert (got == exp).all(), (
+        f"first mismatch at {np.flatnonzero(got != exp)[:3]}"
+    )
 
 
 def test_ann_empty_and_null_inputs(spark):

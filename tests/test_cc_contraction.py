@@ -160,7 +160,7 @@ def test_one_partition_finish_equals_loop(spark, id_type):
     finish (the default on a small graph) and the label-propagation loop
     (forced with rows_per_loop_partition=1) return identical component
     maps, both converged, on random graphs with half-null edges."""
-    for seed, pre_contract in ((5, True), (11, False)):
+    for seed in (5, 11):
         rng = random.Random(seed)
         n = 60
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(90)]
@@ -176,11 +176,7 @@ def test_one_partition_finish_equals_loop(spark, id_type):
         df = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}").repartition(3)
         got = {}
         for rows_per_part, path in ((500_000, "one_partition"), (1, "label_propagation")):
-            res = connected_components(
-                df,
-                rows_per_loop_partition=rows_per_part,
-                pre_contract=pre_contract,
-            )
+            res = connected_components(df, rows_per_loop_partition=rows_per_part)
             assert res.converged, (path, seed)
             assert res.path == path
             assert (res.loop_partitions == 1) == (path == "one_partition")
@@ -189,13 +185,13 @@ def test_one_partition_finish_equals_loop(spark, id_type):
             got[path] = sorted(
                 (r["id"], r["component"]) for r in res.components.collect()
             )
-        assert got["one_partition"] == got["label_propagation"], (seed, pre_contract)
-        assert dict(got["one_partition"]) == expected, (seed, pre_contract)
+        assert got["one_partition"] == got["label_propagation"], seed
+        assert dict(got["one_partition"]) == expected, seed
 
 
 def test_null_endpoints_and_empty_graph(spark):
     df = spark.createDataFrame([(1, None), (None, None)], "src long, dst long")
-    res = connected_components(df, pre_contract=False).components
+    res = connected_components(df).components
     # the half-null edge's endpoint is a vertex; a null is not
     assert [tuple(r) for r in res.collect()] == [(1, 1)]
     empty = connected_components(spark.createDataFrame([], "src long, dst long"))

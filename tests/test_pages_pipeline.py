@@ -36,9 +36,7 @@ def work_dir(tmp_path_factory):
 @pytest.fixture(scope="module")
 def first_run(spark, work_dir):
     pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
-    pipe = PagesPipeline(
-        spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES, resume=True
-    )
+    pipe = PagesPipeline(spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES)
     return pipe.run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
 
 
@@ -108,21 +106,21 @@ def test_edges_resolved_with_hashes(spark, work_dir, first_run):
 
 def test_resume_skips_completed_stages(spark, work_dir, first_run):
     pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
-    pipe = PagesPipeline(
-        spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES, resume=True
-    )
+    pipe = PagesPipeline(spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES)
     res = pipe.run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
     assert res.stages_run == []
     assert len(res.stages_skipped) == 8
+    # a second run of the same pipeline reports its own stages only
+    again = pipe.run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
+    assert again is not res
+    assert (again.stages_run, len(again.stages_skipped)) == ([], 8)
 
 
 def test_invalidated_stage_recomputes(spark, work_dir, first_run):
     ledger = StageLedger(work_dir)
     ledger.invalidate("triples")
     pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
-    pipe = PagesPipeline(
-        spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES, resume=True
-    )
+    pipe = PagesPipeline(spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES)
     res = pipe.run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
     assert "triples" in res.stages_run
     assert "extract" in res.stages_skipped
@@ -130,9 +128,7 @@ def test_invalidated_stage_recomputes(spark, work_dir, first_run):
 
 def test_different_fingerprint_invalidates(spark, work_dir, first_run):
     pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
-    pipe = PagesPipeline(
-        spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES, resume=True
-    )
+    pipe = PagesPipeline(spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES)
     res = pipe.run(pages, fingerprint="other-input")
     assert len(res.stages_run) == 8
 
@@ -177,19 +173,47 @@ def test_changed_config_invalidates_dependent_stages(spark, work_dir, first_run)
     pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
     # re-baseline: earlier tests rewrite ledger entries with foreign
     # fingerprints; restore the canonical-run ledger first
-    PagesPipeline(
-        spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES, resume=True
-    ).run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
+    PagesPipeline(spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES).run(
+        pages, fingerprint=f"synth:{N_DOCS}:{SEED}"
+    )
     gaz2 = dict(GAZETTEER)
     gaz2["Spark Harbor"] = ("Place", "Spark Harbor")
-    pipe = PagesPipeline(
-        spark, work_dir, gaz2, RELATION_TEMPLATES, SURFACES, resume=True
-    )
+    pipe = PagesPipeline(spark, work_dir, gaz2, RELATION_TEMPLATES, SURFACES)
     res = pipe.run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
     assert "extract" in res.stages_skipped
     assert "triples" in res.stages_skipped
     for stage in ["mentions", "canonicalize", "link", "nodes", "edges", "export"]:
         assert stage in res.stages_run, stage
+
+
+STAGES = ["extract", "mentions", "triples", "canonicalize", "link", "nodes", "edges", "export"]
+RERUN = {
+    "none": [],
+    "gazetteer": ["mentions", "canonicalize", "link", "nodes", "edges", "export"],
+    "templates": ["triples", "edges", "export"],
+    "fingerprint": STAGES,
+}
+
+
+@pytest.mark.parametrize("change", list(RERUN))
+def test_resume_matrix(spark, work_dir, first_run, change):
+    """Exactly the stages downstream of a change rerun, in declaration
+    order: a stage's fingerprint follows from its own config digests and
+    its inputs' fingerprints."""
+    pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
+    fp = f"synth:{N_DOCS}:{SEED}"
+    # re-baseline: earlier tests leave ledger entries of other configs
+    PagesPipeline(spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES).run(pages, fp)
+    gaz = {**GAZETTEER, "Spark Harbor": ("Place", "Spark Harbor")}
+    res = PagesPipeline(
+        spark,
+        work_dir,
+        gaz if change == "gazetteer" else GAZETTEER,
+        RELATION_TEMPLATES[:-1] if change == "templates" else RELATION_TEMPLATES,
+        SURFACES,
+    ).run(pages, "other-input" if change == "fingerprint" else fp)
+    assert res.stages_run == RERUN[change]
+    assert res.stages_skipped == [s for s in STAGES if s not in RERUN[change]]
 
 
 def test_ledger_metrics_match_written_stages(spark, tmp_path):
@@ -198,9 +222,10 @@ def test_ledger_metrics_match_written_stages(spark, tmp_path):
     a resumed run still skips every stage."""
 
     class Recording(PagesPipeline):
-        def _run_stage(self, stage, fingerprint, compute, partition_by=None):
-            df = super()._run_stage(stage, fingerprint, compute, partition_by)
-            returned[stage] = df
+        def _run_stage(self, stage, fingerprint, load):
+            df = super()._run_stage(stage, fingerprint, load)
+            if df is not None:
+                returned[stage.name] = df
             return df
 
     returned = {}
@@ -222,16 +247,6 @@ def test_ledger_metrics_match_written_stages(spark, tmp_path):
     )
     assert again.stages_run == []
     assert again.stages_skipped == res.stages_run
-
-
-def test_partitioned_stage_counts_every_part_file(spark, tmp_path):
-    pipe = PagesPipeline(spark, str(tmp_path), GAZETTEER, RELATION_TEMPLATES, SURFACES)
-    src = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("k"))
-    out = pipe._run_stage("part", "fp", lambda: src.repartition(2), partition_by="k")
-    m = pipe.result.metrics["part"]
-    assert m["rows"] == out.count() == 100
-    assert len(m["partition_rows"]) >= 3  # one file or more per k value
-    assert sorted(out.columns) == ["id", "k"]
 
 
 def test_pipeline_performance_trend(first_run):

@@ -94,8 +94,7 @@ def test_warc_pages_feed_the_full_pipeline(spark, tmp_path):
         "Place": [s for a in PLACES.values() for s in a],
     }
     pipe = PagesPipeline(
-        spark, str(tmp_path / "work"), GAZETTEER, RELATION_TEMPLATES,
-        surfaces, resume=False,
+        spark, str(tmp_path / "work"), GAZETTEER, RELATION_TEMPLATES, surfaces
     )
     res = pipe.run(loaded, fingerprint="warc-crawl-test")
     assert "export" in res.stages_run
