@@ -45,8 +45,8 @@ def _reduce_sorted(weights: np.ndarray) -> float:
     """THE canonical float fold for link scores: ``np.add.reduceat`` over
     weights in lexicographically-sorted trigram order.  One fixed
     reduction tree over one fixed element order → bit-identical across
-    processes, hash seeds, and the scalar/batch code paths (the batch
-    kernel runs the same reduceat per segment)."""
+    processes, hash seeds, and the batch scorer's segments (it runs the
+    same reduceat per segment, as does the scalar twin in the tests)."""
     if len(weights) == 0:
         return 0.0
     return float(np.add.reduceat(weights, np.array([0]))[0])
@@ -57,34 +57,11 @@ def _block_key(col):
     return F.lower(F.regexp_extract(col, r"[A-Za-z0-9]+", 0))
 
 
-def _sorted_trigram_sum(trigrams, idf: Mapping[str, float], default: float) -> float:
-    """Sum of squared IDF weights in SORTED trigram order — Python set
-    iteration order is hash-seed-dependent (varies across executor
-    processes), and float addition is not associative, so an unsorted sum
-    would make link scores differ in the last ulp between runs and could
-    flip top-1 ties.  The fold itself is ``_reduce_sorted`` (numpy
-    reduceat), the same reduction the vectorized batch scorer applies per
-    segment — scalar and batch paths agree to the bit."""
-    w = np.array([idf.get(t, default) for t in sorted(trigrams)], dtype=np.float64)
-    return _reduce_sorted(w * w)
-
-
-def build_idf(names: list[str]) -> dict[str, float]:
-    """Smoothed IDF per trigram over the KB name corpus:
-    idf(t) = ln((1+N)/(1+df(t))) + 1 (sklearn-style smoothing).
-    Driver-side kernel — use `kb_trigram_idf` for a DataFrame KB."""
-    n = len(names)
-    df: dict[str, int] = {}
-    for name in names:
-        for t in _trigrams(name):
-            df[t] = df.get(t, 0) + 1
-    return {t: math.log((1 + n) / (1 + d)) + 1.0 for t, d in df.items()}
-
-
 def kb_trigram_idf(kb: DataFrame, kb_name_col: str = "name") -> dict[str, float]:
-    """Distributed twin of `build_idf`: trigram document frequencies via
-    Arrow-batched explode + groupBy count; the collect is bounded by the
-    trigram VOCABULARY (~10⁵), never by KB size.  Trigram extraction runs
+    """Smoothed IDF per trigram over the KB names,
+    idf(t) = ln((1+N)/(1+df(t))) + 1 (sklearn-style smoothing).  Document
+    frequencies come from an Arrow-batched explode + groupBy count; the
+    collect is bounded by the trigram VOCABULARY (~10⁵), never by KB size.  Trigram extraction runs
     the same Python `_trigrams` kernel as the scorer, so keys match exactly
     (JVM lower() differs from str.lower() on some unicode)."""
 
@@ -113,23 +90,6 @@ def kb_trigram_idf(kb: DataFrame, kb_name_col: str = "name") -> dict[str, float]
     }
 
 
-def tfidf_trigram_cosine(a: str, b: str, idf: Mapping[str, float]) -> float:
-    """IDF-weighted character-trigram cosine: shared boilerplate trigrams
-    ("Inc", "Ltd", " Co") carry little weight; distinctive name trigrams
-    dominate — the TF-IDF scoring the north star specifies for candidate
-    ranking (binary TF; surfaces are short)."""
-    ta, tb = _trigrams(a), _trigrams(b)
-    if not ta or not tb:
-        return 0.0
-    default = 1.0
-    num = _sorted_trigram_sum(ta & tb, idf, default)
-    na = math.sqrt(_sorted_trigram_sum(ta, idf, default))
-    nb = math.sqrt(_sorted_trigram_sum(tb, idf, default))
-    if na == 0.0 or nb == 0.0:
-        return 0.0
-    return num / (na * nb)
-
-
 def _score_pairs_batch(
     surfaces: np.ndarray,
     names: np.ndarray,
@@ -147,7 +107,8 @@ def _score_pairs_batch(
       lexicographic trigram order,
     - per-string norms and per-pair shared-trigram numerators reduce via
       ``np.add.reduceat`` over code-sorted weights — the SAME canonical
-      fold as the scalar ``tfidf_trigram_cosine`` (bit-identical),
+      fold as the scalar twin in ``tests/test_ann_cc_linking.py``
+      (bit-identical),
     - all pair intersections compute in ONE ``np.intersect1d`` over
       ``pair_index * V + code`` composite keys.
     """
@@ -254,7 +215,7 @@ def link_mentions(
 
     ``kb``: (kb_id, name[, aliases...]).  Candidates share a blocking key
     with the surface; ties broken by kb_id for determinism.  Scoring is
-    IDF-weighted trigram cosine (`tfidf_trigram_cosine`); the IDF table is
+    IDF-weighted trigram cosine (`_score_pairs_batch`); the IDF table is
     computed distributed (`kb_trigram_idf`) and only the
     trigram-vocabulary-sized map ships in the scorer closure — KB rows
     never collect to the driver.

@@ -21,11 +21,22 @@ the run's input fingerprint, so the upstream closure follows from the
 wiring: a resumed run with different input or pipeline config invalidates
 the affected stages instead of silently reusing them.
 
-Metrics per stage: row count, wall seconds, and the rows of each written
-part file — read from the parquet footers, so they cost no Spark job — written
-into the ledger entry (the Spark analog of the reference's per-label stats +
-batch-timing trackers, ``Export/Types.fs:140-216``).  Like the rest of the
-ledger, this assumes the work dir is on a local (or locally mounted)
+A stage starts as soon as its inputs are done, on a thread pool sized by
+the stage list, so ``triples`` and the ``canonicalize`` leaf run beside the
+link → nodes → edges → export chain; Spark's scheduler interleaves their
+jobs, which on their own leave most of the executor cores idle.  Each
+stage's Spark jobs are described ``pages_pipeline:<stage>``.  The result
+(``stages_run``, ``stages_skipped``, ``metrics``) keeps declaration order
+whatever order the stages finished in.
+
+Metrics per stage: row count, start offset from the start of the run, wall
+seconds, and the rows of each written part file — read from the parquet
+footers, so they cost no Spark job — written into the ledger entry (the
+Spark analog of the reference's per-label stats + batch-timing trackers,
+``Export/Types.fs:140-216``).  An entry is written to a temp file and
+renamed into place, and an unparsable entry reads as missing, so a crash
+mid-write re-runs the stage instead of failing the resume.  Like the rest
+of the ledger, this assumes the work dir is on a local (or locally mounted)
 filesystem.
 """
 
@@ -36,9 +47,11 @@ import json
 import os
 import time
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,10 +89,12 @@ class StageLedger:
         return os.path.join(self.work_dir, "stages", stage)
 
     def read(self, stage: str) -> dict[str, Any] | None:
+        """The stage's entry, or None when it is missing or unparsable (cut
+        short by a crash mid-write)."""
         try:
             with open(self._entry_path(stage), encoding="utf-8") as f:
                 return json.load(f)
-        except FileNotFoundError:
+        except (FileNotFoundError, ValueError):
             return None
 
     def is_done(self, stage: str, fingerprint: str) -> bool:
@@ -91,9 +106,12 @@ class StageLedger:
         )
 
     def mark_done(self, stage: str, fingerprint: str, metrics: dict[str, Any]) -> None:
-        os.makedirs(os.path.dirname(self._entry_path(stage)), exist_ok=True)
-        with open(self._entry_path(stage), "w", encoding="utf-8") as f:
+        path = self._entry_path(stage)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
             json.dump({"fingerprint": fingerprint, "metrics": metrics}, f, indent=1)
+        os.replace(tmp, path)
 
     def invalidate(self, stage: str) -> None:
         try:
@@ -120,6 +138,9 @@ class PipelineResult:
     stages_run: list[str] = field(default_factory=list)
     stages_skipped: list[str] = field(default_factory=list)
     metrics: dict[str, dict[str, Any]] = field(default_factory=dict)
+    # wall seconds of the whole run; stages overlap, so this is less than
+    # the sum of their ``seconds``
+    wall_s: float = 0.0
     # BatchPerformanceTracker.metrics() over the stage wall times — the
     # reference's pagination_performance analog (Export/Types.fs:140-216)
     performance: dict[str, Any] | None = None
@@ -165,8 +186,9 @@ class PagesPipeline:
         self.ledger = StageLedger(work_dir)
 
     def _stages(self) -> list[_Stage]:
-        """The dataflow in run order.  Computes look operators up by name
-        when they run, so a patched module attribute is the one called."""
+        """The dataflow in declaration order, the order of the ledger and
+        the result.  Computes look operators up by name when they run, so a
+        patched module attribute is the one called."""
         gaz = _digest(sorted(self.gazetteer.items()))
         tpl = _digest(
             [sorted(map(list, self.templates)),
@@ -223,17 +245,13 @@ class PagesPipeline:
     # -- stage runner -------------------------------------------------------
 
     def _run_stage(
-        self, stage: _Stage, fingerprint: str, load: Callable[[str], DataFrame]
+        self, stage: _Stage, fingerprint: str, inputs: list[DataFrame]
     ) -> DataFrame | None:
-        """Skip the stage if the ledger has it at ``fingerprint``; otherwise
-        compute it over its loaded inputs, write it, record its metrics and
-        mark it done.  Returns a DataFrame over the written parquet, or None
-        (skipped, or the export)."""
+        """Compute the stage over its inputs, write it, record its metrics
+        and mark it done.  Runs on a pool thread.  Returns a DataFrame over
+        the written parquet, or None (the export)."""
+        self.spark.sparkContext.setJobDescription(f"pages_pipeline:{stage.name}")
         out = self.ledger.output_path(stage.name)
-        if self.ledger.is_done(stage.name, fingerprint):
-            self.result.stages_skipped.append(stage.name)
-            return None
-        inputs = [load(name) for name in stage.inputs]
         t0 = time.perf_counter()
         produced = stage.compute(*inputs)
         if isinstance(produced, DataFrame):
@@ -253,33 +271,81 @@ class PagesPipeline:
             }
         metrics = {
             "rows": sum(partition_rows),
+            "start_s": round(t0 - self._t_run, 3),
             "seconds": round(time.perf_counter() - t0, 3),
             "partition_rows": partition_rows,
             **extra,
         }
         self.ledger.mark_done(stage.name, fingerprint, metrics)
-        self.result.stages_run.append(stage.name)
-        self.result.metrics[stage.name] = metrics
+        self.result.metrics[stage.name] = metrics  # one key per stage thread
         return materialized
 
     def run(self, pages: DataFrame, fingerprint: str) -> PipelineResult:
-        """Run all stages. ``fingerprint``: identifies the input snapshot
-        (e.g. corpus size + seed, or an Iceberg snapshot id)."""
+        """Run all stages, each as soon as its inputs are done.
+        ``fingerprint``: identifies the input snapshot (e.g. corpus size +
+        seed, or an Iceberg snapshot id).
+
+        The calling thread decides skips, reads a skipped stage's output
+        back when a stage that runs needs it, and submits; each submitted
+        stage inherits the caller's Spark local properties and tags.  When
+        a stage raises, nothing new starts, the stages already running
+        finish (and are marked done), and the error of the earliest failed
+        stage in declaration order is raised."""
         self.result = PipelineResult(self.work_dir)
+        self._t_run = time.perf_counter()
+        stages = self._stages()
         fingerprints = {"pages": fingerprint}
+        for stage in stages:
+            fingerprints[stage.name] = _digest(
+                [stage.digests, [fingerprints[i] for i in stage.inputs]]
+            )
         outputs = {"pages": pages}
+        done, ran, skipped = {"pages"}, set(), set()
+        failed: dict[str, BaseException] = {}
+        waiting = list(stages)
+        running: dict[Future, str] = {}
 
         def load(name: str) -> DataFrame:
             if name not in outputs:  # skipped: read what an earlier run wrote
                 outputs[name] = self.spark.read.parquet(self.ledger.output_path(name))
             return outputs[name]
 
-        for stage in self._stages():
-            fp = _digest([stage.digests, [fingerprints[i] for i in stage.inputs]])
-            fingerprints[stage.name] = fp
-            materialized = self._run_stage(stage, fp, load)
-            if materialized is not None:
-                outputs[stage.name] = materialized
+        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+            while True:
+                # a skipped stage is done at once and may ready more stages
+                while not failed and (
+                    ready := [s for s in waiting if done.issuperset(s.inputs)]
+                ):
+                    for stage in ready:
+                        waiting.remove(stage)
+                        fp = fingerprints[stage.name]
+                        if self.ledger.is_done(stage.name, fp):
+                            skipped.add(stage.name)
+                            done.add(stage.name)
+                            continue
+                        # decorated here: it captures this thread's properties
+                        task = inheritable_thread_target(self.spark)(self._run_stage)
+                        inputs = [load(name) for name in stage.inputs]
+                        running[pool.submit(task, stage, fp, inputs)] = stage.name
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for future in finished:
+                    name = running.pop(future)
+                    if (error := future.exception()) is not None:
+                        failed[name] = error
+                        continue
+                    done.add(name)
+                    ran.add(name)
+                    if (materialized := future.result()) is not None:
+                        outputs[name] = materialized
+        order = [s.name for s in stages]
+        if failed:
+            raise failed[next(n for n in order if n in failed)]
+        self.result.wall_s = round(time.perf_counter() - self._t_run, 3)
+        self.result.stages_run = [n for n in order if n in ran]
+        self.result.stages_skipped = [n for n in order if n in skipped]
+        self.result.metrics = {n: self.result.metrics[n] for n in self.result.stages_run}
 
         # classify the run's stage-timing trend (constant/linear/exponential,
         # reference Export/Types.fs:179-208); stages are this engine's
@@ -288,9 +354,7 @@ class PagesPipeline:
 
         tracker = BatchPerformanceTracker(strategy="stage_ledger", sample_every=1)
         for stage in self.result.stages_run:
-            tracker.record_batch(
-                self.result.metrics.get(stage, {}).get("seconds", 0.0) * 1000.0
-            )
+            tracker.record_batch(self.result.metrics[stage]["seconds"] * 1000.0)
         self.result.performance = tracker.metrics()
         return self.result
 

@@ -13,8 +13,57 @@ from neo4j_export_tool_spark.operators.ann import (
     ivf_topk,
 )
 from neo4j_export_tool_spark.operators.components import connected_components
-from neo4j_export_tool_spark.operators.linking import kb_from_gazetteer, link_mentions
+from neo4j_export_tool_spark.operators.linking import (
+    _reduce_sorted,
+    _trigrams,
+    kb_from_gazetteer,
+    link_mentions,
+)
 from neo4j_export_tool_spark.sources.synth import GAZETTEER
+
+
+# -- scalar twins of the linking kernels --------------------------------------
+
+def _sorted_trigram_sum(trigrams, idf, default: float) -> float:
+    """Sum of squared IDF weights in SORTED trigram order — Python set
+    iteration order is hash-seed-dependent (varies across executor
+    processes), and float addition is not associative, so an unsorted sum
+    would make link scores differ in the last ulp between runs and could
+    flip top-1 ties.  The fold itself is ``_reduce_sorted`` (numpy
+    reduceat), the same reduction the vectorized batch scorer applies per
+    segment — scalar and batch paths agree to the bit."""
+    import numpy as np
+
+    w = np.array([idf.get(t, default) for t in sorted(trigrams)], dtype=np.float64)
+    return _reduce_sorted(w * w)
+
+
+def build_idf(names: list[str]) -> dict[str, float]:
+    """Single-process twin of ``kb_trigram_idf``: smoothed IDF per trigram over
+    the KB name corpus, idf(t) = ln((1+N)/(1+df(t))) + 1."""
+    n = len(names)
+    df: dict[str, int] = {}
+    for name in names:
+        for t in _trigrams(name):
+            df[t] = df.get(t, 0) + 1
+    return {t: math.log((1 + n) / (1 + d)) + 1.0 for t, d in df.items()}
+
+
+def tfidf_trigram_cosine(a: str, b: str, idf) -> float:
+    """Scalar twin of ``_score_pairs_batch``: IDF-weighted character-trigram
+    cosine (binary TF; surfaces are short), so shared boilerplate trigrams
+    ("Inc", "Ltd", " Co") carry little weight and distinctive name trigrams
+    dominate."""
+    ta, tb = _trigrams(a), _trigrams(b)
+    if not ta or not tb:
+        return 0.0
+    default = 1.0
+    num = _sorted_trigram_sum(ta & tb, idf, default)
+    na = math.sqrt(_sorted_trigram_sum(ta, idf, default))
+    nb = math.sqrt(_sorted_trigram_sum(tb, idf, default))
+    if na == 0.0 or nb == 0.0:
+        return 0.0
+    return num / (na * nb)
 
 
 @pytest.fixture(scope="module")
@@ -94,12 +143,6 @@ def test_connected_components_long_chain_checkpointing(spark):
 def test_idf_weighting_prefers_distinctive_trigrams(spark):
     """IDF weighting must rank the distinctive-name match above a
     boilerplate-suffix match where binary weights would tie or flip."""
-    from neo4j_export_tool_spark.operators.linking import (
-        _trigrams,
-        build_idf,
-        tfidf_trigram_cosine,
-    )
-
     def binary_cosine(a, b):
         ta, tb = _trigrams(a), _trigrams(b)
         return len(ta & tb) / math.sqrt(len(ta) * len(tb))
@@ -143,7 +186,7 @@ def test_entity_linking_aliases(spark):
 def test_distributed_idf_matches_driver_kernel(spark):
     """kb_trigram_idf (distributed, bounded collect) must equal build_idf
     (driver kernel) exactly — same trigram sets, same counts, same floats."""
-    from neo4j_export_tool_spark.operators.linking import build_idf, kb_trigram_idf
+    from neo4j_export_tool_spark.operators.linking import kb_trigram_idf
 
     names = [
         "Acme Analytics", "Acme Corp", "Claude Shannon", "Grace Hopper",
@@ -191,22 +234,28 @@ def test_link_score_deterministic_across_hash_seeds():
     """Scores must not depend on Python's randomized set iteration order —
     float addition is non-associative, and executors run with different
     hash seeds."""
+    import os
     import subprocess
     import sys
 
     code = (
-        "from neo4j_export_tool_spark.operators.linking import "
-        "build_idf, tfidf_trigram_cosine;"
+        "import numpy as np;"
+        "from neo4j_export_tool_spark.operators.linking import _score_pairs_batch;"
+        "from test_ann_cc_linking import build_idf, tfidf_trigram_cosine;"
         "idf = build_idf(['Acme Analytics','Acme Corp','Grace Hopper',"
         "'Café München GmbH']);"
-        "print(repr(tfidf_trigram_cosine('Acme Analytic', 'Acme Analytics', idf)))"
+        "print(repr(tfidf_trigram_cosine('Acme Analytic', 'Acme Analytics', idf)),"
+        "repr(_score_pairs_batch(np.array(['Acme Analytic'], dtype=object),"
+        "np.array(['Acme Analytics'], dtype=object), idf)[0]))"
     )
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    path = os.pathsep.join([os.path.dirname(tests_dir), tests_dir])
     outs = {
         subprocess.run(
             [sys.executable, "-c", code],
             capture_output=True, text=True, check=True,
             env={"PYTHONHASHSEED": str(seed), "PATH": "/usr/bin:/bin",
-                 "PYTHONPATH": "/root/repo"},
+                 "PYTHONPATH": path},
         ).stdout.strip()
         for seed in ("0", "1", "42")
     }
@@ -222,11 +271,7 @@ def test_vectorized_batch_scorer_bit_exact():
 
     import numpy as np
 
-    from neo4j_export_tool_spark.operators.linking import (
-        _score_pairs_batch,
-        build_idf,
-        tfidf_trigram_cosine,
-    )
+    from neo4j_export_tool_spark.operators.linking import _score_pairs_batch
 
     rng = random.Random(7)
     names = [

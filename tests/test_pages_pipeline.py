@@ -1,13 +1,16 @@
-"""Full pages pipeline: end-to-end correctness, resumability, triple P/R."""
+"""Full pages pipeline: end-to-end correctness, resumability, triple P/R,
+stages that overlap and a run that fails part-way."""
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from neo4j_export_tool_spark.plans import pages_pipeline
 from neo4j_export_tool_spark.plans.pages_pipeline import PagesPipeline, StageLedger
 from neo4j_export_tool_spark.sources.synth import (
     GAZETTEER,
@@ -257,3 +260,103 @@ def test_pipeline_performance_trend(first_run):
     assert perf["performance_trend"] in {
         "constant", "linear", "exponential", "insufficient_data",
     }
+
+
+def test_ledger_reads_truncated_entry_as_missing(tmp_path):
+    """An entry cut short by a crash mid-write reads as missing, so a resumed
+    run re-runs the stage instead of failing; a rewrite replaces it whole."""
+    ledger = StageLedger(str(tmp_path))
+    os.makedirs(ledger.output_path("triples"))
+    open(os.path.join(ledger.output_path("triples"), "_SUCCESS"), "w").close()
+    ledger.mark_done("triples", "fp", {"rows": 3, "seconds": 0.5})
+    assert ledger.is_done("triples", "fp")
+    path = tmp_path / "_ledger" / "triples.json"
+    whole = path.read_bytes()
+    path.write_bytes(whole[: len(whole) // 2])
+    assert ledger.read("triples") is None
+    assert not ledger.is_done("triples", "fp")
+    ledger.mark_done("triples", "fp", {"rows": 3, "seconds": 0.5})
+    assert path.read_bytes() == whole
+    assert os.listdir(tmp_path / "_ledger") == ["triples.json"]
+
+
+def _export_body(result) -> bytes:
+    """The export file without its metadata line (export timestamp and
+    timings), with the run's random export id masked on every line."""
+    with open(result.metrics["export"]["file"], "rb") as f:
+        export_id = json.loads(f.readline())["export_metadata"]["export_id"].encode()
+        return f.read().replace(export_id, b"<export_id>")
+
+
+@pytest.fixture(scope="module")
+def overlap_run(spark, tmp_path_factory):
+    """A clean run in which ``canonicalize`` waits for ``link`` to start.
+    Both read only ``mentions``, so a runner that starts each stage when
+    its inputs are done lets it through; one that runs the stages in
+    declaration order reaches ``link`` only after the wait timed out."""
+    link_started = threading.Event()
+    seen = {}
+    canonicalize, link = pages_pipeline.canonicalize_surfaces, pages_pipeline.link_mentions
+
+    def waiting_canonicalize(*args, **kwargs):
+        seen["link_started"] = link_started.wait(timeout=30)
+        return canonicalize(*args, **kwargs)
+
+    def signalling_link(*args, **kwargs):
+        link_started.set()
+        return link(*args, **kwargs)
+
+    pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
+    work = str(tmp_path_factory.mktemp("overlap"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pages_pipeline, "canonicalize_surfaces", waiting_canonicalize)
+        mp.setattr(pages_pipeline, "link_mentions", signalling_link)
+        res = PagesPipeline(spark, work, GAZETTEER, RELATION_TEMPLATES, SURFACES).run(
+            pages, f"synth:{N_DOCS}:{SEED}"
+        )
+    return res, seen
+
+
+def test_independent_stages_overlap(overlap_run):
+    res, seen = overlap_run
+    assert seen["link_started"]
+    assert res.stages_run == STAGES
+    canon, link = res.metrics["canonicalize"], res.metrics["link"]
+    assert link["start_s"] <= canon["start_s"] + canon["seconds"]
+    assert canon["start_s"] <= link["start_s"] + link["seconds"]
+    for stage, m in res.metrics.items():
+        assert 0 <= m["start_s"] <= m["start_s"] + m["seconds"] <= res.wall_s + 0.002, stage
+
+
+def test_failed_stage_stops_run_and_resume_completes_it(spark, tmp_path, overlap_run):
+    """Two stages fail, ``link`` first: the run raises the error of the one
+    declared first (``canonicalize``), starts nothing after the failures,
+    lets ``triples`` (already running) finish, and marks no stage that
+    reads a failed one as done.  A second run with the real operators runs
+    only the missing stages and exports the bytes of a clean run."""
+    link_failed = threading.Event()
+
+    def failing_canonicalize(*args, **kwargs):
+        link_failed.wait(timeout=30)
+        raise RuntimeError("canonicalize failed")
+
+    def failing_link(*args, **kwargs):
+        link_failed.set()
+        raise RuntimeError("link failed")
+
+    pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
+    fp = f"synth:{N_DOCS}:{SEED}"
+    work = str(tmp_path)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pages_pipeline, "canonicalize_surfaces", failing_canonicalize)
+        mp.setattr(pages_pipeline, "link_mentions", failing_link)
+        with pytest.raises(RuntimeError, match="canonicalize failed"):
+            PagesPipeline(spark, work, GAZETTEER, RELATION_TEMPLATES, SURFACES).run(pages, fp)
+    ledger = StageLedger(work)
+    assert [s for s in STAGES if ledger.read(s) is not None] == [
+        "extract", "mentions", "triples",
+    ]
+    res = PagesPipeline(spark, work, GAZETTEER, RELATION_TEMPLATES, SURFACES).run(pages, fp)
+    assert res.stages_skipped == ["extract", "mentions", "triples"]
+    assert res.stages_run == ["canonicalize", "link", "nodes", "edges", "export"]
+    assert _export_body(res) == _export_body(overlap_run[0])
