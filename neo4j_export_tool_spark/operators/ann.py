@@ -4,15 +4,20 @@
   broadcast the query set, score every (query, item) pair JVM-side,
   ``row_number`` window for the top-k.  Linear per query; right answer.
 - ``hyperplane_lsh_pairs`` / ``ivf_topk`` — the scale paths: random-
-  hyperplane sign buckets (cosine LSH) and a coarse-quantizer IVF built
-  with a deterministic k-means (computed in DataFrames, no MLlib dep),
+  hyperplane sign buckets (cosine LSH) and a coarse-quantizer IVF,
   probing only the nearest ``n_probe`` cells.
+- ``_lloyd`` — the one deterministic Lloyd k-means (Arrow-batched
+  partial sums, sorted driver-side merge, no MLlib dep): IVF trains its
+  coarse quantizer with one subspace, `operators/pq.py::train_pq` its
+  product codebooks with ``m``.
 
 Rank determinism: ties broken by item id, so results are reproducible and
 oracle-comparable.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -252,6 +257,115 @@ def hyperplane_lsh_pairs(
     )
 
 
+def _lloyd(
+    base: DataFrame,
+    n_codes: int,
+    n_iters: int,
+    m: int,
+    assign: Callable,
+) -> list[list[list[float]]] | None:
+    """Deterministic Lloyd k-means over ``m`` subspaces of ``base``'s
+    ``(item_id, v)`` rows → ``codebooks[m][code]``, or ``None`` on an
+    empty ``base``.  IVF's coarse quantizer is ``m == 1``; PQ trains all
+    its subspaces in the same rounds.
+
+    ``base`` must already be materialized-once (persist or lazy
+    localCheckpoint): the sample and every round read it, and its
+    lifetime stays with the caller.  Init: the ``n_codes`` lowest rows in
+    crc32-strided id order (fewer rows → fewer codes).  Each round is ONE
+    Arrow pass: ``assign(V_j, C_j)`` picks each row's code per subspace,
+    and per-(partition, chunk, subspace, code) partial sums — not rows —
+    are collected and merged driver-side in sorted (sub, code, partition,
+    chunk) order, so the float accumulation order is fixed whatever the
+    scheduling; an empty code keeps its centroid.  A round that returns
+    bit-identical codebooks is a fixpoint (rounds are deterministic), so
+    the loop stops there."""
+    import numpy as np
+
+    first = [
+        r["v"]
+        for r in base.orderBy(F.crc32(F.col("item_id").cast("string")) % 997, "item_id")
+        .limit(n_codes)
+        .collect()
+    ]
+    if not first:
+        return None
+    dim = len(first[0])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub_d = dim // m
+    n_codes = len(first)
+    books = [[v[j * sub_d : (j + 1) * sub_d] for v in first] for j in range(m)]
+
+    def _partials(bks):
+        Cs = [np.asarray(b, dtype=np.float64) for b in bks]
+
+        def fn(batches):
+            import pandas as pd
+            from pyspark import TaskContext
+
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else 0
+            seq = 0
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                V = np.stack(pdf["v"].to_numpy())
+                rows = []
+                for j in range(m):
+                    Vj = V[:, j * sub_d : (j + 1) * sub_d]
+                    code = assign(Vj, Cs[j])
+                    for c in np.unique(code):
+                        sel = Vj[code == c]
+                        rows.append(
+                            (pid, seq, j, int(c), len(sel), sel.sum(axis=0).tolist())
+                        )
+                seq += 1
+                yield pd.DataFrame(
+                    rows, columns=["pid", "seq", "sub", "code", "cnt", "s"]
+                )
+
+        return fn
+
+    partial_schema = "pid int, seq int, sub int, code int, cnt long, s array<double>"
+    for _ in range(n_iters):
+        parts = base.mapInPandas(_partials(books), partial_schema).collect()
+        acc: dict[tuple[int, int], tuple[int, np.ndarray]] = {}
+        for r in sorted(parts, key=lambda r: (r.sub, r.code, r.pid, r.seq)):
+            cnt, s = acc.get((r.sub, r.code), (0, np.zeros(sub_d)))
+            acc[(r.sub, r.code)] = (cnt + r.cnt, s + np.asarray(r.s))
+        new = [
+            [
+                (acc[(j, c)][1] / acc[(j, c)][0]).tolist()
+                if (j, c) in acc
+                else books[j][c]  # empty code keeps its centroid
+                for c in range(n_codes)
+            ]
+            for j in range(m)
+        ]
+        if np.asarray(new).tobytes() == np.asarray(books).tobytes():
+            break
+        books = new
+    return books
+
+
+def _cosine_scores(V, C):
+    """(rows × cells) score matrix for cell ranking.  Dividing by the row
+    norm is skipped: it is a positive per-row constant, so argmax and the
+    full cell ordering are unchanged; zero-norm centroids map to +inf so
+    they rank first, like NaN under a desc sort."""
+    import numpy as np
+
+    Cn = np.sqrt((C * C).sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        S = (V @ C.T) / Cn
+    return np.where(np.isnan(S), np.inf, S)
+
+
+def _cosine_argmax(V, C):
+    return _cosine_scores(V, C).argmax(axis=1)
+
+
 def ivf_topk(
     items: DataFrame,
     queries: DataFrame,
@@ -266,34 +380,27 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k.
 
-    Coarse quantizer: deterministic Lloyd k-means over the items, computed
-    with DataFrame aggs (centroids collected to the driver each round —
-    n_cells×dim doubles, trivially small).  Items are assigned to their
-    nearest cell; each query probes its ``n_probe`` nearest cells only.
-    At 100 TB the cell assignment is the partition key (write bucketed by
-    cell), so a probe touches n_probe/n_cells of the data.
+    Coarse quantizer: ``_lloyd`` over the items with one subspace and
+    cosine-argmax assignment (centroids collected to the driver each
+    round — n_cells×dim doubles, trivially small).  Items are assigned to
+    their nearest cell; each query probes its ``n_probe`` nearest cells
+    only.  At 100 TB the cell assignment is the partition key (write
+    bucketed by cell), so a probe touches n_probe/n_cells of the data.
 
-    Cell assignment is an Arrow-batched numpy GEMM over the whole batch
-    (round 6): the centroids are a driver-side list shipped in the UDF
-    closure, so per-row argmax is ``V @ C.T`` + argmax — ZERO Exchange,
-    one `mapInPandas` pass, BLAS throughput.  (The previous crossJoin +
-    per-item ``row_number`` window expanded the corpus n_cells× and
-    shuffled the expansion once per k-means round — the whole cost of
-    IVF build at scale.)  Each k-means round now also folds its per-cell
-    partial sums INSIDE the same pass (one output row per cell per
-    batch), so a round shuffles ~n_cells×n_partitions tiny rows instead
-    of the corpus; partials are merged driver-side in sorted
-    (cell, partition, chunk) order, making the centroid arithmetic
-    order-deterministic — stronger than the old ``F.avg`` whose merge
-    order floated with task completion.
+    Cell assignment is an Arrow-batched numpy GEMM over the whole batch:
+    the centroids are a driver-side list shipped in the UDF closure, so
+    per-row argmax is ``V @ C.T`` + argmax — ZERO Exchange, one
+    `mapInPandas` pass, BLAS throughput.  The items are read through a
+    lazy localCheckpoint (the `pq_topk` discipline): the returned frame
+    is lazy, so a cache dropped on return would re-run the items scan
+    and repartition for the caller's action.
 
     Assignment is candidate SELECTION only — the returned cosines still
     come from the exact sequential-double `cosine_col` verify below, the
     same GEMM-candidates/exact-verify split `embedding_neardup_pairs`
     uses — so engine-exactness of the scoring never rests on BLAS
-    summation order.  Ties rank like the old window (d desc, cell asc —
-    argmax/stable argsort take the first maximum) and zero-norm
-    centroids score as +inf like the old NaN-first desc sort.
+    summation order.  Ties rank d desc, cell asc (argmax/stable argsort
+    take the first maximum) and zero-norm centroids score as +inf.
     """
     import numpy as np
 
@@ -303,153 +410,67 @@ def ivf_topk(
     query_id_t = next(
         f.dataType.simpleString() for f in queries.schema if f.name == id_col
     )
-    base = items.select(F.col(id_col).alias("item_id"), as_double_array(F.col(vec_col)).alias("v"))
-    # the zero-shuffle assignment removed the parallelism the old window
-    # shuffle provided by accident — spread the (often single-file) scan
-    # once, up front, instead of n_cells×-expanding and re-shuffling the
-    # corpus every k-means round
-    base = base.repartition(items.sparkSession.sparkContext.defaultParallelism)
-    base = base.persist()
-    # init: deterministic sample — lowest ids spread by modular stride
-    first = [
-        r["v"]
-        for r in base.orderBy(F.crc32(F.col("item_id").cast("string")) % 997, "item_id")
-        .limit(n_cells)
-        .collect()
-    ]
-    if not first:
-        base.unpersist()
+    # spread the (often single-file) scan once, up front: the zero-shuffle
+    # assignment has no exchange of its own to parallelize it
+    base = (
+        items.select(
+            F.col(id_col).alias("item_id"), as_double_array(F.col(vec_col)).alias("v")
+        )
+        .repartition(items.sparkSession.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=False)
+    )
+    books = _lloyd(base, n_cells, n_iters, 1, _cosine_argmax)
+    if books is None:
         return items.sparkSession.createDataFrame(
             [],
             f"query_id {query_id_t}, rank int, item_id {item_id_t}, cosine double",
         )
-    # fewer items than requested cells → shrink the quantizer
-    n_cells = min(n_cells, len(first))
-    n_probe = min(n_probe, n_cells)
-    first = first[:n_cells]
-    centroids = first
-    dim = len(first[0])
+    (centroids,) = books
+    # fewer items than requested cells → the quantizer shrank
+    n_probe = min(n_probe, len(centroids))
+    C = np.asarray(centroids, dtype=np.float64)
 
-    def _scores_fn(cents: list):
-        """(batch_matrix) -> per-cell score matrix.  Dividing by the item
-        norm is skipped: it is a positive per-row constant, so argmax and
-        the full cell ordering are unchanged; zero-norm centroids map to
-        +inf so they rank first, like NaN under the old desc sort."""
-        C = np.asarray(cents, dtype=np.float64)
-        Cn = np.sqrt((C * C).sum(axis=1))
-
-        def scores(V: np.ndarray) -> np.ndarray:
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = (V @ C.T) / Cn
-            return np.where(np.isnan(S), np.inf, S)
-
-        return scores
-
-    partial_schema = "pid int, seq int, cell int, cnt long, s array<double>"
-
-    def _kmeans_partials(cents: list):
-        scores = _scores_fn(cents)
-
-        def fn(batches):
-            import pandas as pd
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else 0
-            seq = 0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy())
-                cell = scores(V).argmax(axis=1)
-                rows = []
-                for c in np.unique(cell):
-                    sel = V[cell == c]
-                    rows.append(
-                        (pid, seq, int(c), len(sel), sel.sum(axis=0).tolist())
-                    )
-                seq += 1
-                yield pd.DataFrame(
-                    rows, columns=["pid", "seq", "cell", "cnt", "s"]
-                )
-
-        return fn
-
-    for _ in range(n_iters):
-        partials = base.mapInPandas(
-            _kmeans_partials(centroids), partial_schema
-        ).collect()
-        # deterministic merge order: (cell, partition, chunk)
-        sums: dict[int, np.ndarray] = {}
-        cnts: dict[int, int] = {}
-        for r in sorted(partials, key=lambda r: (r["cell"], r["pid"], r["seq"])):
-            c = r["cell"]
-            if c not in sums:
-                sums[c] = np.zeros(dim)
-                cnts[c] = 0
-            sums[c] = sums[c] + np.asarray(r["s"])
-            cnts[c] += r["cnt"]
-        centroids = [
-            (sums[i] / cnts[i]).tolist() if cnts.get(i) else centroids[i]
-            for i in range(n_cells)
-        ]
-
-    def _assign_items(cents: list):
-        scores = _scores_fn(cents)
-
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy())
-                out = pdf.rename(columns={"v": "i_vec"})
-                out["cell"] = scores(V).argmax(axis=1).astype("int32")
-                yield out
-
-        return fn
+    def _assign_items(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["v"].to_numpy())
+            out = pdf.rename(columns={"v": "i_vec"})
+            out["cell"] = _cosine_argmax(V, C).astype("int32")
+            yield out
 
     items_cells = base.mapInPandas(
-        _assign_items(centroids),
-        f"item_id {item_id_t}, i_vec array<double>, cell int",
+        _assign_items, f"item_id {item_id_t}, i_vec array<double>, cell int"
     )
     q = queries.select(F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("q_vec"))
 
-    def _assign_probes(cents: list, probes: int):
-        scores = _scores_fn(cents)
+    def _assign_probes(batches):
+        import pandas as pd
 
-        def fn(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["q_vec"].to_numpy())
-                # stable argsort of -S: d desc, then cell asc on ties —
-                # the old window's ordering
-                order = np.argsort(-scores(V), axis=1, kind="stable")[:, :probes]
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy().repeat(probes),
-                        "q_vec": pdf["q_vec"].to_numpy().repeat(probes),
-                        "cell": order.reshape(-1).astype("int32"),
-                    }
-                )
-
-        return fn
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["q_vec"].to_numpy())
+            # stable argsort of -S: d desc, then cell asc on ties
+            order = np.argsort(-_cosine_scores(V, C), axis=1, kind="stable")[:, :n_probe]
+            yield pd.DataFrame(
+                {
+                    "query_id": pdf["query_id"].to_numpy().repeat(n_probe),
+                    "q_vec": pdf["q_vec"].to_numpy().repeat(n_probe),
+                    "cell": order.reshape(-1).astype("int32"),
+                }
+            )
 
     q_cells = q.mapInPandas(
-        _assign_probes(centroids, n_probe),
-        f"query_id {query_id_t}, q_vec array<double>, cell int",
+        _assign_probes, f"query_id {query_id_t}, q_vec array<double>, cell int"
     )
     scored = q_cells.join(items_cells, "cell")
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("item_id"))
     scored = scored.withColumn("cosine", cosine_col(F.col("q_vec"), F.col("i_vec")))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("item_id"))
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "item_id", "cosine")
     )
-    base.unpersist()
-    return out

@@ -6,19 +6,21 @@ GraphFrames dependency — plain DataFrame min-label propagation:
 
     comp(v) ← min(comp(v), min over neighbors u of comp(u))
 
-iterated to fixpoint.  Every round ends in one eager ``localCheckpoint``
-that also carries the changed-label count, so lineage is cut each round
-(without it the plan doubles per iteration and the driver OOMs planning, the
-classic iterative-DataFrame failure at scale).  localCheckpoint blocks live
-on the executor that wrote them; executor-loss tolerance is ROADMAP
-direction 3 (one reliable barrier mode with a chaos test).
+iterated to fixpoint by ``_min_label_loop``.  Every round ends in one
+eager ``localCheckpoint`` that also carries the changed-label count, so
+lineage is cut each round (without it the plan doubles per iteration and
+the driver OOMs planning, the classic iterative-DataFrame failure at
+scale).  localCheckpoint blocks live on the executor that wrote them, so
+the loop does not survive executor loss.
 
 Complexity: O(diameter) rounds, each a self-join shuffle on the vertex id.
 For web-scale alias graphs the diameter is small (entity clusters are
 near-cliques); ``max_iterations`` bounds the pathological chain case and is
 surfaced in the result so callers can tell fixpoint from cutoff.  A graph
-small enough for one loop partition skips the rounds: one in-memory
-union-find pass over the whole edge list is already the fixpoint.
+small enough for one task skips the rounds: one in-memory union-find pass
+over the whole edge list is already the fixpoint.  The loop never touches
+session configuration: its shuffles run at the session's partition count,
+which adaptive execution coalesces on small graphs.
 """
 
 from __future__ import annotations
@@ -35,6 +37,10 @@ from pyspark.sql import functions as F
 # the fewer rounds win; at cluster scale the trade is a wash.
 POINTER_DOUBLE_HOPS = 2
 
+# Symmetric edge count up to which one task finishes CC: one union-find
+# pass over the coalesced graph instead of label-propagation rounds.
+_ONE_TASK_MAX_EDGES = 500_000
+
 
 @dataclasses.dataclass
 class CCResult:
@@ -47,7 +53,6 @@ class CCResult:
     # coalesced graph) or "label_propagation" (the shuffle loop)
     path: str = "label_propagation"
     n_edges: int = 0  # symmetric distinct edge count (post-contraction)
-    loop_partitions: int | None = None  # None: size adaptation disabled
 
 
 def _observation_result(obs: Observation, timeout_s: float = 60.0) -> dict:
@@ -231,12 +236,84 @@ def local_star_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
+def _min_label_loop(
+    edges: DataFrame, labels: DataFrame, max_rounds: int
+) -> tuple[DataFrame, int, bool, dict]:
+    """Min-label fixpoint over ``edges`` (src, dst) from ``labels``
+    (id, label); returns ``(labels, rounds, converged, round_timings)``.
+
+    Each round pushes the smallest label along ``src → dst`` and merges
+    it with ``least``, then takes ``POINTER_DOUBLE_HOPS`` pointer-doubling
+    hops (label ← label of its label).  The round ends in one eager
+    ``localCheckpoint`` that also observes the changed-label count: one
+    job per round, and the loop stops at the first round that changes
+    nothing (``converged``).  Round wall times feed a
+    ``BatchPerformanceTracker``.
+
+    SCC's forward coloring (`operators/scc.py`) keeps its own push-only
+    loop: with its node tables broadcast, each doubling hop is one more
+    broadcast job per round, which costs more than the rounds it saves
+    when the colors settle in two or three rounds (the ``scc_coloring``
+    lane ran 36% slower on this loop)."""
+    import time as _time
+
+    from neo4j_export_tool_spark.plans.perf import BatchPerformanceTracker
+
+    tracker = BatchPerformanceTracker(strategy="label_propagation", sample_every=1)
+    for i in range(max_rounds):
+        _t0 = _time.perf_counter()
+        pushed = (
+            edges.join(
+                labels.select(F.col("id").alias("src"), F.col("label").alias("_in")),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min("_in").alias("_in"))
+        )
+        nxt = labels.join(pushed, "id", "left").select(
+            "id",
+            F.least("label", F.coalesce("_in", "label")).alias("label"),
+            F.coalesce(F.col("_in") < F.col("label"), F.lit(False)).alias("_changed"),
+        )
+        # pointer doubling (path compression): follow label → its label,
+        # shrinking chain depth geometrically → O(log n) rounds on chains
+        # instead of O(diameter)
+        for _hop in range(POINTER_DOUBLE_HOPS):
+            hop = nxt.select(F.col("id").alias("label"), F.col("label").alias("_hop"))
+            nxt = nxt.join(hop, "label", "left").select(
+                "id",
+                F.least("label", F.coalesce("_hop", "label")).alias("label"),
+                (
+                    F.col("_changed")
+                    | F.coalesce(F.col("_hop") < F.col("label"), F.lit(False))
+                ).alias("_changed"),
+            )
+        # the changed count rides the SAME job as the checkpoint
+        # materialization (observe → eager localCheckpoint): one job per
+        # round, and the loop stops at the earliest possible round
+        obs = Observation(f"min_label_changed_r{i}")
+        nxt = nxt.observe(
+            obs, F.sum(F.col("_changed").cast("long")).alias("changed")
+        ).localCheckpoint(eager=True)
+        try:
+            changed = int(_observation_result(obs)["changed"] or 0)
+        except Exception:
+            # CollectMetrics can be optimized away on a degenerate
+            # (empty) plan, or (bounded-wait timeout) the metrics
+            # event never arrived — fall back to an explicit count
+            changed = nxt.filter(F.col("_changed")).count()
+        labels = nxt.drop("_changed")
+        tracker.record_batch((_time.perf_counter() - _t0) * 1000.0)
+        if changed == 0:
+            return labels, i + 1, True, tracker.metrics()
+    return labels, max_rounds, False, tracker.metrics()
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    rows_per_loop_partition: int | None = 500_000,
 ) -> CCResult:
     """Min-label propagation over an undirected edge list.
 
@@ -249,30 +326,21 @@ def connected_components(
     vertex and partition instead of every input edge.
 
     The call is eager: it persists and counts the symmetric edge list
-    (the count sizes the loop) and runs every round before it returns.
-    Each round is one eager localCheckpoint, which truncates lineage (without
-    it the logical plan doubles per round and driver-side planning dominates
-    wall time long before data does) and carries the round's changed-label
-    count, so the result reads from a barrier, not from the edge lineage.
-    localCheckpoint blocks die with their executor; executor-loss tolerance
-    is ROADMAP direction 3, not an option of this operator.
+    (the count picks the path) and runs every round before it returns.
+    Each round of ``_min_label_loop`` is one eager localCheckpoint, which
+    truncates lineage and carries the round's changed-label count, so the
+    result reads from a barrier, not from the edge lineage.
+    localCheckpoint blocks die with their executor; executor-loss
+    tolerance is not an option of this operator.
 
-    Loop parallelism is size-adaptive: each round is 3 shuffles, so a small
-    graph on many shuffle partitions pays ~rounds×3×partitions empty-task
-    overhead.  The loop scopes ``spark.sql.shuffle.partitions`` to
-    ``clamp(edge_count / rows_per_loop_partition, 1, current)`` and restores
-    it afterwards (measured 3× on a 5k-vertex graph at local[32]); at real
-    scale the count keeps the session setting.
-
-    One-partition finish: when that rule gives ONE loop partition, the
-    label-propagation rounds are skipped.  The union-find kernel of
+    One-task finish: a graph of at most ``_ONE_TASK_MAX_EDGES`` symmetric
+    edges skips the label-propagation rounds.  The union-find kernel of
     ``local_star_contract`` runs once over ``sym.coalesce(1)``; one
-    partition's stars are the final min-label components, and the loop
-    would have run on that one partition anyway, so the per-task memory
-    bound is the same.  The map is materialized by the loop's barrier
-    (one eager localCheckpoint) and counts as one round.
-    ``CCResult.path`` / ``n_edges`` / ``loop_partitions`` record the
-    decision and the count that drove it.
+    partition's stars are the final min-label components.  The map is
+    materialized by one eager localCheckpoint and counts as one round.
+    ``CCResult.path`` / ``n_edges`` record the decision and the count
+    that drove it.  A larger graph runs the loop at the session's shuffle
+    partition count; the operator never changes session configuration.
 
     Per-round wall times feed a ``BatchPerformanceTracker`` (reference
     ``Export/Types.fs:140-216``) — ``round_timings["performance_trend"]``
@@ -289,7 +357,7 @@ def connected_components(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     ).filter(F.col("a").isNotNull()).distinct()
     sym = sym.persist()
-    n_edges = sym.count()  # materializes the persist; sizes the loop
+    n_edges = sym.count()  # materializes the persist; picks the path
     if n_edges == 0:
         # empty edge list → empty component map (isolated vertices are the
         # CALLER's fallback, as documented); skip the loop machinery — the
@@ -308,26 +376,8 @@ def connected_components(
             path="empty",
         )
 
-    spark = edges.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        session_parts = int(old_parts)
-    except (TypeError, ValueError):
-        # non-numeric settings (e.g. "auto" under some AQE vendors): leave
-        # the session conf untouched and skip size adaptation
-        session_parts = None
-    # NB: the adaptation sets the SESSION-global shuffle.partitions for the
-    # loop's duration (restored in finally).  On a SparkSession running
-    # concurrent queries from other threads, pass
-    # rows_per_loop_partition=None to disable the scoped override.
-    loop_parts = (
-        max(1, min(session_parts, n_edges // rows_per_loop_partition + 1))
-        if session_parts is not None and rows_per_loop_partition is not None
-        else None
-    )
-    tracker = BatchPerformanceTracker(strategy="label_propagation", sample_every=1)
-
-    if loop_parts == 1:
+    if n_edges <= _ONE_TASK_MAX_EDGES:
+        tracker = BatchPerformanceTracker(strategy="label_propagation", sample_every=1)
         _t0 = _time.perf_counter()
         comps = (
             local_star_contract(sym.coalesce(1), "a", "b")
@@ -343,99 +393,26 @@ def connected_components(
             round_timings=tracker.metrics(),
             path="one_partition",
             n_edges=n_edges,
-            loop_partitions=loop_parts,
         )
 
     labels = (
         sym.select(F.col("a").alias("id"))
         .distinct()
-        .withColumn("component", F.col("id"))
+        .withColumn("label", F.col("id"))
     ).persist()
-    cached = labels  # handle to the DataFrame actually persisted
-
-    iterations = 0
-    converged = False
-    if loop_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     try:
-        for i in range(max_iterations):
-            _t0 = _time.perf_counter()
-            iterations = i + 1
-            neighbor_min = (
-                sym.join(labels, sym["b"] == labels["id"])
-                .groupBy(F.col("a").alias("id2"))
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, labels["id"] == neighbor_min["id2"], "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"), F.coalesce("nbr_component", F.col("component"))
-                    ).alias("component"),
-                    (
-                        F.coalesce("nbr_component", F.col("component"))
-                        < F.col("component")
-                    ).alias("_changed"),
-                )
-            )
-            # pointer doubling (path compression): follow component → its
-            # component, shrinking chain depth geometrically → O(log n)
-            # rounds on chains instead of O(diameter)
-            for _hop in range(POINTER_DOUBLE_HOPS):
-                comp_map = new_labels.select(
-                    F.col("id").alias("cid"), F.col("component").alias("ccomp")
-                )
-                new_labels = (
-                    new_labels.join(
-                        comp_map, new_labels["component"] == comp_map["cid"], "left"
-                    )
-                    .select(
-                        "id",
-                        F.least(
-                            F.col("component"), F.coalesce("ccomp", F.col("component"))
-                        ).alias("component"),
-                        (
-                            F.col("_changed")
-                            | (F.coalesce("ccomp", F.col("component")) < F.col("component"))
-                        ).alias("_changed"),
-                    )
-                )
-            # convergence count rides the SAME job as the checkpoint
-            # materialization (observe → eager localCheckpoint): one job per
-            # round, and the changed-count is free EVERY round, so the loop
-            # stops at the earliest possible round
-            obs = Observation(f"cc_changed_r{i}")
-            observed = new_labels.observe(
-                obs, F.sum(F.col("_changed").cast("long")).alias("changed")
-            )
-            new_labels = observed.localCheckpoint(eager=True)
-            try:
-                changed = int(_observation_result(obs)["changed"] or 0)
-            except Exception:
-                # CollectMetrics can be optimized away on a degenerate
-                # (empty) plan, or (bounded-wait timeout) the metrics
-                # event never arrived — fall back to an explicit count
-                changed = new_labels.filter(F.col("_changed")).count()
-            # unpersist the handle that was actually cached (a derived plan like
-            # .drop() is a different DataFrame and its unpersist is a no-op)
-            cached.unpersist()
-            cached = new_labels
-            labels = new_labels.drop("_changed")
-            tracker.record_batch((_time.perf_counter() - _t0) * 1000.0)
-            if changed == 0:
-                converged = True
-                break
-
+        comps, iterations, converged, timings = _min_label_loop(
+            sym.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+            labels,
+            max_iterations,
+        )
     finally:
-        if loop_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        labels.unpersist()
         sym.unpersist()
     return CCResult(
-        components=labels,
+        components=comps.withColumnRenamed("label", "component"),
         iterations=iterations,
         converged=converged,
-        round_timings=tracker.metrics(),
+        round_timings=timings,
         n_edges=n_edges,
-        loop_partitions=loop_parts,
     )

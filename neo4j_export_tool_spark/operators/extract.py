@@ -17,7 +17,6 @@ import html as html_mod
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
@@ -42,7 +41,3 @@ def extract_text(html: bytes | str | None) -> str | None:
 @pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
-
-
-def extracted_text(html_col: Column) -> Column:
-    return extract_text_udf(html_col)

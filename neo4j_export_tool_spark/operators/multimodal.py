@@ -63,10 +63,6 @@ def require_codec(name: str) -> None:
         )
 
 
-def decode_image(payload: bytes):  # pragma: no cover - stub
-    require_codec("image")
-
-
 def fake_decode_meta(payload: bytes) -> tuple[int, int]:
     """Deterministic stand-in for image dimensions (tests the plumbing,
     not pixels): derived from payload length."""
@@ -120,11 +116,6 @@ def _mean_rgb(px: bytes, n: int) -> tuple[int, int, int]:
     return sum(px[0::3]) // n, sum(px[1::3]) // n, sum(px[2::3]) // n
 
 
-def ppm_mean_rgb(payload: bytes) -> tuple[int, int, int]:
-    w, h, px = decode_ppm(payload)
-    return _mean_rgb(px, w * h)
-
-
 def _resize_rgb(px: bytes, w: int, h: int, new_w: int, new_h: int) -> bytes:
     """Nearest-neighbor resize of packed RGB bytes."""
     out = bytearray()
@@ -136,12 +127,6 @@ def _resize_rgb(px: bytes, w: int, h: int, new_w: int, new_h: int) -> bytes:
             o = row + sx * 3
             out += px[o : o + 3]
     return bytes(out)
-
-
-def resize_ppm(payload: bytes, new_w: int, new_h: int) -> bytes:
-    """Nearest-neighbor resize → a valid P6 payload."""
-    w, h, px = decode_ppm(payload)
-    return encode_ppm(new_w, new_h, _resize_rgb(px, w, h, new_w, new_h))
 
 
 def resize_image_payload(payload: bytes, new_w: int, new_h: int) -> bytes:

@@ -9,10 +9,12 @@ Schmid, "Product Quantization for Nearest Neighbor Search", TPAMI'11).
 
 Discipline shared with IVF (`operators/ann.py`):
 
-- deterministic training: crc32-strided init, per-round partial sums
-  folded INSIDE one Arrow pass (rows per (partition, subspace, code), not
-  per item) and merged driver-side in sorted order — codebooks are
-  independent of partitioning and task completion order;
+- one deterministic training kernel, `ann._lloyd` (IVF runs it with one
+  subspace): crc32-strided init, per-round partial sums folded INSIDE one
+  Arrow pass (rows per (partition, subspace, code), not per item) and
+  merged driver-side in sorted order — codebooks are independent of
+  partitioning and task completion order — with an early exit at the
+  first round that leaves the codebooks unchanged;
 - zero corpus-wide shuffles: train and encode are single `mapInPandas`
   projections (BLAS GEMM per batch); the only windows run over the small
   pruned candidate set;
@@ -40,11 +42,18 @@ from neo4j_export_tool_spark.functions.similarity import (
     as_double_array,
     cosine_col,
 )
+from neo4j_export_tool_spark.operators.ann import _lloyd
 
 
-def _split(vec: list[float], m: int) -> list[list[float]]:
-    d = len(vec) // m
-    return [list(vec[j * d : (j + 1) * d]) for j in range(m)]
+def _l2_argmin(V, C):
+    """Exact argmin of L2 distance from each row of ``V`` to the rows of
+    ``C``, first-min on ties — the code of every PQ subspace."""
+    d2 = (
+        (V * V).sum(axis=1)[:, None]
+        - 2.0 * (V @ C.T)
+        + (C * C).sum(axis=1)[None, :]
+    )
+    return d2.argmin(axis=1)
 
 
 def train_pq(
@@ -57,12 +66,11 @@ def train_pq(
 ) -> list[list[list[float]]]:
     """Deterministic per-subspace Lloyd k-means → ``codebooks[m][code]``.
 
-    One Arrow pass per round computes ALL m subspaces' partial sums;
-    driver merges partials in sorted (sub, code, partition, chunk) order,
-    so the float accumulation order is fixed regardless of scheduling.
+    ``ann._lloyd`` with ``m`` subspaces and L2-argmin assignment: one
+    Arrow pass per round computes ALL m subspaces' partial sums, merged
+    driver-side in sorted (sub, code, partition, chunk) order, so the
+    float accumulation order is fixed regardless of scheduling.
     """
-    import numpy as np
-
     if not 1 <= n_codes <= 256:
         raise ValueError("n_codes must be in [1, 256] (uint8 codes)")
     base = items.select(
@@ -71,84 +79,12 @@ def train_pq(
     base = base.repartition(items.sparkSession.sparkContext.defaultParallelism)
     base = base.persist()
     try:
-        first = [
-            r["v"]
-            for r in base.orderBy(
-                F.crc32(F.col("item_id").cast("string")) % 997, "item_id"
-            )
-            .limit(n_codes)
-            .collect()
-        ]
-        if not first:
-            raise ValueError("cannot train PQ on an empty table")
-        dim = len(first[0])
-        if dim % m:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        sub_d = dim // m
-        n_codes = min(n_codes, len(first))
-        books = [
-            [_split(v, m)[j] for v in first[:n_codes]] for j in range(m)
-        ]
-
-        partial_schema = "pid int, seq int, sub int, code int, cnt long, s array<double>"
-
-        def _partials(bks):
-            Cs = [np.asarray(b, dtype=np.float64) for b in bks]
-
-            def fn(batches):
-                import pandas as pd
-                from pyspark import TaskContext
-
-                ctx = TaskContext.get()
-                pid = ctx.partitionId() if ctx is not None else 0
-                seq = 0
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    V = np.stack(pdf["v"].to_numpy())
-                    rows = []
-                    for j in range(m):
-                        Vj = V[:, j * sub_d : (j + 1) * sub_d]
-                        Cj = Cs[j]
-                        # exact argmin of L2 distance, first-min on ties
-                        d2 = (
-                            (Vj * Vj).sum(axis=1)[:, None]
-                            - 2.0 * (Vj @ Cj.T)
-                            + (Cj * Cj).sum(axis=1)[None, :]
-                        )
-                        code = d2.argmin(axis=1)
-                        for c in np.unique(code):
-                            sel = Vj[code == c]
-                            rows.append(
-                                (pid, seq, j, int(c), len(sel),
-                                 sel.sum(axis=0).tolist())
-                            )
-                    seq += 1
-                    yield pd.DataFrame(
-                        rows, columns=["pid", "seq", "sub", "code", "cnt", "s"]
-                    )
-
-            return fn
-
-        for _ in range(n_iters):
-            parts = base.mapInPandas(_partials(books), partial_schema).collect()
-            acc: dict[tuple[int, int], tuple[int, "np.ndarray"]] = {}
-            for r in sorted(parts, key=lambda r: (r.sub, r.code, r.pid, r.seq)):
-                key = (r.sub, r.code)
-                cnt, s = acc.get(key, (0, np.zeros(sub_d)))
-                acc[key] = (cnt + r.cnt, s + np.asarray(r.s))
-            books = [
-                [
-                    (acc[(j, c)][1] / acc[(j, c)][0]).tolist()
-                    if (j, c) in acc
-                    else books[j][c]  # empty code keeps its centroid
-                    for c in range(n_codes)
-                ]
-                for j in range(m)
-            ]
-        return books
+        books = _lloyd(base, n_codes, n_iters, m, _l2_argmin)
     finally:
         base.unpersist()
+    if books is None:
+        raise ValueError("cannot train PQ on an empty table")
+    return books
 
 
 def pq_encode(
@@ -173,14 +109,7 @@ def pq_encode(
             V = np.stack(pdf["v"].to_numpy())
             codes = np.empty((len(V), m), dtype=np.int64)
             for j in range(m):
-                Vj = V[:, j * sub_d : (j + 1) * sub_d]
-                Cj = Cs[j]
-                d2 = (
-                    (Vj * Vj).sum(axis=1)[:, None]
-                    - 2.0 * (Vj @ Cj.T)
-                    + (Cj * Cj).sum(axis=1)[None, :]
-                )
-                codes[:, j] = d2.argmin(axis=1)
+                codes[:, j] = _l2_argmin(V[:, j * sub_d : (j + 1) * sub_d], Cs[j])
             yield pd.DataFrame(
                 {"item_id": pdf["item_id"], "codes": list(codes)}
             )

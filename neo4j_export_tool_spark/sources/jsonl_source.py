@@ -63,15 +63,6 @@ def _cleanup_zst_scratch() -> None:
         shutil.rmtree(_ZST_SCRATCH_DIRS.pop(), ignore_errors=True)
 
 
-def cleanup_zst_scratch() -> None:
-    """Explicit scratch reclaim hook: callers that have fully drained the
-    DataFrames built over imported ``.zst`` exports can release the
-    decompressed copies immediately instead of waiting for interpreter
-    exit.  Any still-lazy DataFrame over a reclaimed file will fail its
-    next action — only call once results are materialized."""
-    _cleanup_zst_scratch()
-
-
 def _materialize_zst(spark: SparkSession, path: str) -> str:
     """Decompress a ``.zst`` export to a plain temp file the text reader
     can scan.  Decompression runs JVM-side (zstd-jni ``ZstdInputStream`` →

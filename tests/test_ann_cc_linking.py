@@ -360,6 +360,18 @@ def test_hyperplane_signature_matches_gemm_table(spark):
     )
 
 
+def test_ivf_result_reads_the_checkpointed_items(spark):
+    """The returned frame is lazy: it must read the items through the
+    barrier the training read, not re-run the items scan and repartition
+    when the caller acts on it (a cache dropped on return would)."""
+    rows = [(i, [float((i * 5 + j) % 7) - 3.0 for j in range(6)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, emb array<double>")
+    out = ivf_topk(df, df.limit(2), "emb", "id", k=3, n_cells=4, n_probe=2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan, plan
+    assert out.count() == 6
+
+
 def test_ivf_string_ids_supported(spark):
     rows = [(f"e-{i}", [float((i * 5 + j) % 7) for j in range(6)]) for i in range(15)]
     df = spark.createDataFrame(rows, "uri string, emb array<double>")

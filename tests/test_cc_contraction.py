@@ -19,6 +19,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import neo4j_export_tool_spark.operators.components as C
 from neo4j_export_tool_spark.operators.components import (
     connected_components,
     make_contract_kernel_arrow,
@@ -155,10 +156,10 @@ def _ids(edges, id_type):
 
 
 @pytest.mark.parametrize("id_type", ["long", "string"])
-def test_one_partition_finish_equals_loop(spark, id_type):
+def test_one_partition_finish_equals_loop(spark, id_type, monkeypatch):
     """Tier equivalence for the CC path choice: the one-partition union-find
     finish (the default on a small graph) and the label-propagation loop
-    (forced with rows_per_loop_partition=1) return identical component
+    (forced by lowering ``_ONE_TASK_MAX_EDGES``) return identical component
     maps, both converged, on random graphs with half-null edges."""
     for seed in (5, 11):
         rng = random.Random(seed)
@@ -175,11 +176,11 @@ def test_one_partition_finish_equals_loop(spark, id_type):
         )
         df = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}").repartition(3)
         got = {}
-        for rows_per_part, path in ((500_000, "one_partition"), (1, "label_propagation")):
-            res = connected_components(df, rows_per_loop_partition=rows_per_part)
+        for max_edges, path in ((500_000, "one_partition"), (-1, "label_propagation")):
+            monkeypatch.setattr(C, "_ONE_TASK_MAX_EDGES", max_edges)
+            res = connected_components(df)
             assert res.converged, (path, seed)
             assert res.path == path
-            assert (res.loop_partitions == 1) == (path == "one_partition")
             assert res.round_timings["strategy"] == "label_propagation"
             assert res.round_timings["total_batches"] == res.iterations
             got[path] = sorted(
@@ -187,6 +188,41 @@ def test_one_partition_finish_equals_loop(spark, id_type):
             )
         assert got["one_partition"] == got["label_propagation"], seed
         assert dict(got["one_partition"]) == expected, seed
+
+
+def test_loop_leaves_session_shuffle_partitions_alone(spark, monkeypatch):
+    """The label-propagation loop runs beside other stages' queries (the
+    pages pipeline's canonicalize stage), so it must never change the
+    session's shuffle partition count, not even for the loop's duration:
+    a watcher thread reading the conf every few ms only sees the session
+    value."""
+    import threading
+
+    monkeypatch.setattr(C, "_ONE_TASK_MAX_EDGES", -1)
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    seen: set[str] = set()
+    stop = threading.Event()
+
+    def watch() -> None:
+        while not stop.is_set():
+            seen.add(spark.conf.get(key))
+            stop.wait(0.005)
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(300)], "src long, dst long"
+    ).repartition(3)
+    watcher = threading.Thread(target=watch, daemon=True)
+    watcher.start()
+    try:
+        res = connected_components(chain, max_iterations=40)
+    finally:
+        stop.set()
+        watcher.join(timeout=10)
+    assert not watcher.is_alive()
+    assert res.path == "label_propagation" and res.converged
+    assert res.components.select("component").distinct().collect() == [(0,)]
+    assert seen == {session_value}
 
 
 def test_null_endpoints_and_empty_graph(spark):

@@ -28,6 +28,43 @@ def test_training_is_partitioning_independent(spark):
     assert a == b  # bit-identical codebooks regardless of layout
 
 
+def test_ivf_quantizer_is_partitioning_independent(spark):
+    """IVF's coarse quantizer is the same Lloyd kernel with one subspace
+    and cosine-argmax assignment: bit-identical centroids at any layout."""
+    from pyspark.sql import functions as F
+
+    from neo4j_export_tool_spark.operators.ann import _cosine_argmax, _lloyd
+
+    def train(partitions):
+        base = _items(spark, partitions=partitions).select(
+            F.col("id").alias("item_id"), F.col("emb").alias("v")
+        ).persist()
+        try:
+            return _lloyd(base, 8, 3, 1, _cosine_argmax)
+        finally:
+            base.unpersist()
+
+    a = train(3)
+    assert len(a) == 1 and len(a[0]) == 8
+    assert a == train(11)
+
+
+def test_training_stops_at_a_fixpoint(spark):
+    """A round that leaves the codebooks bit-identical is a fixpoint: the
+    result equals one more round's, and the loop stops there instead of
+    running every requested round (jobs counted under a job group)."""
+    sc = spark.sparkContext
+    items = _items(spark)
+    sc.setJobGroup("pq-fixpoint", "train_pq n_iters=50")
+    try:
+        a = train_pq(items, "emb", "id", m=4, n_codes=8, n_iters=50)
+    finally:
+        sc._jsc.clearJobGroup()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("pq-fixpoint"))
+    assert a == train_pq(items, "emb", "id", m=4, n_codes=8, n_iters=51)
+    assert n_jobs < 50, n_jobs
+
+
 def test_encode_matches_numpy_twin(spark):
     items = _items(spark, n=60)
     books = train_pq(items, "emb", "id", m=4, n_codes=8, n_iters=2)
