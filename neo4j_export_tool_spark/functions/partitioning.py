@@ -23,9 +23,7 @@ repartition/distinct), the input's heavy stages already run at the
 session's shuffle parallelism, fan-out could only add cost, and the
 function returns the input untouched WITHOUT touching ``.rdd``.  Only
 narrow scan-shaped plans — where ``.rdd`` compiles without running jobs —
-are probed and repartitioned.  ``probe_rdd=True`` opts into the direct
-probe for callers whose input is persisted (the probe's materialization
-lands in the cache and is reused, e.g. the export serializers).
+are probed and repartitioned.
 
 Determinism: with ``key`` given, the exchange is a plain hash partitioning
 on that column (retry-safe, no sort); without it, round-robin repartition
@@ -86,21 +84,16 @@ def _plan_is_narrow(df: DataFrame) -> bool:
         return False
 
 
-def fan_out(
-    df: DataFrame, key: str | None = None, probe_rdd: bool = False
-) -> DataFrame:
+def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
     """Repartition ``df`` to the session parallelism iff it is an
     under-split narrow input.
 
     ``key``: optional column to hash-partition on (skips the round-robin
     pre-sort); pick a high-cardinality column (a row id).
-    ``probe_rdd``: probe partitioning via ``.rdd`` even for exchange-
-    bearing plans — only safe when the input is persisted (see module
-    docstring).
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if not probe_rdd and not _plan_is_narrow(df):
+    if not _plan_is_narrow(df):
         return df
     try:
         n = df.rdd.getNumPartitions()

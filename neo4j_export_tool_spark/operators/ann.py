@@ -362,6 +362,16 @@ def _cosine_scores(V, C):
     return np.where(np.isnan(S), np.inf, S)
 
 
+def _spread_vectors(items: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(item_id, v double array), repartitioned to the session parallelism:
+    the (often single-file) scan is spread once, up front, since the
+    zero-shuffle k-means and assignment passes have no exchange of their
+    own to parallelize them."""
+    return items.select(
+        F.col(id_col).alias("item_id"), as_double_array(F.col(vec_col)).alias("v")
+    ).repartition(items.sparkSession.sparkContext.defaultParallelism)
+
+
 def _cosine_argmax(V, C):
     return _cosine_scores(V, C).argmax(axis=1)
 
@@ -375,7 +385,6 @@ def ivf_topk(
     n_cells: int = 16,
     n_probe: int = 4,
     n_iters: int = 3,
-    seed: int = 11,
     exclude_self: bool = True,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k.
@@ -410,15 +419,7 @@ def ivf_topk(
     query_id_t = next(
         f.dataType.simpleString() for f in queries.schema if f.name == id_col
     )
-    # spread the (often single-file) scan once, up front: the zero-shuffle
-    # assignment has no exchange of its own to parallelize it
-    base = (
-        items.select(
-            F.col(id_col).alias("item_id"), as_double_array(F.col(vec_col)).alias("v")
-        )
-        .repartition(items.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=False)
-    )
+    base = _spread_vectors(items, vec_col, id_col).localCheckpoint(eager=False)
     books = _lloyd(base, n_cells, n_iters, 1, _cosine_argmax)
     if books is None:
         return items.sparkSession.createDataFrame(

@@ -42,7 +42,7 @@ from neo4j_export_tool_spark.functions.similarity import (
     as_double_array,
     cosine_col,
 )
-from neo4j_export_tool_spark.operators.ann import _lloyd
+from neo4j_export_tool_spark.operators.ann import _lloyd, _spread_vectors
 
 
 def _l2_argmin(V, C):
@@ -71,17 +71,18 @@ def train_pq(
     driver-side in sorted (sub, code, partition, chunk) order, so the
     float accumulation order is fixed regardless of scheduling.
     """
-    if not 1 <= n_codes <= 256:
-        raise ValueError("n_codes must be in [1, 256] (uint8 codes)")
-    base = items.select(
-        F.col(id_col).alias("item_id"), as_double_array(F.col(vec_col)).alias("v")
-    )
-    base = base.repartition(items.sparkSession.sparkContext.defaultParallelism)
-    base = base.persist()
+    base = _spread_vectors(items, vec_col, id_col).persist()
     try:
-        books = _lloyd(base, n_codes, n_iters, m, _l2_argmin)
+        return _train(base, m, n_codes, n_iters)
     finally:
         base.unpersist()
+
+
+def _train(base: DataFrame, m: int, n_codes: int, n_iters: int):
+    """`train_pq` on an already prepared (item_id, v) table."""
+    if not 1 <= n_codes <= 256:
+        raise ValueError("n_codes must be in [1, 256] (uint8 codes)")
+    books = _lloyd(base, n_codes, n_iters, m, _l2_argmin)
     if books is None:
         raise ValueError("cannot train PQ on an empty table")
     return books
@@ -157,11 +158,10 @@ def pq_topk(
     # lazy localCheckpoint, NOT persist/unpersist-in-finally: the returned
     # DataFrame is lazy, so an unpersist on return would drop the cache
     # before the caller's action ever ran and the items scan would run
-    # twice (ADC candidates + exact verify)
-    base = items.select(
-        F.col(id_col).alias("item_id"), as_double_array(F.col(vec_col)).alias("v")
-    ).localCheckpoint(eager=False)
-    books = codebooks or train_pq(base, "v", "item_id", m, n_codes, n_iters)
+    # twice (ADC candidates + exact verify).  Training reads the same
+    # checkpoint, so the items are materialized once.
+    base = _spread_vectors(items, vec_col, id_col).localCheckpoint(eager=False)
+    books = codebooks or _train(base, m, n_codes, n_iters)
     m = len(books)
     sub_d = len(books[0][0])
     coded = pq_encode(base, "v", "item_id", books)

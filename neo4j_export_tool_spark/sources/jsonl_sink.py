@@ -17,8 +17,9 @@ Where the reference reserves a padded metadata placeholder and seeks back
 (``Workflow/Workflow.fs:100-152``, ``Workflow/MetadataWriter.fs:32-224``),
 the sink serializes once and knows every counter before it writes:
 
-1. Both serializers feed one line table ``(sec, line, labels)``, persisted
-   ``MEMORY_AND_DISK`` so a lost executor's blocks recompute from lineage.
+1. Both serializers feed one line table ``(sec, line, labels)``, the
+   sink's one persisted table, ``MEMORY_AND_DISK`` so a lost executor's
+   blocks recompute from lineage.
 2. One aggregation over that table — the job that materializes it — gives
    the node/relationship counts, the per-label record/byte stats (reference
    A2, ``Export/Core.fs:277-313``; multi-label nodes split bytes evenly
@@ -48,9 +49,11 @@ JSON before serialization: ``properties_json`` inputs carry it already (see
 omitted, as ``to_json`` and the content hash omit it.  One line writer then
 builds node and relationship lines from an ordered head-field list:
 ``to_json(struct(head))`` + the properties splice, whole-stage codegen, for
-every row except those whose head strings hold hazard characters (divergent
-control-char escapes, truncation lengths); only those run through Python,
-in one coalesced ``mapInPandas``.
+every row.  Jackson's one escape that differs from the contract's writer
+(upper-case hex in ``\\u001F``-style control escapes) is lower-cased in
+place by a regex chain that runs only on rows whose head JSON holds such an
+escape.  Head strings are never truncated (the contract writes them in
+full, as ``to_json`` does), so no row needs a Python writer.
 """
 
 from __future__ import annotations
@@ -59,12 +62,10 @@ import os
 import re
 import time
 import uuid
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 from fractions import Fraction
 from typing import Any
 
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -75,14 +76,11 @@ from neo4j_export_tool_spark.functions.encoding import (
     MAX_LABELS_PER_NODE,
     dumps,
 )
-from neo4j_export_tool_spark.functions.export_json import (
-    export_props_json_col,
-    string_hazard,
-)
+from neo4j_export_tool_spark.functions.export_json import export_props_json_col
 
 
 # ---------------------------------------------------------------------------
-# record serialization (JVM line assembly + Python hazard-row writer)
+# record serialization (JVM line assembly)
 # ---------------------------------------------------------------------------
 
 def _validated_labels_col() -> Column:
@@ -112,92 +110,69 @@ def _splice_props(head: Column, props_json: Column) -> Column:
     )
 
 
-def _record_lines(
-    df: DataFrame,
-    head: list[tuple[str, Column]],
-    hazard_cols: list[Column],
-    key: str,
-    key_type: str,
-) -> DataFrame:
+# Jackson (``to_json``) writes the ``\uXXXX`` escape of these control
+# characters with an upper-case hex letter, the contract's writer (`dumps`)
+# with a lower-case one; every other escape is the same in both.
+_UPPER_HEX_ESCAPES = (
+    "000B", "000E", "000F", "001A", "001B", "001C", "001D", "001E", "001F",
+)
+
+
+def _contract_escapes(js: Column) -> Column:
+    """``js``, a ``to_json`` object, with the `_UPPER_HEX_ESCAPES`
+    lower-cased.  An escape counts only where its backslash follows an even
+    run of backslashes, so literal ``\\u001F`` text (JSON ``\\\\u001F``)
+    and backslash runs are left alone.  Only rows whose JSON holds a
+    ``\\u00`` escape at all run the regexes."""
+    fixed = js
+    for esc in _UPPER_HEX_ESCAPES:
+        fixed = F.regexp_replace(
+            fixed, rf"(?<!\\)((?:\\\\)*)\\u{esc}", rf"$1\\u{esc.lower()}"
+        )
+    return F.when(js.contains("\\u00"), fixed).otherwise(js)
+
+
+def _record_lines(df: DataFrame, head: list[tuple[str, Column]], key: str) -> DataFrame:
     """(line, ``key``): one record line per row of ``df``, whose
     ``properties_json`` holds contract-final bytes.
 
     ``head`` is the record's ordered ``(field, Column)`` list before
     ``properties``; ``key`` names the head field carried out beside the
-    line (the stats labels).  Rows whose ``hazard_cols`` need the
-    contract's Python JSON writer (`string_hazard`) are written by one
-    ``mapInPandas`` over the same head columns; every other row is
-    assembled JVM-side with ``to_json`` + `_splice_props`.
+    line (the stats labels).  Every row is assembled JVM-side in one
+    projection: ``to_json`` of the head with the contract's escapes
+    (`_contract_escapes`), then `_splice_props`.
     """
-    names = [name for name, _ in head]
-    head_cols = [c.alias(name) for name, c in head]
-    hazard = string_hazard(hazard_cols)
-    head_json = F.to_json(F.struct(*head_cols), {"ignoreNullFields": "false"})
-    fast = df.filter(~hazard).select(
-        _splice_props(head_json, F.col("properties_json")).alias("line"),
-        dict(head)[key].alias(key),
+    head_json = F.to_json(
+        F.struct(*[c.alias(name) for name, c in head]), {"ignoreNullFields": "false"}
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines, keys = [], []
-            cols = [pdf[n] for n in names] + [pdf["properties_json"]]
-            for *values, props in zip(*cols):
-                # Arrow hands arrays over as numpy arrays
-                rec = {
-                    n: v.tolist() if hasattr(v, "tolist") else v
-                    for n, v in zip(names, values)
-                }
-                head_js = dumps(rec)
-                lines.append(head_js[:-1] + ',"properties":' + (props or "{}") + "}")
-                keys.append(rec[key])
-            yield pd.DataFrame({"line": lines, key: keys})
-
-    # hazard rows are pathological (control chars in IDs/labels) — a
-    # handful at most, so collapse the Python branch to a few partitions
-    # instead of paying an empty Arrow task per input partition
-    slow = (
-        df.filter(hazard)
-        .select(*head_cols, "properties_json")
-        .coalesce(8)
-        .mapInPandas(run, schema=f"line string, {key} {key_type}")
-    )
-    return fast.unionByName(slow)
+    line = _splice_props(_contract_escapes(head_json), F.col("properties_json"))
+    return df.select(line.alias("line"), dict(head)[key].alias(key))
 
 
 def _serialize_nodes(nodes: DataFrame, export_id: str, hashed_ids: bool) -> DataFrame:
     """nodes(element_id, labels, properties_json, content_hash)
     → (line, labels), the labels validated by `_validated_labels_col`.
 
-    The input is fanned out first (guide §2.5): AQE coalesces the tiny
-    upstream aggregates of a local-sized graph to ONE partition, which
-    left the whole line assembly (to_json + hazard regex per record)
-    single-threaded; at scale the input is already wide and fan-out is a
-    no-op.
+    A narrow under-split input is fanned out first (guide §2.5), so the
+    line assembly of a one-partition scan does not run on one core; a
+    wide input already runs at the session's shuffle parallelism.
     """
     from neo4j_export_tool_spark.functions.partitioning import fan_out
 
-    # probe_rdd: the inputs are persisted by export_jsonl, so the probe's
-    # materialization lands in the cache and is reused by the stats job
-    nodes = fan_out(nodes, key="element_id", probe_rdd=True)
-    labels = _validated_labels_col()
+    nodes = fan_out(nodes, key="element_id")
     head = [("type", F.lit("node")), ("element_id", F.col("element_id"))]
     if hashed_ids:
         head.append(("NET_node_content_hash", F.col("content_hash")))
-    head += [("export_id", F.lit(export_id)), ("labels", labels)]
-    hazard_cols = [F.col("element_id"), F.array_join(labels, "")]
-    if hashed_ids:
-        hazard_cols.append(F.col("content_hash"))
-    return _record_lines(nodes, head, hazard_cols, "labels", "array<string>")
+    head += [("export_id", F.lit(export_id)), ("labels", _validated_labels_col())]
+    return _record_lines(nodes, head, "labels")
 
 
 def _serialize_rels(edges: DataFrame, export_id: str, hashed_ids: bool) -> DataFrame:
     """edges(element_id, label, start/end ids, start/end hashes,
-    properties_json) → (line, label).  Fanned out like `_serialize_nodes`
-    (AQE-coalesced local inputs serialize one-core)."""
+    properties_json) → (line, label).  Fanned out like `_serialize_nodes`."""
     from neo4j_export_tool_spark.functions.partitioning import fan_out
 
-    edges = fan_out(edges, key="element_id", probe_rdd=True)
+    edges = fan_out(edges, key="element_id")
     tail = ["label", "start_element_id", "end_element_id"]
     if hashed_ids:
         tail += ["start_node_content_hash", "end_node_content_hash"]
@@ -206,8 +181,7 @@ def _serialize_rels(edges: DataFrame, export_id: str, hashed_ids: bool) -> DataF
         head.append(("NET_rel_identity_hash", F.col("element_id")))
     head.append(("export_id", F.lit(export_id)))
     head += [(name, F.col(name)) for name in tail]
-    hazard_cols = [F.col(name) for name in ["element_id", *tail]]
-    return _record_lines(edges, head, hazard_cols, "label", "string")
+    return _record_lines(edges, head, "label")
 
 
 def _normalized_labels(labels_col: Column) -> Column:
@@ -526,33 +500,14 @@ def export_jsonl(
     started = time.gmtime()
     timestamp_utc = time.strftime("%Y-%m-%dT%H:%M:%SZ", started)
 
-    # The serializers split each table into a JVM lane and a Python
-    # hazard lane (two branches of a union); persist the projected inputs
-    # so the upstream plan (e.g. pandas-UDF mention detection, or the
-    # typed-bag encoder below) materializes once, not once per branch.
-    # Callers that already persisted contract-final inputs keep their
-    # cache — re-persisting a projection would materialize a second copy.
-    def _is_cached(df: DataFrame) -> bool:
-        try:
-            lvl = df.storageLevel
-            return lvl.useMemory or lvl.useDisk
-        except Exception:
-            return False
-
-    we_persisted: list[DataFrame] = []
-
     def _sink_input(df: DataFrame, cols: list[str]) -> DataFrame:
         """``cols`` + contract-final ``properties_json``; a typed
         ``properties`` struct is encoded here (`export_props_json_col`)."""
         if "properties_json" in df.columns:
-            if _is_cached(df):
-                return df
             props = F.col("properties_json")
         else:
             props = export_props_json_col(df)
-        out = df.select(*cols, props.alias("properties_json")).persist()
-        we_persisted.append(out)
-        return out
+        return df.select(*cols, props.alias("properties_json"))
 
     edge_cols = ["element_id", "label", "start_element_id", "end_element_id"]
     if hashed_ids:
@@ -568,16 +523,12 @@ def export_jsonl(
     # The reference computes the same statistics while streaming, then
     # seeks back into a padded metadata line (Workflow/MetadataWriter.fs:
     # 32-224); here the metadata line is composed before the data lands.
-    table = None
+    table = _line_table(
+        _serialize_nodes(nodes, export_id, hashed_ids),
+        _serialize_rels(edges, export_id, hashed_ids),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        table = _line_table(
-            _serialize_nodes(nodes, export_id, hashed_ids),
-            _serialize_rels(edges, export_id, hashed_ids),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
         stats = _table_stats(table)
-        for df in we_persisted:
-            df.unpersist()
-        we_persisted.clear()
         node_count, rel_count = stats.node_count, stats.rel_count
         node_stats, rel_stats = stats.node_stats, stats.rel_stats
         labels = [s["label"] for s in node_stats]
@@ -811,10 +762,7 @@ def export_jsonl(
             line_bytes=stats.line_bytes,
         )
     finally:
-        for df in we_persisted:
-            df.unpersist()
-        if table is not None:
-            table.unpersist()
+        table.unpersist()
 
 
 def with_properties_json(edges: DataFrame) -> DataFrame:

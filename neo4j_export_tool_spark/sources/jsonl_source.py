@@ -199,11 +199,9 @@ def _lines_df(spark: SparkSession, path: str) -> DataFrame:
                     for s in sections
                 ]
         return spark.read.text(sections)
-    df = spark.read.text(path)
-    # drop the metadata line (the only line with format_version at top level)
-    return df.filter(
-        F.get_json_object("value", "$.format_version").isNull()
-    )
+    # the metadata line stays in: it has no top-level ``type``, so the
+    # record filters of `read_jsonl_export` drop it without a parse of its own
+    return spark.read.text(path)
 
 
 def _read_metadata(path: str) -> dict[str, Any]:

@@ -1,10 +1,11 @@
 """Byte-parity tests for the JVM record-serialization fast path.
 
-The sink assembles record lines JVM-side (to_json + concat) whenever
-properties arrive as contract-final ``properties_json`` bytes; rows whose
-strings contain hazard characters fall back to the Python writer.  Every
-line, whichever lane produced it, must equal the pure-Python reference
-rendering: ``dumps({...head..., "properties": encode_properties(bag)})``.
+The sink assembles every record line JVM-side (to_json + concat) from
+contract-final ``properties_json`` bytes, lower-casing Jackson's upper-hex
+control escapes in place; property bags whose strings contain hazard
+characters are rendered by the contract UDF before that.  Every line must
+equal the pure-Python reference rendering:
+``dumps({...head..., "properties": encode_properties(bag)})``.
 """
 
 from __future__ import annotations
@@ -78,7 +79,7 @@ def test_node_lines_byte_exact_vs_python(spark):
         assert out[eid] == expected, f"line {i} diverges: {out[eid]!r}"
 
 
-def test_hazard_in_head_strings_routes_python(spark):
+def test_control_chars_in_head_strings_render_contract_escapes(spark):
     """element_id with a control char must still render contract bytes."""
     df = spark.createDataFrame(
         [("id\x0bwith\x1fctrl", "v")], "eid string, val string"
@@ -97,9 +98,9 @@ def test_hazard_in_head_strings_routes_python(spark):
 
 
 def test_label_validation_and_cap(spark):
-    """Each label case runs through both lanes: a plain element_id takes
-    the JVM lane, the same id with a control char the Python hazard
-    writer.  The two records must agree on everything but the id."""
+    """Each label case runs twice: with a plain element_id, and with the
+    same id plus a control char whose escape the sink lower-cases.  The two
+    records must agree on everything but the id."""
     long_label = "L" * 1001
     many = [f"l{i:03d}" for i in range(120)]
     cases = {"big": [None, long_label, *many], "null": None, "empty": []}
@@ -128,7 +129,7 @@ def test_label_validation_and_cap(spark):
     assert len(recs) == 6
     for case in cases:
         hazard_row = next(r["line"] for r in rows if f'"{case}\\u000b"' in r["line"])
-        assert "\\u000B" not in hazard_row  # the Python writer's escape
+        assert "\\u000B" not in hazard_row  # the contract's escape
         assert recs[case] == recs[case + "\x0b"], case
     # cap is silent (reference Seq.truncate, GraphElements.fs:146-148)
     assert len(recs["big"]["labels"]) == MAX_LABELS_PER_NODE
@@ -180,6 +181,80 @@ def test_rel_lines_byte_exact_vs_python(spark):
             "properties": encode_properties({"text": s, "num": i}),
         }
         assert by_start[start] == dumps(rec), f"rel {i} diverges"
+
+
+# the nine controls Jackson escapes with an upper-case hex letter, then the
+# digit-only escapes both writers share
+UPPER_HEX_CTRL = ["\x0b", "\x0e", "\x0f", *map(chr, range(0x1A, 0x20))]
+DIGIT_CTRL = list(map(chr, range(0x00, 0x08)))
+ESCAPE_CASES = [
+    *(f"a{c}b" for c in UPPER_HEX_CTRL + DIGIT_CTRL),
+    "".join(UPPER_HEX_CTRL),
+    "literal \\u001F and \\u000b text",
+    "\\u001F\x1f",
+    "\\\\u001F",
+    *("\\" * n + c for n in (1, 2, 3) for c in ("\x1f", "\x0b", "\x01")),
+    *("\\" * n + "u001F" for n in (1, 2, 3)),
+    "plain",
+]
+
+
+@pytest.mark.parametrize("hashed_ids", [True, False])
+def test_head_escapes_byte_exact_vs_dumps(spark, hashed_ids):
+    """Control characters in element ids, labels, relationship ids and
+    types: every serialized line equals `dumps` of the same head, for each
+    upper-hex escape, the digit-only ones, literal ``\\u001F`` text and
+    backslash runs of length 1-3 before a control character."""
+    rows = [(i, s) for i, s in enumerate(ESCAPE_CASES)]
+    base = spark.createDataFrame(rows, "i int, s string")
+    nodes = base.select(
+        F.concat(F.col("s"), F.col("i").cast("string")).alias("element_id"),
+        F.array(F.col("s"), F.lit("L")).alias("labels"),
+        F.lit('{"k":1}').alias("properties_json"),
+        F.concat(F.lit("h"), F.col("s")).alias("content_hash"),
+    )
+    edges = base.select(
+        F.concat(F.lit("r"), F.col("s"), F.col("i").cast("string")).alias(
+            "element_id"
+        ),
+        F.col("s").alias("label"),
+        F.concat(F.col("s"), F.lit("<")).alias("start_element_id"),
+        F.concat(F.lit(">"), F.col("s")).alias("end_element_id"),
+        F.concat(F.lit("hs"), F.col("s")).alias("start_node_content_hash"),
+        F.concat(F.lit("he"), F.col("s")).alias("end_node_content_hash"),
+        F.lit("{}").alias("properties_json"),
+    )
+    expected_nodes, expected_rels = set(), set()
+    for i, s in rows:
+        eid = f"{s}{i}"
+        rec = {"type": "node", "element_id": eid}
+        if hashed_ids:
+            rec["NET_node_content_hash"] = f"h{s}"
+        rec |= {"export_id": "EXP", "labels": [s, "L"], "properties": {"k": 1}}
+        expected_nodes.add(dumps(rec))
+        rid = f"r{s}{i}"
+        rec = {"type": "relationship", "element_id": rid}
+        if hashed_ids:
+            rec["NET_rel_identity_hash"] = rid
+        rec |= {
+            "export_id": "EXP",
+            "label": s,
+            "start_element_id": f"{s}<",
+            "end_element_id": f">{s}",
+        }
+        if hashed_ids:
+            rec |= {
+                "start_node_content_hash": f"hs{s}",
+                "end_node_content_hash": f"he{s}",
+            }
+        rec["properties"] = {}
+        expected_rels.add(dumps(rec))
+    node_lines = _serialize_nodes(nodes, "EXP", hashed_ids).collect()
+    rel_lines = _serialize_rels(edges, "EXP", hashed_ids).collect()
+    assert {r["line"] for r in node_lines} == expected_nodes
+    assert {r["line"] for r in rel_lines} == expected_rels
+    assert len(node_lines) == len(rel_lines) == len(rows)
+    assert {r["label"] for r in rel_lines} == set(ESCAPE_CASES)
 
 
 def test_fractional_bags_route_through_contract_udf(spark):

@@ -58,6 +58,36 @@ def test_reexport_is_byte_stable(spark, exported, tmp_path):
     assert res2.rel_count == exported.rel_count
 
 
+def test_single_file_read_keeps_metadata_out_of_every_table(spark, tmp_path):
+    """The metadata line has no top-level ``type``: a single-file export
+    with errors and warnings reads back with the metadata in
+    ``metadata`` only, never as a row of ``nodes``, ``edges`` or
+    ``errors``."""
+    nodes = spark.createDataFrame(
+        [("n:1", ["A"], '{"k":1}', "h1"), ("n:2", ["B"], "{}", "h2")],
+        "element_id string, labels array<string>, properties_json string, "
+        "content_hash string",
+    )
+    edges = spark.createDataFrame(
+        [("r:1", "R", "n:1", "n:2", "h1", "h2", "{}")],
+        "element_id string, label string, start_element_id string, "
+        "end_element_id string, start_node_content_hash string, "
+        "end_node_content_hash string, properties_json string",
+    )
+    res = export_jsonl(
+        nodes, edges, str(tmp_path), db_name="meta",
+        errors=[{"timestamp": "t", "message": "boom"}],
+        warnings=[{"timestamp": "t", "message": "careful"}],
+    )
+    imp = read_jsonl_export(spark, res.path)
+    assert imp.metadata["export_metadata"]["export_id"] == res.export_id
+    assert sorted(r.element_id for r in imp.nodes.collect()) == ["n:1", "n:2"]
+    assert [r.element_id for r in imp.edges.collect()] == ["r:1"]
+    assert sorted(json.loads(r.line)["type"] for r in imp.errors.collect()) == [
+        "error", "warning",
+    ]
+
+
 def test_dir_mode_import(spark, sf_dir, tmp_path):
     nodes, hashed = documents_kg(spark, sf_dir)
     res = export_jsonl(

@@ -298,3 +298,29 @@ def test_manifest_stats_equal_recount_of_file(spark, tmp_path, graph):
         assert n_nodes == 10 and n_rels == 6
     elif graph == "empty":
         assert lines == lines[:1] and stats == []
+
+
+def test_export_persists_only_the_line_table(spark, tmp_path, monkeypatch):
+    """The line table is the sink's one cache: neither input is persisted,
+    a typed ``properties`` struct included, and nothing stays cached after
+    the export."""
+    from pyspark.sql import functions as F
+
+    nodes = _nodes(spark)
+    edges = _edges(spark).drop("properties_json").withColumn(
+        "properties", F.struct(F.col("element_id").alias("id"))
+    )
+    persisted = []
+    frame_type = type(nodes)
+    persist = frame_type.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self.columns)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "persist", spy)
+    cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    res = export_jsonl(nodes, edges, str(tmp_path), export_id=EXPORT_ID)
+    assert persisted == [["sec", "line", "labels"]]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
+    assert (res.node_count, res.rel_count) == (10, 6)

@@ -62,23 +62,6 @@ def test_fan_out_skips_exchange_bearing_plans_without_probe(spark):
     assert fan_out(j) is j
 
 
-def test_fan_out_probe_rdd_overrides_plan_guard(spark):
-    df = (
-        spark.range(0, 100, 1, 1)
-        .groupBy((F.col("id") % 5).alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
-    )
-    try:
-        df.count()  # materialize the cache the probe will reuse
-        out = fan_out(df, key="k", probe_rdd=True)
-        # 5 post-AQE rows in few partitions → fan-out fires
-        assert out is not df
-        assert sorted(r.k for r in out.collect()) == [0, 1, 2, 3, 4]
-    finally:
-        df.unpersist()
-
-
 def test_fan_out_narrow_filter_projection_still_probes(spark):
     # narrow chain (filter+project over a scan-shaped input) is probed
     df = (

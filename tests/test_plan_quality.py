@@ -70,8 +70,9 @@ def test_unrolled_dot_in_codegen(spark, sf_dir):
 
 def test_export_fast_lane_is_jvm_side(spark, sf_dir):
     """Simple-bag JSONL serialization must not evaluate Python per row: the
-    only Python node in the plan is the coalesced hazard-lane mapInPandas
-    (plus the upstream mention detection); no scalar ArrowEvalPython."""
+    line assembly is JVM-side for every row, so the plan holds no
+    mapInPandas at all (the upstream mention detection is a scalar
+    pandas UDF); never row-at-a-time Python."""
     from neo4j_export_tool_spark.plans.flagship import documents_kg
     from neo4j_export_tool_spark.sources.jsonl_sink import (
         _serialize_nodes,
@@ -85,12 +86,10 @@ def test_export_fast_lane_is_jvm_side(spark, sf_dir):
         hashed_ids=True,
     )
     plan = plan_of(lines)
-    # exactly one iterator-Python stage: the coalesced hazard fallback lane
-    # (the remaining ArrowEvalPython is the NULL-GATED contract UDF — safe
-    # rows feed None, so per-row Python work is a None check)
-    # ("MapInPandas (" is the tree form; formatted explain also repeats the
-    # node name in the details section)
-    assert plan.count("MapInPandas (") == 1
+    # no iterator-Python stage (the remaining ArrowEvalPython is the
+    # NULL-GATED contract UDF — safe rows feed None, so per-row Python work
+    # is a None check); "MapInPandas (" is the tree form of the node
+    assert plan.count("MapInPandas (") == 0
     # never row-at-a-time Python
     assert "BatchEvalPython" not in plan
 
