@@ -28,8 +28,10 @@ Reproduces the reference serializer's type → JSON mapping
   (``Engine.fs:41-42``, ``Context.fs:54-67``)
 - unknown type → ``{_type, _note:"unserializable_type"}`` (``Context.fs:69-89``)
 
-All of this runs inside Arrow-vectorized pandas UDFs during JSONL
-serialization; none of it touches the per-row Python path of Spark proper.
+Simple property bags (int/string/bool fields) get the same bytes JVM-side
+(``functions.export_json.export_props_json_col``, string marker included);
+everything else here runs inside Arrow-vectorized pandas UDFs during JSONL
+serialization, never on the per-row Python path of Spark proper.
 """
 
 from __future__ import annotations

@@ -16,12 +16,15 @@ with identical escape tables.  Measured divergences (this sandbox, Spark
 - contract truncation markers (string > 10M chars, list > 10k items, …)
   have no ``to_json`` analog.
 
-So the JVM fast path applies when the bag *schema* rules out fractional /
-nested / temporal / binary values and the *row* contains no hazard strings
-(rare control chars, over-limit lengths).  Hazard rows and non-simple bags
+So simple bags (int/string/bool fields) render fully JVM-side:
+``to_json`` with the upper-hex escapes lower-cased in place
+(`_contract_escapes`, the one home of that rule; the sink's record heads
+use it too), and a row with an over-limit string assembles its object
+from per-field ``to_json`` fragments, the long strings as the contract's
+``string_too_large`` marker.  Bags with fractional / nested fields
 re-canonicalize through an Arrow-vectorized pandas UDF running the §1.3
-encoding contract — the same normalization the sink previously applied to
-every row in Python.
+encoding contract, and bags with temporal / binary / decimal fields
+through the typed struct encoder.
 """
 
 from __future__ import annotations
@@ -44,11 +47,27 @@ from neo4j_export_tool_spark.functions.encoding import (
     encode_properties,
 )
 
-# Control characters whose JSON escape differs between Jackson (uppercase
-# hex) and the contract's Python writer (lowercase hex).  Conservative
-# superset: everything below 0x20 except the shared shorthand escapes
-# \b \t \n \f \r (0x08, 0x09, 0x0a, 0x0c, 0x0d).
-CTRL_HAZARD_RE = "[\\x00-\\x07\\x0b\\x0e-\\x1f]"
+# Jackson (``to_json``) writes the ``\uXXXX`` escape of these control
+# characters with an upper-case hex letter, the contract's writer (`dumps`)
+# with a lower-case one; every other escape is the same in both.
+_UPPER_HEX_ESCAPES = (
+    "000B", "000E", "000F", "001A", "001B", "001C", "001D", "001E", "001F",
+)
+
+
+def _contract_escapes(js: Column) -> Column:
+    """``js``, a ``to_json`` object, with the `_UPPER_HEX_ESCAPES`
+    lower-cased.  An escape counts only where its backslash follows an even
+    run of backslashes, so literal ``\\u001F`` text (JSON ``\\\\u001F``)
+    and backslash runs are left alone.  Only rows whose JSON holds a
+    ``\\u00`` escape at all run the regexes."""
+    fixed = js
+    for esc in _UPPER_HEX_ESCAPES:
+        fixed = F.regexp_replace(
+            fixed, rf"(?<!\\)((?:\\\\)*)\\u{esc}", rf"$1\\u{esc.lower()}"
+        )
+    return F.when(js.contains("\\u00"), fixed).otherwise(js)
+
 
 _FAST_FIELD_TYPES = (
     T.StringType,
@@ -63,14 +82,15 @@ _FAST_FIELD_TYPES = (
 
 def bag_is_export_fast(dtype: T.DataType) -> bool:
     """True when a property-bag struct schema guarantees ``to_json`` output
-    equals the §1.3 contract encoding, up to per-row string hazards."""
+    equals the §1.3 contract encoding, up to the escape case and the
+    over-limit strings that `export_props_json_col` handles JVM-side."""
     if not isinstance(dtype, T.StructType):
         return False
     if len(dtype.fields) > MAX_COLLECTION_ITEMS:
         return False
     names = [f.name for f in dtype.fields]
     # duplicate struct field names are legal in Spark but the contract
-    # renames the second to key_1 — schema-level, so not a row hazard
+    # renames the second to key_1 — schema-level, so checked here
     if len(set(names)) != len(names):
         return False
     for f in dtype.fields:
@@ -78,29 +98,7 @@ def bag_is_export_fast(dtype: T.DataType) -> bool:
             return False
         if len(f.name) > MAX_KEY_LENGTH:
             return False
-        if any(ord(c) < 0x20 for c in f.name):
-            return False
     return True
-
-
-def string_hazard(cols: list[Column]) -> Column:
-    """Row predicate: any of the string columns needs the Python JSON writer
-    (divergent control-char escapes or contract truncation markers).
-
-    The control-char scan runs ONCE over the concatenation of all columns
-    (``concat_ws`` skips nulls, and a null column carries no hazard, so
-    the predicate is unchanged): per-column ``rlike`` paid one regex pass
-    per column per row and was the single hottest expression of the
-    export serializer (measured ~6× the combined form).  Length checks
-    stay per-column (the contract truncates per STRING, not per row)."""
-    if not cols:
-        return F.lit(False)
-    ctrl = F.concat_ws("", *cols).rlike(CTRL_HAZARD_RE)
-    checks = [
-        F.coalesce(F.length(c) > MAX_STRING_LENGTH, F.lit(False))
-        for c in cols
-    ]
-    return reduce(lambda a, b: a | b, checks, F.coalesce(ctrl, F.lit(False)))
 
 
 _TYPED_FIELD_TYPES = (
@@ -184,10 +182,7 @@ def export_json_canon_udf(json_props: pd.Series) -> pd.Series:
 
     def canon(s: str | None) -> str | None:
         if s is None:
-            # null-gated input: the caller feeds NULL for rows that do not
-            # need Python (Catalyst hoists pandas UDFs out of CASE WHEN and
-            # evaluates them on EVERY row — gating the INPUT keeps the
-            # per-row Python work at a None check)
+            # a null bag: the sink splices "{}" for it
             return None
         if s == "":
             return "{}"
@@ -199,16 +194,44 @@ def export_json_canon_udf(json_props: pd.Series) -> pd.Series:
     return json_props.map(canon)
 
 
+def _field_fragment(bag: Column, f: T.StructField) -> Column:
+    """``"name":value`` of one field of a simple bag, NULL when the value is
+    null; a string over ``MAX_STRING_LENGTH`` renders as the contract's
+    ``string_too_large`` marker (`encoding.encode_value`).  Spark's
+    ``length`` and ``substring`` count code points, as Python's ``len`` and
+    slicing do."""
+    v = bag[f.name]
+    obj = F.to_json(F.struct(v.alias(f.name)))
+    plain = F.when(v.isNotNull(), obj.substr(F.lit(2), F.length(obj) - 2))
+    if not isinstance(f.dataType, T.StringType):
+        return plain
+    n = F.length(v)
+    marker = F.to_json(
+        F.struct(
+            F.lit("string_too_large").alias("_truncated"),
+            n.alias("_length"),
+            # truncate_with_ellipsis(v, 1000)
+            F.concat(F.substring(v, 1, 997), F.lit("...")).alias("_prefix"),
+            F.base64(F.unhex(F.sha2(v, 256))).alias("_sha256"),
+        )
+    )
+    return F.when(
+        n > MAX_STRING_LENGTH, F.concat(F.lit(dumps(f.name) + ":"), marker)
+    ).otherwise(plain)
+
+
 def export_props_json_col(df: DataFrame, struct_col: str = "properties") -> Column:
     """Final contract bytes for the record's ``properties`` object.
 
-    Simple bags render fully JVM-side (``to_json``; codegen) with hazard rows
-    routed through the contract UDF; bags with temporal/binary/decimal
-    fields go through the TYPED struct encoder (Arrow keeps real
-    datetimes/bytes, so the contract's temporal formats apply); remaining
-    non-simple bags (fractional/nested) re-canonicalize through the
-    JSON-string UDF (normalizes Jackson float formatting, applies
-    truncation markers).  Nulls are dropped in every lane, like ``to_json``.
+    Simple bags render fully JVM-side: ``to_json`` through
+    `_contract_escapes`, and on a row with a string over
+    ``MAX_STRING_LENGTH`` the object is assembled from `_field_fragment`s
+    instead.  Bags with temporal/binary/decimal fields go through the TYPED
+    struct encoder (Arrow keeps real datetimes/bytes, so the contract's
+    temporal formats apply); remaining non-simple bags (fractional/nested)
+    re-canonicalize through the JSON-string UDF (normalizes Jackson float
+    formatting, applies truncation markers).  Nulls are dropped in every
+    lane, like ``to_json``.
     """
     dtype = df.schema[struct_col].dataType
     if isinstance(dtype, T.StructType):
@@ -228,18 +251,18 @@ def export_props_json_col(df: DataFrame, struct_col: str = "properties") -> Colu
     if not bag_is_export_fast(dtype):
         return export_json_canon_udf(js)
     assert isinstance(dtype, T.StructType)
-    str_cols = [
-        F.col(struct_col)[f.name]
+    bag = F.col(struct_col)
+    # all-null / _empty-only bags: to_json drops null fields → "{}" already
+    js = F.coalesce(js, F.lit("{}"))
+    too_long = [
+        F.length(bag[f.name]) > MAX_STRING_LENGTH
         for f in dtype.fields
         if isinstance(f.dataType, T.StringType)
     ]
-    hazard = string_hazard(str_cols)
-    # all-null / _empty-only bags: to_json drops null fields → "{}" already
-    safe = F.coalesce(js, F.lit("{}"))
-    if not str_cols:
-        return safe
-    # NB: Catalyst hoists pandas UDFs out of CASE WHEN into an
-    # ArrowEvalPython node that runs on EVERY row — so gate the INPUT:
-    # safe rows feed NULL (the UDF returns None at a None-check's cost)
-    # and coalesce falls back to the JVM bytes
-    return F.coalesce(export_json_canon_udf(F.when(hazard, js)), safe)
+    if too_long:
+        frags = F.concat_ws(",", *[_field_fragment(bag, f) for f in dtype.fields])
+        js = F.when(
+            reduce(lambda a, b: a | b, too_long),
+            F.concat(F.lit("{"), frags, F.lit("}")),
+        ).otherwise(js)
+    return _contract_escapes(js)

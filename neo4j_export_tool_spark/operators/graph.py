@@ -178,9 +178,9 @@ def nodes_union(*node_dfs: DataFrame) -> DataFrame:
     Spark requires one type per column, so the open-ended property bag is
     carried as pre-serialized JSON (SURVEY.md §1.2) once classes mix:
     (element_id, labels, properties_json, canonical_props, content_hash).
-    ``properties_json`` is contract-final bytes (per-class JVM ``to_json``
-    fast path; the §1.3 UDF only for non-simple bags / hazard rows), so the
-    JSONL sink can splice it into record lines without touching Python.
+    ``properties_json`` is contract-final bytes (simple bags JVM-side for
+    every row; the §1.3 UDFs only for non-simple bags), so the JSONL sink
+    can splice it into record lines without touching Python.
     """
     from neo4j_export_tool_spark.functions.export_json import export_props_json_col
 

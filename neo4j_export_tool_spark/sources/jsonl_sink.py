@@ -51,9 +51,10 @@ builds node and relationship lines from an ordered head-field list:
 ``to_json(struct(head))`` + the properties splice, whole-stage codegen, for
 every row.  Jackson's one escape that differs from the contract's writer
 (upper-case hex in ``\\u001F``-style control escapes) is lower-cased in
-place by a regex chain that runs only on rows whose head JSON holds such an
-escape.  Head strings are never truncated (the contract writes them in
-full, as ``to_json`` does), so no row needs a Python writer.
+place by `functions.export_json._contract_escapes`, a regex chain that runs
+only on rows whose head JSON holds such an escape.  Head strings are never
+truncated (the contract writes them in full, as ``to_json`` does), so no
+row needs a Python writer.
 """
 
 from __future__ import annotations
@@ -76,7 +77,10 @@ from neo4j_export_tool_spark.functions.encoding import (
     MAX_LABELS_PER_NODE,
     dumps,
 )
-from neo4j_export_tool_spark.functions.export_json import export_props_json_col
+from neo4j_export_tool_spark.functions.export_json import (
+    _contract_escapes,
+    export_props_json_col,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -108,28 +112,6 @@ def _splice_props(head: Column, props_json: Column) -> Column:
         props,
         F.lit("}"),
     )
-
-
-# Jackson (``to_json``) writes the ``\uXXXX`` escape of these control
-# characters with an upper-case hex letter, the contract's writer (`dumps`)
-# with a lower-case one; every other escape is the same in both.
-_UPPER_HEX_ESCAPES = (
-    "000B", "000E", "000F", "001A", "001B", "001C", "001D", "001E", "001F",
-)
-
-
-def _contract_escapes(js: Column) -> Column:
-    """``js``, a ``to_json`` object, with the `_UPPER_HEX_ESCAPES`
-    lower-cased.  An escape counts only where its backslash follows an even
-    run of backslashes, so literal ``\\u001F`` text (JSON ``\\\\u001F``)
-    and backslash runs are left alone.  Only rows whose JSON holds a
-    ``\\u00`` escape at all run the regexes."""
-    fixed = js
-    for esc in _UPPER_HEX_ESCAPES:
-        fixed = F.regexp_replace(
-            fixed, rf"(?<!\\)((?:\\\\)*)\\u{esc}", rf"$1\\u{esc.lower()}"
-        )
-    return F.when(js.contains("\\u00"), fixed).otherwise(js)
 
 
 def _record_lines(df: DataFrame, head: list[tuple[str, Column]], key: str) -> DataFrame:

@@ -2,10 +2,10 @@
 
 The sink assembles every record line JVM-side (to_json + concat) from
 contract-final ``properties_json`` bytes, lower-casing Jackson's upper-hex
-control escapes in place; property bags whose strings contain hazard
-characters are rendered by the contract UDF before that.  Every line must
-equal the pure-Python reference rendering:
-``dumps({...head..., "properties": encode_properties(bag)})``.
+control escapes in place; simple property bags are rendered JVM-side the
+same way, with strings over ``MAX_STRING_LENGTH`` as the contract's
+truncation marker.  Every line must equal the pure-Python reference
+rendering: ``dumps({...head..., "properties": encode_properties(bag)})``.
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.encoding import (
     MAX_LABELS_PER_NODE,
+    MAX_STRING_LENGTH,
     dumps,
     encode_properties,
 )
@@ -38,6 +39,9 @@ TRICKY = [
     "hazard ctrl \x01\x0b\x1f\x7f chars",
     "",
 ]
+# a bag key the sink's escape fix must reach: control, non-ASCII, quote and
+# backslash characters
+CTRL_KEY = 'k\x1fé\x0bq"\\'
 
 
 def _py_node_line(eid, labels, bag, chash, export_id):
@@ -61,7 +65,7 @@ def test_node_lines_byte_exact_vs_python(spark):
         df,
         labels=["Doc"],
         element_id=F.col("eid"),
-        props={"text": F.col("text"), "num": F.col("num")},
+        props={"text": F.col("text"), "num": F.col("num"), CTRL_KEY: F.col("text")},
     )
     union = nodes_union(nodes)
     out = {
@@ -74,7 +78,7 @@ def test_node_lines_byte_exact_vs_python(spark):
     for i, s in enumerate(TRICKY):
         eid = f"doc:{i}"
         expected = _py_node_line(
-            eid, ["Doc"], {"text": s, "num": i}, hashes[eid], "EXP"
+            eid, ["Doc"], {"text": s, "num": i, CTRL_KEY: s}, hashes[eid], "EXP"
         )
         assert out[eid] == expected, f"line {i} diverges: {out[eid]!r}"
 
@@ -281,6 +285,41 @@ def test_fractional_bags_route_through_contract_udf(spark):
     assert obj["c"] == "NaN"
 
 
+def test_over_limit_strings_render_contract_marker(spark):
+    """A simple-bag string over ``MAX_STRING_LENGTH`` renders as the
+    contract's ``string_too_large`` marker, byte-equal to
+    ``dumps(encode_properties(bag))``: control and astral characters in the
+    997-character prefix (an astral character at code point 996, the
+    surrogate pair that spans UTF-16 units 996-997), a multi-byte body for
+    the SHA-256, two long fields beside a null one, and a string of exactly
+    the limit, which stays plain."""
+    n = MAX_STRING_LENGTH
+    astral = "\U0001f600"
+    straddle = "\x01\x1f\x0b" + "p" * 993 + astral + "q" + "z" * n
+    rows = [
+        (0, straddle, 1, "é" * (n + 1), None),
+        (1, "x" * n, 2, "\x0b" + astral * 3 + "\\u001F" + "\x1f" * n, "s\x1f"),
+        (2, "plain", None, None, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "id int, text string, num long, other string, note string"
+    )
+    bag = df.select(
+        "id",
+        F.struct(*[F.col(c).alias(c) for c in df.columns[1:]]).alias("properties"),
+    )
+    got = dict(bag.select("id", export_props_json_col(bag)).collect())
+    assert len(got) == len(rows)
+    for i, *vals in rows:
+        props = {
+            k: v for k, v in zip(df.columns[1:], vals, strict=True) if v is not None
+        }
+        assert got[i] == dumps(encode_properties(props)), f"row {i}"
+    assert got[0].count('"_truncated":"string_too_large"') == 2
+    assert got[1].count('"_truncated":"string_too_large"') == 1
+    assert json.loads(got[1])["text"] == "x" * n
+
+
 def test_bag_fast_detection(spark):
     from pyspark.sql import types as T
 
@@ -302,6 +341,8 @@ def test_bag_fast_detection(spark):
     assert not bag_is_export_fast(with_ts)
     long_key = T.StructType([T.StructField("k" * 1001, T.StringType())])
     assert not bag_is_export_fast(long_key)
+    ctrl_key = T.StructType([T.StructField(CTRL_KEY, T.StringType())])
+    assert bag_is_export_fast(ctrl_key)
 
 
 def test_typed_bag_via_union_lane_matches_contract(spark):

@@ -70,9 +70,10 @@ def test_unrolled_dot_in_codegen(spark, sf_dir):
 
 def test_export_fast_lane_is_jvm_side(spark, sf_dir):
     """Simple-bag JSONL serialization must not evaluate Python per row: the
-    line assembly is JVM-side for every row, so the plan holds no
-    mapInPandas at all (the upstream mention detection is a scalar
-    pandas UDF); never row-at-a-time Python."""
+    property bags and the line assembly are JVM-side for every row, so the
+    node-line plan holds no pandas UDF and no mapInPandas (the upstream
+    mention detection is not part of it); never row-at-a-time Python."""
+    from neo4j_export_tool_spark.operators.graph import edges_from
     from neo4j_export_tool_spark.plans.flagship import documents_kg
     from neo4j_export_tool_spark.sources.jsonl_sink import (
         _serialize_nodes,
@@ -86,16 +87,35 @@ def test_export_fast_lane_is_jvm_side(spark, sf_dir):
         hashed_ids=True,
     )
     plan = plan_of(lines)
-    # no iterator-Python stage (the remaining ArrowEvalPython is the
-    # NULL-GATED contract UDF — safe rows feed None, so per-row Python work
-    # is a None check); "MapInPandas (" is the tree form of the node
+    # "MapInPandas (" is the tree form of the node
     assert plan.count("MapInPandas (") == 0
+    assert plan.count("ArrowEvalPython") == 0
     # never row-at-a-time Python
     assert "BatchEvalPython" not in plan
 
     edges = with_properties_json(hashed)
     eplan = plan_of(edges)
     assert "BatchEvalPython" not in eplan
+
+    # a string bag shaped like the pages pipeline's entity edges
+    triples = spark.createDataFrame(
+        [("http://a", 3)], "url string, char_start int"
+    )
+    pages_edges = edges_from(
+        triples,
+        rel_type="LOCATED_IN",
+        start_element_id=F.lit("entity:a"),
+        end_element_id=F.lit("entity:b"),
+        props={"source_url": F.col("url"), "char_start": F.col("char_start")},
+    ).withColumns(
+        {
+            "start_node_content_hash": F.lit("0" * 64),
+            "end_node_content_hash": F.lit("1" * 64),
+        }
+    )
+    pplan = plan_of(with_properties_json(pages_edges))
+    assert pplan.count("ArrowEvalPython") == 0
+    assert "BatchEvalPython" not in pplan
 
 
 def test_pii_scrub_is_pure_codegen(spark, sf_dir):
