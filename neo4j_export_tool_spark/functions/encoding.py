@@ -48,6 +48,11 @@ from typing import Any
 
 # Limits: reference Core/Constants.fs:186-199
 MAX_STRING_LENGTH = 10_000_000
+# a longer string encodes as the STRING_TOO_LARGE marker, whose `_prefix` is
+# the string cut to STRING_PREFIX_LENGTH chars by `truncate_with_ellipsis`
+STRING_TOO_LARGE = "string_too_large"
+STRING_PREFIX_LENGTH = 1_000
+ELLIPSIS = "..."
 MAX_BINARY_LENGTH = 50_000_000
 MAX_COLLECTION_ITEMS = 10_000
 MAX_NESTED_DEPTH = 10
@@ -312,7 +317,7 @@ def truncate_with_ellipsis(s: str, max_len: int) -> str:
     """Span-slice to ``max_len - 3`` + "..." (reference ``Export/Utils.fs:35-42``)."""
     if len(s) <= max_len:
         return s
-    return s[: max_len - 3] + "..."
+    return s[: max_len - len(ELLIPSIS)] + ELLIPSIS
 
 
 def ensure_unique_keys(keys: Sequence[str]) -> list[str]:
@@ -521,9 +526,9 @@ def encode_value(value: Any, depth: int = 0) -> Any:
     if isinstance(value, str):
         if len(value) > MAX_STRING_LENGTH:
             return {
-                "_truncated": "string_too_large",
+                "_truncated": STRING_TOO_LARGE,
                 "_length": len(value),
-                "_prefix": truncate_with_ellipsis(value, 1000),
+                "_prefix": truncate_with_ellipsis(value, STRING_PREFIX_LENGTH),
                 "_sha256": _sha256_b64(value.encode("utf-8")),
             }
         return value

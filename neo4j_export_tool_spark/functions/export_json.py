@@ -16,12 +16,11 @@ with identical escape tables.  Measured divergences (this sandbox, Spark
 - contract truncation markers (string > 10M chars, list > 10k items, …)
   have no ``to_json`` analog.
 
-So simple bags (int/string/bool fields) render fully JVM-side:
-``to_json`` with the upper-hex escapes lower-cased in place
-(`_contract_escapes`, the one home of that rule; the sink's record heads
-use it too), and a row with an over-limit string assembles its object
-from per-field ``to_json`` fragments, the long strings as the contract's
-``string_too_large`` marker.  Bags with fractional / nested fields
+So simple bags (int/string/bool fields) render fully JVM-side: the object
+is assembled from per-field ``to_json`` fragments, an over-limit string as
+the contract's ``string_too_large`` marker, and the upper-hex escapes are
+lower-cased in place (`_contract_escapes`, the one home of that rule; the
+sink's record heads use it too).  Bags with fractional / nested fields
 re-canonicalize through an Arrow-vectorized pandas UDF running the §1.3
 encoding contract, and bags with temporal / binary / decimal fields
 through the typed struct encoder.
@@ -30,7 +29,6 @@ through the typed struct encoder.
 from __future__ import annotations
 
 import json
-from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -40,9 +38,12 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from neo4j_export_tool_spark.functions.encoding import (
+    ELLIPSIS,
     MAX_COLLECTION_ITEMS,
     MAX_KEY_LENGTH,
     MAX_STRING_LENGTH,
+    STRING_PREFIX_LENGTH,
+    STRING_TOO_LARGE,
     dumps,
     encode_properties,
 )
@@ -208,10 +209,12 @@ def _field_fragment(bag: Column, f: T.StructField) -> Column:
     n = F.length(v)
     marker = F.to_json(
         F.struct(
-            F.lit("string_too_large").alias("_truncated"),
+            F.lit(STRING_TOO_LARGE).alias("_truncated"),
             n.alias("_length"),
-            # truncate_with_ellipsis(v, 1000)
-            F.concat(F.substring(v, 1, 997), F.lit("...")).alias("_prefix"),
+            F.concat(
+                F.substring(v, 1, STRING_PREFIX_LENGTH - len(ELLIPSIS)),
+                F.lit(ELLIPSIS),
+            ).alias("_prefix"),
             F.base64(F.unhex(F.sha2(v, 256))).alias("_sha256"),
         )
     )
@@ -223,12 +226,11 @@ def _field_fragment(bag: Column, f: T.StructField) -> Column:
 def export_props_json_col(df: DataFrame, struct_col: str = "properties") -> Column:
     """Final contract bytes for the record's ``properties`` object.
 
-    Simple bags render fully JVM-side: ``to_json`` through
-    `_contract_escapes`, and on a row with a string over
-    ``MAX_STRING_LENGTH`` the object is assembled from `_field_fragment`s
-    instead.  Bags with temporal/binary/decimal fields go through the TYPED
-    struct encoder (Arrow keeps real datetimes/bytes, so the contract's
-    temporal formats apply); remaining non-simple bags (fractional/nested)
+    Simple bags render fully JVM-side: ``{`` + the comma-joined
+    `_field_fragment`s + ``}``, through `_contract_escapes`.  Bags with
+    temporal/binary/decimal fields go through the TYPED struct encoder
+    (Arrow keeps real datetimes/bytes, so the contract's temporal formats
+    apply); remaining non-simple bags (fractional/nested)
     re-canonicalize through the JSON-string UDF (normalizes Jackson float
     formatting, applies truncation markers).  Nulls are dropped in every
     lane, like ``to_json``.
@@ -247,22 +249,10 @@ def export_props_json_col(df: DataFrame, struct_col: str = "properties") -> Colu
             )
     if _bag_has_typed_fields(dtype):
         return make_typed_bag_udf(dtype)(F.col(struct_col))
-    js = F.to_json(struct_col)
     if not bag_is_export_fast(dtype):
-        return export_json_canon_udf(js)
+        return export_json_canon_udf(F.to_json(struct_col))
     assert isinstance(dtype, T.StructType)
     bag = F.col(struct_col)
-    # all-null / _empty-only bags: to_json drops null fields → "{}" already
-    js = F.coalesce(js, F.lit("{}"))
-    too_long = [
-        F.length(bag[f.name]) > MAX_STRING_LENGTH
-        for f in dtype.fields
-        if isinstance(f.dataType, T.StringType)
-    ]
-    if too_long:
-        frags = F.concat_ws(",", *[_field_fragment(bag, f) for f in dtype.fields])
-        js = F.when(
-            reduce(lambda a, b: a | b, too_long),
-            F.concat(F.lit("{"), frags, F.lit("}")),
-        ).otherwise(js)
-    return _contract_escapes(js)
+    # concat_ws skips NULL fragments, so a null or all-null bag gives "{}"
+    frags = F.concat_ws(",", *[_field_fragment(bag, f) for f in dtype.fields])
+    return _contract_escapes(F.concat(F.lit("{"), frags, F.lit("}")))
