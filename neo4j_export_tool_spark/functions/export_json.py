@@ -19,11 +19,12 @@ with identical escape tables.  Measured divergences (this sandbox, Spark
 So simple bags (int/string/bool fields) render fully JVM-side: the object
 is assembled from per-field ``to_json`` fragments, an over-limit string as
 the contract's ``string_too_large`` marker, and the upper-hex escapes are
-lower-cased in place (`_contract_escapes`, the one home of that rule; the
-sink's record heads use it too).  Bags with fractional / nested fields
-re-canonicalize through an Arrow-vectorized pandas UDF running the §1.3
-encoding contract, and bags with temporal / binary / decimal fields
-through the typed struct encoder.
+lower-cased in place (`contract_escapes`, the one home of that rule; the
+sink's record heads and the content-hash lane of
+``operators.graph.canonical_props_col`` use it too).  Bags with
+fractional / nested fields re-canonicalize through an Arrow-vectorized
+pandas UDF running the §1.3 encoding contract, and bags with temporal /
+binary / decimal fields through the typed struct encoder.
 """
 
 from __future__ import annotations
@@ -56,7 +57,7 @@ _UPPER_HEX_ESCAPES = (
 )
 
 
-def _contract_escapes(js: Column) -> Column:
+def contract_escapes(js: Column) -> Column:
     """``js``, a ``to_json`` object, with the `_UPPER_HEX_ESCAPES`
     lower-cased.  An escape counts only where its backslash follows an even
     run of backslashes, so literal ``\\u001F`` text (JSON ``\\\\u001F``)
@@ -227,7 +228,7 @@ def export_props_json_col(df: DataFrame, struct_col: str = "properties") -> Colu
     """Final contract bytes for the record's ``properties`` object.
 
     Simple bags render fully JVM-side: ``{`` + the comma-joined
-    `_field_fragment`s + ``}``, through `_contract_escapes`.  Bags with
+    `_field_fragment`s + ``}``, through `contract_escapes`.  Bags with
     temporal/binary/decimal fields go through the TYPED struct encoder
     (Arrow keeps real datetimes/bytes, so the contract's temporal formats
     apply); remaining non-simple bags (fractional/nested)
@@ -255,4 +256,4 @@ def export_props_json_col(df: DataFrame, struct_col: str = "properties") -> Colu
     bag = F.col(struct_col)
     # concat_ws skips NULL fragments, so a null or all-null bag gives "{}"
     frags = F.concat_ws(",", *[_field_fragment(bag, f) for f in dtype.fields])
-    return _contract_escapes(F.concat(F.lit("{"), frags, F.lit("}")))
+    return contract_escapes(F.concat(F.lit("{"), frags, F.lit("}")))

@@ -13,11 +13,12 @@ Canonical JSON for FLAT typed property bags is built JVM-side:
 ``to_json(struct(cols sorted by name))`` already satisfies the contract —
 ordinally-sorted keys (we sort the struct fields), compact output, null
 fields dropped (Spark's default ``ignoreNullFields``), integers without a
-decimal point.  The empty bag canonicalizes to ``''`` (reference
-``Neo4jExportToolId.fs:102-104``), patched with one ``when``.  Dynamic /
-nested bags fall back to the Arrow-vectorized canonicalizer
-(`functions.canonical.canonicalize_json_udf`).  Hashing is therefore
-whole-stage-codegen'd ``sha2`` — no Python in the hot path.
+decimal point — once Jackson's upper-hex control escapes are lower-cased
+(`functions.export_json.contract_escapes`).  The empty bag canonicalizes
+to ``''`` (reference ``Neo4jExportToolId.fs:102-104``), patched with one
+``when``.  Dynamic / nested bags fall back to the Arrow-vectorized
+canonicalizer (`functions.canonical.canonicalize_json_udf`).  Hashing is
+therefore whole-stage-codegen'd ``sha2`` — no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -29,6 +30,10 @@ from neo4j_export_tool_spark.functions.canonical import (
     canonicalize_json_udf,
     node_hash_col,
     rel_hash_col,
+)
+from neo4j_export_tool_spark.functions.export_json import (
+    contract_escapes,
+    export_props_json_col,
 )
 
 
@@ -52,10 +57,12 @@ def canonical_props_col(
     """Canonical-JSON string column for a flat property bag.
 
     Int/string/bool bags canonicalize fully JVM-side (to_json over the
-    name-sorted struct).  Bags containing fractional or nested values are
-    re-canonicalized through the Arrow pandas UDF so float formatting
-    byte-matches the pure-Python ID kernel (``functions.canonical``) — the
-    cross-implementation guarantee the hash algebra depends on.
+    name-sorted struct, with Jackson's upper-hex control escapes lower-cased
+    by `contract_escapes` as the Python kernel writes them).  Bags
+    containing fractional or nested values are re-canonicalized through
+    the Arrow pandas UDF so float formatting byte-matches the pure-Python
+    ID kernel (``functions.canonical``) — the cross-implementation
+    guarantee the hash algebra depends on.
     """
     if not props:
         return F.lit("")
@@ -64,7 +71,7 @@ def canonical_props_col(
     if df is not None and _bag_needs_python_canon(df, props):
         return F.coalesce(canonicalize_json_udf(js), F.lit(""))
     # all-null bag → '{}' from to_json; the contract wants ''
-    return F.when(js == "{}", F.lit("")).otherwise(js)
+    return F.when(js == "{}", F.lit("")).otherwise(contract_escapes(js))
 
 
 def nodes_from(
@@ -182,8 +189,6 @@ def nodes_union(*node_dfs: DataFrame) -> DataFrame:
     every row; the §1.3 UDFs only for non-simple bags), so the JSONL sink
     can splice it into record lines without touching Python.
     """
-    from neo4j_export_tool_spark.functions.export_json import export_props_json_col
-
     projected = [
         df.select(
             "element_id",

@@ -25,22 +25,24 @@ the sink serializes once and knows every counter before it writes:
    A2, ``Export/Core.fs:277-313``; multi-label nodes split bytes evenly
    across labels, unlabeled nodes count under ``_unlabeled``), the
    ``_invalid_label`` tally and the exact line bytes.
-3. The write reads the cached table.  A sorted export whose line bytes fit
-   one AQE advisory partition (``spark.sql.adaptive.
+3. ONE write job reads the cached table, for every layout: the
+   ``(sec, line)`` rows, sorted when ``sort_lines`` asks, written with
+   ``partitionBy("sec")`` into one scratch dir.  A sorted export whose
+   line bytes fit one AQE advisory partition (``spark.sql.adaptive.
    advisoryPartitionSizeInBytes``) is sorted in one task; a larger one is
-   range-sorted, so its part files in name order are globally ordered.
-   Either way the lines come out in the same order, byte for byte.
+   range-sorted.  Either way each ``sec=<n>`` dir's part files in name
+   order hold that section's lines in the same order, byte for byte.
 
 The metadata line is then written once, up front — no seek, no padding,
 same bytes-on-disk contract.
 
-Two write modes:
-- ``single_file=True`` — exact reference layout in one file; executors write
-  the sections' part files and the driver bulk-concatenates the file
-  streams — constant driver memory, no per-row Py4J traffic.
-- ``single_file=False`` — the 100 TB path: per-section line files written by
-  executors (``df.write.text``) + a ``_metadata.json``; assembly into one
-  file is a concat any object store can do server-side.
+The layout only decides how the written sections are finished:
+- ``single_file=True`` — exact reference layout in one file: one binary
+  concat of the metadata line, the ``sec=0`` then ``sec=1`` parts and the
+  error/warning tail — constant driver memory, no per-row Py4J traffic.
+- ``single_file=False`` — the 100 TB path: ``sec=0`` and ``sec=1`` are
+  renamed to ``nodes/`` and ``relationships/`` beside a ``_metadata.json``;
+  assembly into one file is a concat any object store can do server-side.
 
 Record assembly has one path.  Every properties column is contract-final
 JSON before serialization: ``properties_json`` inputs carry it already (see
@@ -51,7 +53,7 @@ builds node and relationship lines from an ordered head-field list:
 ``to_json(struct(head))`` + the properties splice, whole-stage codegen, for
 every row.  Jackson's one escape that differs from the contract's writer
 (upper-case hex in ``\\u001F``-style control escapes) is lower-cased in
-place by `functions.export_json._contract_escapes`, a regex chain that runs
+place by `functions.export_json.contract_escapes`, a regex chain that runs
 only on rows whose head JSON holds such an escape.  Head strings are never
 truncated (the contract writes them in full, as ``to_json`` does), so no
 row needs a Python writer.
@@ -59,8 +61,11 @@ row needs a Python writer.
 
 from __future__ import annotations
 
+import glob
+import gzip
 import os
 import re
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -78,7 +83,7 @@ from neo4j_export_tool_spark.functions.encoding import (
     dumps,
 )
 from neo4j_export_tool_spark.functions.export_json import (
-    _contract_escapes,
+    contract_escapes,
     export_props_json_col,
 )
 
@@ -122,12 +127,12 @@ def _record_lines(df: DataFrame, head: list[tuple[str, Column]], key: str) -> Da
     ``properties``; ``key`` names the head field carried out beside the
     line (the stats labels).  Every row is assembled JVM-side in one
     projection: ``to_json`` of the head with the contract's escapes
-    (`_contract_escapes`), then `_splice_props`.
+    (`contract_escapes`), then `_splice_props`.
     """
     head_json = F.to_json(
         F.struct(*[c.alias(name) for name, c in head]), {"ignoreNullFields": "false"}
     )
-    line = _splice_props(_contract_escapes(head_json), F.col("properties_json"))
+    line = _splice_props(contract_escapes(head_json), F.col("properties_json"))
     return df.select(line.alias("line"), dict(head)[key].alias(key))
 
 
@@ -431,6 +436,26 @@ class ExportResult:
 # export driver
 # ---------------------------------------------------------------------------
 
+def _parts(section_dir: str) -> list[str]:
+    """A written section's part files in name order, which is line order."""
+    return sorted(glob.glob(os.path.join(section_dir, "part-*")))
+
+
+def _framed(spark, text: str, compression: str) -> bytes:
+    """``text`` (the metadata line or the error/warning tail) as the single
+    file holds it: plain UTF-8, one gzip member or one zstd frame.  Members
+    and frames concatenate into one valid stream (RFC 1952, RFC 8878), so
+    the file is these bytes around the parts, byte for byte."""
+    data = text.encode("utf-8")
+    if not data or compression == "none":
+        return data
+    if compression == "gzip":
+        return gzip.compress(data)
+    from neo4j_export_tool_spark.sources.zstd_codec import zstd_frame
+
+    return zstd_frame(spark, data)
+
+
 def export_jsonl(
     nodes: DataFrame,
     edges: DataFrame,
@@ -456,9 +481,10 @@ def export_jsonl(
     ``N4JET_ENABLE_HASHED_IDS=false``, ``GraphElements.fs:140-141,179-197``).
 
     ``compression="gzip"``: executors write gzip text parts; the
-    single-file concat of gzip members is itself a valid gzip stream
-    (multi-member, per RFC 1952), so the layout contract holds with a
-    ``.gz`` suffix — the practical choice at 100 TB.
+    single-file concat of gzip members (the metadata line and the tail are
+    one member each) is itself a valid gzip stream (multi-member, per
+    RFC 1952), so the layout contract holds with a ``.gz`` suffix — the
+    practical choice at 100 TB.
 
     ``compression="zstd"``: the format the reference's CompressionHints
     recommend (``Database/Metadata.fs:344-352``).  On sessions created by
@@ -509,6 +535,8 @@ def export_jsonl(
         _serialize_nodes(nodes, export_id, hashed_ids),
         _serialize_rels(edges, export_id, hashed_ids),
     ).persist(StorageLevel.MEMORY_AND_DISK)
+    sections_dir = os.path.join(out_dir, f"tmp-sections-{export_id[:8]}")
+    tmp_path = ""
     try:
         stats = _table_stats(table)
         node_count, rel_count = stats.node_count, stats.rel_count
@@ -527,7 +555,6 @@ def export_jsonl(
             sort_path = "one_partition"
         else:
             sort_path = "range"
-        one_partition = sort_path == "one_partition"
         if compression == "gzip":
             _wopt = {"compression": "gzip"}
         elif use_zstd_codec:
@@ -540,66 +567,24 @@ def export_jsonl(
             # write by a driver-side pool of JVM streams
             _wopt = {}
 
-        if single_file:
-            import glob as _glob
+        # one write job for every layout; a sort on (sec, line) already
+        # satisfies the ordering partitionBy asks for, so the write adds no
+        # sort of its own
+        lines = table.select("sec", "line")
+        if sort_lines:
+            lines = _sorted_by(lines, sort_path == "one_partition", "sec", "line")
+        lines.write.partitionBy("sec").mode("overwrite").options(**_wopt).text(
+            sections_dir
+        )
+        sec_dirs = [os.path.join(sections_dir, f"sec={sec}") for sec in (0, 1)]
+        if compression == "zstd" and not use_zstd_codec:
+            # fallback lane: the plain parts become one .zst frame each via
+            # the driver's JVM-stream pool — the format the codec writes
+            from neo4j_export_tool_spark.sources.zstd_codec import (
+                parallel_compress_parts,
+            )
 
-            sections_dir = os.path.join(out_dir, f"tmp-sections-{export_id[:8]}")
-            all_lines = table.select("sec", "line")
-            if sort_lines:
-                # ONE write job; part files in name order ARE globally ordered
-                _sorted_by(all_lines, one_partition, "sec", "line").select(
-                    "line"
-                ).write.mode("overwrite").options(**_wopt).text(sections_dir)
-                part_files = sorted(
-                    _glob.glob(os.path.join(sections_dir, "part-*"))
-                )
-            else:
-                # unsorted: partitionBy keeps full write parallelism per
-                # section (an orderBy on the 2-valued section key would
-                # funnel the export through ~2 tasks); section order is
-                # restored by concatenating sec=0 parts before sec=1
-                all_lines.write.partitionBy("sec").mode("overwrite").options(
-                    **_wopt
-                ).text(sections_dir)
-                part_files = sorted(
-                    _glob.glob(os.path.join(sections_dir, "sec=0", "part-*"))
-                ) + sorted(
-                    _glob.glob(os.path.join(sections_dir, "sec=1", "part-*"))
-                )
-        else:
-            # scale path: executor-written line files per section
-            nodes_dir = os.path.join(out_dir, "nodes")
-            rels_dir = os.path.join(out_dir, "relationships")
-            if sort_lines:
-                # per-section global order: one sorted write per section
-                for sec, dest in ((0, nodes_dir), (1, rels_dir)):
-                    _sorted_by(
-                        table.filter(F.col("sec") == sec).select("line"),
-                        one_partition,
-                        "line",
-                    ).write.mode("overwrite").options(**_wopt).text(dest)
-            else:
-                # unsorted: both sections land in ONE partitionBy write job,
-                # then the partition dirs move to their contract names
-                import shutil
-
-                scratch = os.path.join(out_dir, f"tmp-write-{export_id[:8]}")
-                table.select(
-                    F.when(F.col("sec") == 0, F.lit("nodes"))
-                    .otherwise(F.lit("relationships"))
-                    .alias("section"),
-                    "line",
-                ).write.partitionBy("section").mode("overwrite").options(
-                    **_wopt
-                ).text(scratch)
-                for sec, dest in (("nodes", nodes_dir), ("relationships", rels_dir)):
-                    src_dir = os.path.join(scratch, f"section={sec}")
-                    shutil.rmtree(dest, ignore_errors=True)
-                    if os.path.isdir(src_dir):
-                        os.replace(src_dir, dest)
-                    else:
-                        os.makedirs(dest, exist_ok=True)  # empty section
-                shutil.rmtree(scratch, ignore_errors=True)
+            parallel_compress_parts(spark, [p for d in sec_dirs for p in _parts(d)])
 
         err_records = [
             {"type": "error", **e} for e in (errors or [])
@@ -631,7 +616,7 @@ def export_jsonl(
             rel_stats=rel_stats,
             error_count=len(err_records),
             warning_count=len(warn_records),
-            duration_seconds=0.0,  # patched below
+            duration_seconds=time.perf_counter() - t0,
             timestamp_utc=timestamp_utc,
             compression=compression,
         )
@@ -644,92 +629,35 @@ def export_jsonl(
         final_path = os.path.join(out_dir, filename)
 
         if single_file:
-            # the driver bulk-concatenates file streams — constant memory,
-            # no per-row Py4J traffic — and atomically renames
-            # (reference Export/Core.fs:437-462)
-            import shutil
-
+            # one binary concat of the head, the sections' parts in order
+            # and the tail, then an atomic rename (reference
+            # Export/Core.fs:437-462)
+            tail = "".join(dumps(rec) + "\n" for rec in err_records + warn_records)
             tmp_path = final_path + ".tmp"
-            metadata["export_manifest"]["total_export_duration_seconds"] = round(
-                time.perf_counter() - t0, 6
-            )
-            if compression == "zstd":
-                # multi-frame assembly (RFC 8878: concatenated frames are
-                # one valid stream): the bulk parts are ALREADY compressed —
-                # by the write tasks (codec path) or by a driver-side pool
-                # of JVM streams (fallback) — so assembly is a raw byte
-                # concat of (metadata frame, part frames, tail frame), all
-                # JVM-side; the driver never recompresses the data
-                from neo4j_export_tool_spark.sources.zstd_codec import (
-                    concat_files_jvm,
-                    parallel_compress_parts,
-                    write_bytes_frame,
-                )
-
-                if not use_zstd_codec:
-                    part_files = parallel_compress_parts(spark, part_files)
-                meta_frame = os.path.join(sections_dir, "zmeta.zst.frame")
-                write_bytes_frame(
-                    spark, (dumps(metadata) + "\n").encode("utf-8"), meta_frame
-                )
-                frames = [meta_frame] + part_files
-                tail = "".join(
-                    dumps(rec) + "\n" for rec in err_records + warn_records
-                )
-                if tail:
-                    tail_frame = os.path.join(sections_dir, "ztail.zst.frame")
-                    write_bytes_frame(spark, tail.encode("utf-8"), tail_frame)
-                    frames.append(tail_frame)
-                concat_files_jvm(spark, frames, tmp_path)
-            elif compression == "gzip":
-                # gzip members concatenate into one valid stream (RFC 1952)
-                import gzip as _gzip
-
-                with open(tmp_path, "wb") as f:
-                    f.write(_gzip.compress((dumps(metadata) + "\n").encode()))
-                    for part in part_files:
-                        with open(part, "rb") as pf:
-                            shutil.copyfileobj(pf, f, 1 << 20)
-                    tail = "".join(
-                        dumps(rec) + "\n" for rec in err_records + warn_records
-                    )
-                    if tail:
-                        f.write(_gzip.compress(tail.encode()))
-            else:
-                with open(tmp_path, "w", encoding="utf-8") as f:
-                    f.write(dumps(metadata) + "\n")
-                    for part in part_files:
-                        with open(part, encoding="utf-8") as pf:
-                            shutil.copyfileobj(pf, f, 1 << 20)
-                    for rec in err_records + warn_records:
-                        f.write(dumps(rec) + "\n")
+            with open(tmp_path, "wb") as f:
+                f.write(_framed(spark, dumps(metadata) + "\n", compression))
+                for part in _parts(sec_dirs[0]) + _parts(sec_dirs[1]):
+                    with open(part, "rb") as pf:
+                        shutil.copyfileobj(pf, f, 1 << 20)
+                f.write(_framed(spark, tail, compression))
             os.replace(tmp_path, final_path)
-            shutil.rmtree(sections_dir, ignore_errors=True)
             files = [final_path]
         else:
-            if compression == "zstd" and not use_zstd_codec:
-                # fallback lane: the plain parts become one .zst frame each
-                # via the driver's JVM-stream pool — same on-disk format
-                # the codec path writes
-                import glob as _glob
-
-                from neo4j_export_tool_spark.sources.zstd_codec import (
-                    parallel_compress_parts,
-                )
-
-                parallel_compress_parts(
-                    spark,
-                    sorted(_glob.glob(os.path.join(nodes_dir, "part-*")))
-                    + sorted(_glob.glob(os.path.join(rels_dir, "part-*"))),
-                )
-            metadata["export_manifest"]["total_export_duration_seconds"] = round(
-                time.perf_counter() - t0, 6
-            )
+            # the section dirs move to their contract names; a section with
+            # no lines has no sec=<n> dir and gets an empty one
             meta_path = os.path.join(out_dir, "_metadata.json")
+            files = [meta_path]
+            for src, name in zip(sec_dirs, ("nodes", "relationships")):
+                dest = os.path.join(out_dir, name)
+                shutil.rmtree(dest, ignore_errors=True)
+                if os.path.isdir(src):
+                    os.replace(src, dest)
+                else:
+                    os.makedirs(dest, exist_ok=True)
+                files.append(dest)
             with open(meta_path, "w", encoding="utf-8") as f:
                 f.write(dumps(metadata) + "\n")
             final_path = out_dir
-            files = [meta_path, nodes_dir, rels_dir]
 
         return ExportResult(
             path=final_path,
@@ -744,7 +672,11 @@ def export_jsonl(
             line_bytes=stats.line_bytes,
         )
     finally:
+        # a failed write or assembly leaves no scratch behind either
         table.unpersist()
+        shutil.rmtree(sections_dir, ignore_errors=True)
+        if tmp_path and os.path.exists(tmp_path):
+            os.remove(tmp_path)
 
 
 def with_properties_json(edges: DataFrame) -> DataFrame:

@@ -17,8 +17,13 @@ record ``type`` discriminator.
 
 from __future__ import annotations
 
+import atexit
+import glob
 import json
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 from dataclasses import dataclass
 from typing import Any
 
@@ -47,135 +52,119 @@ class ImportedExport:
 
 # decompressed .zst scratch dirs: must outlive the lazy DataFrames built
 # over them, so they are reclaimed at interpreter exit, not per-call.
-# _ZST_SCRATCH_CACHE keys a scratch dir by (source path, mtime, size) so a
-# long-lived session re-importing the same export reuses one decompressed
-# copy instead of growing disk without bound (round-3 advice item); a
-# changed mtime/size invalidates the stale entry eagerly.
+# _ZST_SCRATCH_CACHE keys a scratch dir by its source (path plus mtime and
+# size) so a long-lived session re-importing the same export reuses one
+# decompressed copy instead of growing disk without bound; a changed
+# mtime/size invalidates the stale entry eagerly.
 _ZST_SCRATCH_DIRS: list[str] = []
-_ZST_SCRATCH_CACHE: dict[str, tuple[tuple[float, int], str]] = {}
+_ZST_SCRATCH_CACHE: dict[str, tuple[Any, str, str]] = {}
 
 
 def _cleanup_zst_scratch() -> None:
-    import shutil
-
     _ZST_SCRATCH_CACHE.clear()
     while _ZST_SCRATCH_DIRS:
         shutil.rmtree(_ZST_SCRATCH_DIRS.pop(), ignore_errors=True)
 
 
-def _materialize_zst(spark: SparkSession, path: str) -> str:
-    """Decompress a ``.zst`` export to a plain temp file the text reader
-    can scan.  Decompression runs JVM-side (zstd-jni ``ZstdInputStream`` →
-    ``Files.copy``), no Py4J byte traffic.  The temp file must outlive the
-    lazy DataFrames built over it, so cleanup is deferred to interpreter
-    exit (atexit) rather than per-call, and repeated imports of the same
-    unchanged file reuse one cached copy."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from neo4j_export_tool_spark.sources.zstd_codec import decompress_file_jvm
-
-    key = os.path.abspath(path)
-    st = os.stat(path)
-    stamp = (st.st_mtime, st.st_size)
+def _cached_scratch(
+    key: str, stamp: Any, prefix: str, fill: Callable[[str], str]
+) -> str:
+    """The decompressed copy of source ``key`` at ``stamp``: the cached one
+    while it still exists, else ``fill(scratch)`` run on a fresh scratch
+    dir (a stale copy of ``key`` is evicted first).  ``fill`` returns the
+    path the caller reads; the dir is removed at interpreter exit."""
     hit = _ZST_SCRATCH_CACHE.get(key)
     if hit is not None:
-        old_stamp, out = hit
+        old_stamp, scratch, out = hit
         if old_stamp == stamp and os.path.exists(out):
             return out
         # source changed under the same path: evict the stale copy now
-        stale_dir = os.path.dirname(out)
-        if stale_dir in _ZST_SCRATCH_DIRS:
-            _ZST_SCRATCH_DIRS.remove(stale_dir)
-        shutil.rmtree(stale_dir, ignore_errors=True)
+        if scratch in _ZST_SCRATCH_DIRS:
+            _ZST_SCRATCH_DIRS.remove(scratch)
+        shutil.rmtree(scratch, ignore_errors=True)
         del _ZST_SCRATCH_CACHE[key]
-
-    scratch = tempfile.mkdtemp(prefix="jsonl-zst-")
+    scratch = tempfile.mkdtemp(prefix=prefix)
     if not _ZST_SCRATCH_DIRS:
         atexit.register(_cleanup_zst_scratch)
     _ZST_SCRATCH_DIRS.append(scratch)
-    out = os.path.join(scratch, os.path.basename(path)[: -len(".zst")])
-    decompress_file_jvm(spark, path, out)
-    _ZST_SCRATCH_CACHE[key] = (stamp, out)
+    out = fill(scratch)
+    _ZST_SCRATCH_CACHE[key] = (stamp, scratch, out)
     return out
+
+
+def _materialize_zst(spark: SparkSession, path: str) -> str:
+    """Decompress a ``.zst`` export to a plain temp file the text reader
+    can scan.  Decompression runs JVM-side (zstd-jni ``ZstdInputStream`` →
+    ``Files.copy``), no Py4J byte traffic; repeated imports of the same
+    unchanged file reuse one cached copy (`_cached_scratch`)."""
+    from neo4j_export_tool_spark.sources.zstd_codec import decompress_file_jvm
+
+    def fill(scratch: str) -> str:
+        out = os.path.join(scratch, os.path.basename(path)[: -len(".zst")])
+        decompress_file_jvm(spark, path, out)
+        return out
+
+    st = os.stat(path)
+    return _cached_scratch(
+        os.path.abspath(path), (st.st_mtime, st.st_size), "jsonl-zst-", fill
+    )
 
 
 def _materialize_zst_section(spark: SparkSession, section_dir: str) -> str:
     """Fallback for sessions without the zstd codec on the classpath:
     decompress a section directory's ``.zst`` parts into a cached scratch
-    dir (same (path, mtime, size) keying and atexit lifecycle as
-    single-file imports), parallelized across JVM streams."""
-    import atexit
+    dir (`_cached_scratch`, keyed like single-file imports),
+    parallelized across JVM streams."""
     import concurrent.futures as fut
-    import glob as _glob
-    import tempfile
 
     from neo4j_export_tool_spark.sources.zstd_codec import decompress_file_jvm
 
-    parts = sorted(_glob.glob(os.path.join(section_dir, "*.zst")))
+    parts = sorted(glob.glob(os.path.join(section_dir, "*.zst")))
     # external exports may mix plain and .zst parts in one section; the
     # scratch dir must carry BOTH or the plain parts' rows silently vanish
     plain_parts = sorted(
         p
-        for p in _glob.glob(os.path.join(section_dir, "*"))
+        for p in glob.glob(os.path.join(section_dir, "*"))
         if os.path.isfile(p)
         and not p.endswith(".zst")
         and not os.path.basename(p).startswith(("_", "."))
     )
-    key = os.path.abspath(section_dir)
     stamp = tuple(
         (os.path.basename(p), os.path.getmtime(p), os.path.getsize(p))
         for p in parts + plain_parts
     )
-    hit = _ZST_SCRATCH_CACHE.get(key)
-    if hit is not None:
-        old_stamp, out = hit
-        if old_stamp == stamp and os.path.isdir(out):
-            return out
-        import shutil
 
-        if out in _ZST_SCRATCH_DIRS:
-            _ZST_SCRATCH_DIRS.remove(out)
-        shutil.rmtree(out, ignore_errors=True)
-        del _ZST_SCRATCH_CACHE[key]
-
-    scratch = tempfile.mkdtemp(prefix="jsonl-zst-dir-")
-    if not _ZST_SCRATCH_DIRS:
-        atexit.register(_cleanup_zst_scratch)
-    _ZST_SCRATCH_DIRS.append(scratch)
-
-    def _one(p: str) -> None:
-        decompress_file_jvm(
-            spark, p, os.path.join(scratch, os.path.basename(p)[: -len(".zst")])
-        )
-
-    with fut.ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
-        list(pool.map(_one, parts))
-    for p in plain_parts:
-        dst = os.path.join(scratch, os.path.basename(p))
-        if os.path.exists(dst):
-            # a plain part whose name equals a .zst part's decompressed
-            # name — ambiguous external input; clobbering would silently
-            # drop one side's rows (the bug class this path exists to fix)
-            raise ValueError(
-                "section mixes a plain part and a .zst part that "
-                f"decompress to the same name: {os.path.basename(p)}"
+    def fill(scratch: str) -> str:
+        def _one(p: str) -> None:
+            decompress_file_jvm(
+                spark, p, os.path.join(scratch, os.path.basename(p)[: -len(".zst")])
             )
-        try:
-            os.symlink(os.path.abspath(p), dst)
-        except OSError:  # e.g. filesystem without symlink support
-            import shutil as _shutil
 
-            _shutil.copy2(p, dst)
-    _ZST_SCRATCH_CACHE[key] = (stamp, scratch)
-    return scratch
+        with fut.ThreadPoolExecutor(max_workers=min(8, max(1, len(parts)))) as pool:
+            list(pool.map(_one, parts))
+        for p in plain_parts:
+            dst = os.path.join(scratch, os.path.basename(p))
+            if os.path.exists(dst):
+                # a plain part whose name equals a .zst part's decompressed
+                # name — ambiguous external input; clobbering would silently
+                # drop one side's rows (the bug class this path exists to fix)
+                raise ValueError(
+                    "section mixes a plain part and a .zst part that "
+                    f"decompress to the same name: {os.path.basename(p)}"
+                )
+            try:
+                os.symlink(os.path.abspath(p), dst)
+            except OSError:  # e.g. filesystem without symlink support
+                shutil.copy2(p, dst)
+        return scratch
+
+    return _cached_scratch(
+        os.path.abspath(section_dir), stamp, "jsonl-zst-dir-", fill
+    )
 
 
 def _lines_df(spark: SparkSession, path: str) -> DataFrame:
     if os.path.isdir(path):
-        import glob as _glob
-
         from neo4j_export_tool_spark.sources.zstd_codec import (
             codec_loadable,
             register_read_codecs,
@@ -187,7 +176,7 @@ def _lines_df(spark: SparkSession, path: str) -> DataFrame:
             if os.path.isdir(os.path.join(path, d))
         ]
         zst_sections = [
-            s for s in sections if _glob.glob(os.path.join(s, "*.zst"))
+            s for s in sections if glob.glob(os.path.join(s, "*.zst"))
         ]
         if zst_sections:
             if codec_loadable(spark):

@@ -7,19 +7,19 @@ Hadoop ``CompressionCodec`` (``javasrc/ZstdFrameCodec.java``) backed by
 zstd-jni — which IS on every Spark classpath — compiled on demand with the
 JDK's ``javac`` and attached to sessions via ``spark.jars``.
 
-With the codec on the classpath:
-- dir-mode exports write per-part ``.zst`` frames IN THE WRITE TASKS
-  (executor-parallel compression, the 100 TB path), and
-- single-file exports concatenate those already-compressed frames on the
-  driver (zstd frames concatenate like gzip members, RFC 8878) — no
-  driver-sequential recompression of the bulk data.
-
-Sessions that cannot take a classpath jar (an externally created
-SparkSession — ``spark.jars`` must be set before the JVM starts, and
-runtime ``addJar`` does not reach the driver-side codec resolver) fall
-back to driver-side compression of the plain parts, parallelized across a
-thread pool of JVM streams (the GIL is irrelevant: each thread blocks in
-one ``Files.copy`` doing JVM-side work).
+With the codec on the classpath the sink's one write job emits per-part
+``.zst`` frames IN THE WRITE TASKS (executor-parallel compression, the
+100 TB path).  Sessions that cannot take a classpath jar (an externally
+created SparkSession — ``spark.jars`` must be set before the JVM starts,
+and runtime ``addJar`` does not reach the driver-side codec resolver) fall
+back to `parallel_compress_parts`: the plain parts are compressed after
+the write by a thread pool of JVM streams (the GIL is irrelevant: each
+thread blocks in one ``Files.copy`` doing JVM-side work).  Either way both
+layouts finish from the same ``.zst`` parts: dir mode keeps them, and a
+single file is the byte concat of a `zstd_frame` for the metadata line,
+the parts and a frame for the error/warning tail (zstd frames concatenate
+like gzip members, RFC 8878) — no driver-sequential recompression of the
+bulk data.
 
 Reference parity: the reference recommends zstd for its exports via
 CompressionHints (``/root/reference/Neo4jExport/Database/Metadata.fs:344-352``)
@@ -209,34 +209,18 @@ def decompress_file_jvm(spark, src: str, dst: str) -> None:
         zis.close()
 
 
-def write_bytes_frame(spark, data: bytes, dst: str) -> None:
-    """Write a small in-memory payload as one zstd frame (metadata line,
-    error/warning tail).  The payload crosses Py4J once — fine for the
+def zstd_frame(spark, data: bytes) -> bytes:
+    """A small in-memory payload (metadata line, error/warning tail) as one
+    zstd frame.  The payload crosses Py4J twice — fine for the
     sub-kilobyte strings this is used for."""
     jvm = spark.sparkContext._jvm
-    fos = jvm.java.io.FileOutputStream(dst)
-    try:
-        zos = jvm.com.github.luben.zstd.ZstdOutputStream(fos)
-    except Exception:
-        fos.close()
-        raise
+    buf = jvm.java.io.ByteArrayOutputStream()
+    zos = jvm.com.github.luben.zstd.ZstdOutputStream(buf)
     try:
         zos.write(bytearray(data))
     finally:
         zos.close()
-
-
-def concat_files_jvm(spark, srcs: list[str], dst: str) -> None:
-    """Concatenate files byte-for-byte into ``dst`` JVM-side (one
-    ``Files.copy`` per source into a shared ``FileOutputStream``) — used to
-    assemble single-file exports from already-compressed frame parts."""
-    jvm = spark.sparkContext._jvm
-    fos = jvm.java.io.FileOutputStream(dst)
-    try:
-        for s in srcs:
-            jvm.java.nio.file.Files.copy(jvm.java.io.File(s).toPath(), fos)
-    finally:
-        fos.close()
+    return bytes(buf.toByteArray())
 
 
 def parallel_compress_parts(

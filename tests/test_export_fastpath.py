@@ -101,6 +101,43 @@ def test_control_chars_in_head_strings_render_contract_escapes(spark):
     assert json.loads(row["line"])["element_id"] == "id\x0bwith\x1fctrl"
 
 
+# the control characters whose \uXXXX escape Jackson writes in upper-case hex
+UPPER_HEX_CTRL = "\x0b\x0e\x0f\x1a\x1b\x1c\x1d\x1e\x1f"
+
+
+def test_content_hashes_of_control_chars_match_python_kernel(spark):
+    """The JVM canonical-JSON lane of ``nodes_from`` / ``edges_from`` hashes
+    the bytes the Python kernel hashes, for every control character whose
+    escape case differs between Jackson and the contract's writer, in
+    values and in keys."""
+    from neo4j_export_tool_spark.functions.canonical import (
+        node_content_hash,
+        rel_identity_hash,
+    )
+    from neo4j_export_tool_spark.operators.graph import edges_from
+
+    key = "k\x1f"
+    values = [f"a{c}b" for c in UPPER_HEX_CTRL]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(values)], "i long, name string"
+    )
+    props = {"id": F.col("i"), "name": F.col("name"), key: F.col("name")}
+    nodes = nodes_from(df, labels=["N"], element_id=F.col("name"), props=props)
+    edges = edges_from(
+        df,
+        rel_type="R",
+        start_element_id=F.lit("s"),
+        end_element_id=F.col("name"),
+        props=props,
+    )
+    node_hash = {r["element_id"]: r["content_hash"] for r in nodes.collect()}
+    rel_hash = {r["end_element_id"]: r["identity_hash"] for r in edges.collect()}
+    for i, v in enumerate(values):
+        bag = {"id": i, "name": v, key: v}
+        assert node_hash[v] == node_content_hash(["N"], bag), repr(v)
+        assert rel_hash[v] == rel_identity_hash("R", "s", v, bag), repr(v)
+
+
 def test_label_validation_and_cap(spark):
     """Each label case runs twice: with a plain element_id, and with the
     same id plus a control char whose escape the sink lower-cases.  The two

@@ -5,8 +5,10 @@ stats.
   partition is sorted in one task (``sort_path == "one_partition"``); a
   scoped 1-byte advisory size forces the range sort (with AQE's partition
   coalescing off, so the small test sections still land in several
-  parts).  Both paths must write the same bytes — single file, dir mode,
+  parts in all).  Both paths must write the same bytes — single file, dir mode,
   and gzip/zstd after decompression.
+- Layouts: all four ``single_file`` x ``sort_lines`` layouts write the
+  same lines from one write job, and a failed export leaves no scratch.
 - Stats: the manifest's ``file_statistics``, ``nodeCount`` / ``relCount``
   and the invalid-label warning must equal a Python recount of the
   written file.
@@ -140,14 +142,17 @@ def _dir_bytes(section_dir: str) -> bytes:
 
 def test_dir_mode_sort_paths_write_identical_sections(spark, docs_graph, tmp_path):
     one, rng = _export_both_paths(spark, docs_graph, tmp_path, single_file=False)
+    rng_parts = 0
     for sec in ("nodes", "relationships"):
         one_parts = glob.glob(os.path.join(one.path, sec, "part-*"))
-        rng_parts = glob.glob(os.path.join(rng.path, sec, "part-*"))
+        rng_parts += len(glob.glob(os.path.join(rng.path, sec, "part-*")))
         assert len(one_parts) == 1
-        assert len(rng_parts) > 1  # the range sort really ran
         assert _dir_bytes(os.path.join(one.path, sec)) == _dir_bytes(
             os.path.join(rng.path, sec)
         )
+    # the range sort really ran; one range spans both sections, so a small
+    # section may still land in one part
+    assert rng_parts > 1
     meta = []
     for res in (one, rng):
         with open(os.path.join(res.path, "_metadata.json"), "rb") as f:
@@ -172,6 +177,109 @@ def test_zstd_sort_paths_decompress_identically(spark, docs_graph, tmp_path):
         with open(dst, "rb") as f:
             plain.append(f.read())
     _assert_same_file(*plain)
+
+
+# ---------------------------------------------------------------------------
+# the four layouts (single_file x sort_lines) share one write
+# ---------------------------------------------------------------------------
+
+LAYOUTS = [(single, srt) for single in (True, False) for srt in (True, False)]
+
+
+def _layout_lines(res, single_file: bool) -> tuple[list[str], list[str]]:
+    """(node lines, relationship lines) of an export, in written order."""
+    if single_file:
+        with open(res.path, encoding="utf-8") as f:
+            lines = f.read().splitlines()[1:]
+        n = res.node_count
+        return lines[:n], lines[n : n + res.rel_count]
+    return tuple(
+        _dir_bytes(os.path.join(res.path, sec)).decode("utf-8").splitlines()
+        for sec in ("nodes", "relationships")
+    )
+
+
+def test_all_layouts_write_the_same_lines(spark, docs_graph, tmp_path):
+    nodes, edges = docs_graph
+    written = {}
+    for single, srt in LAYOUTS:
+        res = export_jsonl(
+            nodes, edges, str(tmp_path / f"{single}-{srt}"),
+            export_id=EXPORT_ID, single_file=single, sort_lines=srt,
+        )
+        written[single, srt] = _layout_lines(res, single)
+        assert not glob.glob(str(tmp_path / f"{single}-{srt}" / "tmp-*"))
+    node_lines, rel_lines = written[True, True]
+    assert node_lines and rel_lines
+    for layout, (n, r) in written.items():
+        assert sorted(n) == node_lines, layout
+        assert sorted(r) == rel_lines, layout
+    # the sorted single-file body is sorted dir mode's nodes/ parts followed
+    # by its relationships/ parts
+    assert written[True, True] == written[False, True]
+
+
+def _write_jobs(spark, monkeypatch, call):
+    """(``call()``, the jobs started inside ``DataFrameWriter.text`` during
+    it), read from the status tracker under a job group set around each
+    write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    group = "jsonl-sink-write"
+    text = DataFrameWriter.text
+
+    def grouped(self, *args, **kwargs):
+        sc.setJobGroup(group, "export write")
+        try:
+            return text(self, *args, **kwargs)
+        finally:
+            sc._jsc.clearJobGroup()
+
+    monkeypatch.setattr(DataFrameWriter, "text", grouped)
+    result = call()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sorted_dir_mode_starts_one_write_job(spark, docs_graph, tmp_path, monkeypatch):
+    nodes, edges = docs_graph
+    res, jobs = _write_jobs(
+        spark,
+        monkeypatch,
+        lambda: export_jsonl(
+            nodes, edges, str(tmp_path), export_id=EXPORT_ID, single_file=False
+        ),
+    )
+    assert res.sort_path == "one_partition"
+    assert jobs == 1
+
+
+@pytest.mark.parametrize(
+    "fail_at, single_file",
+    [("build_metadata", True), ("build_metadata", False), ("concat", True)],
+)
+def test_failed_export_leaves_no_scratch(
+    spark, tmp_path, monkeypatch, fail_at, single_file
+):
+    """An export that raises after its write leaves neither the sections
+    scratch dir nor a half-written ``.tmp`` file in ``out_dir``."""
+    from neo4j_export_tool_spark.sources import jsonl_sink
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected failure")
+
+    if fail_at == "build_metadata":
+        monkeypatch.setattr(jsonl_sink, "build_metadata", boom)
+    else:  # the single file's part concat, after its .tmp file is opened
+        monkeypatch.setattr(jsonl_sink.shutil, "copyfileobj", boom)
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="injected failure"):
+        export_jsonl(
+            _nodes(spark), _edges(spark), str(out), export_id=EXPORT_ID,
+            single_file=single_file,
+        )
+    left = os.listdir(out)
+    assert not [x for x in left if x.startswith("tmp-") or x.endswith(".tmp")], left
 
 
 # ---------------------------------------------------------------------------
