@@ -13,14 +13,20 @@ Reproduces the reference's deterministic entity identifiers
 
 Two implementations, byte-identical by construction and by golden test:
 
-1. Pure-Python (`canonical_properties`, `node_content_hash`, ...) — used
-   inside Arrow-vectorized pandas UDFs when properties are dynamic bags.
-2. Spark Column builders (`node_hash_col`, `rel_hash_col`) — used when the
-   canonical-JSON string is already a column, so the SHA-256 runs JVM-side
-   inside whole-stage codegen (``sha2`` is the hot path; no Python involved).
+1. Pure-Python (`canonical_properties`, `node_content_hash`, ...).
+2. Spark Column builders (`node_hash_col`, `rel_hash_col`) over a
+   canonical-JSON string column, so the SHA-256 runs JVM-side inside
+   whole-stage codegen (``sha2`` is the hot path; no Python involved).
 
-Spark's own ``to_json`` is NOT used for hash inputs: it neither sorts map
-keys nor matches .NET float formatting (SURVEY.md §1.4).
+``operators.graph.canonical_props_col`` builds that string column by the
+route the export takes for the same bag
+(``functions.export_json.bag_is_export_fast``).  A simple bag
+(int/string/bool fields) is Spark's ``to_json`` over its name-sorted
+struct, with Jackson's upper-hex control escapes lower-cased: for those
+types that is the kernel's output.  Every other bag runs
+`canonical_properties` in an Arrow-vectorized pandas UDF, because
+``to_json`` matches neither .NET float formatting nor the kernel's
+temporal and decimal strings (SURVEY.md §1.4).
 """
 
 from __future__ import annotations
@@ -31,11 +37,8 @@ import math
 from collections.abc import Mapping, Sequence
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 
 # ---------------------------------------------------------------------------
@@ -50,6 +53,9 @@ def canonical_json_value(value: Any) -> Any:
     value range), special floats become their string forms (same encoding the
     serializer uses: reference ``Primitives.fs:77-91``).
     """
+    if type(value).__module__ == "numpy":
+        # an array field of a bag crosses Arrow as a numpy array
+        value = value.tolist()
     if value is None or isinstance(value, (bool, int, str)):
         return value
     if isinstance(value, float):
@@ -162,27 +168,3 @@ def rel_hash_col(
         ),
         256,
     )
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized canonicalizer for dynamic property bags
-# ---------------------------------------------------------------------------
-
-@pandas_udf(StringType())
-def canonicalize_json_udf(json_props: pd.Series) -> pd.Series:
-    """Re-canonicalize a column of JSON-object strings (e.g. from ``to_json``).
-
-    Parses each object and re-serializes per the contract (sorted keys,
-    compact, nulls dropped).  Vectorized over Arrow batches; never per-row
-    Python at the Spark row level.
-    """
-
-    def canon(s: str | None) -> str | None:
-        if s is None:
-            return None
-        obj = json.loads(s)
-        if not isinstance(obj, dict):
-            return canonical_properties({"value": obj})
-        return canonical_properties(obj)
-
-    return json_props.map(canon)

@@ -30,8 +30,9 @@ Reproduces the reference serializer's type → JSON mapping
 
 Simple property bags (int/string/bool fields) get the same bytes JVM-side
 (``functions.export_json.export_props_json_col``, string marker included);
-everything else here runs inside Arrow-vectorized pandas UDFs during JSONL
-serialization, never on the per-row Python path of Spark proper.
+every other bag is encoded here inside one Arrow-vectorized pandas UDF
+(``functions.export_json.python_bag_col``), never on the per-row Python
+path of Spark proper.
 """
 
 from __future__ import annotations

@@ -16,20 +16,27 @@ with identical escape tables.  Measured divergences (this sandbox, Spark
 - contract truncation markers (string > 10M chars, list > 10k items, …)
   have no ``to_json`` analog.
 
-So simple bags (int/string/bool fields) render fully JVM-side: the object
-is assembled from per-field ``to_json`` fragments, an over-limit string as
-the contract's ``string_too_large`` marker, and the upper-hex escapes are
-lower-cased in place (`contract_escapes`, the one home of that rule; the
-sink's record heads and the content-hash lane of
-``operators.graph.canonical_props_col`` use it too).  Bags with
-fractional / nested fields re-canonicalize through an Arrow-vectorized
-pandas UDF running the §1.3 encoding contract, and bags with temporal /
-binary / decimal fields through the typed struct encoder.
+Each property bag takes one of two routes, decided here once
+(`bag_is_export_fast`) for the export and for the content hash
+(``operators.graph.canonical_props_col``) alike:
+
+- simple bags (int/string/bool fields) render fully JVM-side: the object
+  is assembled from per-field ``to_json`` fragments, an over-limit string
+  as the contract's ``string_too_large`` marker, and the upper-hex escapes
+  are lower-cased in place (`contract_escapes`, the one home of that rule;
+  the sink's record heads and the content hash's JVM lane use it too);
+- every other bag runs one Arrow-vectorized pandas UDF (`python_bag_col`):
+  temporal, decimal and binary fields cross as Arrow values, the rest as
+  the ``to_json`` text of their struct, and one Python encoder writes the
+  bytes — the §1.3 contract for the export, the kernel's
+  ``canonical_properties`` for the hash.
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -103,7 +110,10 @@ def bag_is_export_fast(dtype: T.DataType) -> bool:
     return True
 
 
-_TYPED_FIELD_TYPES = (
+# A top-level field whose type holds one of these crosses to Python as its
+# Arrow value: ``to_json`` would stringify it in Jackson's format, which is
+# neither the contract's temporal format nor the hash kernel's ``str``.
+_ARROW_FIELD_TYPES = (
     T.TimestampType,
     T.TimestampNTZType,
     T.DateType,
@@ -112,88 +122,56 @@ _TYPED_FIELD_TYPES = (
 )
 
 
-def _bag_has_typed_fields(dtype: T.DataType) -> bool:
-    """Fields whose to_json stringification loses the §1.3 contract format
-    (temporals → Jackson timestamps instead of 9-digit-nanos strings,
-    binary/decimal typing) — route the STRUCT through the typed encoder."""
+def _holds_arrow_type(t: T.DataType) -> bool:
+    if isinstance(t, _ARROW_FIELD_TYPES):
+        return True
+    if isinstance(t, T.ArrayType):
+        return _holds_arrow_type(t.elementType)
+    if isinstance(t, T.MapType):
+        return _holds_arrow_type(t.keyType) or _holds_arrow_type(t.valueType)
+    if isinstance(t, T.StructType):
+        return any(_holds_arrow_type(f.dataType) for f in t.fields)
+    return False
 
-    def walk(t: T.DataType) -> bool:
-        if isinstance(t, _TYPED_FIELD_TYPES):
-            return True
-        if isinstance(t, T.ArrayType):
-            return walk(t.elementType)
-        if isinstance(t, T.MapType):
-            return walk(t.keyType) or walk(t.valueType)
-        if isinstance(t, T.StructType):
-            return any(walk(f.dataType) for f in t.fields)
-        return False
 
-    return isinstance(dtype, T.StructType) and any(
-        walk(f.dataType) for f in dtype.fields
+def python_bag_col(
+    bag: Column, dtype: T.StructType, encode: Callable[[dict[str, Any]], str]
+) -> Column:
+    """``encode(props)`` of each row of the struct column ``bag`` (schema
+    ``dtype``), through one Arrow-vectorized pandas UDF: the lane of every
+    bag that `bag_is_export_fast` rejects, for the export
+    (``dumps(encode_properties(...))``) and the content hash
+    (``canonical_properties``) alike.
+
+    A field whose type holds a timestamp, date, decimal or binary crosses
+    as its Arrow value; every other field crosses inside the ``to_json``
+    text of one struct of those fields, so ints stay exact, a null stays
+    absent and floats parse back from Jackson's shortest form.  ``props``
+    holds the non-null fields of both, in schema field order."""
+    order = [f.name for f in dtype.fields]
+    typed = [f.name for f in dtype.fields if _holds_arrow_type(f.dataType)]
+    rest = [n for n in order if n not in typed]
+    js = F.to_json(F.struct(*[bag[n].alias(n) for n in rest]))
+    # positional names: a field may be called anything, "_json" included
+    arg = F.struct(
+        js.alias("_0"), *[bag[n].alias(f"_{i}") for i, n in enumerate(typed, 1)]
     )
 
-
-def make_typed_bag_udf(dtype: T.StructType):
-    """Scalar pandas UDF over a STRUCT column: Arrow hands back typed values
-    (pd.Timestamp/date/bytes/Decimal), so temporals render per the contract
-    formatter instead of Jackson's timestamp string.
-
-    Null handling matches the JSON-string lane (nulls dropped, like
-    to_json).  Arrow→pandas COERCES integer columns containing nulls to
-    float64, so integral fields are restored from the schema: NaN → drop
-    (it was a null), finite → int.  A null DoubleType value arrives as NaN,
-    indistinguishable from a genuine NaN — encoded as the contract's
-    "NaN" string (contract-leaning resolution)."""
-    integral = {
-        f.name
-        for f in dtype.fields
-        if isinstance(f.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType))
-    }
-    fractional = {
-        f.name for f in dtype.fields if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-    }
-
-    def encode(bag: pd.DataFrame) -> pd.Series:
-        import math as _math
-
+    def run(cols: pd.DataFrame) -> pd.Series:
         out = []
-        for rec in bag.to_dict("records"):
-            clean = {}
-            for k, v in rec.items():
-                if v is None or v is pd.NaT:
-                    continue
-                if k in integral and isinstance(v, float):
-                    if _math.isnan(v):
-                        continue  # Arrow null coerced to NaN
-                    v = int(v)
-                elif k not in fractional and isinstance(v, float) and _math.isnan(v):
-                    # NaN in a non-float field can only be a coerced null
-                    continue
-                clean[k] = v
-            out.append(dumps(encode_properties(clean)))
-        return pd.Series(out)
+        for text, *vals in cols.itertuples(index=False, name=None):
+            got = json.loads(text)
+            got.update(
+                (k, v) for k, v in zip(typed, vals) if v is not None and v is not pd.NaT
+            )
+            out.append(encode({k: got[k] for k in order if k in got}))
+        return pd.Series(out, dtype=object)
 
-    return pandas_udf(encode, StringType())
+    return pandas_udf(run, StringType())(arg)
 
 
-@pandas_udf(StringType())
-def export_json_canon_udf(json_props: pd.Series) -> pd.Series:
-    """Re-encode a JSON-object string column per the §1.3 export contract
-    (insertion-ordered keys — NOT the sorted order of the hash-canonical
-    kernel), Arrow-vectorized."""
-
-    def canon(s: str | None) -> str | None:
-        if s is None:
-            # a null bag: the sink splices "{}" for it
-            return None
-        if s == "":
-            return "{}"
-        obj = json.loads(s)
-        if not isinstance(obj, dict):
-            obj = {"value": obj}
-        return dumps(encode_properties(obj))
-
-    return json_props.map(canon)
+def _export_encode(props: dict[str, Any]) -> str:
+    return dumps(encode_properties(props))
 
 
 def _field_fragment(bag: Column, f: T.StructField) -> Column:
@@ -228,32 +206,25 @@ def export_props_json_col(df: DataFrame, struct_col: str = "properties") -> Colu
     """Final contract bytes for the record's ``properties`` object.
 
     Simple bags render fully JVM-side: ``{`` + the comma-joined
-    `_field_fragment`s + ``}``, through `contract_escapes`.  Bags with
-    temporal/binary/decimal fields go through the TYPED struct encoder
-    (Arrow keeps real datetimes/bytes, so the contract's temporal formats
-    apply); remaining non-simple bags (fractional/nested)
-    re-canonicalize through the JSON-string UDF (normalizes Jackson float
-    formatting, applies truncation markers).  Nulls are dropped in every
-    lane, like ``to_json``.
+    `_field_fragment`s + ``}``, through `contract_escapes`.  Every other bag
+    goes through `python_bag_col` with ``dumps(encode_properties(...))``.
+    Nulls are dropped in both lanes, like ``to_json``.
     """
     dtype = df.schema[struct_col].dataType
-    if isinstance(dtype, T.StructType):
-        names = [f.name for f in dtype.fields]
-        if len(set(names)) != len(names):
-            # every JSON-string lane (to_json → loads) silently keeps only
-            # the LAST duplicate — explicit failure beats silent data loss;
-            # the contract's key_1 rename applies to runtime MAP keys, not
-            # schema-level duplicate struct fields
-            raise ValueError(
-                f"duplicate struct field names in {struct_col}: {names} — "
-                "rename the fields (duplicate JSON keys would be dropped)"
-            )
-    if _bag_has_typed_fields(dtype):
-        return make_typed_bag_udf(dtype)(F.col(struct_col))
-    if not bag_is_export_fast(dtype):
-        return export_json_canon_udf(F.to_json(struct_col))
-    assert isinstance(dtype, T.StructType)
+    if not isinstance(dtype, T.StructType):
+        raise TypeError(f"{struct_col} must be a struct, not {dtype.simpleString()}")
+    names = [f.name for f in dtype.fields]
+    if len(set(names)) != len(names):
+        # a JSON object keeps only the LAST duplicate — explicit failure
+        # beats silent data loss; the contract's key_1 rename applies to
+        # runtime MAP keys, not schema-level duplicate struct fields
+        raise ValueError(
+            f"duplicate struct field names in {struct_col}: {names} — "
+            "rename the fields (duplicate JSON keys would be dropped)"
+        )
     bag = F.col(struct_col)
+    if not bag_is_export_fast(dtype):
+        return python_bag_col(bag, dtype, _export_encode)
     # concat_ws skips NULL fragments, so a null or all-null bag gives "{}"
     frags = F.concat_ws(",", *[_field_fragment(bag, f) for f in dtype.fields])
     return contract_escapes(F.concat(F.lit("{"), frags, F.lit("}")))

@@ -9,16 +9,18 @@ sort-merge + skew-split otherwise.  The reference's warn-and-fallback on a
 missing node becomes ``coalesce(content_hash, element_id)`` plus a counted
 ``_hash_fallback`` flag (observable metric instead of a log line).
 
-Canonical JSON for FLAT typed property bags is built JVM-side:
-``to_json(struct(cols sorted by name))`` already satisfies the contract —
-ordinally-sorted keys (we sort the struct fields), compact output, null
-fields dropped (Spark's default ``ignoreNullFields``), integers without a
-decimal point — once Jackson's upper-hex control escapes are lower-cased
+A property bag is canonicalized by the route the export takes for it
+(`functions.export_json.bag_is_export_fast`).  A simple bag
+(int/string/bool fields) is built JVM-side: ``to_json(struct(cols sorted
+by name))`` already satisfies the contract — ordinally-sorted keys (we
+sort the struct fields), compact output, null fields dropped (Spark's
+default ``ignoreNullFields``), integers without a decimal point — once
+Jackson's upper-hex control escapes are lower-cased
 (`functions.export_json.contract_escapes`).  The empty bag canonicalizes
 to ``''`` (reference ``Neo4jExportToolId.fs:102-104``), patched with one
-``when``.  Dynamic / nested bags fall back to the Arrow-vectorized
-canonicalizer (`functions.canonical.canonicalize_json_udf`).  Hashing is
-therefore whole-stage-codegen'd ``sha2`` — no Python in the hot path.
+``when``.  Every other bag runs the kernel's `canonical_properties` in the
+export's pandas-UDF lane (`functions.export_json.python_bag_col`).  The
+hash itself is whole-stage-codegen'd ``sha2`` in both routes.
 """
 
 from __future__ import annotations
@@ -27,49 +29,39 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.canonical import (
-    canonicalize_json_udf,
+    canonical_properties,
     node_hash_col,
     rel_hash_col,
 )
 from neo4j_export_tool_spark.functions.export_json import (
+    bag_is_export_fast,
     contract_escapes,
     export_props_json_col,
+    python_bag_col,
 )
 
 
-def _bag_needs_python_canon(df: DataFrame, props: dict[str, Column]) -> bool:
-    """True when the bag contains fractional or nested types, whose to_json
-    formatting differs from the contract (e.g. Spark renders 1e-7 as
-    '1.0E-7'; the canonical kernel gives '1e-07')."""
-    from pyspark.sql import types as T
+def canonical_props_col(props: dict[str, Column], df: DataFrame) -> Column:
+    """Canonical-JSON string column for the property bag ``props`` over
+    ``df``, routed as the export routes it.
 
-    schema = df.select(*[c.alias(k) for k, c in props.items()]).schema
-    fractional = (T.FloatType, T.DoubleType, T.DecimalType)
-    nested = (T.ArrayType, T.MapType, T.StructType)
-    return any(
-        isinstance(f.dataType, fractional + nested) for f in schema.fields
-    )
-
-
-def canonical_props_col(
-    props: dict[str, Column], df: DataFrame | None = None
-) -> Column:
-    """Canonical-JSON string column for a flat property bag.
-
-    Int/string/bool bags canonicalize fully JVM-side (to_json over the
-    name-sorted struct, with Jackson's upper-hex control escapes lower-cased
-    by `contract_escapes` as the Python kernel writes them).  Bags
-    containing fractional or nested values are re-canonicalized through
-    the Arrow pandas UDF so float formatting byte-matches the pure-Python
-    ID kernel (``functions.canonical``) — the cross-implementation
-    guarantee the hash algebra depends on.
+    A simple bag (`bag_is_export_fast`) canonicalizes fully JVM-side:
+    ``to_json`` over the name-sorted struct, with Jackson's upper-hex
+    control escapes lower-cased by `contract_escapes` as the Python kernel
+    writes them.  Every other bag runs the kernel's `canonical_properties`
+    in `python_bag_col`, so fractional, temporal, decimal and binary values
+    hash the bytes the pure-Python ID kernel (``functions.canonical``)
+    hashes — the cross-implementation guarantee the hash algebra depends
+    on.
     """
     if not props:
         return F.lit("")
-    struct = F.struct(*[props[k].alias(k) for k in sorted(props)])
+    fields = [props[k].alias(k) for k in sorted(props)]
+    struct = F.struct(*fields)
+    dtype = df.select(*fields).schema
+    if not bag_is_export_fast(dtype):
+        return python_bag_col(struct, dtype, canonical_properties)
     js = F.to_json(struct)
-    if df is not None and _bag_needs_python_canon(df, props):
-        return F.coalesce(canonicalize_json_udf(js), F.lit(""))
     # all-null bag → '{}' from to_json; the contract wants ''
     return F.when(js == "{}", F.lit("")).otherwise(contract_escapes(js))
 
@@ -186,7 +178,7 @@ def nodes_union(*node_dfs: DataFrame) -> DataFrame:
     carried as pre-serialized JSON (SURVEY.md §1.2) once classes mix:
     (element_id, labels, properties_json, canonical_props, content_hash).
     ``properties_json`` is contract-final bytes (simple bags JVM-side for
-    every row; the §1.3 UDFs only for non-simple bags), so the JSONL sink
+    every row; one pandas UDF only for non-simple bags), so the JSONL sink
     can splice it into record lines without touching Python.
     """
     projected = [
@@ -231,8 +223,6 @@ def attach_node_hashes(
         .withColumn("_start_fallback", F.col("_nhash").isNull())
         .drop("_nid", "_nhash")
     )
-    if broadcast_nodes:
-        lookup = F.broadcast(lookup)
     out = (
         out.join(lookup, out["end_element_id"] == lookup["_nid"], "left")
         .withColumn("end_node_content_hash", F.coalesce("_nhash", "end_element_id"))

@@ -106,10 +106,17 @@ UPPER_HEX_CTRL = "\x0b\x0e\x0f\x1a\x1b\x1c\x1d\x1e\x1f"
 
 
 def test_content_hashes_of_control_chars_match_python_kernel(spark):
-    """The JVM canonical-JSON lane of ``nodes_from`` / ``edges_from`` hashes
-    the bytes the Python kernel hashes, for every control character whose
-    escape case differs between Jackson and the contract's writer, in
-    values and in keys."""
+    """``nodes_from`` / ``edges_from`` hash the bytes the Python kernel
+    hashes.  Two inputs: every control character whose escape case differs
+    between Jackson and the contract's writer, in values and in keys (the
+    JVM canonical-JSON lane); and a bag of ``timestamp_ntz`` with
+    microseconds, date, ``decimal(10,2)``, binary, a double holding NaN
+    and null, an ``array<int>`` and a ``map<string,int>`` holding nulls
+    (the Python lane, where Jackson's timestamp and decimal strings are not
+    the kernel's)."""
+    import datetime as dt
+    from decimal import Decimal
+
     from neo4j_export_tool_spark.functions.canonical import (
         node_content_hash,
         rel_identity_hash,
@@ -118,24 +125,48 @@ def test_content_hashes_of_control_chars_match_python_kernel(spark):
 
     key = "k\x1f"
     values = [f"a{c}b" for c in UPPER_HEX_CTRL]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(values)], "i long, name string"
+    ctrl = spark.createDataFrame(
+        [(v, i, v) for i, v in enumerate(values)], "eid string, i long, name string"
     )
-    props = {"id": F.col("i"), "name": F.col("name"), key: F.col("name")}
-    nodes = nodes_from(df, labels=["N"], element_id=F.col("name"), props=props)
-    edges = edges_from(
-        df,
-        rel_type="R",
-        start_element_id=F.lit("s"),
-        end_element_id=F.col("name"),
-        props=props,
+    ctrl_props = {"id": F.col("i"), "name": F.col("name"), key: F.col("name")}
+    ctrl_bags = {v: {"id": i, "name": v, key: v} for i, v in enumerate(values)}
+
+    typed_rows = [
+        (
+            "t0", dt.datetime(2024, 1, 2, 3, 4, 5, 120000), dt.date(2024, 1, 2),
+            Decimal("1.50"), b"\x00\xff", float("nan"), [1, None], {"p": 1, "q": None},
+        ),
+        (
+            "t1", dt.datetime(2024, 1, 2, 3, 4, 5), dt.date(1999, 12, 31),
+            Decimal("-0.07"), b"", None, [None], {"q": None},
+        ),
+    ]
+    typed = spark.createDataFrame(
+        typed_rows,
+        "eid string, ts timestamp_ntz, d date, dec decimal(10,2), bin binary, "
+        "x double, arr array<int>, m map<string,int>",
     )
-    node_hash = {r["element_id"]: r["content_hash"] for r in nodes.collect()}
-    rel_hash = {r["end_element_id"]: r["identity_hash"] for r in edges.collect()}
-    for i, v in enumerate(values):
-        bag = {"id": i, "name": v, key: v}
-        assert node_hash[v] == node_content_hash(["N"], bag), repr(v)
-        assert rel_hash[v] == rel_identity_hash("R", "s", v, bag), repr(v)
+    typed_props = {c: F.col(c) for c in typed.columns[1:]}
+    typed_bags = {r[0]: dict(zip(typed.columns[1:], r[1:])) for r in typed_rows}
+
+    for df, props, bags in (
+        (ctrl, ctrl_props, ctrl_bags),
+        (typed, typed_props, typed_bags),
+    ):
+        nodes = nodes_from(df, labels=["N"], element_id=F.col("eid"), props=props)
+        edges = edges_from(
+            df,
+            rel_type="R",
+            start_element_id=F.lit("s"),
+            end_element_id=F.col("eid"),
+            props=props,
+        )
+        node_hash = {r["element_id"]: r["content_hash"] for r in nodes.collect()}
+        rel_hash = {r["end_element_id"]: r["identity_hash"] for r in edges.collect()}
+        assert node_hash.keys() == rel_hash.keys() == bags.keys()
+        for eid, bag in bags.items():
+            assert node_hash[eid] == node_content_hash(["N"], bag), repr(eid)
+            assert rel_hash[eid] == rel_identity_hash("R", "s", eid, bag), repr(eid)
 
 
 def test_label_validation_and_cap(spark):
@@ -448,21 +479,37 @@ def test_single_file_unsorted_parallel_write(spark, tmp_path):
 
 
 def test_typed_bag_int_column_with_nulls_stays_integral(spark):
-    """Arrow→pandas coerces int64 columns with nulls to float64; the typed
-    lane must restore ints and drop coerced-null NaNs (review finding:
-    {'n':5.0} / {'n':'NaN'} corruption)."""
+    """Fields beside a timestamp render as they do in a bag without one:
+    an int column with nulls stays integral with its nulls omitted (not
+    ``{'n':5.0}`` / ``{'n':'NaN'}``), and so do a null double, an
+    ``array<int>`` holding a null, a float 0.1 and a struct with a null
+    field, where an Arrow-decoded value would give ``"NaN"``,
+    ``[1.0,"NaN"]``, ``0.10000000149011612`` and ``"p":null``."""
     import datetime as dt
 
     df = spark.createDataFrame(
-        [("a", dt.datetime(2024, 1, 1), 5), ("b", dt.datetime(2024, 1, 2), None)],
-        "id string, ts timestamp_ntz, n long",
+        [
+            ("a", dt.datetime(2024, 1, 1), 5, 1.5, [1, 2], 0.25, (1, 2)),
+            ("b", dt.datetime(2024, 1, 2), None, None, [1, None], 0.1, (None, 2)),
+        ],
+        "id string, ts timestamp_ntz, n long, x double, arr array<int>, "
+        "f float, st struct<p:int,q:int>",
     )
-    nodes = nodes_union(
-        nodes_from(df, labels=["T"], element_id=F.col("id"),
-                   props={"ts": F.col("ts"), "n": F.col("n")})
-    )
-    got = {r["element_id"]: json.loads(r["properties_json"])
-           for r in nodes.select("element_id", "properties_json").collect()}
+    rest = {c: F.col(c) for c in df.columns[2:]}
+
+    def bags(props):
+        nodes = nodes_union(
+            nodes_from(df, labels=["T"], element_id=F.col("id"), props=props)
+        )
+        return dict(nodes.select("element_id", "properties_json").collect())
+
+    with_ts = bags({"ts": F.col("ts"), **rest})
+    without_ts = bags(rest)
+    assert without_ts["b"] == '{"arr":[1,null],"f":0.1,"st":{"q":2}}'
+    for eid, day in (("a", "01"), ("b", "02")):
+        ts = f'"ts":"2024-01-{day}T00:00:00"'
+        assert with_ts[eid] == "{" + ts + "," + without_ts[eid][1:], eid
+    got = {eid: json.loads(js) for eid, js in with_ts.items()}
     assert got["a"]["n"] == 5 and isinstance(got["a"]["n"], int)
     assert "n" not in got["b"]  # null dropped, not "NaN"
 
