@@ -38,6 +38,7 @@ import json
 from collections.abc import Callable
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -134,6 +135,18 @@ def _holds_arrow_type(t: T.DataType) -> bool:
     return False
 
 
+def _nat_to_none(v: Any) -> Any:
+    """``v`` with every ``pd.NaT`` in it made ``None``: Arrow hands a null
+    timestamp over as ``NaT``, a ``datetime`` subclass, at the top level
+    and inside (nested) arrays, which come as object arrays and become
+    lists here.  Inside a struct or map a null is already ``None``."""
+    if v is pd.NaT:
+        return None
+    if isinstance(v, np.ndarray) and v.dtype == object:
+        return [_nat_to_none(x) for x in v]
+    return v
+
+
 def python_bag_col(
     bag: Column, dtype: T.StructType, encode: Callable[[dict[str, Any]], str]
 ) -> Column:
@@ -161,9 +174,8 @@ def python_bag_col(
         out = []
         for text, *vals in cols.itertuples(index=False, name=None):
             got = json.loads(text)
-            got.update(
-                (k, v) for k, v in zip(typed, vals) if v is not None and v is not pd.NaT
-            )
+            vals = [_nat_to_none(v) for v in vals]
+            got.update((k, v) for k, v in zip(typed, vals) if v is not None)
             out.append(encode({k: got[k] for k in order if k in got}))
         return pd.Series(out, dtype=object)
 

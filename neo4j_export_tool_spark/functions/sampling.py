@@ -125,8 +125,8 @@ def negative_samples(
     equi-joins both against ``(idx, pobj)`` — two shuffle joins on an
     int64 key, the plan shape that still works when the entity
     vocabulary of a 100 TB KG is 10⁸–10⁹ objects.  (The previous form
-    carried the whole pool as a one-row ARRAY column, kept for
-    bit-identity pinning as `negative_samples_array_pool`; an array of
+    carried the whole pool as a one-row ARRAY column; a twin of it in
+    tests/test_chunk_spans.py pins the two bit-identical.  An array of
     10⁹ elements in a single row breaks long before any broadcast
     threshold does.)
 
@@ -172,49 +172,6 @@ def negative_samples(
         F.col("_cand") == F.col("obj"), F.col("_bump")
     ).otherwise(F.col("_cand"))
     return joined.select(
-        "subj", "pred", "obj", "neg_idx", neg.alias("neg_obj")
-    )
-
-
-def negative_samples_array_pool(
-    triples: DataFrame,
-    subj_col: str,
-    pred_col: str,
-    obj_col: str,
-    pool_df: DataFrame,
-    k: int = 2,
-    salt: str = "neg",
-) -> DataFrame:
-    """The original in-plan-ARRAY form of `negative_samples`, kept as the
-    bit-identity reference: ``pool_df`` is a one-row DataFrame with a
-    sorted ARRAY column named ``pool`` (``triples.select(F.sort_array(
-    F.collect_set(obj)).alias("pool"))``), broadcast-cross-joined in.
-    Correct and driver-collect-free, but a single row holding the whole
-    candidate vocabulary caps out at large |pool| — use
-    `negative_samples` (indexed-pool equi-join) everywhere; a pytest
-    pins the two outputs bit-identical."""
-    s, p, o = F.col(subj_col), F.col(pred_col), F.col(obj_col)
-    n = F.size("pool")
-    base = triples.select(s.alias("subj"), p.alias("pred"), o.alias("obj"))
-    exploded = base.select(
-        "*", F.explode(F.array(*[F.lit(i) for i in range(1, k + 1)])).alias("neg_idx")
-    ).crossJoin(F.broadcast(pool_df.select(F.col("pool"))))
-    key = F.concat_ws(
-        ":", F.lit(salt), F.col("subj"), F.col("pred"), F.col("obj"),
-        F.col("neg_idx").cast("string"),
-    )
-    idx = shingle_hash_col(key) % n
-    cand = F.element_at(F.col("pool"), (idx + 1).cast("int"))
-    bumped = F.element_at(F.col("pool"), (((idx + 1) % n) + 1).cast("int"))
-    # |pool| < 2 cannot yield a negative != the true object — fail loud
-    # (runtime raise_error: the pool size only exists in-plan)
-    neg = F.when(
-        n < 2,
-        F.raise_error(
-            F.lit("negative_samples needs a candidate pool of >= 2 objects")
-        ).cast("string"),
-    ).otherwise(F.when(cand == F.col("obj"), bumped).otherwise(cand))
-    return exploded.select(
         "subj", "pred", "obj", "neg_idx", neg.alias("neg_obj")
     )
 

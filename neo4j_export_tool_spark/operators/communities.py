@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.partitioning import broadcast_if_small
+from neo4j_export_tool_spark.operators.triangles import _canonical_undirected
+
 
 def label_propagation(
     edges: DataFrame,
@@ -45,16 +47,9 @@ def label_propagation(
     neighbors and is absent from the output."""
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")
-    und = (
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    sym = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    und = _canonical_undirected(edges, a_col, b_col)
+    sym = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
+        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
     ).localCheckpoint(eager=False)
     labels = (
         sym.select(F.col("a").alias("node"))

@@ -26,6 +26,7 @@ which adaptive execution coalesces on small graphs.
 from __future__ import annotations
 
 import dataclasses
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -237,24 +238,24 @@ def local_star_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 
 def _min_label_loop(
-    edges: DataFrame, labels: DataFrame, max_rounds: int
+    edges: DataFrame,
+    labels: DataFrame,
+    max_rounds: int,
+    *,
+    hops: int = POINTER_DOUBLE_HOPS,
+    bcast: Callable[[DataFrame], DataFrame] = lambda df: df,
 ) -> tuple[DataFrame, int, bool, dict]:
     """Min-label fixpoint over ``edges`` (src, dst) from ``labels``
     (id, label); returns ``(labels, rounds, converged, round_timings)``.
+    It runs CC and SCC's forward coloring (`operators/scc.py`).
 
     Each round pushes the smallest label along ``src → dst`` and merges
-    it with ``least``, then takes ``POINTER_DOUBLE_HOPS`` pointer-doubling
-    hops (label ← label of its label).  The round ends in one eager
-    ``localCheckpoint`` that also observes the changed-label count: one
-    job per round, and the loop stops at the first round that changes
-    nothing (``converged``).  Round wall times feed a
-    ``BatchPerformanceTracker``.
-
-    SCC's forward coloring (`operators/scc.py`) keeps its own push-only
-    loop: with its node tables broadcast, each doubling hop is one more
-    broadcast job per round, which costs more than the rounds it saves
-    when the colors settle in two or three rounds (the ``scc_coloring``
-    lane ran 36% slower on this loop)."""
+    it with ``least``, then takes ``hops`` pointer-doubling hops (label ←
+    label of its label).  ``bcast`` wraps every node-sized join side.
+    The round ends in one eager ``localCheckpoint`` that also observes
+    the changed-label count: one job per round, and the loop stops at
+    the first round that changes nothing (``converged``).  Round wall
+    times feed a ``BatchPerformanceTracker``."""
     import time as _time
 
     from neo4j_export_tool_spark.plans.perf import BatchPerformanceTracker
@@ -264,13 +265,15 @@ def _min_label_loop(
         _t0 = _time.perf_counter()
         pushed = (
             edges.join(
-                labels.select(F.col("id").alias("src"), F.col("label").alias("_in")),
+                bcast(
+                    labels.select(F.col("id").alias("src"), F.col("label").alias("_in"))
+                ),
                 "src",
             )
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("_in").alias("_in"))
         )
-        nxt = labels.join(pushed, "id", "left").select(
+        nxt = labels.join(bcast(pushed), "id", "left").select(
             "id",
             F.least("label", F.coalesce("_in", "label")).alias("label"),
             F.coalesce(F.col("_in") < F.col("label"), F.lit(False)).alias("_changed"),
@@ -278,9 +281,9 @@ def _min_label_loop(
         # pointer doubling (path compression): follow label → its label,
         # shrinking chain depth geometrically → O(log n) rounds on chains
         # instead of O(diameter)
-        for _hop in range(POINTER_DOUBLE_HOPS):
+        for _hop in range(hops):
             hop = nxt.select(F.col("id").alias("label"), F.col("label").alias("_hop"))
-            nxt = nxt.join(hop, "label", "left").select(
+            nxt = nxt.join(bcast(hop), "label", "left").select(
                 "id",
                 F.least("label", F.coalesce("_hop", "label")).alias("label"),
                 (

@@ -41,17 +41,6 @@ def _trigrams(s: str) -> set[str]:
     return {s[i : i + 3] for i in range(len(s) - 2)}
 
 
-def _reduce_sorted(weights: np.ndarray) -> float:
-    """THE canonical float fold for link scores: ``np.add.reduceat`` over
-    weights in lexicographically-sorted trigram order.  One fixed
-    reduction tree over one fixed element order → bit-identical across
-    processes, hash seeds, and the batch scorer's segments (it runs the
-    same reduceat per segment, as does the scalar twin in the tests)."""
-    if len(weights) == 0:
-        return 0.0
-    return float(np.add.reduceat(weights, np.array([0]))[0])
-
-
 def _block_key(col):
     """Blocking key: lower-cased first alphanumeric token."""
     return F.lower(F.regexp_extract(col, r"[A-Za-z0-9]+", 0))
@@ -137,23 +126,11 @@ def _score_pairs_batch(
     ]
     lengths = np.array([len(c) for c in codes], dtype=np.int64)
     # norms via the canonical per-segment fold
-    flat = np.concatenate(codes) if codes else np.zeros(0, dtype=np.int64)
-    starts = np.zeros(len(codes), dtype=np.int64)
-    if len(codes) > 1:
-        starts[1:] = np.cumsum(lengths)[:-1]
-    norm2 = np.zeros(len(codes), dtype=np.float64)
-    nonempty = lengths > 0
-    if nonempty.any():
-        seg = np.add.reduceat(w2[flat], starts[nonempty])
-        # reduceat with boundaries at empty segments would merge slices;
-        # restricting to nonempty starts keeps slices exact — but adjacent
-        # reduceat slices end at the NEXT boundary, so recompute per-string
-        # only when a zero-length neighbor would corrupt the slice
-        if nonempty.all():
-            norm2 = seg
-        else:
-            for i in np.flatnonzero(nonempty):
-                norm2[i] = _reduce_sorted(w2[codes[i]])
+    flat = np.concatenate(codes)
+    starts = np.cumsum(lengths) - lengths
+    # every string has at least one trigram (`_trigrams` pads it), so no
+    # reduceat segment is empty
+    norm2 = np.add.reduceat(w2[flat], starts)
 
     s_idx = np.array(
         [uniq[s] if isinstance(s, str) else -1 for s in surfaces], dtype=np.int64

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from neo4j_export_tool_spark.operators.triangles import _canonical_undirected
+
 
 def link_prediction_scores(
     edges: DataFrame,
@@ -54,13 +56,15 @@ def link_prediction_scores(
     pre-filter hubs explicitly — silent truncation would skew scores).
     """
     und = (
-        edges.select(
-            F.least(F.col(a_col).cast("string"), F.col(b_col).cast("string")).alias("a"),
-            F.greatest(F.col(a_col).cast("string"), F.col(b_col).cast("string")).alias("b"),
+        _canonical_undirected(
+            edges.select(
+                F.col(a_col).cast("string").alias("a"),
+                F.col(b_col).cast("string").alias("b"),
+            ),
+            "a",
+            "b",
         )
-        .where(F.col("a") != F.col("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
+        .toDF("a", "b")
         .localCheckpoint(eager=False)
     )
     sym = und.unionByName(

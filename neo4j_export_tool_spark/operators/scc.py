@@ -8,6 +8,9 @@ standard distributed SCC scheme; FW-BW's recursive pivoting doesn't
 map to a driver loop):
 
   outer round:
+    0. TRIM: peel every edge out of a node with no in-edge or into a
+       node with no out-edge, to the fixpoint; a node left on no edge
+       is a singleton SCC.
     1. FORWARD fixpoint: every node's color = min node id that can
        reach it (min-label propagation along edge direction).
     2. BACKWARD sweep: from each color's root (the node that IS its
@@ -20,20 +23,28 @@ Every pick is a ``min`` — fully deterministic, partitioning/engine
 independent, no salt needed.  An isolated or acyclic node emits a
 singleton SCC (scc_id = its own id).
 
-Scale shape: every step is an equi-join + keyed min-agg fixpoint with
-localCheckpoint lineage cuts; the backward sweep runs on the semi-naive
-frontier loop that closure and BFS share
-(`operators/closure.py::_frontier_loop`).  Forward rounds are bounded
-by the color diameter, outer rounds by the SCC condensation's chain
+Scale shape: each step runs on a fixpoint loop that another operator
+shares — the trim on the peel loop of k-core and k-truss
+(`operators/triangles.py::_peel`), the forward coloring on CC's
+min-label loop (`operators/components.py::_min_label_loop`, without
+pointer-doubling hops: the colors of a shallow graph settle in two or
+three rounds, and each hop would cost one more broadcast job per
+round), and the backward sweep on the semi-naive frontier loop that
+closure and BFS share (`operators/closure.py::_frontier_loop`).  Only
+the outer remove-and-repeat loop lives here.  Every loop cuts lineage
+with localCheckpoint each round.  Forward rounds are bounded by the
+color diameter, outer rounds by the SCC condensation's chain
 structure; both carry RAISING ceilings (`max_label_rounds`,
-`max_outer_rounds`) — explicit cost ceilings, never silent truncation.
-Per outer round, the measured node count sets the `broadcast_if_small`
-tier of every node-sized loop table (colors, inbound mins, trim and
-removal sets, the backward frontier): behind localCheckpoint barriers
-the planner has no size statistics and would sort-merge-join even a
-500-node graph.  Worst case (one long
-path) is O(diameter) rounds — the known cost of label-propagation SCC;
-for that shape raise the ceilings deliberately.
+`max_outer_rounds`) — explicit cost ceilings, never silent
+truncation.  The trim's rounds are a radius: running out of them is
+not an error, coloring handles the rest.  Per outer round, the
+measured node count sets the `broadcast_if_small` tier of every
+node-sized loop table (the trim's in/out node sets, colors, inbound
+mins, the removal sets, the backward frontier): behind
+localCheckpoint barriers the planner has no size statistics and would
+sort-merge-join even a 500-node graph.  Worst case (one long path) is
+O(diameter) rounds — the known cost of label-propagation SCC; for that
+shape raise the ceilings deliberately.
 
 Independent python twin: iterative Tarjan in tests/test_scc.py.
 """
@@ -45,6 +56,8 @@ from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.partitioning import broadcast_if_small
 from neo4j_export_tool_spark.operators.closure import _frontier_loop
+from neo4j_export_tool_spark.operators.components import _min_label_loop
+from neo4j_export_tool_spark.operators.triangles import _peel
 
 
 def strongly_connected_components(
@@ -67,8 +80,9 @@ def strongly_connected_components(
     moving at its ceiling.
 
     The call is eager on every input: each outer round's node count
-    (which sets the broadcast tier) and the fixpoints' ``isEmpty``
-    checks are Spark jobs that run before it returns.
+    (which sets the broadcast tier), the trim's per-round counts, the
+    coloring's per-round checkpoints and the sweep's ``isEmpty`` checks
+    are Spark jobs that run before it returns.
     """
     e = (
         edges.select(
@@ -98,80 +112,43 @@ def strongly_connected_components(
         _bn = broadcast_if_small(n_nodes)
         if n_nodes == 0:
             return assigned
-        # 0. TRIM: a node with no in-edge or no out-edge in the
-        # surviving subgraph cannot sit in a multi-node SCC — emit
-        # singletons until the fixpoint.  This removes entire DAG
-        # portions cheaply; without it a plain 40-node path would need
-        # 40 outer rounds (one root SCC each) and trip the ceiling.
-        for _t in range(max_label_rounds):
-            srcs = e.select(F.col("src").alias("node")).distinct()
-            dsts = e.select(F.col("dst").alias("node")).distinct()
-            trivial = (
-                nodes.join(_bn(srcs), "node", "left_anti")
-                .unionByName(nodes.join(_bn(dsts), "node", "left_anti"))
-                .distinct()
+
+        def trimmed(e: DataFrame) -> DataFrame:
+            has_in = e.select(F.col("dst").alias("src")).distinct()
+            has_out = e.select(F.col("src").alias("dst")).distinct()
+            return e.join(_bn(has_in), "src", "left_semi").join(
+                _bn(has_out), "dst", "left_semi"
             )
-            trivial = trivial.localCheckpoint(eager=False)
-            if trivial.isEmpty():
-                break
-            assigned = assigned.unionByName(
-                trivial.select("node", F.col("node").alias("scc_id"))
-            ).localCheckpoint(eager=False)
-            nodes = nodes.join(_bn(trivial), "node", "left_anti").localCheckpoint(
-                eager=False
+
+        # 0. TRIM: an edge out of a node with no in-edge, or into a node
+        # with no out-edge, lies on no cycle; peel such edges to the
+        # fixpoint (out of rounds, coloring handles what remains).  A
+        # node left on no edge colors itself and is its own sweep root,
+        # a singleton SCC.  This removes entire DAG portions cheaply;
+        # without it a plain 40-node path would need 40 outer rounds
+        # (one root SCC each).
+        e, n_edges = _peel(e, trimmed, max_label_rounds, None)
+        if n_edges == 0:
+            return assigned.unionByName(
+                nodes.select("node", F.col("node").alias("scc_id"))
             )
-            e = e.join(
-                _bn(trivial.select(F.col("node").alias("src"))),
-                "src",
-                "left_anti",
-            ).join(
-                _bn(trivial.select(F.col("node").alias("dst"))),
-                "dst",
-                "left_anti",
-            ).localCheckpoint(eager=False)
-        # (trim ceiling exhausting is not an error — coloring below
-        # handles whatever remains)
-        if nodes.isEmpty():
-            return assigned
         # 1. forward min-label fixpoint: color(v) = min id reaching v
-        colors = nodes.select("node", F.col("node").alias("color"))
-        for _r in range(max_label_rounds):
-            colors = colors.localCheckpoint(eager=False)
-            pushed = (
-                e.join(
-                    _bn(colors.select(
-                        F.col("node").alias("src"), F.col("color").alias("_c")
-                    )),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("_c").alias("_in"))
-            )
-            nxt = (
-                colors.join(_bn(pushed), "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        "color", F.coalesce("_in", F.col("color"))
-                    ).alias("color"),
-                    (F.col("_in") < F.col("color")).alias("_moved"),
-                )
-            )
-            # checkpoint BEFORE the moved-check: the isEmpty action
-            # materializes nxt so the next round reads it instead of
-            # re-running this round's join (the _frontier_loop rule)
-            nxt = nxt.localCheckpoint(eager=False)
-            moved = nxt.where(F.col("_moved")).isEmpty()
-            colors = nxt.select("node", "color")
-            if moved:
-                break
-        else:
+        labels, _, converged, _ = _min_label_loop(
+            e,
+            nodes.select(F.col("node").alias("id"), F.col("node").alias("label")),
+            max_label_rounds,
+            hops=0,
+            bcast=_bn,
+        )
+        if not converged:
             raise RuntimeError(
                 f"SCC forward labeling still moving after "
                 f"max_label_rounds={max_label_rounds}; raise the ceiling "
                 "(long-diameter graph)"
             )
-        colors = colors.localCheckpoint(eager=False)
+        colors = labels.select(
+            F.col("id").alias("node"), F.col("label").alias("color")
+        )
 
         # 2. backward sweep from roots within each color
         e_col = (

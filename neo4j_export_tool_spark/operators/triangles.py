@@ -95,20 +95,22 @@ def _peel(
     und: DataFrame,
     survivors: Callable[[DataFrame], DataFrame],
     max_rounds: int,
-    ceiling: str,
+    ceiling: str | None,
     n_rows: int | None = None,
 ) -> tuple[DataFrame, int]:
-    """Fixpoint peel of a checkpointed canonical edge set, shared by
-    `operators/kcore.py` (node peel) and `ktruss` (edge peel): each
-    round keeps ``survivors(und)``, checkpointed and counted, until a
-    round drops nothing.  An emptied table is also a fixpoint (an empty
-    set cannot shrink), so a peel that empties on its last round returns
-    instead of raising.  Per-round driver work is one ``count()``; no
-    edge data is collected.  Returns the peeled table and its row count;
-    ``n_rows``, when the caller already knows ``und``'s count, saves the
-    opening one.  Still shrinking after ``max_rounds`` raises
-    RuntimeError(``ceiling``) — explicit cost ceiling, never silent
-    truncation."""
+    """Fixpoint peel of a checkpointed edge set, shared by
+    `operators/kcore.py` (node peel), `ktruss` (edge peel) and SCC's trim
+    (`operators/scc.py`): each round keeps ``survivors(und)``,
+    checkpointed and counted, until a round drops nothing.  An emptied
+    table is also a fixpoint (an empty set cannot shrink), so a peel that
+    empties on its last round returns instead of raising.  Per-round
+    driver work is one ``count()``; no edge data is collected.  Returns
+    the peeled table and its row count; ``n_rows``, when the caller
+    already knows ``und``'s count, saves the opening one.  Still
+    shrinking after ``max_rounds`` raises RuntimeError(``ceiling``) —
+    explicit cost ceiling, never silent truncation; with
+    ``ceiling=None`` the round count is a radius and the peel returns
+    what it reached (the `closure._frontier_loop` convention)."""
     n_prev = und.count() if n_rows is None else n_rows
     for _ in range(max_rounds):
         if n_prev == 0:
@@ -118,7 +120,9 @@ def _peel(
         if n_keep in (n_prev, 0):
             return keep, n_keep
         und, n_prev = keep, n_keep
-    raise RuntimeError(ceiling)
+    if ceiling is not None:
+        raise RuntimeError(ceiling)
+    return und, n_prev
 
 
 def _enumerate_triangles(und: DataFrame) -> DataFrame:

@@ -35,9 +35,8 @@ def _make_update_fn(evict: bool):
         n, total = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n += len(pdf)
-            # HALF_UP (away from zero), matching Spark's F.round in the
-            # batch twin — pandas' .round() is half-to-even and diverges on
-            # exact half-cents
+            # HALF_UP (away from zero), matching Spark's F.round — pandas'
+            # .round() is half-to-even and diverges on exact half-cents
             cents = pdf["value"].astype(float).mul(100)
             total += int(np.sum(np.sign(cents) * np.floor(np.abs(cents) + 0.5)))
         state.update((n, total))
@@ -69,14 +68,4 @@ def user_totals_stream(events: DataFrame, evict_idle: bool = False) -> DataFrame
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=timeout,
-    )
-
-
-def user_totals_batch(events: DataFrame) -> DataFrame:
-    """Batch twin for equivalence tests."""
-    from pyspark.sql import functions as F
-
-    return events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_c"),
     )

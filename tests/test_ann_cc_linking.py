@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,7 +15,6 @@ from neo4j_export_tool_spark.operators.ann import (
 )
 from neo4j_export_tool_spark.operators.components import connected_components
 from neo4j_export_tool_spark.operators.linking import (
-    _reduce_sorted,
     _trigrams,
     kb_from_gazetteer,
     link_mentions,
@@ -24,6 +24,17 @@ from neo4j_export_tool_spark.sources.synth import GAZETTEER
 
 # -- scalar twins of the linking kernels --------------------------------------
 
+def _reduce_sorted(weights: np.ndarray) -> float:
+    """THE canonical float fold for link scores: ``np.add.reduceat`` over
+    weights in lexicographically-sorted trigram order.  One fixed
+    reduction tree over one fixed element order → bit-identical across
+    processes, hash seeds, and the batch scorer's segments (it runs the
+    same reduceat per segment)."""
+    if len(weights) == 0:
+        return 0.0
+    return float(np.add.reduceat(weights, np.array([0]))[0])
+
+
 def _sorted_trigram_sum(trigrams, idf, default: float) -> float:
     """Sum of squared IDF weights in SORTED trigram order — Python set
     iteration order is hash-seed-dependent (varies across executor
@@ -32,8 +43,6 @@ def _sorted_trigram_sum(trigrams, idf, default: float) -> float:
     flip top-1 ties.  The fold itself is ``_reduce_sorted`` (numpy
     reduceat), the same reduction the vectorized batch scorer applies per
     segment — scalar and batch paths agree to the bit."""
-    import numpy as np
-
     w = np.array([idf.get(t, default) for t in sorted(trigrams)], dtype=np.float64)
     return _reduce_sorted(w * w)
 

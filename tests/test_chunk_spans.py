@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from neo4j_export_tool_spark.functions.similarity import shingle_hash_col
 from neo4j_export_tool_spark.operators.chunking import chunk_documents
 from neo4j_export_tool_spark.operators.dedup import duplicated_ngram_spans
 
@@ -203,6 +206,47 @@ def test_negative_samples_semantics(spark):
         negative_samples(one, "subj", "pred", "obj", one.select("obj"), k=1)
 
 
+def negative_samples_array_pool(
+    triples: DataFrame,
+    subj_col: str,
+    pred_col: str,
+    obj_col: str,
+    pool_df: DataFrame,
+    k: int = 2,
+    salt: str = "neg",
+) -> DataFrame:
+    """The original in-plan-ARRAY form of `negative_samples`, the
+    bit-identity reference: ``pool_df`` is a one-row DataFrame with a
+    sorted ARRAY column named ``pool`` (``triples.select(F.sort_array(
+    F.collect_set(obj)).alias("pool"))``), broadcast-cross-joined in.
+    Correct and driver-collect-free, but a single row holding the whole
+    candidate vocabulary caps out at large |pool|."""
+    s, p, o = F.col(subj_col), F.col(pred_col), F.col(obj_col)
+    n = F.size("pool")
+    base = triples.select(s.alias("subj"), p.alias("pred"), o.alias("obj"))
+    exploded = base.select(
+        "*", F.explode(F.array(*[F.lit(i) for i in range(1, k + 1)])).alias("neg_idx")
+    ).crossJoin(F.broadcast(pool_df.select(F.col("pool"))))
+    key = F.concat_ws(
+        ":", F.lit(salt), F.col("subj"), F.col("pred"), F.col("obj"),
+        F.col("neg_idx").cast("string"),
+    )
+    idx = shingle_hash_col(key) % n
+    cand = F.element_at(F.col("pool"), (idx + 1).cast("int"))
+    bumped = F.element_at(F.col("pool"), (((idx + 1) % n) + 1).cast("int"))
+    # |pool| < 2 cannot yield a negative != the true object — fail loud
+    # (runtime raise_error: the pool size only exists in-plan)
+    neg = F.when(
+        n < 2,
+        F.raise_error(
+            F.lit("negative_samples needs a candidate pool of >= 2 objects")
+        ).cast("string"),
+    ).otherwise(F.when(cand == F.col("obj"), bumped).otherwise(cand))
+    return exploded.select(
+        "subj", "pred", "obj", "neg_idx", neg.alias("neg_obj")
+    )
+
+
 def test_negative_samples_join_form_bit_identical_to_array_form(spark):
     """The round-6 indexed-pool equi-join plan must reproduce the
     one-row-array plan BIT-FOR-BIT (same sorted pool, same md5 pick,
@@ -212,9 +256,7 @@ def test_negative_samples_join_form_bit_identical_to_array_form(spark):
     from neo4j_export_tool_spark.functions.sampling import (
         indexed_pool,
         negative_samples,
-        negative_samples_array_pool,
     )
-    from pyspark.sql import functions as F
 
     # pool big enough that several triples hash to distinct slots and
     # at least one pick collides with the true object (forcing bumps)

@@ -514,6 +514,39 @@ def test_typed_bag_int_column_with_nulls_stays_integral(spark):
     assert "n" not in got["b"]  # null dropped, not "NaN"
 
 
+def test_null_timestamp_elements_match_python_kernel(spark):
+    """A null element of an ``array<timestamp_ntz>`` (nested arrays too)
+    crosses Arrow as ``pd.NaT``.  Through ``nodes_from`` → ``nodes_union``
+    the export writes it as the kernel's ``null`` and the content hash
+    hashes what ``node_content_hash`` hashes."""
+    import datetime as dt
+
+    from neo4j_export_tool_spark.functions.canonical import node_content_hash
+
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5)
+    rows = [("a", [ts, None], [[None, ts]]), ("b", [None], [[None]])]
+    df = spark.createDataFrame(
+        rows,
+        "eid string, arr array<timestamp_ntz>, "
+        "nested array<array<timestamp_ntz>>",
+    )
+    nodes = nodes_from(
+        df,
+        labels=["N"],
+        element_id=F.col("eid"),
+        props={"arr": F.col("arr"), "nested": F.col("nested")},
+    )
+    got = {
+        r["element_id"]: (r["properties_json"], r["content_hash"])
+        for r in nodes_union(nodes).collect()
+    }
+    assert got.keys() == {"a", "b"}
+    for eid, arr, nested in rows:
+        bag = {"arr": arr, "nested": nested}
+        assert got[eid][0] == dumps(encode_properties(bag)), eid
+        assert got[eid][1] == node_content_hash(["N"], bag), eid
+
+
 def test_duplicate_struct_fields_raise_at_plan_time(spark):
     """Silent last-key-wins data loss is rejected with a clear error."""
     df = spark.createDataFrame([(1, "x")], "a long, b string").select(

@@ -56,6 +56,31 @@ def test_peel_emptied_on_last_round_is_a_fixpoint(spark):
     assert k_core(df, "a", "b", 2, max_rounds=1).collect() == []
 
 
+def test_peel_without_ceiling_returns_what_it_reached(spark):
+    # path a-…-f at k=2 peels its two end edges per round: 5 → 3 → 1 → 0
+    # edges.  Out of rounds, ceiling=None returns the last round's table
+    # and count; a ceiling raises.
+    from pyspark.sql import functions as F
+
+    from neo4j_export_tool_spark.operators.triangles import _degrees, _peel
+
+    def survivors(und):
+        keep = _degrees(und).where(F.col("deg") >= 2).select("node")
+        return und.join(
+            keep.withColumnRenamed("node", "u"), "u", "leftsemi"
+        ).join(keep.withColumnRenamed("node", "v"), "v", "leftsemi")
+
+    path = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("e", "f")],
+        "u string, v string",
+    ).localCheckpoint(eager=False)
+    left, n = _peel(path, survivors, 2, None)
+    assert n == 1
+    assert [tuple(r) for r in left.select("u", "v").collect()] == [("c", "d")]
+    with pytest.raises(RuntimeError, match="still shrinking"):
+        _peel(path, survivors, 2, "still shrinking")
+
+
 def test_dirty_input_and_validation(spark):
     edges = [("a", "b"), ("b", "a"), ("a", "a"), ("b", "c"), ("a", "c")]
     assert _members(spark, edges, 2) == {"a", "b", "c"}

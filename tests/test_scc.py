@@ -119,6 +119,15 @@ def test_label_ceiling_raises(spark):
         _spark_scc(spark, chain, max_label_rounds=3)
 
 
+def test_trim_out_of_rounds_hands_remainder_to_coloring(spark):
+    # a decreasing-id 20-node chain: three trim rounds peel three edges
+    # off each end, and coloring (whose colors settle at once, every
+    # node's predecessors having larger ids) finishes the rest
+    chain = [(f"c{i + 1:03d}", f"c{i:03d}") for i in range(19)]
+    got = _spark_scc(spark, chain, max_label_rounds=3)
+    assert got == _py_scc(chain)
+
+
 def test_backward_sweep_finishing_on_last_round(spark):
     # the 3-cycle's backward sweep reaches c, b, then nothing new in
     # exactly 3 rounds: an empty last frontier has converged

@@ -65,11 +65,16 @@ def test_incremental_export_stream(spark, events_dir, tmp_path):
     assert spark.read.text(out).count() == n_events
 
 
-def test_stateful_user_totals_matches_batch(spark, events_dir):
-    from neo4j_export_tool_spark.streaming.stateful import (
-        user_totals_batch,
-        user_totals_stream,
+def user_totals_batch(events):
+    """Batch twin of ``user_totals_stream``'s final state."""
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_c"),
     )
+
+
+def test_stateful_user_totals_matches_batch(spark, events_dir):
+    from neo4j_export_tool_spark.streaming.stateful import user_totals_stream
 
     stream = stream_events(spark, events_dir)
     streamed = run_stream_to_memory(
