@@ -24,7 +24,7 @@ route the export takes for the same bag
 (int/string/bool fields) is Spark's ``to_json`` over its name-sorted
 struct, with Jackson's upper-hex control escapes lower-cased: for those
 types that is the kernel's output.  Every other bag runs
-`canonical_properties` in an Arrow-vectorized pandas UDF, because
+`canonical_properties` in an Arrow UDF, because
 ``to_json`` matches neither .NET float formatting nor the kernel's
 temporal and decimal strings (SURVEY.md §1.4).
 """
@@ -53,9 +53,6 @@ def canonical_json_value(value: Any) -> Any:
     value range), special floats become their string forms (same encoding the
     serializer uses: reference ``Primitives.fs:77-91``).
     """
-    if type(value).__module__ == "numpy":
-        # an array field of a bag crosses Arrow as a numpy array
-        value = value.tolist()
     if value is None or isinstance(value, (bool, int, str)):
         return value
     if isinstance(value, float):

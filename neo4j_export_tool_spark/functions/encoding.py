@@ -30,7 +30,7 @@ Reproduces the reference serializer's type → JSON mapping
 
 Simple property bags (int/string/bool fields) get the same bytes JVM-side
 (``functions.export_json.export_props_json_col``, string marker included);
-every other bag is encoded here inside one Arrow-vectorized pandas UDF
+every other bag is encoded here inside one Arrow UDF
 (``functions.export_json.python_bag_col``), never on the per-row Python
 path of Spark proper.
 """
@@ -496,11 +496,6 @@ def _encode_path(path: Path, depth: int = 0) -> dict[str, Any]:
 
 def encode_value(value: Any, depth: int = 0) -> Any:
     """Encode one property value into its JSON-ready shape per the contract."""
-    # Arrow→pandas struct decoding hands back numpy scalars/arrays; normalize
-    # to Python natives so the type dispatch below stays exact
-    mod = type(value).__module__
-    if mod == "numpy":
-        value = value.tolist() if hasattr(value, "tolist") else value.item()
     # reference SerializationDepth.exceedsLimit (Core/Types.fs:51) is
     # `d >= limit`: a value nested exactly MAX_NESTED_DEPTH deep already
     # serializes as the depth marker

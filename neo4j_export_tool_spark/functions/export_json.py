@@ -25,7 +25,7 @@ Each property bag takes one of two routes, decided here once
   as the contract's ``string_too_large`` marker, and the upper-hex escapes
   are lower-cased in place (`contract_escapes`, the one home of that rule;
   the sink's record heads and the content hash's JVM lane use it too);
-- every other bag runs one Arrow-vectorized pandas UDF (`python_bag_col`):
+- every other bag runs one Arrow UDF (`python_bag_col`):
   temporal, decimal and binary fields cross as Arrow values, the rest as
   the ``to_json`` text of their struct, and one Python encoder writes the
   bytes — the §1.3 contract for the export, the kernel's
@@ -38,13 +38,10 @@ import json
 from collections.abc import Callable
 from typing import Any
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from neo4j_export_tool_spark.functions.encoding import (
     ELLIPSIS,
@@ -135,51 +132,62 @@ def _holds_arrow_type(t: T.DataType) -> bool:
     return False
 
 
-def _nat_to_none(v: Any) -> Any:
-    """``v`` with every ``pd.NaT`` in it made ``None``: Arrow hands a null
-    timestamp over as ``NaT``, a ``datetime`` subclass, at the top level
-    and inside (nested) arrays, which come as object arrays and become
-    lists here.  Inside a struct or map a null is already ``None``."""
-    if v is pd.NaT:
-        return None
-    if isinstance(v, np.ndarray) and v.dtype == object:
-        return [_nat_to_none(x) for x in v]
-    return v
+def _from_arrow(t: T.DataType) -> Callable[[Any], Any]:
+    """Arrow's ``to_pylist`` value of a non-null Spark ``t`` → the form the
+    encoders take: a map (a list of key/value pairs) becomes a dict, and a
+    ``TimestampType`` value, which Arrow tags with the session time zone,
+    becomes naive session time.  A null stays ``None`` at any depth."""
+    if isinstance(t, T.TimestampType):
+        return lambda v: v.replace(tzinfo=None)
+    if isinstance(t, T.ArrayType):
+        el = _from_arrow(t.elementType)
+        return lambda v: [None if x is None else el(x) for x in v]
+    if isinstance(t, T.MapType):
+        key, val = _from_arrow(t.keyType), _from_arrow(t.valueType)
+        return lambda v: {key(k): None if x is None else val(x) for k, x in v}
+    if isinstance(t, T.StructType):
+        fs = [(f.name, _from_arrow(f.dataType)) for f in t.fields]
+        return lambda v: {n: None if v[n] is None else f(v[n]) for n, f in fs}
+    return lambda v: v
 
 
 def python_bag_col(
     bag: Column, dtype: T.StructType, encode: Callable[[dict[str, Any]], str]
 ) -> Column:
     """``encode(props)`` of each row of the struct column ``bag`` (schema
-    ``dtype``), through one Arrow-vectorized pandas UDF: the lane of every
-    bag that `bag_is_export_fast` rejects, for the export
+    ``dtype``), through one Arrow UDF: the lane of every bag that
+    `bag_is_export_fast` rejects, for the export
     (``dumps(encode_properties(...))``) and the content hash
     (``canonical_properties``) alike.
 
     A field whose type holds a timestamp, date, decimal or binary crosses
-    as its Arrow value; every other field crosses inside the ``to_json``
-    text of one struct of those fields, so ints stay exact, a null stays
-    absent and floats parse back from Jackson's shortest form.  ``props``
+    as its Arrow value, read with ``to_pylist`` and `_from_arrow`; every
+    other field crosses inside the ``to_json`` text of one struct of those
+    fields, so ints stay exact, a null stays absent and floats parse back
+    from Jackson's shortest form.  ``props``
     holds the non-null fields of both, in schema field order."""
     order = [f.name for f in dtype.fields]
     typed = [f.name for f in dtype.fields if _holds_arrow_type(f.dataType)]
     rest = [n for n in order if n not in typed]
+    convert = [_from_arrow(dtype[n].dataType) for n in typed]
     js = F.to_json(F.struct(*[bag[n].alias(n) for n in rest]))
     # positional names: a field may be called anything, "_json" included
     arg = F.struct(
         js.alias("_0"), *[bag[n].alias(f"_{i}") for i, n in enumerate(typed, 1)]
     )
 
-    def run(cols: pd.DataFrame) -> pd.Series:
+    def run(cols: pa.Array) -> pa.Array:
+        fields = [cols.field(i).to_pylist() for i in range(cols.type.num_fields)]
         out = []
-        for text, *vals in cols.itertuples(index=False, name=None):
+        for text, *vals in zip(*fields):
             got = json.loads(text)
-            vals = [_nat_to_none(v) for v in vals]
-            got.update((k, v) for k, v in zip(typed, vals) if v is not None)
+            got.update(
+                (k, f(v)) for k, f, v in zip(typed, convert, vals) if v is not None
+            )
             out.append(encode({k: got[k] for k in order if k in got}))
-        return pd.Series(out, dtype=object)
+        return pa.array(out, pa.string())
 
-    return pandas_udf(run, StringType())(arg)
+    return F.arrow_udf(run, T.StringType())(arg)
 
 
 def _export_encode(props: dict[str, Any]) -> str:

@@ -19,7 +19,7 @@ Jackson's upper-hex control escapes are lower-cased
 (`functions.export_json.contract_escapes`).  The empty bag canonicalizes
 to ``''`` (reference ``Neo4jExportToolId.fs:102-104``), patched with one
 ``when``.  Every other bag runs the kernel's `canonical_properties` in the
-export's pandas-UDF lane (`functions.export_json.python_bag_col`).  The
+export's Arrow-UDF lane (`functions.export_json.python_bag_col`).  The
 hash itself is whole-stage-codegen'd ``sha2`` in both routes.
 """
 
@@ -178,7 +178,7 @@ def nodes_union(*node_dfs: DataFrame) -> DataFrame:
     carried as pre-serialized JSON (SURVEY.md §1.2) once classes mix:
     (element_id, labels, properties_json, canonical_props, content_hash).
     ``properties_json`` is contract-final bytes (simple bags JVM-side for
-    every row; one pandas UDF only for non-simple bags), so the JSONL sink
+    every row; one Arrow UDF only for non-simple bags), so the JSONL sink
     can splice it into record lines without touching Python.
     """
     projected = [

@@ -37,10 +37,11 @@ color diameter, outer rounds by the SCC condensation's chain
 structure; both carry RAISING ceilings (`max_label_rounds`,
 `max_outer_rounds`) — explicit cost ceilings, never silent
 truncation.  The trim's rounds are a radius: running out of them is
-not an error, coloring handles the rest.  Per outer round, the
-measured node count sets the `broadcast_if_small` tier of every
-node-sized loop table (the trim's in/out node sets, colors, inbound
-mins, the removal sets, the backward frontier): behind
+not an error, coloring handles the rest.  The node count, measured
+once per call in one job with the edge count (nodes only shrink),
+sets the `broadcast_if_small` tier of every node-sized loop table (the
+trim's in/out node sets, colors, inbound mins, the removal sets, the
+backward frontier): behind
 localCheckpoint barriers the planner has no size statistics and would
 sort-merge-join even a 500-node graph.  Worst case (one long path) is
 O(diameter) rounds — the known cost of label-propagation SCC; for that
@@ -79,10 +80,11 @@ def strongly_connected_components(
     always in its own SCC).  Raises RuntimeError if a fixpoint is still
     moving at its ceiling.
 
-    The call is eager on every input: each outer round's node count
-    (which sets the broadcast tier), the trim's per-round counts, the
-    coloring's per-round checkpoints and the sweep's ``isEmpty`` checks
-    are Spark jobs that run before it returns.
+    The call is eager on every input: one opening count of nodes and
+    edges (the node count sets the broadcast tier), the trim's per-round
+    counts (a count of 0 ends the call), the coloring's per-round
+    checkpoints and the sweep's ``isEmpty`` checks are Spark jobs that
+    run before it returns.
     """
     e = (
         edges.select(
@@ -104,30 +106,34 @@ def strongly_connected_components(
     spark = edges.sparkSession
     assigned = spark.createDataFrame([], "node string, scc_id string")
 
+    # one job counts both tables: nodes only shrink, so this node count
+    # decides the broadcast tier of every outer round; the edge count
+    # seeds the first trim
+    n_nodes, n_edges = (
+        nodes.select(F.lit(True).alias("is_node"))
+        .unionByName(e.select(F.lit(False).alias("is_node")))
+        .agg(F.count_if("is_node"), F.count_if(~F.col("is_node")))
+        .first()
+    )
+    _bn = broadcast_if_small(n_nodes)
+
+    def trimmed(e: DataFrame) -> DataFrame:
+        has_in = e.select(F.col("dst").alias("src")).distinct()
+        has_out = e.select(F.col("src").alias("dst")).distinct()
+        return e.join(_bn(has_in), "src", "left_semi").join(
+            _bn(has_out), "dst", "left_semi"
+        )
+
     for _ in range(max_outer_rounds):
-        # count (not isEmpty): on the materialized checkpoint both are
-        # one cheap job, and the measured node count decides the
-        # broadcast tier for this outer round
-        n_nodes = nodes.count()
-        _bn = broadcast_if_small(n_nodes)
-        if n_nodes == 0:
-            return assigned
-
-        def trimmed(e: DataFrame) -> DataFrame:
-            has_in = e.select(F.col("dst").alias("src")).distinct()
-            has_out = e.select(F.col("src").alias("dst")).distinct()
-            return e.join(_bn(has_in), "src", "left_semi").join(
-                _bn(has_out), "dst", "left_semi"
-            )
-
         # 0. TRIM: an edge out of a node with no in-edge, or into a node
         # with no out-edge, lies on no cycle; peel such edges to the
         # fixpoint (out of rounds, coloring handles what remains).  A
         # node left on no edge colors itself and is its own sweep root,
         # a singleton SCC.  This removes entire DAG portions cheaply;
         # without it a plain 40-node path would need 40 outer rounds
-        # (one root SCC each).
-        e, n_edges = _peel(e, trimmed, max_label_rounds, None)
+        # (one root SCC each).  No surviving edge leaves only singletons,
+        # which also ends the call on an empty remainder.
+        e, n_edges = _peel(e, trimmed, max_label_rounds, None, n_edges)
         if n_edges == 0:
             return assigned.unionByName(
                 nodes.select("node", F.col("node").alias("scc_id"))
@@ -199,6 +205,7 @@ def strongly_connected_components(
             _bn(found.select(F.col("node").alias("dst"))),
             "dst", "left_anti",
         ).localCheckpoint(eager=False)
+        n_edges = None  # the next trim opens with a count of its own
     if not nodes.isEmpty():
         raise RuntimeError(
             f"SCC still has unassigned nodes after "

@@ -5,6 +5,10 @@ are the ones that also matter on a real multi-executor cluster at 100 TB:
 AQE (runtime re-planning, skew-join splitting, partition coalescing), Arrow
 for every pandas-UDF boundary, and a shuffle-partition count sized to the
 parallelism at hand rather than the 200 default.
+
+The session needs nothing beyond Spark's own classpath: zstd exports and
+imports run through the stock codecs (`sources/zstd_codec.py`), so a
+session built here and one a caller built elsewhere behave the same.
 """
 
 from __future__ import annotations
@@ -108,15 +112,6 @@ def get_spark(
             ),
         )
     )
-    # executor-parallel zstd: attach the on-demand-compiled Hadoop codec jar
-    # (sources/zstd_codec.py) so write tasks can emit .zst text parts; must
-    # be on spark.jars BEFORE the JVM starts — the driver-side codec
-    # resolver ignores runtime addJar.  Harmless no-op when unavailable.
-    from neo4j_export_tool_spark.sources.zstd_codec import codec_jar
-
-    _codec_jar = codec_jar()
-    if _codec_jar and "spark.jars" not in (extra_conf or {}):
-        builder = builder.config("spark.jars", _codec_jar)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     # local-mode python workers read PYTHONPATH from the JVM's environment;

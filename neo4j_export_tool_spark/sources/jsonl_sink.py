@@ -44,6 +44,12 @@ The layout only decides how the written sections are finished:
   renamed to ``nodes/`` and ``relationships/`` beside a ``_metadata.json``;
   assembly into one file is a concat any object store can do server-side.
 
+Compression has one path per mode, on every session: the write tasks
+compress their parts (Hadoop's gzip codec, or parquet-hadoop's stock
+zstd-jni codec, see `sources/zstd_codec.py`), a single file's metadata
+line and tail are one gzip member or zstd frame each, and dir mode renames
+the zstd codec's ``.zstd`` parts to the export's ``.zst`` suffix.
+
 Record assembly has one path.  Every properties column is contract-final
 JSON before serialization: ``properties_json`` inputs carry it already (see
 ``functions.export_json``), and a typed ``properties`` struct is encoded by
@@ -86,6 +92,10 @@ from neo4j_export_tool_spark.functions.export_json import (
     contract_escapes,
     export_props_json_col,
 )
+from neo4j_export_tool_spark.sources.zstd_codec import WRITE_CODEC, zstd_frame
+
+# the text writer's ``compression`` option per sink mode
+_WRITE_CODECS = {"none": "none", "gzip": "gzip", "zstd": WRITE_CODEC}
 
 
 # ---------------------------------------------------------------------------
@@ -334,9 +344,9 @@ def build_metadata(
     # reference CompressionHints (Database/Metadata.fs:348-352) are HINTS
     # about what a consumer could compress with; when the sink itself
     # compresses, the hints describe the actual encoding.  The recommended
-    # value is always one the engine can produce (zstd via the JVM codec,
-    # gzip via Hadoop parts) — a reader following the hint gets the format
-    # it names.
+    # value is always one the engine can produce (zstd and gzip via
+    # Hadoop codecs in the write tasks) — a reader following the hint
+    # gets the format it names.
     if compression == "gzip":
         compression_hints = {
             "recommended": "gzip",
@@ -451,8 +461,6 @@ def _framed(spark, text: str, compression: str) -> bytes:
         return data
     if compression == "gzip":
         return gzip.compress(data)
-    from neo4j_export_tool_spark.sources.zstd_codec import zstd_frame
-
     return zstd_frame(spark, data)
 
 
@@ -487,22 +495,14 @@ def export_jsonl(
     practical choice at 100 TB.
 
     ``compression="zstd"``: the format the reference's CompressionHints
-    recommend (``Database/Metadata.fs:344-352``).  On sessions created by
-    ``get_spark`` the write tasks emit per-part ``.zst`` frames directly
-    (custom zstd-jni Hadoop codec, ``sources/zstd_codec.py``) — executor-
-    parallel compression, valid for both layouts since zstd frames
-    concatenate like gzip members (RFC 8878).  Externally created sessions
-    (no classpath jar) fall back to compressing the plain parts through a
-    pool of JVM streams on the driver; either way the bytes on disk are
-    identical-format multi-frame zstd.
+    recommend (``Database/Metadata.fs:344-352``).  On every session the
+    write tasks compress their parts with the stock zstd-jni Hadoop codec
+    (`zstd_codec.WRITE_CODEC`) — executor-parallel compression, valid for
+    both layouts since zstd frames concatenate like gzip members
+    (RFC 8878); dir mode names the parts ``.zst``.
     """
-    if compression not in ("none", "gzip", "zstd"):
+    if compression not in _WRITE_CODECS:
         raise ValueError(f"unsupported compression: {compression!r}")
-    use_zstd_codec = False
-    if compression == "zstd":
-        from neo4j_export_tool_spark.sources.zstd_codec import codec_loadable
-
-        use_zstd_codec = codec_loadable(nodes.sparkSession)
     t0 = time.perf_counter()
     export_id = export_id or str(uuid.uuid4())
     started = time.gmtime()
@@ -555,36 +555,16 @@ def export_jsonl(
             sort_path = "one_partition"
         else:
             sort_path = "range"
-        if compression == "gzip":
-            _wopt = {"compression": "gzip"}
-        elif use_zstd_codec:
-            # executor-parallel zstd: parts land as ready .zst frames
-            from neo4j_export_tool_spark.sources.zstd_codec import CODEC_CLASS
-
-            _wopt = {"compression": CODEC_CLASS}
-        else:
-            # zstd without the codec: plain parts, compressed after the
-            # write by a driver-side pool of JVM streams
-            _wopt = {}
-
         # one write job for every layout; a sort on (sec, line) already
         # satisfies the ordering partitionBy asks for, so the write adds no
         # sort of its own
         lines = table.select("sec", "line")
         if sort_lines:
             lines = _sorted_by(lines, sort_path == "one_partition", "sec", "line")
-        lines.write.partitionBy("sec").mode("overwrite").options(**_wopt).text(
-            sections_dir
-        )
+        lines.write.partitionBy("sec").mode("overwrite").option(
+            "compression", _WRITE_CODECS[compression]
+        ).text(sections_dir)
         sec_dirs = [os.path.join(sections_dir, f"sec={sec}") for sec in (0, 1)]
-        if compression == "zstd" and not use_zstd_codec:
-            # fallback lane: the plain parts become one .zst frame each via
-            # the driver's JVM-stream pool — the format the codec writes
-            from neo4j_export_tool_spark.sources.zstd_codec import (
-                parallel_compress_parts,
-            )
-
-            parallel_compress_parts(spark, [p for d in sec_dirs for p in _parts(d)])
 
         err_records = [
             {"type": "error", **e} for e in (errors or [])
@@ -654,6 +634,15 @@ def export_jsonl(
                     os.replace(src, dest)
                 else:
                     os.makedirs(dest, exist_ok=True)
+                if compression == "zstd":
+                    # the write codec names its parts (and their checksum
+                    # sidecars) .zstd; the export's suffix is .zst
+                    for part in os.listdir(dest):
+                        if part.endswith((".zstd", ".zstd.crc")):
+                            os.replace(
+                                os.path.join(dest, part),
+                                os.path.join(dest, part.replace(".zstd", ".zst")),
+                            )
                 files.append(dest)
             with open(meta_path, "w", encoding="utf-8") as f:
                 f.write(dumps(metadata) + "\n")

@@ -515,10 +515,10 @@ def test_typed_bag_int_column_with_nulls_stays_integral(spark):
 
 
 def test_null_timestamp_elements_match_python_kernel(spark):
-    """A null element of an ``array<timestamp_ntz>`` (nested arrays too)
-    crosses Arrow as ``pd.NaT``.  Through ``nodes_from`` → ``nodes_union``
-    the export writes it as the kernel's ``null`` and the content hash
-    hashes what ``node_content_hash`` hashes."""
+    """A null element of an ``array<timestamp_ntz>`` (nested arrays too):
+    through ``nodes_from`` → ``nodes_union`` the export writes it as the
+    kernel's ``null`` and the content hash hashes what
+    ``node_content_hash`` hashes."""
     import datetime as dt
 
     from neo4j_export_tool_spark.functions.canonical import node_content_hash
@@ -543,6 +543,34 @@ def test_null_timestamp_elements_match_python_kernel(spark):
     assert got.keys() == {"a", "b"}
     for eid, arr, nested in rows:
         bag = {"arr": arr, "nested": nested}
+        assert got[eid][0] == dumps(encode_properties(bag)), eid
+        assert got[eid][1] == node_content_hash(["N"], bag), eid
+
+
+def test_ragged_nested_timestamp_arrays_match_python_kernel(spark):
+    """Inner arrays of different lengths, and a null inner array, of an
+    ``array<array<timestamp_ntz>>``: the export writes the kernel's bytes
+    and the content hash hashes what ``node_content_hash`` hashes."""
+    import datetime as dt
+
+    from neo4j_export_tool_spark.functions.canonical import node_content_hash
+
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5, 120000)
+    rows = [("a", [[ts], [ts, ts]]), ("b", [[ts], None]), ("c", [None, []])]
+    df = spark.createDataFrame(
+        rows, "eid string, nested array<array<timestamp_ntz>>"
+    )
+    nodes = nodes_from(
+        df, labels=["N"], element_id=F.col("eid"),
+        props={"nested": F.col("nested")},
+    )
+    got = {
+        r["element_id"]: (r["properties_json"], r["content_hash"])
+        for r in nodes_union(nodes).collect()
+    }
+    assert got.keys() == {"a", "b", "c"}
+    for eid, nested in rows:
+        bag = {"nested": nested}
         assert got[eid][0] == dumps(encode_properties(bag)), eid
         assert got[eid][1] == node_content_hash(["N"], bag), eid
 

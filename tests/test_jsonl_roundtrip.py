@@ -172,119 +172,80 @@ def test_zst_scratch_reuse_and_invalidation(spark, sf_dir, tmp_path):
 
 
 def test_zstd_dir_mode_roundtrip(spark, sf_dir, tmp_path):
-    """Executor-parallel zstd (round-4): write tasks emit per-part .zst
-    frames through the custom zstd-jni Hadoop codec; the import reads them
-    back transparently.  The 100 TB compression path."""
-    import glob
+    """Executor-parallel zstd: the write tasks compress their parts through
+    the stock zstd-jni Hadoop codec, dir mode names them ``.zst``, and the
+    import decodes them in the read tasks.  The 100 TB compression path."""
     import os
 
-    from neo4j_export_tool_spark.sources.zstd_codec import codec_loadable
-
-    assert codec_loadable(spark), "get_spark session must carry the codec jar"
     nodes, hashed = documents_kg(spark, sf_dir)
     res = export_jsonl(
         nodes, with_properties_json(hashed), str(tmp_path), db_name="zs",
         compression="zstd", single_file=False, sort_lines=False,
     )
-    parts = glob.glob(os.path.join(str(tmp_path), "nodes", "part-*"))
-    assert parts and all(p.endswith(".zst") for p in parts), (
-        "write tasks must produce .zst parts directly"
-    )
+    for sec in ("nodes", "relationships"):
+        names = os.listdir(os.path.join(str(tmp_path), sec))
+        parts = [n for n in names if n.startswith("part-")]
+        assert parts and all(n.endswith(".zst") for n in parts), (
+            "write tasks must produce .zst parts directly"
+        )
+        assert not [n for n in names if ".zstd" in n]
     imp = read_jsonl_export(spark, res.path)
     assert imp.nodes.count() == res.node_count
     assert imp.edges.count() == res.rel_count
 
 
-def test_zstd_fallback_lane_roundtrip(spark, sf_dir, tmp_path, monkeypatch):
-    """Sessions without the codec jar (e.g. the driver harness's own
-    SparkSession) compress parts through the driver's JVM-stream pool and
-    import via scratch decompression — same multi-frame bytes on disk."""
+def _zstd_jni_frames(spark, src: str, dst: str) -> None:
+    """``src`` as two concatenated zstd-jni frames (split mid-file) in
+    ``dst``: the multi-frame parts earlier releases of the sink wrote."""
+    jvm = spark.sparkContext._jvm
+    data = open(src, "rb").read()
+    out = b""
+    for chunk in (data[: len(data) // 2], data[len(data) // 2 :]):
+        buf = jvm.java.io.ByteArrayOutputStream()
+        zos = jvm.com.github.luben.zstd.ZstdOutputStream(buf)
+        zos.write(bytearray(chunk))
+        zos.close()
+        out += bytes(buf.toByteArray())
+    with open(dst, "wb") as f:
+        f.write(out)
+
+
+def test_zstd_jni_frame_dir_export_imports_same_rows(spark, sf_dir, tmp_path):
+    """A dir export whose ``.zst`` parts are zstd-jni frames (the on-disk
+    format of earlier releases, written by their own codec) imports to the
+    same node and edge rows as the plain export of the same graph."""
     import glob
     import os
 
-    monkeypatch.setattr(
-        "neo4j_export_tool_spark.sources.zstd_codec.codec_loadable",
-        lambda _s: False,
-    )
     nodes, hashed = documents_kg(spark, sf_dir)
-    # dir mode
-    dir_out = str(tmp_path / "dir")
+    out = str(tmp_path / "frames")
     res = export_jsonl(
-        nodes, with_properties_json(hashed), dir_out, db_name="zs",
-        compression="zstd", single_file=False, sort_lines=False,
+        nodes, with_properties_json(hashed), out, db_name="fr",
+        single_file=False, sort_lines=False,
     )
-    parts = glob.glob(os.path.join(dir_out, "nodes", "part-*"))
-    assert parts and all(p.endswith(".zst") for p in parts)
+    plain = read_jsonl_export(spark, res.path)
+    want_nodes = sorted(plain.nodes.collect())
+    want_edges = sorted(plain.edges.collect())
+    for sec in ("nodes", "relationships"):
+        for part in glob.glob(os.path.join(out, sec, "part-*")):
+            _zstd_jni_frames(spark, part, part + ".zst")
+            os.remove(part)
+    assert glob.glob(os.path.join(out, "nodes", "part-*.zst"))
+
     imp = read_jsonl_export(spark, res.path)
-    assert imp.nodes.count() == res.node_count
-    assert imp.edges.count() == res.rel_count
-    # single file
-    sf_out = str(tmp_path / "single")
-    res2 = export_jsonl(
-        nodes, with_properties_json(hashed), sf_out, db_name="zs",
-        compression="zstd", sort_lines=False,
-    )
-    assert res2.path.endswith(".jsonl.zst")
-    imp2 = read_jsonl_export(spark, res2.path)
-    assert imp2.nodes.count() == res2.node_count
-    assert imp2.edges.count() == res2.rel_count
+    assert sorted(imp.nodes.collect()) == want_nodes
+    assert sorted(imp.edges.collect()) == want_edges
 
 
-def test_codec_finish_ends_frame(spark, tmp_path):
-    """CompressionOutputStream.finish() must end the zstd frame WITHOUT
-    closing the underlying stream (the Hadoop contract): a consumer that
-    calls finish() and then reads the file back gets complete data, and
-    later writes start a fresh frame that concatenates per RFC 8878."""
-    from neo4j_export_tool_spark.sources.zstd_codec import (
-        CODEC_CLASS,
-        codec_loadable,
-        decompress_file_jvm,
-    )
-
-    assert codec_loadable(spark)
-    jvm = spark.sparkContext._jvm
-    gw = spark.sparkContext._gateway
-    klass = (
-        jvm.Thread.currentThread().getContextClassLoader().loadClass(CODEC_CLASS)
-    )
-    codec = klass.getDeclaredConstructor(
-        gw.new_array(jvm.java.lang.Class, 0)
-    ).newInstance(gw.new_array(jvm.java.lang.Object, 0))
-
-    src = str(tmp_path / "f.zst")
-    fos = jvm.java.io.FileOutputStream(src)
-    out = codec.createOutputStream(fos)
-    first = b"hello frame one\n" * 100
-    out.write(first, 0, len(first))
-    out.finish()
-
-    # the frame is complete on disk before close(): read it back now
-    mid = str(tmp_path / "mid.txt")
-    decompress_file_jvm(spark, src, mid)
-    assert open(mid, "rb").read() == first
-
-    # the underlying stream is still open: writes continue in a new frame
-    second = b"frame two\n" * 50
-    out.write(second, 0, len(second))
-    out.close()
-    full = str(tmp_path / "full.txt")
-    decompress_file_jvm(spark, src, full)
-    assert open(full, "rb").read() == first + second
-
-
-def test_mixed_plain_and_zst_section_fallback(spark, sf_dir, tmp_path, monkeypatch):
-    """Codec-less import of a section mixing plain and .zst parts (an
-    external export could produce this) must surface the plain parts'
-    rows too — the scratch dir carries both kinds."""
+def test_mixed_plain_and_zst_section_fallback(spark, sf_dir, tmp_path):
+    """Import of a section mixing plain and .zst parts (an external export
+    could produce this) must surface the plain parts' rows too: the read
+    tasks decode the .zst parts and read the plain ones as they are."""
     import glob
     import os
 
     from neo4j_export_tool_spark.sources.zstd_codec import decompress_file_jvm
 
-    monkeypatch.setattr(
-        "neo4j_export_tool_spark.sources.zstd_codec.codec_loadable",
-        lambda _s: False,
-    )
     nodes, hashed = documents_kg(spark, sf_dir)
     dir_out = str(tmp_path / "mixed")
     res = export_jsonl(
@@ -303,18 +264,14 @@ def test_mixed_plain_and_zst_section_fallback(spark, sf_dir, tmp_path, monkeypat
     assert imp.edges.count() == res.rel_count
 
 
-def test_mixed_section_name_collision_raises(spark, sf_dir, tmp_path, monkeypatch):
-    """A plain part whose name equals a .zst part's decompressed name is
-    ambiguous — the codec-less import must refuse, not clobber."""
+def test_mixed_section_same_name_reads_both_parts(spark, sf_dir, tmp_path):
+    """A plain part named like a .zst part minus its suffix is a file of
+    its own: the import reads the rows of both."""
     import glob
     import os
 
     from neo4j_export_tool_spark.sources.zstd_codec import decompress_file_jvm
 
-    monkeypatch.setattr(
-        "neo4j_export_tool_spark.sources.zstd_codec.codec_loadable",
-        lambda _s: False,
-    )
     nodes, hashed = documents_kg(spark, sf_dir)
     dir_out = str(tmp_path / "clash")
     res = export_jsonl(
@@ -324,5 +281,9 @@ def test_mixed_section_name_collision_raises(spark, sf_dir, tmp_path, monkeypatc
     part = sorted(glob.glob(os.path.join(dir_out, "nodes", "part-*.zst")))[0]
     # plain sibling named exactly like the decompressed .zst part
     decompress_file_jvm(spark, part, part[: -len(".zst")])
-    with pytest.raises(Exception, match="same name"):
-        read_jsonl_export(spark, res.path)
+    extra_rows = sum(1 for _ in open(part[: -len(".zst")], "rb"))
+    assert extra_rows > 0
+
+    imp = read_jsonl_export(spark, res.path)
+    assert imp.nodes.count() == res.node_count + extra_rows
+    assert imp.edges.count() == res.rel_count
