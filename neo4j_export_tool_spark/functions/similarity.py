@@ -102,10 +102,6 @@ def simhash_col(toks: Column, bits: int = 32) -> Column:
     return F.aggregate(weighted, F.lit(0).cast("long"), lambda a, x: a + x)
 
 
-def hamming_dist_col(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def as_double_array(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
 

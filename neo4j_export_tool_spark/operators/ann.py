@@ -5,7 +5,9 @@
   ``row_number`` window for the top-k.  Linear per query; right answer.
 - ``hyperplane_lsh_pairs`` / ``ivf_topk`` — the scale paths: random-
   hyperplane sign buckets (cosine LSH) and a coarse-quantizer IVF,
-  probing only the nearest ``n_probe`` cells.
+  probing only the nearest ``n_probe`` cells.  The LSH pairs run on the
+  similarity-join steps of `operators.dedup`: `_candidate_pairs` over
+  the (table, bucket) postings, `_verified_pairs` for the exact cosine.
 - ``_lloyd`` — the one deterministic Lloyd k-means (Arrow-batched
   partial sums, sorted driver-side merge, no MLlib dep): IVF trains its
   coarse quantizer with one subspace, `operators/pq.py::train_pq` its
@@ -179,7 +181,11 @@ def hyperplane_lsh_pairs(
     ``aggregate`` falls back to interpreted eval, ~10× slower in joins).
     """
     from neo4j_export_tool_spark.functions.similarity import norm_sq_col
-    from neo4j_export_tool_spark.operators.dedup import _infer_dim
+    from neo4j_export_tool_spark.operators.dedup import (
+        _candidate_pairs,
+        _infer_dim,
+        _verified_pairs,
+    )
 
     dim = dim or _infer_dim(df, vec_col)
     if dim is None:  # empty / all-null input → empty result, not a crash
@@ -205,55 +211,32 @@ def hyperplane_lsh_pairs(
     # one (table, bucket) posting per row per table → ONE self-join on the
     # composite key instead of n_tables joins + union
     posting = sig.select(
-        "id",
+        F.col("id").alias("doc"),
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(t).alias("t"), F.col(f"bucket_{t}").alias("bk")
+                        F.lit(t).alias("band"), F.col(f"bucket_{t}").alias("key")
                     )
                     for t in range(n_tables)
                 ]
             )
         ).alias("tb"),
-    ).select("id", F.col("tb.t").alias("t"), F.col("tb.bk").alias("bk"))
-    a = posting.select(F.col("id").alias("id_a"), "t", "bk")
-    b = posting.select(F.col("id").alias("id_b"), "t", "bk")
-    cand = (
-        a.join(b, ["t", "bk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    ).select("doc", "tb.band", "tb.key")
+    cand = _candidate_pairs(posting, ["band", "key"]).withColumnsRenamed(
+        {"doc_a": "id_a", "doc_b": "id_b"}
     )
-    side = sig.select("id", "v", "nsq")
-    # NB: unlike the dedup verify, NEITHER side is forced broadcast here —
-    # full-table LSH candidate sets routinely exceed the vector table
-    # (bucket collisions scale with n²/buckets), so a forced pair-side
-    # broadcast would be a driver hazard at scale; the planner/AQE picks.
-    scored = (
-        cand.join(
-            side.withColumnsRenamed({"id": "id_a", "v": "v_a", "nsq": "nsq_a"}),
-            "id_a",
-        )
-        .join(
-            side.withColumnsRenamed({"id": "id_b", "v": "v_b", "nsq": "nsq_b"}),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
+    return _verified_pairs(
+        cand,
+        sig.select("id", "v", "nsq"),
+        "id",
+        [
             (
                 dot_col(F.col("v_a"), F.col("v_b"), dim)
                 / F.sqrt(F.col("nsq_a") * F.col("nsq_b"))
-            ).alias("cosine"),
-        )
-        # materialization barrier: the threshold filter would otherwise
-        # collapse into the join condition and re-evaluate the unrolled
-        # 64-term dot per candidate (the dedup-verify F2.3 shape)
-        .localCheckpoint(eager=False)
-    )
-    return scored.filter(F.col("cosine") >= min_cosine).select(
-        "id_a", "id_b", "cosine"
+            ).alias("cosine")
+        ],
+        F.col("cosine") >= min_cosine,
     )
 
 

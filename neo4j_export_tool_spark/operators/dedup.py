@@ -13,14 +13,20 @@ Five tiers, all DataFrame-native:
                           share a band bucket.  ``minhash_lsh_pairs_from_sets``
                           is the same path over a precomputed shingle-set
                           table (char shingles in canonicalization).
-- ``simhash_fingerprints`` / ``simhash_pairs`` — 32-bit SimHash + banded
-                          Hamming-distance candidate join.
+- ``simhash_fingerprints`` — 32-bit SimHash fingerprints.
 - ``embedding_neardup_pairs`` — exact cosine near-duplicates over an
                           embedding column (blocked GEMM filter + exact
                           re-verify; the ANN module provides the bucketed
                           scale path).
 
 ``duplicated_ngram_spans`` adds substring-level (word n-gram span) dedup.
+
+The similarity joins share two steps (the candidate-then-verify pattern of
+the set-similarity-join literature): `_candidate_pairs`, the one posting
+self-join (the prefix join, MinHash's band buckets and
+`operators.ann.hyperplane_lsh_pairs`'s sign buckets), and
+`_verified_pairs`, the one exact verify join (the Jaccard verify here and
+the hyperplane cosine verify).
 
 Thresholds are evaluated in INTEGER arithmetic (``100*shared >=
 t*(na+nb-shared)``) so results are bit-stable across engines.
@@ -38,11 +44,10 @@ candidate pairs while carrying almost no signal).  LSH bands shuffle on
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.similarity import (
-    hamming_dist_col,
     simhash_col,
     tokens_col,
     word_shingles_col,
@@ -84,44 +89,82 @@ def _shingle_sets(
     )
 
 
+def _candidate_pairs(
+    posting: DataFrame, keys: list[str], extra: Column | None = None
+) -> DataFrame:
+    """The posting self-join of every similarity join: the ``distinct``
+    (doc_a, doc_b) pairs, doc_a < doc_b, of ``posting(doc, *keys, …)``
+    rows that agree on ``keys`` and satisfy ``extra``, a condition written
+    over the join sides ``a`` and ``b`` (``F.col("a.n")``)."""
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col("a.doc") < F.col("b.doc"))
+    if extra is not None:
+        on.append(extra)
+    return (
+        posting.alias("a")
+        .join(posting.alias("b"), on)
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _verified_pairs(
+    pairs: DataFrame,
+    side: DataFrame,
+    key: str,
+    scores: list[Column],
+    keep: Column,
+) -> DataFrame:
+    """The exact verify join of every similarity join: ``pairs``
+    (``key``_a, ``key``_b) joined to the per-id ``side`` table on both
+    ends, whose columns arrive suffixed ``_a`` / ``_b``; projected to the
+    pair and ``scores``; kept where ``keep`` holds.
+
+    No side is FORCED broadcast: candidate volume is workload-dependent
+    (LSH bucket collisions scale superlinearly on self-similar corpora and
+    with n²/buckets on full tables), so an unconditional pair-side
+    broadcast would be a driver hazard at scale, while the side table
+    carries size statistics through its materialization — the planner
+    broadcasts it only while it actually fits and falls back to shuffle
+    joins beyond that.
+
+    The scores are materialized (lazy localCheckpoint) before ``keep``:
+    without the barrier Catalyst collapses the threshold filter into the
+    join condition and evaluates the scores there as well as in the
+    project — the Jaccard array_intersect three times per pair (which
+    tripled the verify stage at 3×10⁵ candidates), the unrolled cosine
+    dot twice.  The materialized rows are a few scalars per pair."""
+    a, b = f"{key}_a", f"{key}_b"
+
+    def end(suffix: str) -> DataFrame:
+        return side.withColumnsRenamed({c: c + suffix for c in side.columns})
+
+    scored = (
+        pairs.join(end("_a"), a)
+        .join(end("_b"), b)
+        .select(a, b, *scores)
+        .localCheckpoint(eager=False)
+    )
+    return scored.filter(keep)
+
+
 def _verify_candidate_pairs(
     candidates: DataFrame, sets: DataFrame, threshold_pct: int
 ) -> DataFrame:
     """Exact-Jaccard verify of a candidate-pair table against the shingle
-    sets: (doc_a, doc_b, shared, n_a, n_b) at the integer threshold.
-
-    No side is FORCED broadcast: candidate volume is workload-dependent
-    (LSH band collisions scale superlinearly on self-similar corpora), so
-    an unconditional pair-side broadcast would be a driver hazard at
-    scale, while the shingle-set side carries size statistics through its
-    materialization — the planner broadcasts it only while it actually
-    fits and falls back to shuffle joins beyond that, which is the
-    correct shape on both ends."""
-    sh = sets.select("doc", "shingles")
-    half = candidates.join(
-        sh.withColumnsRenamed({"doc": "doc_a", "shingles": "sh_a"}), "doc_a"
-    )
-    scored = (
-        half
-        .join(sh.withColumnsRenamed({"doc": "doc_b", "shingles": "sh_b"}), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
+    sets: (doc_a, doc_b, shared, n_a, n_b) at the integer threshold."""
+    return _verified_pairs(
+        candidates,
+        sets.select("doc", F.col("shingles").alias("sh")),
+        "doc",
+        [
             F.size(F.array_intersect("sh_a", "sh_b")).alias("shared"),
             F.size("sh_a").alias("n_a"),
             F.size("sh_b").alias("n_b"),
-        )
-        # materialization barrier: without it Catalyst collapses the
-        # threshold filter into the join condition and evaluates the
-        # array_intersect per pair THREE times (twice in the condition,
-        # once in the project) — at 3×10⁵ candidates that tripled the
-        # verify stage.  The materialized rows are five scalars per pair.
-    )
-    scored = scored.localCheckpoint(eager=False)
-    return scored.filter(
+        ],
         100 * F.col("shared")
-        >= threshold_pct * (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    ).select("doc_a", "doc_b", "shared", "n_a", "n_b")
+        >= threshold_pct * (F.col("n_a") + F.col("n_b") - F.col("shared")),
+    )
 
 
 def jaccard_pairs(
@@ -131,7 +174,6 @@ def jaccard_pairs(
     threshold_pct: int = 60,
     shingle_n: int = 3,
     max_shingle_df: int | None = None,
-    max_shingle_df_frac: float | None = None,
 ) -> DataFrame:
     """Exact n-gram-shingle Jaccard pairs: (doc_a, doc_b, shared, n_a, n_b)
     with 100*shared >= threshold_pct*(n_a+n_b-shared).  Integer-exact.
@@ -159,13 +201,6 @@ def jaccard_pairs(
     from its (bounded) sorted doc list.  Pruning only shrinks ``shared``
     counts (sizes stay exact), so surviving pairs are a SUBSET of the
     exact join: boilerplate-only pairs are dropped by design.
-    ``max_shingle_df_frac`` is the SCALE-SAFE form: the cap as a fraction
-    of the corpus document count (resolved as ``max(2, floor(frac·N))``,
-    N = one count over the INPUT ``df`` — including docs too short to
-    yield a shingle, as "fraction of the corpus" promises).  An
-    absolute cap of 20 is always wrong at 10^12 docs — "appears in >0.1%
-    of documents" is the boilerplate definition that survives a 100×
-    scale-up.  Mutually exclusive with ``max_shingle_df``.
 
     Why the capped form is not the prefix join over a df-filtered
     posting table (unpruned set sizes): that variant gives the same
@@ -179,15 +214,6 @@ def jaccard_pairs(
     re-tokenizing the corpus per branch (~5 evaluations otherwise); the
     blocks free themselves when the plan is garbage-collected.
     """
-    if max_shingle_df is not None and max_shingle_df_frac is not None:
-        raise ValueError(
-            "pass max_shingle_df (absolute) or max_shingle_df_frac "
-            "(fraction of corpus), not both"
-        )
-    if max_shingle_df_frac is not None:
-        # N = input corpus count (docstring contract), not the set-table
-        # count, which silently excludes docs shorter than shingle_n
-        max_shingle_df = max(2, int(max_shingle_df_frac * df.count()))
     sets = _shingle_sets(df, text_col, id_col, shingle_n).localCheckpoint(eager=False)
     sizes = sets.select("doc", F.size("shingles").alias("n"))
     posting = sets.select("doc", F.explode("shingles").alias("shingle"))
@@ -261,8 +287,6 @@ def jaccard_pairs(
         .select("doc", "shingle", "n", "rk")
         .localCheckpoint(eager=False)
     )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
     # Length + positional filters (the rest of the PPJoin toolkit), both
     # provably recall-free at the threshold t = threshold_pct/100:
     # J ≥ t forces shared ≥ t·max(n_a, n_b) (since shared ≤ min side),
@@ -276,31 +300,26 @@ def jaccard_pairs(
     # keeps the w-collision of every true pair, so candidates remain a
     # superset of the answer; measured: they cut the candidate volume
     # ~3× on the driver corpus before the expensive exact verify.
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc") < F.col("b.doc"))
-            # length filter: 100·min ≥ t·max
-            & (
-                100 * F.least(F.col("a.n"), F.col("b.n"))
-                >= threshold_pct * F.greatest(F.col("a.n"), F.col("b.n"))
-            )
-            # positional filter: ubound ≥ ceil(t(n_a+n_b)/(100+t))
-            & (
-                (100 + threshold_pct)
-                * (
-                    F.least(
-                        F.col("a.n") - F.col("a.rk"),
-                        F.col("b.n") - F.col("b.rk"),
-                    )
-                    + 1
-                )
-                >= threshold_pct * (F.col("a.n") + F.col("b.n"))
-            ),
+    candidates = _candidate_pairs(
+        prefix,
+        ["shingle"],
+        # length filter: 100·min ≥ t·max
+        (
+            100 * F.least(F.col("a.n"), F.col("b.n"))
+            >= threshold_pct * F.greatest(F.col("a.n"), F.col("b.n"))
         )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
+        # positional filter: ubound ≥ ceil(t(n_a+n_b)/(100+t))
+        & (
+            (100 + threshold_pct)
+            * (
+                F.least(
+                    F.col("a.n") - F.col("a.rk"),
+                    F.col("b.n") - F.col("b.rk"),
+                )
+                + 1
+            )
+            >= threshold_pct * (F.col("a.n") + F.col("b.n"))
+        ),
     )
     return _verify_candidate_pairs(candidates, sets, threshold_pct)
 
@@ -314,7 +333,6 @@ def minhash_lsh_pairs(
     k: int = 64,
     bands: int = 32,
     seed: int = 1,
-    max_bucket_size: int | None = None,
     max_bucket_frac: float | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs over word shingles, exact-verified.
@@ -324,23 +342,17 @@ def minhash_lsh_pairs(
     output equals `jaccard_pairs` at the same threshold while candidate
     generation stays near-linear.
 
-    ``max_bucket_size`` caps hot band buckets (see
-    `minhash_lsh_pairs_from_sets`).  ``max_bucket_frac`` is its SCALE-SAFE
-    form: the cap as a fraction of the corpus document count
-    (``max(2, floor(frac·N))``, N = one count over the INPUT ``df``) — an
-    absolute bucket cap is always wrong at 10^12 docs, a "no bucket may
-    hold >0.1% of the corpus" rule is not.  Mutually exclusive with
-    ``max_bucket_size``.
+    ``max_bucket_frac`` caps hot band buckets (see
+    `minhash_lsh_pairs_from_sets`) as a fraction of the corpus document
+    count: ``max_bucket_size = max(2, floor(frac·N))``, N = one count over
+    the INPUT ``df`` — an absolute bucket cap is always wrong at 10^12
+    docs, a "no bucket may hold >0.1% of the corpus" rule is not.
     """
+    max_bucket_size = None
     if max_bucket_frac is not None:
         # resolve the fraction against the INPUT corpus count here, where
         # df is in scope — the set table excludes docs shorter than
         # shingle_n, so its count under-states N on short-doc corpora
-        if max_bucket_size is not None:
-            raise ValueError(
-                "pass max_bucket_size (absolute) or max_bucket_frac "
-                "(fraction of corpus), not both"
-            )
         max_bucket_size = max(2, int(max_bucket_frac * df.count()))
     sets = _shingle_sets(df, text_col, id_col, shingle_n)
     return minhash_lsh_pairs_from_sets(
@@ -387,8 +399,8 @@ def minhash_lsh_pairs_from_sets(
     still surface through any of the other ``bands-1`` bands, so the
     recall loss is bounded by the probability that EVERY band of a pair
     lands hot — small unless the corpus is pathologically self-similar.
-    The fractional form lives on `minhash_lsh_pairs`, which sees the
-    input corpus count."""
+    `minhash_lsh_pairs` resolves its fractional cap to this value against
+    the input corpus count."""
     from neo4j_export_tool_spark.functions.similarity import (
         MERSENNE_PRIME,
         _lcg,
@@ -462,21 +474,10 @@ def minhash_lsh_pairs_from_sets(
         )
         banded = banded.join(small, ["band", "key"], "left_semi")
 
-    a = banded.alias("a")
-    b = banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
+    # exact verification on the candidate set only
+    return _verify_candidate_pairs(
+        _candidate_pairs(banded, ["band", "key"]), sets, threshold_pct
     )
-
-    # exact verification on the candidate set only (pair side = build side)
-    return _verify_candidate_pairs(candidates, sets, threshold_pct)
 
 
 def simhash_fingerprints(
@@ -486,60 +487,6 @@ def simhash_fingerprints(
     return df.select(
         F.col(id_col).alias("doc"),
         simhash_col(tokens_col(F.col(text_col)), bits=bits).alias("simhash"),
-    )
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    bits: int = 32,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
-
-    Candidate generation: split the fingerprint into ``bands`` bit-blocks;
-    by pigeonhole any pair within ``max_hamming < bands`` shares at least one
-    exact block → equi-join per block, then verify the true distance.
-    """
-    fps = simhash_fingerprints(df, text_col, id_col, bits=bits)
-    block_bits = bits // bands
-    mask = (1 << block_bits) - 1
-    blocks = fps.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), i * block_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-    a = blocks.alias("a")
-    b = blocks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            hamming_dist_col(F.col("a.simhash"), F.col("b.simhash")).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -559,7 +506,6 @@ def embedding_neardup_pairs(
     vec_col: str,
     id_col: str,
     min_cosine: float = 0.95,
-    dim: int | None = None,
     rows_per_block: int = 4096,
 ) -> DataFrame:
     """Exact cosine near-dup pairs over ALL vector pairs:
@@ -570,21 +516,26 @@ def embedding_neardup_pairs(
     (BLAS — orders of magnitude faster than per-pair expressions) as a
     PREFILTER with an epsilon-widened threshold, then the few surviving
     candidates recompute the cosine with sequential left-associated
-    double accumulation over the first ``dim`` components — bit-identical
+    double accumulation over the first ``dim`` components (``dim`` = the
+    length of the first non-null vector) — bit-identical
     to DuckDB's ``list_dot_product`` formula, so the output is EXACT, not
     approximate.  Null vectors and vectors shorter than ``dim`` have no
     cosine and pair with nothing.  Still O(n²) flops by definition of the
     exact baseline (the scale path is `operators.ann.hyperplane_lsh_pairs`),
     but the quadratic part runs at GEMM speed and distributes as B(B+1)/2
-    independent block tasks.
+    independent block tasks.  Empty or all-null input yields no pairs.
     """
     import math
 
     import numpy as np
     import pandas as pd
 
-    dim = dim or _infer_dim(df, vec_col)
     id_type = next(f.dataType.simpleString() for f in df.schema if f.name == id_col)
+    dim = _infer_dim(df, vec_col)
+    if dim is None:
+        return df.sparkSession.createDataFrame(
+            [], f"id_a {id_type}, id_b {id_type}, cosine double"
+        )
     n = df.count()
     n_blocks = max(1, math.ceil(n / rows_per_block))
     base = df.select(
@@ -695,8 +646,6 @@ def duplicated_ngram_spans(
     id_col: str,
     n: int = 20,
     min_docs: int = 2,
-    max_gram_df: int | None = None,
-    max_gram_df_frac: float | None = None,
 ) -> DataFrame:
     """Exact substring-level dedup: every position of every word n-gram
     that occurs in ≥ ``min_docs`` DISTINCT documents →
@@ -710,24 +659,12 @@ def duplicated_ngram_spans(
     (split → slice windows → posexplode, no Python); the hot-gram table
     is one groupBy (count distinct docs) and the span fan-back a
     broadcast-friendly semi-join on the gram key.  Output is linear in
-    the corpus (every row is an actual position).  ``max_gram_df`` /
-    ``max_gram_df_frac`` (mutually exclusive; same contract as the
-    jaccard/minhash caps) additionally DROP grams above a document
-    frequency — boilerplate so common it is better handled by a
-    boilerplate filter than by span surgery; at 10^12 docs use the
-    fractional form.
+    the corpus (every row is an actual position).
     """
-    if max_gram_df is not None and max_gram_df_frac is not None:
-        raise ValueError(
-            "pass max_gram_df (absolute) or max_gram_df_frac "
-            "(fraction of corpus), not both"
-        )
     toks = df.select(
         F.col(id_col).alias("doc"),
         F.split(F.col(text_col), " ").alias("t"),
     )
-    if max_gram_df_frac is not None:
-        max_gram_df = max(min_docs, int(max_gram_df_frac * toks.count()))
     grams = (
         toks.filter(F.size("t") >= n)
         .select(
@@ -744,7 +681,5 @@ def duplicated_ngram_spans(
         F.count_distinct("doc").alias("n_docs")
     )
     hot = df_counts.filter(F.col("n_docs") >= min_docs)
-    if max_gram_df is not None:
-        hot = hot.filter(F.col("n_docs") <= max_gram_df)
     out = grams.join(hot.select("gram"), "gram", "left_semi")
     return out.select("doc", "pos", "gram")

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from neo4j_export_tool_spark.functions.export_json import contract_escapes
 from neo4j_export_tool_spark.sources.synth import PAGES_DDL
 
 
@@ -65,28 +66,28 @@ def incremental_kg_stream(
     Each emitted line is a MENTIONS relationship record (reference record
     shape minus the batch-computed content hashes, which require the full
     node dimension — the batch pipeline backfills those; this stream is
-    the low-latency leg)."""
+    the low-latency leg).  Lines carry the contract's lower-case control
+    escapes (`functions.export_json.contract_escapes`)."""
     edges = streaming_mention_edges(stream_pages(spark, source_dir), gazetteer)
-    lines = edges.select(
-        F.to_json(
-            F.struct(
-                F.lit("relationship").alias("type"),
-                F.sha2(
-                    F.concat_ws(
-                        ":", F.lit("rel:MENTIONS"), "url", "concept",
-                        F.col("char_start").cast("string"),
-                    ),
-                    256,
-                ).alias("element_id"),
-                F.lit("MENTIONS").alias("label"),
-                F.concat(F.lit("page:"), F.col("url")).alias("start_element_id"),
-                F.concat(F.lit("concept:"), F.col("concept")).alias(
-                    "end_element_id"
+    head = F.to_json(
+        F.struct(
+            F.lit("relationship").alias("type"),
+            F.sha2(
+                F.concat_ws(
+                    ":", F.lit("rel:MENTIONS"), "url", "concept",
+                    F.col("char_start").cast("string"),
                 ),
-                F.col("char_start"),
-            )
-        ).alias("value")
+                256,
+            ).alias("element_id"),
+            F.lit("MENTIONS").alias("label"),
+            F.concat(F.lit("page:"), F.col("url")).alias("start_element_id"),
+            F.concat(F.lit("concept:"), F.col("concept")).alias(
+                "end_element_id"
+            ),
+            F.col("char_start"),
+        )
     )
+    lines = edges.select(contract_escapes(head).alias("value"))
     return (
         lines.writeStream.format("text")
         .option("path", out_dir)

@@ -310,6 +310,7 @@ def test_ann_empty_and_null_inputs(spark):
         brute_force_topk,
         hyperplane_lsh_pairs,
     )
+    from neo4j_export_tool_spark.operators.dedup import embedding_neardup_pairs
     from neo4j_export_tool_spark.operators.linking import kb_trigram_idf
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
@@ -319,6 +320,13 @@ def test_ann_empty_and_null_inputs(spark):
         [(1, None), (2, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
     assert hyperplane_lsh_pairs(withnull, "embedding", "vec_id").count() == 0
+    allnull = spark.createDataFrame(
+        [(1, None), (2, None)], "vec_id long, embedding array<double>"
+    )
+    for df in (empty, allnull):
+        out = embedding_neardup_pairs(df, "embedding", "vec_id")
+        assert out.collect() == []
+        assert out.columns == ["id_a", "id_b", "cosine"]
 
     # null KB names carry no signal and must not crash the IDF job
     kb = spark.createDataFrame(

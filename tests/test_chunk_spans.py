@@ -33,30 +33,6 @@ def test_dup_ngram_spans_finds_planted_span(spark):
     assert all(len(v) >= 2 for v in by_gram.values())
 
 
-def test_dup_ngram_spans_df_caps(spark):
-    """max_gram_df drops boilerplate above the df ceiling; the fractional
-    form resolves to the same cap at matched N; both at once raises."""
-    boiler = "b1 b2 b3"
-    rows = [(i, f"u{i} {boiler}") for i in range(10)]  # gram in 10 docs
-    rows += [(100, "x1 x2 x3 y"), (101, "x1 x2 x3 z")]  # gram in 2 docs
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = duplicated_ngram_spans(df, "text", "doc_id", n=3)
-    assert any(r["gram"] == boiler for r in uncapped.collect())
-    capped = duplicated_ngram_spans(df, "text", "doc_id", n=3, max_gram_df=5)
-    got = [r["gram"] for r in capped.collect()]
-    assert boiler not in got and "x1 x2 x3" in got
-    frac = duplicated_ngram_spans(
-        df, "text", "doc_id", n=3, max_gram_df_frac=5.5 / 12
-    )
-    assert sorted(map(tuple, frac.collect())) == sorted(
-        map(tuple, capped.collect())
-    )
-    with pytest.raises(ValueError):
-        duplicated_ngram_spans(
-            df, "text", "doc_id", max_gram_df=5, max_gram_df_frac=0.5
-        ).collect()
-
-
 def test_chunking_layout_and_ids(spark):
     """Window layout: stride = chunk-overlap, last chunk short, single
     short doc → one chunk, empty text → no rows; adjacent chunks overlap

@@ -12,12 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.operators.dedup import (
+    _shingle_sets,
     embedding_neardup_pairs,
     exact_dedup,
     jaccard_pairs,
     minhash_lsh_pairs,
+    minhash_lsh_pairs_from_sets,
     simhash_fingerprints,
-    simhash_pairs,
 )
 from neo4j_export_tool_spark.sources.synth import pages_spark_df
 
@@ -145,6 +146,14 @@ def test_minhash_lsh_matches_exact(pages):
     assert len(lsh) > 0
 
 
+def minhash_capped(df, text_col, id_col, max_bucket_size):
+    """`minhash_lsh_pairs` with an absolute bucket cap: the resolved value
+    its ``max_bucket_frac`` passes to `minhash_lsh_pairs_from_sets`."""
+    return minhash_lsh_pairs_from_sets(
+        _shingle_sets(df, text_col, id_col, 3), max_bucket_size=max_bucket_size
+    )
+
+
 def test_minhash_bucket_cap_subsets_and_prunes(spark, pages):
     """``max_bucket_size`` (the q13 df-cap analog for LSH, round-4 sf1
     knee): capped output must be a SUBSET of the uncapped verified pairs
@@ -159,14 +168,14 @@ def test_minhash_bucket_cap_subsets_and_prunes(spark, pages):
     generous = {
         (r["doc_a"], r["doc_b"])
         for r in minhash_lsh_pairs(
-            pages, "text", "url", max_bucket_size=10_000
+            pages, "text", "url", max_bucket_frac=1.0
         ).collect()
     }
     assert generous == uncapped
 
     capped = {
         (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(pages, "text", "url", max_bucket_size=5).collect()
+        for r in minhash_capped(pages, "text", "url", max_bucket_size=5).collect()
     }
     assert capped <= uncapped
 
@@ -178,7 +187,7 @@ def test_minhash_bucket_cap_subsets_and_prunes(spark, pages):
         (101, "unique snowflake words one two three four five six EIGHT"),
     ]
     df = spark.createDataFrame(hot + pair, "doc_id long, text string")
-    tight = minhash_lsh_pairs(df, "text", "doc_id", max_bucket_size=5)
+    tight = minhash_capped(df, "text", "doc_id", max_bucket_size=5)
     got = {(r["doc_a"], r["doc_b"]) for r in tight.collect()}
     assert (100, 101) in got, "pairs outside hot buckets must survive"
     assert not any(a < 40 and b < 40 for a, b in got), (
@@ -190,11 +199,6 @@ def test_simhash_deterministic_and_close_for_neardups(spark, pages):
     fps = simhash_fingerprints(pages, "text", "url")
     again = simhash_fingerprints(pages, "text", "url")
     assert fps.collect() == again.collect()
-
-    pairs = simhash_pairs(pages, "text", "url", max_hamming=6)
-    got = pairs.collect()
-    assert all(r["hamming"] <= 6 for r in got)
-    assert len(got) > 0
 
 
 def test_embedding_neardup(spark, sf_dir):
@@ -257,34 +261,16 @@ def test_blocked_gemm_equals_codegen_bitexact(spark):
 
 
 def test_fractional_caps_match_absolute_at_same_n(spark, pages):
-    """The scale-safe fractional knobs: at matched N, frac·N resolving to
-    the same integer cap must give BIT-IDENTICAL output to the absolute
-    form, and the subset/prune semantics carry over (COVERAGE.md §sf1:
-    an absolute cap is always wrong at 10^12 docs)."""
+    """The scale-safe fractional bucket cap: at matched N, frac·N
+    resolving to the same integer cap must give BIT-IDENTICAL output to
+    the absolute cap of `minhash_lsh_pairs_from_sets`, and the
+    subset/prune semantics carry over (COVERAGE.md §sf1: an absolute cap
+    is always wrong at 10^12 docs)."""
     n = pages.count()
-
-    # --- jaccard: frac chosen so floor(frac·N) == 10 on the boilerplate
-    # corpus from the stop-shingle test
-    docs = boilerplate_docs(spark)
-    n_docs = 32
-    absolute = jaccard_pairs(
-        docs, "text", "doc_id", threshold_pct=60, max_shingle_df=10
-    )
-    frac = jaccard_pairs(
-        docs, "text", "doc_id", threshold_pct=60,
-        max_shingle_df_frac=10.4 / n_docs,  # floor → 10
-    )
-    rows_a = sorted(map(tuple, absolute.collect()))
-    rows_f = sorted(map(tuple, frac.collect()))
-    assert rows_a == rows_f and rows_a
-
-    # --- minhash: same equivalence on the pages corpus
     cap = 5
     abs_pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(
-            pages, "text", "url", max_bucket_size=cap
-        ).collect()
+        for r in minhash_capped(pages, "text", "url", max_bucket_size=cap).collect()
     }
     frac_pairs = {
         (r["doc_a"], r["doc_b"])
@@ -298,14 +284,6 @@ def test_fractional_caps_match_absolute_at_same_n(spark, pages):
         for r in minhash_lsh_pairs(pages, "text", "url").collect()
     }
     assert frac_pairs <= uncapped  # prune-only semantics
-
-    # both forms at once is a usage error
-    with pytest.raises(ValueError):
-        jaccard_pairs(docs, "text", "doc_id", max_shingle_df=5,
-                      max_shingle_df_frac=0.1).collect()
-    with pytest.raises(ValueError):
-        minhash_lsh_pairs(pages, "text", "url", max_bucket_size=5,
-                          max_bucket_frac=0.1).collect()
 
 
 def test_jaccard_pairs_equals_python_twin(spark, pages):

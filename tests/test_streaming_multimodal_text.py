@@ -274,7 +274,10 @@ def test_incremental_kg_stream_matches_batch_and_resumes(spark, tmp_path):
     """Streaming pages → mention-edge JSONL: the drained stream must emit
     exactly the batch twin's mention set, and a SECOND availableNow run
     over the same checkpoint must emit nothing new (exactly-once), while
-    newly arrived files produce only their own records (resume)."""
+    newly arrived files produce only their own records (resume).  The
+    first batch's urls end in a control character, which the lines carry
+    as the contract's lower-case escape (``\\u001f``), as the batch JSONL
+    writer writes it, not as Jackson's ``\\u001F``."""
     import json as _json
 
     from neo4j_export_tool_spark.operators.extract import extract_text_udf
@@ -285,7 +288,9 @@ def test_incremental_kg_stream_matches_batch_and_resumes(spark, tmp_path):
     src_dir, out_dir, ckpt = (
         str(tmp_path / "pages"), str(tmp_path / "out"), str(tmp_path / "ckpt"),
     )
-    batch1 = pages_spark_df(spark, 40, seed=21, partitions=2)
+    batch1 = pages_spark_df(spark, 40, seed=21, partitions=2).withColumn(
+        "url", F.concat(F.col("url"), F.lit("\x1f"))
+    )
     batch1.write.mode("overwrite").parquet(src_dir)
 
     q = incremental_kg_stream(spark, src_dir, GAZETTEER, out_dir, ckpt)
@@ -308,6 +313,8 @@ def test_incremental_kg_stream_matches_batch_and_resumes(spark, tmp_path):
         for r in batch_mentions.collect()
     }
     assert got1 == want and len(got1) > 0
+    lines = [x["value"] for x in spark.read.text(out_dir).collect()]
+    assert all("\\u001f" in x and "\\u001F" not in x for x in lines)
 
     # re-run with no new files: exactly-once, nothing re-emitted
     q2 = incremental_kg_stream(spark, src_dir, GAZETTEER, out_dir, ckpt)
